@@ -27,6 +27,7 @@ CLASSPATH = os.path.join(TARGET, "bench-classpath.txt")
 STAMP = os.path.join(TARGET, "bench-source.sha256")
 BUILD_TIMEOUT_S = 700
 RUN_TIMEOUT_S = 170
+HEAP = "2g"
 
 # Spark on JDK 17 outside spark-submit needs these (as in the repo build).
 ADD_OPENS = [
@@ -87,21 +88,14 @@ def build():
     print(f"[perfbench] built in {time.time() - t0:.1f}s", file=sys.stderr)
 
 
-def heap():
-    """Driver heap: half of physical memory, within 2..4 GiB."""
-    try:
-        total = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
-    except (ValueError, OSError):
-        total = 8 << 30
-    return max(2, min(4, total // (2 << 30)))
-
-
 def run_java(args, cpus):
     work = os.path.join(WORK, args.workload)
     for d in ("tmp", "spark-local"):
         os.makedirs(os.path.join(work, d), exist_ok=True)
     cp = open(CLASSPATH).read().strip()
-    cmd = ["java", f"-Xmx{heap()}g", "-XX:ReservedCodeCacheSize=512m",
+    # a fixed heap, touched at start-up: no page faults of a growing heap
+    # land in the measured operations
+    cmd = ["java", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-XX:+AlwaysPreTouch", "-XX:ReservedCodeCacheSize=512m",
            f"-Djava.io.tmpdir={os.path.join(work, 'tmp')}", "-Dspark.ui.enabled=false",
            "-Dlog4j2.level=error"]
     for p in ADD_OPENS:

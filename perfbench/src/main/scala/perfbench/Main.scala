@@ -48,8 +48,7 @@ object Main {
     // dropped (their checks still count)
     val warmOps = w.ops(ctx, args.trace)
     ctx.loop(w.warmupSeconds, warmOps, w.warmupUnit(warmOps.size))
-    ctx.samples.clear()
-    ctx.scanRates.clear()
+    ctx.clearSamples()
     val tWarm = System.nanoTime()
 
     val metrics: Map[String, Double] = fresh match {
@@ -76,6 +75,8 @@ object Main {
       "samples" -> obj(ctx.samples.toSeq.map { case (k, v) => k -> v.size.toString }),
       "p50_ms" -> obj(ctx.samples.toSeq.map { case (k, v) => k -> fmt(Stats.median(v.toSeq) * 1000) }),
       "p25_ms" -> obj(ctx.samples.toSeq.map { case (k, v) => k -> fmt(Stats.quantile(v.toSeq, 0.25) * 1000) }),
+      "cpu_p50_ms" -> obj(ctx.cpuSamples.toSeq.map { case (k, v) => k -> fmt(Stats.median(v.toSeq) * 1000) }),
+      "calib_ms" -> fmt(Stats.median(Calib.ms.toSeq)),
       "tail" -> {
         val prim = w.primary.flatMap(ctx.times)
         val (p, v) = Stats.tail(prim)
@@ -83,6 +84,8 @@ object Main {
       })
     for ((k, v) <- ctx.samples)
       System.err.println(s"[perfbench] $k ms: " + v.map(x => f"${x * 1000}%.0f").mkString(" "))
+    for ((k, v) <- ctx.cpuSamples)
+      System.err.println(s"[perfbench] $k cpu ms: " + v.map(x => f"${x * 1000}%.0f").mkString(" "))
     spark.stop()
     println("HEADER " + obj(header))
     println("RESULT " + obj(Seq(
@@ -100,10 +103,10 @@ object Main {
   private def endToEnd(w: Workload, ctx: Ctx, setupS: Seq[Double], flsBytes: Long,
       parquetBytes: Long): Map[String, Double] = Map(
     "setup_s" -> Stats.median(setupS),
-    "op_p50_ms" -> Stats.median(w.primary.map(ctx.median)) * 1000,
-    "mix_p25_s" -> w.mix.map(ctx.p25).sum,
-    "scan_mrows_per_s" -> Stats.quantile(ctx.scanRates.toSeq, 0.75) / 1e6,
-    "write_mrows_per_s" -> w.writeRows / ctx.p25("write") / 1e6,
+    "op_cpu_ms" -> Stats.geomean(w.primary.map(ctx.cpuMedian)) * 1000,
+    "mix_cpu_s" -> w.mix.map(ctx.cpuMedian).sum,
+    "scan_cpu_ns_per_row" -> Stats.median(ctx.scanCpuPerRow.toSeq) * Calib.scale,
+    "write_cpu_ns_per_row" -> ctx.cpuMedian("write") * 1e9 / w.writeRows,
     "bytes_per_parquet_byte" -> flsBytes.toDouble / parquetBytes)
 
   // ---- traced run ----------------------------------------------------------
@@ -120,7 +123,7 @@ object Main {
     ctx.tracer = None
     pt.stop()
     val plans = pt.allPlans
-    ctx.samples.clear()
+    ctx.clearSamples()
     Codec.Named.map(_._1).map(e => s"codec.bits_per_value.$e" ->
       footprint.get(e).map(a => a.bytes * 8.0 / a.values).getOrElse(0.0)).toMap +
       ("scan.rowgroups_read_frac" -> plans.map(_.rowGroupsRead).sum.toDouble / (plans.map(_.flsScans).sum * groups))
@@ -132,7 +135,7 @@ object Main {
     val ops = w.ops(ctx, trace = true)
     ctx.loop(half, ops, w.unit(trace = false, ops.size))
     val untraced = ctx.samples.map { case (k, v) => k -> Stats.median(v.toSeq) }.toMap
-    ctx.samples.clear()
+    ctx.clearSamples()
 
     val tr = new Tracer(ctx.spark)
     tr.start()

@@ -15,9 +15,9 @@ import graft.queries.Relational
   * `scan` (all columns of its fls table) and `write` (a bulk fls write),
   * so every end-to-end metric exists on every workload. */
 abstract class Workload(val name: String) {
-  /** Kinds whose medians `op_p50_ms` takes the median of. */
+  /** Kinds whose median CPU times `op_cpu_ms` takes the geometric mean of. */
   def primary: Seq[String]
-  /** Kinds whose fast quartiles `mix_p25_s` sums. */
+  /** Kinds whose median CPU times `mix_cpu_s` sums. */
   def mix: Seq[String]
   /** The fls table `scan` reads, and the codec probe too. */
   def table(ctx: Ctx): String
@@ -61,7 +61,7 @@ abstract class Workload(val name: String) {
       n = Check.materialize(d)
       ctx.tracer.foreach(_.record(d.queryExecution))
       () => n == scanRows
-    }.foreach(s => ctx.scanRates += n / s)
+    }.foreach(_ => ctx.scanCpuPerRow += ctx.cpu("scan").last * 1e9 / n)
   }
 
   /** The same scan of the parquet copy, for `scan.fls_over_parquet`. */
@@ -84,7 +84,7 @@ object Workloads {
     throw new IllegalArgumentException(s"unknown workload '$n' (known: ${all.map(_.name).mkString(", ")})"))
 }
 
-/** Write- and pruning-bound: a manifest table of 200k seeded lineitem
+/** Write- and pruning-bound: a manifest table of 100k seeded lineitem
   * rows, clustered on `l_orderkey` into 8,192-row files with a Bloom
   * filter on the key, and an append-only log table of the same layout.
   * Each cycle commits a merge-on-read DELETE, a copy-on-write UPDATE
@@ -100,7 +100,7 @@ object Workloads {
   * past the slice), so the commits never interact and the client knows
   * every expected count exactly. */
 object IngestDml extends Workload("ingest_dml") {
-  val Rows = 200000L
+  val Rows = 100000L
   val BatchRows = 10000L
   private val orders = Rows / 4
   val primary = Seq("delete", "update", "merge")
@@ -269,8 +269,8 @@ object IngestDml extends Workload("ingest_dml") {
 
   /** A traced run measures whole cycles: every kind, the scan too. */
   override def unit(trace: Boolean, ops: Int): Int = if (trace) ops else 1
-  /** One whole cycle, so every statement kind is warm when timed. */
-  override def warmupUnit(ops: Int): Int = ops
+  /** Two whole cycles, so every statement kind is warm when timed. */
+  override def warmupUnit(ops: Int): Int = 2 * ops
 
   /** Sixteen point lookups of seeded present and absent keys. */
   def pruningProbe(ctx: Ctx): Unit = {
@@ -292,21 +292,18 @@ object IngestDml extends Workload("ingest_dml") {
 }
 
 /** Plan- and expression-bound: gate queries whose materialized time is
-  * far above their `count()` time, over small fixed generated tables
-  * (the seed orders each pass), so planning and each query's fixed cost
-  * dominate. `q86` (range frames) and `q88` (interval overlap) run the
-  * graftplans rewrites, `q30` the expression-heavy text body, and
-  * `q15_fls_tpch_q1` (Q1 over an fls copy of the lineitem) is the
-  * control. Queries are followed by all-column scans of that copy and
-  * by rewrites of it. */
+  * far above their `count()` time, over small tables generated from the
+  * seed, so planning and each query's fixed cost dominate. `q86` (range
+  * frames) and `q88` (interval overlap) run the graftplans rewrites,
+  * `q30` the expression-heavy text body, and `q15_fls_tpch_q1` (Q1 over
+  * an fls copy of the lineitem) is the control. Queries are followed by
+  * all-column scans of that copy and by rewrites of it. */
 object GateHotspots extends Workload("gate_hotspots") {
-  val DataSeed = 42L
-  val LineitemRows = 200000L
+  val LineitemRows = 100000L
   val Queries: Seq[String] = Seq("q30_text_fingerprint", "q86_sql_range_frame",
     "q88_auto_interval_overlap", "q15_fls_tpch_q1")
   val primary = Queries
   val mix = Queries ++ Seq("scan", "write")
-  val Passes = 8
   def dataDir(ctx: Ctx): String = ctx.path("hot/data")
   def table(ctx: Ctx): String = ctx.path("hot/lineitem_fls")
   def parquet(ctx: Ctx): String = s"${dataDir(ctx)}/lineitem.parquet"
@@ -322,16 +319,16 @@ object GateHotspots extends Workload("gate_hotspots") {
   def setup(ctx: Ctx): Unit = {
     val s = ctx.spark
     val dir = dataDir(ctx)
-    Data.lineitem(s, DataSeed, LineitemRows).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
-    Data.orders(s, DataSeed, 30000).write.mode("overwrite").parquet(s"$dir/orders.parquet")
-    Data.documents(s, DataSeed, 600).write.mode("overwrite").parquet(s"$dir/documents.parquet")
-    Data.events(s, DataSeed, 20000).write.mode("overwrite").parquet(s"$dir/events.parquet")
+    Data.lineitem(s, ctx.seed, LineitemRows).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
+    Data.orders(s, ctx.seed, 30000).write.mode("overwrite").parquet(s"$dir/orders.parquet")
+    Data.documents(s, ctx.seed, 600).write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    Data.events(s, ctx.seed, 20000).write.mode("overwrite").parquet(s"$dir/events.parquet")
     writeTable(ctx)
   }
 
   private def writeTable(ctx: Ctx): Unit = {
     wipe(table(ctx))
-    Data.lineitem(ctx.spark, DataSeed, LineitemRows).write.format("fls").mode("overwrite").save(table(ctx))
+    Data.lineitem(ctx.spark, ctx.seed, LineitemRows).write.format("fls").mode("overwrite").save(table(ctx))
   }
 
   /** The warm-up pass: every query once, cold, its hash the reference
@@ -344,25 +341,29 @@ object GateHotspots extends Workload("gate_hotspots") {
       Check.fingerprint(fls(ctx.spark, table(ctx))) == Check.fingerprint(ctx.spark.read.parquet(parquet(ctx))))
   }
 
-  /** `Passes` passes, each every query once in a seeded order; every
-    * query is followed by a scan, every second one by a rewrite. */
+  /** One pass: every query once, in a fixed order (a seeded order would
+    * vary what the JIT compiler sees first, and with it the run's
+    * speed), each followed by a scan; four rewrites follow the first
+    * scan. A rewrite right after queries and scans takes up to twice
+    * the CPU time of one right after a rewrite, though it writes the
+    * same rows, so the rewrites run back to back at one place in the
+    * pass and their median is a steady rewrite's cost. */
   def ops(ctx: Ctx, trace: Boolean): IndexedSeq[() => Unit] = {
     val write: () => Unit = () => ctx.op("write") { writeTable(ctx); () => true }
-    (0 until Passes).flatMap { p =>
-      new Random(ctx.seed * 31L + p).shuffle(Queries).zipWithIndex.flatMap { case (q, i) =>
-        Seq[() => Unit](() => { ctx.op(q) {
-          val r = query(ctx, q).collect()
-          () => Check.hash(r) == refs(q)
-        }; () }, () => scan(ctx)) ++ (if (i % 2 == 1) Seq(write) else Nil)
-      }
-    }
+    Queries.zipWithIndex.flatMap { case (q, i) =>
+      Seq[() => Unit](() => { ctx.op(q) {
+        val r = query(ctx, q).collect()
+        () => Check.hash(r) == refs(q)
+      }; () }, () => scan(ctx)) ++ (if (i == 0) Seq.fill(4)(write) else Nil)
+    }.toIndexedSeq
   }
 
   /** The loop stops only after a whole pass: every query gets the same
     * number of samples. */
-  override def unit(trace: Boolean, ops: Int): Int = ops / Passes
-  /** The cold reference pass in `prepare` is the warm-up. */
-  override def warmupSeconds: Double = 0.0
+  override def unit(trace: Boolean, ops: Int): Int = ops
+  /** After the cold reference pass in `prepare`, one untimed pass. */
+  override def warmupSeconds: Double = 0.5
+  override def warmupUnit(ops: Int): Int = ops
 
   /** Q1 over fls once, and the all-column scan. */
   def pruningProbe(ctx: Ctx): Unit = {
