@@ -11,7 +11,7 @@
 # code-cache sweeper flushes warm methods — a single-invocation OSR'd
 # stage loop then runs INTERPRETED for a whole task wave. Measured on
 # q88 at 128x: 7 s JIT'd / 317 s marathon transient / 1521 s with
-# generated classes force-excluded from JIT (graft.OverlapJitProbe).
+# generated classes force-excluded from JIT (RESULTS_r13.md).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 MULT="${1:-128}"
@@ -72,7 +72,7 @@ JOPTS=(
   # and on a real cluster spark.speculation re-launching interpreted
   # stragglers on executors whose profiles never polluted. Avoid
   # reusing one codegen-warmed JVM across 100x data-distribution
-  # shifts; fresh executors never exhibit the window (OverlapColdProbe).
+  # shifts; fresh executors never exhibit the window (RESULTS_r12.md).
   # (-XX:+PrintCompilation captured the run-5 evidence — 5,484
   # not-entrant events on GeneratedClass methods, the busiest single
   # method name 335 times — and is dropped again for measurement runs:

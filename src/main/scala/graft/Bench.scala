@@ -1,26 +1,17 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     // Harness.benchAll: warm pass = pre-flight gate (a query that cannot
     // run on the current runtime is an ERROR in the artifact, never a
     // fail-fast "time"), then two timed passes, min per query.
-    val (times, errors) = Harness.benchAll(spark, SparkEntry.queries, sfDir)
+    val run = Harness.benchAll(spark, SparkEntry.queries, sfDir)
     // stop Spark BEFORE printing: shutdown stacks (ElementTrackingStore
     // etc.) otherwise interleave with the JSON and break the driver's
     // line parser — the result must be the final, uninterrupted line
     spark.stop()
-    val json = Harness.benchJson(times, errors, sfDir)
+    val json = Harness.benchJson(run, sfDir)
     // sbt prefixes stdout with "[info] ", which has broken the driver's
     // JSON-line parser two rounds running — so ALSO write the JSON to a
     // well-known file the driver can read directly.
@@ -31,11 +22,11 @@ object Bench {
     // stdout tail, and the full 110-query map overflows it (r12's BENCH
     // artifact parsed as null) — total + slowest-30 fits, the full map
     // lives at `queries_full`
-    println(Harness.benchJsonCompact(times, errors, sfDir, out))
+    println(Harness.benchJsonCompact(run, sfDir, out))
     System.out.flush()
-    if (errors.nonEmpty) {
+    if (run.errors.nonEmpty) {
       System.err.println(s"[bench] FAILED queries: " +
-        errors.keys.toSeq.sorted.mkString(", "))
+        run.errors.keys.toSeq.sorted.mkString(", "))
       sys.exit(1)
     }
   }

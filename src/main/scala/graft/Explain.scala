@@ -1,15 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted plans for every SparkEntry query. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val only = if (args.length > 1) Some(args(1)) else None
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     SparkEntry.queries.toSeq.sortBy(_._1)
       .filter(q => only.forall(q._1.contains))
       .foreach { case (name, fn) =>

@@ -14,6 +14,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * impossible to hide. */
 object Harness {
 
+  /** One [[benchAll]] result: min time per query, errors, the per-query
+    * spread of the timed passes ((max-min)/min — the measurement-noise
+    * channel of the artifact), and the core count and master the
+    * session actually ran with. The runtime pair is read from the LIVE
+    * SparkContext, not from `$SPARK_GRAFT_CPUS` (r21: a scaling check
+    * must see what the bench really ran with), and before Bench stops
+    * the session to print. */
+  final case class BenchRun(times: Map[String, Double],
+      errors: Map[String, String], spreads: Map[String, Double],
+      cpus: Int, master: String)
+
   /** Runs every query and dumps its result as parquet under
     * `outDir/<name>`. Returns name -> error message for every query
     * that threw (empty map = all green). */
@@ -40,13 +51,12 @@ object Harness {
     * only surface on execution). Queries that fail the warm pass are
     * excluded from the timed passes and returned as errors; a timed-pass
     * throw likewise records an error and drops the query's time.
-    * Survivors get two timed passes, min per query (GC/compilation noise
+    * Survivors get three timed passes, min per query (GC/compilation noise
     * on a busy 32-thread JVM is one-sided, so min is the honest
     * steady-state). */
   def benchAll(spark: SparkSession,
       queries: Map[String, (SparkSession, String) => DataFrame],
-      sfDir: String): (Map[String, Double], Map[String, String]) = {
-    captureRuntime(spark)
+      sfDir: String): BenchRun = {
     val errors = scala.collection.mutable.Map[String, String]()
     val ok = queries.flatMap { case (name, fn) =>
       try { fn(spark, sfDir).count(); Some(name -> fn) }
@@ -77,19 +87,15 @@ object Harness {
       val vs = passes.flatMap(_.get(k))
       if (vs.size == passes.size) Some(k -> vs.min) else None
     }.toMap
-    benchSpreads = passes.head.keys.flatMap { k =>
+    val spreads = passes.head.keys.flatMap { k =>
       val vs = passes.flatMap(_.get(k))
       if (vs.size == passes.size && vs.min > 0)
         Some(k -> (vs.max - vs.min) / vs.min)
       else None
     }.toMap
-    (times, errors.toMap -- times.keys)
+    BenchRun(times, errors.toMap -- times.keys, spreads,
+      spark.sparkContext.defaultParallelism, spark.sparkContext.master)
   }
-
-  /** Per-query relative spread of the last [[benchAll]]'s timed passes
-    * ((max-min)/min) — the measurement-noise channel of the bench
-    * artifact. */
-  @volatile var benchSpreads: Map[String, Double] = Map.empty
 
   /** JSON string escape: backslash, quote, and ALL control chars
     * (<0x20) — a tab or CR in builder-authored SQL or an exception
@@ -109,35 +115,23 @@ object Harness {
     m.toSeq.sortBy(_._1).map { case (k, v) => s"${jq(k)}: ${jq(v)}" }
       .mkString("{", ",", "}")
 
+  /** `"cpus":…,"master":…` — emitted into both JSON shapes. */
+  private def runtimeFields(run: BenchRun): String =
+    s""""cpus":${run.cpus},"master":${jq(run.master)}"""
+
   /** The one JSON line Bench prints. Failed queries appear ONLY under
     * "errors" — never as a time — so the artifact itself shows the
     * breakage (ADVICE r9: annotate in the artifact, not just VERDICT). */
-  /** The core count and master string the benched session was actually
-    * built with — emitted into both JSON shapes (r21, VERDICT r20 #2:
-    * the driver's scaling check could not VERIFY that the bench honored
-    * `$SPARK_GRAFT_CPUS` because the line never said what it ran with;
-    * `suspect_cpus_ignored` fired on a bench that demonstrably honored
-    * it). Captured from the LIVE SparkContext inside [[benchAll]] — not
-    * from the env var (the field must report ground truth), and not at
-    * emit time (Bench stops the session before printing so shutdown
-    * stacks cannot interleave with the JSON line). */
-  @volatile private var runtimeFields: String =
-    """"cpus":-1,"master":"bench-never-ran""""
-
-  private def captureRuntime(spark: SparkSession): Unit =
-    runtimeFields = s""""cpus":${spark.sparkContext.defaultParallelism},""" +
-      s""""master":${jq(spark.sparkContext.master)}"""
-
-  def benchJson(times: Map[String, Double], errors: Map[String, String],
-      sfDir: String): String = {
-    val qs = times.toSeq.sortBy(_._1)
+  def benchJson(run: BenchRun, sfDir: String): String = {
+    val qs = run.times.toSeq.sortBy(_._1)
       .map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
-    val total = if (times.nonEmpty) times.values.sum else 0.0
-    val errPart = if (errors.isEmpty) "" else s""","errors":${jObj(errors)}"""
-    val spreads = benchSpreads.toSeq.sortBy(_._1)
+    val total = if (run.times.nonEmpty) run.times.values.sum else 0.0
+    val errPart =
+      if (run.errors.isEmpty) "" else s""","errors":${jObj(run.errors)}"""
+    val spreads = run.spreads.toSeq.sortBy(_._1)
       .map { case (k, v) => f"${jq(k)}:$v%.4f" }.mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
-      s""","queries_spread":$spreads,$runtimeFields""" +
+      s""","queries_spread":$spreads,${runtimeFields(run)}""" +
       s""","spark_version":"${org.apache.spark.SPARK_VERSION}"$errPart}"""
   }
 
@@ -147,23 +141,23 @@ object Harness {
     * suite passed ~60 queries parsed as null. Keeps total + the `keep`
     * slowest queries at 3 decimals and points at the full-precision
     * file. */
-  def benchJsonCompact(times: Map[String, Double], errors: Map[String, String],
-      sfDir: String, fullPath: String, keep: Int = 30): String = {
-    val top = times.toSeq.sortBy(-_._2).take(keep).sortBy(_._1)
+  def benchJsonCompact(run: BenchRun, sfDir: String, fullPath: String,
+      keep: Int = 30): String = {
+    val top = run.times.toSeq.sortBy(-_._2).take(keep).sortBy(_._1)
       .map { case (k, v) => f"${jq(k)}:$v%.3f" }.mkString("{", ",", "}")
-    val total = if (times.nonEmpty) times.values.sum else 0.0
+    val total = if (run.times.nonEmpty) run.times.values.sum else 0.0
     val errPart =
-      if (errors.isEmpty) ""
-      else s""","errors":${jObj(errors.map { case (k, v) => k -> v.take(60) })}"""
+      if (run.errors.isEmpty) ""
+      else s""","errors":${jObj(run.errors.map { case (k, v) => k -> v.take(60) })}"""
     // median relative spread — one number for "how noisy was this box"
     val medSpread = {
-      val vs = benchSpreads.values.toSeq.sorted
+      val vs = run.spreads.values.toSeq.sorted
       if (vs.isEmpty) 0.0 else vs(vs.size / 2)
     }
     f"""{"metric":"total","value":$total%.3f,"unit":"sec","sf":"$sfDir",""" +
-      s""""n_queries":${times.size},"queries":$top,""" +
+      s""""n_queries":${run.times.size},"queries":$top,""" +
       f""""median_spread":$medSpread%.4f,""" +
-      s"""$runtimeFields,""" +
+      s"""${runtimeFields(run)},""" +
       s""""queries_full":"$fullPath"""" +
       s""","spark_version":"${org.apache.spark.SPARK_VERSION}"$errPart}"""
   }

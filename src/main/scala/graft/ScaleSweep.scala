@@ -23,29 +23,12 @@ object ScaleSweep {
     val capSec = if (args.length > 1) args(1).toInt else 900
     only = if (args.length > 2) args(2).split(",").map(_.trim).toSet else Set.empty
     val baseDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val scaledDir = s"/tmp/graft_scale/x$mult"
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // nanos-as-long: effective only on Spark <= 4.0; 4.1+ loads
-      // TIMESTAMP_NTZ and Tables.tsMicros dispatches on the actual dtype
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // root stays at ERROR, but codegen fallbacks announce themselves at
-    // WARN — a Janino failure or hugeMethodLimit fallback silently
-    // de-compiles a stage (the exact per-row-cost multiplier the q88
-    // transient shows), so those two loggers must reach the sweep log
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.execution.WholeStageCodegenExec",
-      org.apache.logging.log4j.Level.WARN)
-    org.apache.logging.log4j.core.config.Configurator.setLevel(
-      "org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator",
-      org.apache.logging.log4j.Level.WARN)
+    // WARN logging (GraftSession) keeps codegen fallbacks in the sweep
+    // log: a Janino failure or hugeMethodLimit fallback silently
+    // de-compiles a stage, the per-row-cost multiplier the q88
+    // transient shows
+    val spark = GraftSession()
 
     generate(spark, baseDir, scaledDir, mult)
 
@@ -355,7 +338,7 @@ object ScaleSweep {
     * reference queue, plus old-gen garbage from prior plans. One cold
     * heavy join then pays the whole backlog (observed: 350 s for a
     * steady-state-7 s query, while a fresh JVM runs it in ~18 s cold —
-    * OverlapColdProbe). Two explicit GCs push pending references into
+    * RESULTS_r12.md). Two explicit GCs push pending references into
     * the cleaner's queue; the sleeps give its daemon thread time to
     * drain (shuffle-file deletes, broadcast unpersists are async).
     * Runs OUTSIDE the per-query timer, so attribution is unchanged. */

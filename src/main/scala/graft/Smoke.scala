@@ -1,15 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Local replica of the driver's t1 smoke: entry() on sf0.001, rows>0. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession()
     val df = SparkEntry.entry(spark)
     val n = df.count()
     df.show(5, truncate = false)

@@ -97,11 +97,6 @@ class FlsPartitionReader(
     * compile can drop different conjuncts per file under
     * union_by_name, so positions don't transfer). */
   private var adaptOrder = new FlsRowFilter.AdaptiveOrder(preds.length)
-  /** Probe knob (A/B timing in AdaptProbe; single-JVM only — a system
-    * property does not ship to real executors, which is fine for a
-    * measurement switch): false pins the pushed conjunct order. */
-  private val adaptEnabled =
-    sys.props.getOrElse("graft.fls.adaptive", "true").toBoolean
   private val vectors: Array[OnHeapColumnVector] =
     readSchema.fields.map(f => new OnHeapColumnVector(BatchSize, f.dataType))
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
@@ -470,7 +465,7 @@ class FlsPartitionReader(
       // conjunct only narrows the selection)
       var p = 0
       while (p < preds.length && selCount != 0) {
-        val pi = if (adaptEnabled) adaptOrder.perm(p) else p
+        val pi = adaptOrder.perm(p)
         val t0 = System.nanoTime()
         // decode cost charged to the conjunct that triggers it: an
         // early all-false exit skips later filter columns entirely, so
@@ -487,7 +482,7 @@ class FlsPartitionReader(
         }
         p += 1
       }
-      if (adaptEnabled) adaptOrder.groupDone()
+      adaptOrder.groupDone()
     }
     if (selCount < 0) selCount = rgTuples
     var effTuples = rgTuples

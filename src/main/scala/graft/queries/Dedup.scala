@@ -141,10 +141,6 @@ object Dedup {
           .groupBy("ghash").agg(first(col("gr")).as("gr"), first(col("nsh")).as("nsh"))
           .persist(storageLevel))
 
-  /** Dev probe hook (Q21Probe): the distinct-set groups frame. */
-  def probeGroups(spark: SparkSession, dir: String): DataFrame =
-    groupsOf(spark, dir)
-
   // Builtin array_intersect/array_union beat a sorted-merge Expression
   // here (measured 1.7s vs 6.3s at sf0.1): UTF8String accessor churn in
   // the merge loop costs more than one hash set per row.
@@ -221,9 +217,10 @@ object Dedup {
     // candidate reduction once identical sets are collapsed; revisit
     // only if candidate counts dominate at larger corpora. The
     // interpreted array_sort comparator below was also measured against
-    // an explode + codegen'd window-rank rewrite (Q21Probe): identical
-    // at 0.18-0.19 s — post-collapse groups are too few for the lambda
-    // to matter, so the shuffle-free HOF form stays.)
+    // an explode + codegen'd window-rank rewrite at sf0.1 (commit
+    // da865a5; no RESULTS file archives it): identical at 0.18-0.19 s
+    // — post-collapse groups are too few for the lambda to matter, so
+    // the shuffle-free HOF form stays.)
     // prefix length n - ceil(0.8n) + 1 in INTEGER arithmetic:
     // ceil(4n/5) = (4n+4) div 5 — a float ceil(0.8*n) can round up
     // (0.8 is inexact in binary) and silently shorten the prefix,

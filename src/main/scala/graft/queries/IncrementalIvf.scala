@@ -147,9 +147,7 @@ object IncrementalIvf {
   private def buildAll(spark: SparkSession, corpus: DataFrame,
       idxDir: String, head: Long, nprobe: Int,
       maxCentroids: Long): RefreshStats = {
-    val cap =
-      if (maxCentroids > 0) maxCentroids
-      else sys.props.get("graft.ivf.maxCentroids").map(_.toLong).getOrElse(65536L)
+    val cap = if (maxCentroids > 0) maxCentroids else Similarity.MaxCentroids
     val n = corpus.count()
     require(n > 0, "fls ivf: empty corpus")
     val e = vecsOf(corpus)
@@ -162,9 +160,7 @@ object IncrementalIvf {
       if (ideal > cap) {
         val nCent = math.min(ideal, cap * cap)
         val l1 = math.max(2L, math.ceil(math.sqrt(nCent.toDouble)).toLong)
-        val l1p = math.max(1,
-          sys.props.get("graft.ivf.l1probe").map(_.toInt).getOrElse(2))
-        (Meta("2l", n, nCent, upTo, l1, l1p),
+        (Meta("2l", n, nCent, upTo, l1, Similarity.L1Probe),
           Similarity.seedsByRank(e, nCent, broadcastJoin = false))
       } else {
         (Meta("flat", n, ideal, upTo, 0L, 0),

@@ -13,6 +13,14 @@ import graft.util.Tables._
   * instead of the whole corpus). */
 object Similarity {
 
+  /** Broadcast budget of the flat IVF quantizer: past this many
+    * centroids the two-level quantizer takes over ([[ivfAnn]]). */
+  private[queries] val MaxCentroids = 65536L
+  /** L1 groups each vector routes to under the two-level quantizer. */
+  private[queries] val L1Probe = 2
+  /** Per-vector PQ code memory budget in bytes ([[pqGeomFor]]). */
+  private val PqBudgetBytes = 6
+
   /** embeddings as double vectors with precomputed norms — persisted
     * per dir: q24/q25/q26 all consume it (q26 twice via the cell
     * assignment), and materializing the normalized corpus once is the
@@ -198,9 +206,7 @@ object Similarity {
   def loadCentroids(spark: SparkSession, dir: String, nprobe: Int,
       lloyd: Boolean): DataFrame = {
     val n = t(spark, dir, "embeddings").count()
-    val centroidCap =
-      sys.props.get("graft.ivf.maxCentroids").map(_.toLong).getOrElse(65536L)
-    val nCent = math.min(centroidCap, math.ceil(math.sqrt(n.toDouble)).toLong)
+    val nCent = math.min(MaxCentroids, math.ceil(math.sqrt(n.toDouble)).toLong)
     val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
     val upTo = math.max(nprobe, 1)
     spark.read.format("fls").load(
@@ -370,7 +376,7 @@ object Similarity {
     * broadcast L1 set per row and explodes the top group ids — routing
     * emits n·l1Probe rows with ZERO extra exchange; the arithmetic and
     * tie order (cos desc, g_id asc) are identical, so the q120 oracle
-    * hash and the IvfRecallProbe ladder are unchanged. */
+    * hash and the recall ladder (RESULTS_r16.md) are unchanged. */
   private[queries] def rankedTwoLevelAgainst(eAssign: DataFrame,
       l2: DataFrame,
       l1Bc: org.apache.spark.broadcast.Broadcast[
@@ -412,11 +418,9 @@ object Similarity {
     // broadcast cliff, bounded). Past it — corpora beyond cap²
     // vectors, ~4.3 G at the default — the TWO-LEVEL quantizer keeps
     // the ideal ⌈√n⌉ cell count with bounded broadcasts
-    // ([[rankedTwoLevel]]); IvfRecallProbe's forced-low-cap run
-    // measures its recall at the same geometry.
-    val centroidCap =
-      if (maxCentroids > 0) maxCentroids
-      else sys.props.get("graft.ivf.maxCentroids").map(_.toLong).getOrElse(65536L)
+    // ([[rankedTwoLevel]]); the forced-low-cap rungs of the recall
+    // ladder (RESULTS_r16.md) measure its recall at the same geometry.
+    val centroidCap = if (maxCentroids > 0) maxCentroids else MaxCentroids
     val nVecs = t(spark, dir, "embeddings").count()
     val ideal = math.ceil(math.sqrt(nVecs.toDouble)).toLong
     if (ideal > centroidCap) {
@@ -430,10 +434,10 @@ object Similarity {
       val nCentTotal = math.min(ideal, centroidCap * centroidCap)
       val l1Count = math.max(2L, math.ceil(math.sqrt(nCentTotal.toDouble)).toLong)
       val upTo = math.max(nprobe, 1)
-      // routing width (L1 groups per vector, default 2): the SECOND
+      // routing width (L1 groups per vector, [[L1Probe]]): the SECOND
       // recall knob — `nprobe` widens cells within routed groups, but
       // a miss whose true cell lives under an UNROUTED group needs
-      // more groups. Measured (IvfRecallProbe, sf0.1, cap forced 4×
+      // more groups. Measured (RESULTS_r16.md ladder, sf0.1, cap forced 4×
       // below ⌈√n⌉): l1probe=2 recall@5 0.925 with nprobe 2 and 4
       // IDENTICAL (pure routing misses); l1probe=3 lifts to 0.950,
       // where it plateaus — the residue is assignment-side (the
@@ -441,19 +445,17 @@ object Similarity {
       // of a quantizer 4× coarser than ideal. At the REAL cap (64Ki)
       // the two-level path only activates past ~4.3 G vectors, where
       // cells are at the ideal √n balance and routing is far finer.
-      val l1Probe = math.max(1,
-        sys.props.get("graft.ivf.l1probe").map(_.toInt).getOrElse(2))
       val key = dir.replaceAll("[^a-zA-Z0-9]", "_")
       val idxPath =
-        s"$indexRoot/${key}_ivf2l_c${nCentTotal}_g${l1Count}_p${upTo}_r$l1Probe"
+        s"$indexRoot/${key}_ivf2l_c${nCentTotal}_g${l1Count}_p${upTo}_r$L1Probe"
       val idxMeta =
-        s"n=$nVecs;cent=$nCentTotal;l1=$l1Count;upTo=$upTo;l1p=$l1Probe"
+        s"n=$nVecs;cent=$nCentTotal;l1=$l1Count;upTo=$upTo;l1p=$L1Probe"
       // ONE l2 seed frame shared by the assignment build and the
       // centroid write — one definition of the seed selection per build
       lazy val l2 = seedsByRank(e, nCentTotal, broadcastJoin = false)
-      val r = rankCache.getOrBuild(spark, s"$dir#2l#$nprobe#$nCentTotal#$l1Probe")(
+      val r = rankCache.getOrBuild(spark, s"$dir#2l#$nprobe#$nCentTotal#$L1Probe")(
         loadOrBuildIndex(spark, idxPath, idxMeta,
-            build = rankedTwoLevel(e, l2, l1Count, upTo, l1Probe),
+            build = rankedTwoLevel(e, l2, l1Count, upTo, L1Probe),
             cents = l2)
           .persist(org.apache.spark.storage.StorageLevel.fromString(
             sys.props.getOrElse("graft.dedup.storage", "MEMORY_AND_DISK"))))
@@ -695,8 +697,8 @@ object Similarity {
     * degrades to dsub=1 scalar quantization, a small one to a single
     * whole-vector subspace — heavy but correct), `m` = dim/dsub, `k`
     * sized
-    * from a per-vector CODE MEMORY BUDGET (`graft.pq.budgetBytes`,
-    * default 6): bits/code = clamp(budget·8 / m, 2..8). The 64-dim
+    * from a per-vector CODE MEMORY BUDGET of 6 bytes: bits/code =
+    * clamp(budget·8 / m, 2..8). The 64-dim
     * default derives m=8, k=64 — exactly the former constants, so
     * every persisted artifact and the q124 oracle hash are
     * unchanged. */
@@ -706,8 +708,7 @@ object Similarity {
     require(dim > 0, s"graft pq: vector dimension must be positive, got $dim")
     val dsub = (math.min(8, dim) to 1 by -1).find(d => dim % d == 0).get
     val m = dim / dsub
-    val budget = sys.props.get("graft.pq.budgetBytes").map(_.toInt).getOrElse(6)
-    val bits = math.max(2, math.min(8, budget * 8 / m))
+    val bits = math.max(2, math.min(8, PqBudgetBytes * 8 / m))
     PqGeom(m, dsub, 1 << bits)
   }
 
@@ -718,7 +719,7 @@ object Similarity {
 
   /** Memoized geometry for a corpus DIRECTORY: the dimension probe is
     * one limit(1) scan of the raw embeddings (no transform pipeline),
-    * cached per (dir, budget, corpus row count) so warm q124/q126
+    * cached per (dir, corpus row count) so warm q124/q126
     * calls never re-run a job just to rebuild their cache keys — and a
     * corpus REPLACED at the same path invalidates through the same
     * row-count fingerprint the index artifacts use.
@@ -728,8 +729,7 @@ object Similarity {
   private[queries] def clearGeomCache(): Unit = geomCache.clear()
   private def pqGeomOfDir(spark: SparkSession, dir: String,
       nVecs: Long): PqGeom = {
-    val budget = sys.props.getOrElse("graft.pq.budgetBytes", "6")
-    geomCache.computeIfAbsent(s"$dir#$budget#$nVecs", _ =>
+    geomCache.computeIfAbsent(s"$dir#$nVecs", _ =>
       pqGeomFor(t(spark, dir, "embeddings")
         .select(size(col("embedding")).as("d")).limit(1).head().getInt(0)))
   }
@@ -1027,7 +1027,8 @@ object Similarity {
   /** The residual-IVFADC chain with its two serving knobs exposed —
     * `nprobe` (cells probed per query; the ranked index persists at
     * upTo = nprobe) and `shortlist` (ADC candidates kept for the exact
-    * rerank). q126 pins (2, 50); [[graft.IvfRecallProbe]] ladders both
+    * rerank). q126 pins (2, 50); the serving ladder in RESULTS_r18.md
+    * (and `results/ivf_recall_ladder_x128_r18.log` at 128×) varies both
     * so the serving default is a measured choice. The residual CODES
     * artifact is shared across the ladder — cell assignment (ar=1) and
     * codebooks do not depend on either knob. */

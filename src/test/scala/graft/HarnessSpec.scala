@@ -50,37 +50,39 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("benchAll excludes the broken query from times and reports it as an error") {
-    val (times, errors) = Harness.benchAll(spark, qs, dir)
+    val Harness.BenchRun(times, errors, _, _, _) = Harness.benchAll(spark, qs, dir)
     assert(times.keySet == Set("good_q"), times)
     assert(times("good_q") > 0.0)
     assert(errors.keySet == Set("broken_q"), errors)
   }
 
   test("benchJson carries errors in the artifact itself, never as a time") {
-    val json = Harness.benchJson(Map("good_q" -> 0.5), Map("broken_q" -> "boom"), dir)
+    def run(times: Map[String, Double], errors: Map[String, String]) =
+      Harness.BenchRun(times, errors, Map.empty, 4, "local[4]")
+    val json = Harness.benchJson(run(Map("good_q" -> 0.5), Map("broken_q" -> "boom")), dir)
     assert(json.contains(""""errors":{"broken_q": "boom"}"""), json)
     assert(json.contains(""""good_q":0.5"""), json)
     assert(!json.contains(""""broken_q":0"""), json)
     assert(json.contains(s""""spark_version":"${org.apache.spark.SPARK_VERSION}""""), json)
     // exception messages with control chars must not break the driver's json.load
-    val hairy = Harness.benchJson(Map(), Map("q" -> "line1\nline2\t\"quoted\""), dir)
+    val hairy = Harness.benchJson(run(Map(), Map("q" -> "line1\nline2\t\"quoted\"")), dir)
     assert(hairy.contains("""line1\nline2\t\"quoted\""""), hairy)
   }
 
   test("a fully-green run yields an empty errors map and no errors key") {
-    val (times, errors) = Harness.benchAll(spark, Map("good_q" -> good), dir)
-    assert(errors.isEmpty)
-    val json = Harness.benchJson(times, errors, dir)
+    val run = Harness.benchAll(spark, Map("good_q" -> good), dir)
+    assert(run.errors.isEmpty)
+    val json = Harness.benchJson(run, dir)
     assert(!json.contains("errors"), json)
   }
 
   test("both JSON shapes carry the session's real core count and master (r21)") {
     // benchAll captures from the LIVE context; the emit runs after stop
-    val (times, errors) = Harness.benchAll(spark, Map("good_q" -> good), dir)
+    val run = Harness.benchAll(spark, Map("good_q" -> good), dir)
     val expected = s""""cpus":${spark.sparkContext.defaultParallelism},""" +
       s""""master":"local[4]""""
-    assert(Harness.benchJson(times, errors, dir).contains(expected))
-    assert(Harness.benchJsonCompact(times, errors, dir, "/tmp/x.json")
+    assert(Harness.benchJson(run, dir).contains(expected))
+    assert(Harness.benchJsonCompact(run, dir, "/tmp/x.json")
       .contains(expected))
   }
 }
