@@ -95,8 +95,9 @@ object Encoder {
         sub(keys)
         sub(values)
         Enc.MAP
-      case _: DictBytes =>
-        throw new IllegalArgumentException("DictBytes is a scan-side representation")
+      case scanSide @ (_: DictBytes | _: DictLongs | _: DictDoubles | _: StructData) =>
+        throw new IllegalArgumentException(
+          s"${scanSide.getClass.getSimpleName} is a scan-side representation")
     }
     val stats = statsOf(col)
     (enc, stats.copy(encoding = enc, offset = start.toLong, length = (out.size - start).toLong))

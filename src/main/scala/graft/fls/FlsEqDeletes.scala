@@ -446,7 +446,7 @@ object FlsEqDeletes {
     if (subst.isEmpty) return None
     val byCol = subst.map(f => (colOf(f).getOrElse(return None), f))
     val legs = byCol.groupBy(_._1).toSeq.map { case (col, fs) =>
-      legForColumn(col, fs.map(_._2), schema).getOrElse(return None)
+      legForColumn(col, fs.map(_._2).toSeq, schema).getOrElse(return None)
     }
     // every IsNotNull must be implied by a substantive conjunct on the
     // same column, else the shape is not expressible here

@@ -345,18 +345,26 @@ object FlsFileStats {
           val dbls = vs.map(_ \ "d")
           val bts = vs.map(_ \ "b")
           if (longs.forall(_.isInstanceOf[JArray])) {
-            val bs = longs.map { case JArray(List(mn, mx)) => (num(mn), num(mx)) }
+            val bs = longs.map {
+              case JArray(List(mn, mx)) => (num(mn), num(mx))
+              case _ => return None
+            }
             out += c -> JObject(List("t" -> tag,
               "l" -> JArray(List(JLong(bs.map(_._1).min), JLong(bs.map(_._2).max)))))
           } else if (dbls.forall(_.isInstanceOf[JArray])) {
-            val bs = dbls.map { case JArray(List(mn, mx)) => (dbl(mn), dbl(mx)) }
+            val bs = dbls.map {
+              case JArray(List(mn, mx)) => (dbl(mn), dbl(mx))
+              case _ => return None
+            }
             if (!bs.exists(b => b._1.isNaN || b._2.isNaN))
               out += c -> JObject(List("t" -> tag,
                 "d" -> JArray(List(JDouble(bs.map(_._1).min), JDouble(bs.map(_._2).max)))))
           } else if (bts.forall(_.isInstanceOf[JArray])) {
             val b64 = java.util.Base64.getDecoder
-            val bs = bts.map { case JArray(List(JString(mn), JString(mx))) =>
-              (b64.decode(mn), b64.decode(mx)) }
+            val bs = bts.map {
+              case JArray(List(JString(mn), JString(mx))) => (b64.decode(mn), b64.decode(mx))
+              case _ => return None
+            }
             val mn = bs.map(_._1).reduce((a, b) => if (cmpBytes(a, b) <= 0) a else b)
             val mx = bs.map(_._2).reduce((a, b) => if (cmpBytes(a, b) >= 0) a else b)
             val e = java.util.Base64.getEncoder

@@ -789,15 +789,34 @@ class FlsScan(
     * key set can't touch. */
   private var runtimeFilters: Array[Filter] = Array.empty
 
-  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] =
+  /** Join DPP builds one single-column subquery per join key, so a plain
+    * scan advertises every partition and numeric column. A row-level
+    * group scan advertises ONE: Spark's RowLevelOperationRuntimeGroupFiltering
+    * turns all advertised columns into one `named_struct(..) IN (subquery)`,
+    * and DSv2 translates only a single-column IN into a runtime filter —
+    * with two or more columns the subquery runs and [[filter]] never sees
+    * its result. The one column is the first partition column, else the
+    * first `cluster_by` column (the column files are range-clustered on,
+    * so its zone maps separate files), else the first column the plain
+    * rule accepts. */
+  override def filterAttributes(): Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     // MUST be a subset of the scan OUTPUT (requiredSchema): Spark
     // resolves these against the pruned relation — advertising pruned
     // columns breaks analysis ("Unable to resolve ... given [...]")
-    requiredSchema.fields
+    val prunable = requiredSchema.fields
       .filter(f => partTypes.contains(f.name) || // partition cols prune whole files
         scala.util.Try(ColumnType.fromSpark(f.dataType)).toOption
           .exists(ct => physOf(ct.tag) == Phys.LONG || physOf(ct.tag) == Phys.DOUBLE))
-      .map(f => org.apache.spark.sql.connector.expressions.Expressions.column(f.name))
+      .map(_.name).toSeq
+    def inOutput(cols: Seq[String]): Option[String] =
+      cols.find(requiredSchema.fieldNames.contains)
+    val names =
+      if (!groupGranularity) prunable
+      else inOutput(partDisc.keys.filter(partTypes.contains))
+        .orElse(inOutput(FlsWriteLayout.parse(options, tableSchema).clusterBy.map(_._1)))
+        .orElse(prunable.headOption).toSeq
+    names.map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
+  }
 
   override def filter(newFilters: Array[Filter]): Unit = {
     runtimeFilters = newFilters.filter(FlsZoneMap.usable)

@@ -30,10 +30,17 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   *
   * Spark narrows the scan to affected groups via
   * RowLevelOperationRuntimeGroupFiltering over the scan's
-  * `filterAttributes` (partition + stats-bearing columns), so an
-  * UPDATE touching one partition/cluster range rewrites those files,
-  * not the table. The replacement write goes through the normal layout
-  * contract (FlsWrite) — partition routing and clustering survive. */
+  * `filterAttributes`, which for this scan is ONE column: the first
+  * partition column, else the first `cluster_by` column, else the first
+  * numeric one. One, because Spark folds all advertised columns into a
+  * single `named_struct(..) IN (subquery)` and DSv2 hands the scan only
+  * a single-column IN — with two columns nothing would be pruned. The
+  * matched rows' values of that column then prune files by partition
+  * value and zone map, so a MERGE or UPDATE touching one partition or
+  * cluster range rewrites those files, not the table, and a MERGE that
+  * matches nothing rewrites no file. The replacement write goes through
+  * the normal layout contract (FlsWrite) — partition routing and
+  * clustering survive. */
 class FlsRowLevelOperation(
     cmd: Command,
     tableSchema: StructType,

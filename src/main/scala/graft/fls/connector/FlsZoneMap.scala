@@ -76,8 +76,10 @@ object FlsZoneMap {
     case LessThanOrEqual(col, v) =>
       strCmp(rg, nameToIdx, columns, col, v)((cMin, _) => cMin >= 0)
         .getOrElse(cmp(rg, nameToIdx, columns, col, v, rowStart, sizeBase) { (mn, _, x) => mn <= x })
+    // an empty list is FALSE in SQL (as in FlsPartitioning.evalMask): a
+    // runtime IN whose subquery matched nothing prunes every row group
     case In(col, vs) =>
-      vs.isEmpty || vs.exists { v =>
+      vs.exists { v =>
         strCmp(rg, nameToIdx, columns, col, v)((cMin, cMax) => cMin >= 0 && cMax <= 0)
           .getOrElse(cmp(rg, nameToIdx, columns, col, v, rowStart, sizeBase) { (mn, mx, x) => x >= mn && x <= mx })
       }

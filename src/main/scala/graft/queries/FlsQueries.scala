@@ -815,8 +815,10 @@ object FlsQueries {
   /** Corpus correction as MERGE INTO (FlsRowLevelOperation, the
     * group-based copy-on-write engine): a corrections feed updates the
     * priority of every 97th order and backfills a negated-key twin of
-    * every 997th — matched rows rewrite IN their files (runtime group
-    * filtering narrows the rewrite), not-matched rows append. The
+    * every 997th — matched rows rewrite IN their files, not-matched rows
+    * append. Runtime group filtering keeps only the `dt` partitions that
+    * hold a matched order; every 97th order lands in nearly every month,
+    * so here it prunes little and nearly the whole table is rewritten. The
     * oracle recomputes both legs from raw orders, so the hash match
     * proves the merge changed exactly the right rows, inserted exactly
     * the right rows, and disturbed nothing else. */

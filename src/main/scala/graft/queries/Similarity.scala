@@ -56,7 +56,7 @@ object Similarity {
     private val m = new java.util.LinkedHashMap[String, V](16, 0.75f, true) {
       override def removeEldestEntry(
           e: java.util.Map.Entry[String, V]): Boolean = {
-        val evict = size() > cap
+        val evict = this.size() > cap
         if (evict) onEvict(e.getValue)
         evict
       }

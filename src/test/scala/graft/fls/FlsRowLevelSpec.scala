@@ -7,6 +7,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** Row-level operations (FlsRowLevelOperation): UPDATE, MERGE INTO and
   * the copy-on-write DELETE leg — group-based replacement where the
   * scan reads affected FILES whole and the commit swaps exactly them. */
@@ -74,7 +76,8 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     val t = spark.table("fls_rl_n")
     assert(t.filter(col("body") === "patched").count() ==
       (1 until 50).count(_ % 3 == 1))
-    // files of k=0 / k=2 were not rewritten (group filtering pruned them)
+    // files of k=0 / k=2 were not rewritten (the static k = '1' filter
+    // pruned them)
     val untouched = before.filter(f => f.contains("k=0") || f.contains("k=2"))
     assert(untouched.subsetOf(after), "unaffected partitions must keep their files")
     spark.sql("DROP TABLE fls_rl_n")
@@ -97,6 +100,7 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("MERGE INTO: matched update + not-matched insert") {
     val dir = s"$tmp/merge"
     mkPartitioned("fls_rl_m", dir)
+    val before = fileNames(dir)
     val sp = spark; import sp.implicits._
     Seq((5L, "merged-5", "2"), (301L, "merged-301", "1"))
       .toDF("id", "body", "k").createOrReplaceTempView("rl_source")
@@ -111,6 +115,13 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(t.filter(col("id") === 5L).select("k").collect()(0).getString(0) == "2")
     assert(t.filter(col("id") === 301L).select("k").collect()(0).getString(0) == "1")
     assert(t.filter(col("body").startsWith("old-")).count() == 299)
+    // only the matched row's partition (k=2) is rewritten: runtime group
+    // filtering on `k` kept the k=0 and k=1 files out of the group scan
+    val after = fileNames(dir)
+    val unmatched = before.filterNot(_.contains("k=2"))
+    assert(unmatched.nonEmpty && unmatched.subsetOf(after),
+      s"unmatched partitions must keep their files: ${unmatched -- after}")
+    assert(before.filter(_.contains("k=2")).intersect(after).isEmpty)
     spark.sql("DROP TABLE fls_rl_m")
   }
 
@@ -131,6 +142,109 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(entries0.map(_.rel).forall(r =>
       fs.exists(new org.apache.hadoop.fs.Path(root, r))))
     spark.sql("DROP TABLE fls_rl_mf")
+  }
+
+  /** A manifest table of ids 1..10000 in `v, id, body` order, clustered
+    * on `id` into files of one 1024-row group: every file holds one
+    * disjoint id range, and `v` (numeric) comes first so the cluster
+    * column is not simply the first prunable one. */
+  private def mkClustered(name: String, dir: String): Unit = {
+    val sp = spark; import sp.implicits._
+    val layout = Seq("commit_mode" -> "manifest", "cluster_by" -> "id",
+      "row_group_size" -> "1024", "row_groups_per_file" -> "1")
+    (1 to 10000).map(i => ((i % 7).toLong, i.toLong, s"old-$i"))
+      .toDF("v", "id", "body")
+      .write.format("fls").mode("overwrite").options(layout.toMap).save(dir)
+    spark.sql(s"DROP TABLE IF EXISTS $name")
+    spark.sql(s"CREATE TABLE $name USING fls OPTIONS (path '$dir', " +
+      layout.map { case (k, v) => s"$k '$v'" }.mkString(", ") + ")")
+  }
+
+  /** Live files of a manifest table → their `[min, max]` of `id`. */
+  private def idRanges(dir: String): Map[String, (Long, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    FlsFooters.list(Seq(dir), conf, None).map { e =>
+      val i = e.table.columns.indexWhere(_.name == "id")
+      val segs = e.table.rowGroups.map(_.segments(i))
+      e.file.toString -> (segs.map(_.minLong).min, segs.map(_.maxLong).max)
+    }.toMap
+  }
+
+  private def mergeUpsert(table: String, rows: Seq[(Long, Long, String)]): Unit = {
+    val sp = spark; import sp.implicits._
+    rows.toDF("v", "id", "body").createOrReplaceTempView("rl_cluster_src")
+    spark.sql(s"""
+      MERGE INTO $table t USING rl_cluster_src s ON t.id = s.id
+      WHEN MATCHED THEN UPDATE SET t.body = s.body
+      WHEN NOT MATCHED THEN INSERT *""")
+  }
+
+  test("MERGE on a clustered table rewrites only the files holding a matched key") {
+    val dir = s"$tmp/merge_clustered"
+    mkClustered("fls_rl_mc", dir)
+    val before = idRanges(dir)
+    assert(before.size >= 8, s"expected small files, got ${before.size}")
+    val matched = Seq(5L, 7L, 4555L)
+    mergeUpsert("fls_rl_mc",
+      matched.map(k => (0L, k, s"merged-$k")) :+ ((0L, 50000L, "fresh")))
+    val after = idRanges(dir)
+    val holding = before.filter { case (_, (mn, mx)) =>
+      matched.exists(k => k >= mn && k <= mx) }.keySet
+    assert(holding.nonEmpty && holding.size < before.size)
+    assert(before.keySet -- after.keySet == holding,
+      "exactly the files whose id range holds a matched key are replaced")
+    val t = spark.table("fls_rl_mc")
+    assert(t.count() == 10001)
+    assert(t.filter(col("body").startsWith("merged-")).count() == matched.size)
+    assert(t.filter(col("id") === 4555L).select("body").collect()(0).getString(0) == "merged-4555")
+    assert(t.filter(col("id") === 4556L).select("body").collect()(0).getString(0) == "old-4556")
+    spark.sql("DROP TABLE fls_rl_mc")
+  }
+
+  test("MERGE whose source matches no target row removes no file") {
+    val dir = s"$tmp/merge_insert_only"
+    mkClustered("fls_rl_mi", dir)
+    val before = idRanges(dir).keySet
+    mergeUpsert("fls_rl_mi", Seq((1L, 20001L, "fresh-1"), (1L, 20002L, "fresh-2")))
+    val after = idRanges(dir).keySet
+    assert(before.subsetOf(after), s"no file may be replaced: ${before -- after}")
+    val t = spark.table("fls_rl_mi")
+    assert(t.count() == 10002)
+    assert(t.filter(col("body").startsWith("fresh-")).count() == 2)
+    spark.sql("DROP TABLE fls_rl_mi")
+  }
+
+  test("the group scan advertises one runtime-filter column: partition, cluster, numeric") {
+    import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.fls.connector.{FlsRowLevelOperation, FlsScan, FlsScanBuilder}
+    def attrs(dir: String, group: Boolean, layout: (String, String)*): Seq[String] = {
+      val schema = spark.read.format("fls").load(dir).schema
+      val opts = new CaseInsensitiveStringMap((layout.toMap + ("path" -> dir)).asJava)
+      val builder =
+        if (group) new FlsRowLevelOperation(Command.MERGE, schema, opts, spark)
+          .newScanBuilder(CaseInsensitiveStringMap.empty())
+        else new FlsScanBuilder(schema, opts, spark)
+      builder.build().asInstanceOf[FlsScan].filterAttributes().map(_.describe()).toSeq
+    }
+    val partitioned = s"$tmp/fa_partitioned"
+    val clustered = s"$tmp/fa_clustered"
+    val plain = s"$tmp/fa_plain"
+    mkPartitioned("fls_rl_fa_p", partitioned)
+    mkClustered("fls_rl_fa_c", clustered)
+    val sp = spark; import sp.implicits._
+    (1 to 10).map(i => (s"b-$i", (i % 2).toLong, i.toLong)).toDF("body", "v", "id")
+      .write.format("fls").mode("overwrite").save(plain)
+    // rule 1: the partition column; rule 2: the first cluster_by column
+    // (ahead of the numeric `v`); rule 3: the first prunable column
+    assert(attrs(partitioned, group = true) == Seq("k"))
+    assert(attrs(clustered, group = true, "cluster_by" -> "id") == Seq("id"))
+    assert(attrs(plain, group = true) == Seq("v"))
+    // plain scans keep every partition and numeric column for join DPP
+    assert(attrs(partitioned, group = false).toSet == Set("id", "k"))
+    assert(attrs(clustered, group = false, "cluster_by" -> "id") == Seq("v", "id"))
+    assert(attrs(plain, group = false) == Seq("v", "id"))
+    Seq("fls_rl_fa_p", "fls_rl_fa_c").foreach(t => spark.sql(s"DROP TABLE $t"))
   }
 
   test("decidable DELETE still takes the zero-read metadata path") {

@@ -26,6 +26,12 @@ class FlsZoneMapSpec extends AnyFunSuite {
     assert(keeps(LessThanOrEqual("x", 10L), 10, 20))
     assert(keeps(In("x", Array(1L, 15L)), 10, 20))
     assert(!keeps(In("x", Array(1L, 2L)), 10, 20))
+    // x IN () is FALSE in SQL: a runtime IN whose subquery matched
+    // nothing prunes everything, also on a column the file lacks
+    assert(!keeps(In("x", Array.empty[Any]), 10, 20))
+    assert(!keeps(Or(In("x", Array.empty[Any]), EqualTo("x", 5L)), 10, 20))
+    assert(keeps(Or(In("x", Array.empty[Any]), EqualTo("x", 15L)), 10, 20))
+    assert(!keeps(In("y", Array.empty[Any]), 10, 20))
   }
 
   test("IsNull prunes everything (no-NULL format); IsNotNull keeps") {
