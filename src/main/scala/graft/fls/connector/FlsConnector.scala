@@ -818,8 +818,18 @@ class FlsScan(
     names.map(org.apache.spark.sql.connector.expressions.Expressions.column).toArray
   }
 
+  /** In a group scan the runtime IN lists the filter column's values
+    * among MATCHED target rows, NULL included when a matched row holds
+    * NULL there (a `__HIVE_DEFAULT_PARTITION__` file, or a column its
+    * file lacks). SQL's `c IN (NULL, ..)` is never TRUE on that row, so
+    * its file would be pruned and the match silently lost;
+    * `c IS NULL OR c IN (..)` keeps it. */
   override def filter(newFilters: Array[Filter]): Unit = {
-    runtimeFilters = newFilters.filter(FlsZoneMap.usable)
+    runtimeFilters = newFilters.filter(FlsZoneMap.usable).map {
+      case In(c, vs) if groupGranularity && vs.contains(null) =>
+        Or(IsNull(c), In(c, vs.filter(_ != null)))
+      case f => f
+    }.map(FlsZoneMap.sortIns)
   }
 
   override def toBatch: Batch = this

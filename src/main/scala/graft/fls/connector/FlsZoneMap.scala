@@ -1,6 +1,7 @@
 package graft.fls.connector
 
 import org.apache.spark.sql.sources._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fls.Format._
 
@@ -76,6 +77,7 @@ object FlsZoneMap {
     case LessThanOrEqual(col, v) =>
       strCmp(rg, nameToIdx, columns, col, v)((cMin, _) => cMin >= 0)
         .getOrElse(cmp(rg, nameToIdx, columns, col, v, rowStart, sizeBase) { (mn, _, x) => mn <= x })
+    case s: SortedIn => sortedInMayMatch(rg, nameToIdx, columns, s, rowStart, sizeBase)
     // an empty list is FALSE in SQL (as in FlsPartitioning.evalMask): a
     // runtime IN whose subquery matched nothing prunes every row group
     case In(col, vs) =>
@@ -158,6 +160,140 @@ object FlsZoneMap {
       case _ => None
     }
 
+  /** A runtime `In` with its values sorted once, so a row group is
+    * tested by binary search instead of a scan of the list: a MERGE's
+    * runtime IN holds one value per distinct matched key, and the group
+    * scan tests it against every row group of every file. Every other
+    * consumer still sees a plain `In`. Values are sorted per comparison
+    * space ([[Zone.space]]) on first use; planning is single-threaded. */
+  final class SortedIn(col: String, vs: Array[Any]) extends In(col, vs) {
+    /** The values as UTF-8, unsigned-byte sorted; None when one is not a string. */
+    @transient lazy val sortedBytes: Option[Array[Array[Byte]]] =
+      if (!values.forall(v => v.isInstanceOf[String] || v.isInstanceOf[UTF8String])) None
+      else Some(values.map {
+        case s: String => s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
+        case s: UTF8String => s.getBytes
+      }.sortWith(cmpBytes(_, _) < 0))
+    @transient private lazy val spaces =
+      scala.collection.mutable.HashMap.empty[Option[ColumnType], Option[Array[Double]]]
+    /** The values in `space`, sorted, NaN dropped (NaN is inside no
+      * zone); None when one does not convert — the zone is then kept,
+      * as the linear test keeps it. */
+    def sortedIn(space: Option[ColumnType]): Option[Array[Double]] =
+      spaces.getOrElseUpdate(space, {
+        val xs = values.map(literal(_, space))
+        if (xs.exists(_.isEmpty)) None
+        else {
+          val ds = xs.flatten.filterNot(_.isNaN)
+          java.util.Arrays.sort(ds)
+          Some(ds)
+        }
+      })
+  }
+
+  /** Prepare runtime filters for many zone tests: each `In` becomes a
+    * [[SortedIn]]. */
+  def sortIns(f: Filter): Filter = f match {
+    case In(col, vs) => new SortedIn(col, vs)
+    case And(l, r) => And(sortIns(l), sortIns(r))
+    case Or(l, r) => Or(sortIns(l), sortIns(r))
+    case other => other
+  }
+
+  /** Some value of the sorted `xs` lies in [lo, hi] (binary search). */
+  private def anyWithin[A](xs: Array[A], geLo: A => Boolean, leHi: A => Boolean): Boolean = {
+    var a = 0
+    var b = xs.length
+    while (a < b) {
+      val m = (a + b) >>> 1
+      if (geLo(xs(m))) b = m else a = m + 1
+    }
+    a < xs.length && leHi(xs(a))
+  }
+
+  /** The linear `In` test below, by binary search: per value, a string
+    * literal on a byte-stats STRING column is tested on bytes, any other
+    * in the zone's double space. */
+  private def sortedInMayMatch(
+      rg: RowGroupDesc,
+      nameToIdx: Map[String, Int],
+      columns: Array[ColumnDesc],
+      s: SortedIn,
+      rowStart: Long,
+      sizeBase: Map[String, String]): Boolean = {
+    val col = s.attribute
+    if (s.values.isEmpty) false // FALSE in SQL, as in the linear test
+    else nameToIdx.get(col) match {
+      case Some(idx) if columns(idx).colType.tag == TypeTag.STRING &&
+          rg.segments(idx).hasByteStats =>
+        val seg = rg.segments(idx)
+        // a non-string literal never converts on a STRING column: kept
+        s.sortedBytes.forall(bs =>
+          anyWithin[Array[Byte]](bs, cmpBytes(_, seg.minBytes) >= 0, cmpBytes(_, seg.maxBytes) <= 0))
+      case _ =>
+        zone(rg, nameToIdx, columns, col, rowStart, sizeBase).forall { z =>
+          s.sortedIn(z.space).forall(xs =>
+            anyWithin[Double](xs, _ >= z.mn, _ <= z.mx))
+        }
+    }
+  }
+
+  /** A row group's bounds for one column in double space, and the space
+    * its literals convert into: the column type, or None for a virtual
+    * column (row number, `<col>_size`) whose literals are plain numbers. */
+  private final case class Zone(mn: Double, mx: Double, space: Option[ColumnType])
+
+  /** Bounds of `col` in `rg`; None when the row group has none (kept). */
+  private def zone(
+      rg: RowGroupDesc,
+      nameToIdx: Map[String, Int],
+      columns: Array[ColumnDesc],
+      col: String,
+      rowStart: Long,
+      sizeBase: Map[String, String]): Option[Zone] = {
+    // Virtual row-number filters skip by row range, the reference's
+    // rowid special path (/root/reference/src/reader/row_group_filter.cpp:136-153).
+    if (col == FlsVirtual.RowNumber && !nameToIdx.contains(col))
+      return Some(Zone(rowStart.toDouble, (rowStart + rg.nTuples - 1).toDouble, None))
+    // Virtual `<col>_size` filters compare against the LIST segment's
+    // element-count bounds — footer-only pruning for size screening.
+    sizeBase.get(col).flatMap(nameToIdx.get) match {
+      case Some(baseIdx) =>
+        val seg = rg.segments(baseIdx)
+        return if (!seg.elemCountStats) None
+          else Some(Zone(seg.minLong.toDouble, seg.maxLong.toDouble, None))
+      case None => ()
+    }
+    nameToIdx.get(col).flatMap { idx =>
+      val seg = rg.segments(idx)
+      val ct = columns(idx).colType
+      if (!seg.hasStats) None
+      else physOf(ct.tag) match {
+        case Phys.LONG if ct.tag == TypeTag.UINT64 =>
+          // Stats are SIGNED min/max of the raw bits. Signed and
+          // unsigned order agree within each half of the domain,
+          // so same-sign stats ARE the unsigned bounds; a group
+          // straddling 2^63 has unknowable unsigned bounds from
+          // signed stats — keep it (conservative, rare when data
+          // is clustered at 64Ki-row granularity).
+          if ((seg.minLong < 0L) != (seg.maxLong < 0L)) None
+          else Some(Zone(u64ToDouble(seg.minLong), u64ToDouble(seg.maxLong), Some(ct)))
+        case Phys.LONG => Some(Zone(seg.minLong.toDouble, seg.maxLong.toDouble, Some(ct)))
+        case Phys.DOUBLE => Some(Zone(seg.minDouble, seg.maxDouble, Some(ct)))
+        case _ => None
+      }
+    }
+  }
+
+  /** A pushed literal in a zone's comparison space. */
+  private def literal(value: Any, space: Option[ColumnType]): Option[Double] = space match {
+    case Some(ct) => toComparable(value, ct)
+    case None => value match {
+      case n: Number => Some(n.longValue().toDouble)
+      case _ => None
+    }
+  }
+
   /** Run `test(min, max, value)` in double space (exact for longs up to
     * 2^53 — beyond that the compare is approximate but still
     * conservative only if we widen; to stay safe we only prune when the
@@ -170,57 +306,9 @@ object FlsZoneMap {
       value: Any,
       rowStart: Long,
       sizeBase: Map[String, String] = Map.empty)(
-      test: (Double, Double, Double) => Boolean): Boolean = {
-    // Virtual row-number filters skip by row range, the reference's
-    // rowid special path (/root/reference/src/reader/row_group_filter.cpp:136-153).
-    if (col == FlsVirtual.RowNumber && !nameToIdx.contains(col)) {
-      return value match {
-        case n: Number =>
-          test(rowStart.toDouble, (rowStart + rg.nTuples - 1).toDouble, n.longValue().toDouble)
-        case _ => true
-      }
-    }
-    // Virtual `<col>_size` filters compare against the LIST segment's
-    // element-count bounds — footer-only pruning for size screening.
-    sizeBase.get(col).flatMap(nameToIdx.get) match {
-      case Some(baseIdx) =>
-        val seg = rg.segments(baseIdx)
-        return !seg.elemCountStats || (value match {
-          case n: Number =>
-            test(seg.minLong.toDouble, seg.maxLong.toDouble, n.longValue().toDouble)
-          case _ => true
-        })
-      case None => ()
-    }
-    nameToIdx.get(col) match {
-      case None => true
-      case Some(idx) =>
-        val seg = rg.segments(idx)
-        if (!seg.hasStats) true
-        else {
-          val ct = columns(idx).colType
-          toComparable(value, ct) match {
-            case None => true
-            case Some(x) =>
-              val (mn, mx) = physOf(ct.tag) match {
-                case Phys.LONG if ct.tag == TypeTag.UINT64 =>
-                  // Stats are SIGNED min/max of the raw bits. Signed and
-                  // unsigned order agree within each half of the domain,
-                  // so same-sign stats ARE the unsigned bounds; a group
-                  // straddling 2^63 has unknowable unsigned bounds from
-                  // signed stats — keep it (conservative, rare when data
-                  // is clustered at 64Ki-row granularity).
-                  if ((seg.minLong < 0L) != (seg.maxLong < 0L)) return true
-                  (u64ToDouble(seg.minLong), u64ToDouble(seg.maxLong))
-                case Phys.LONG => (seg.minLong.toDouble, seg.maxLong.toDouble)
-                case Phys.DOUBLE => (seg.minDouble, seg.maxDouble)
-                case _ => return true
-              }
-              test(mn, mx, x)
-          }
-        }
-    }
-  }
+      test: (Double, Double, Double) => Boolean): Boolean =
+    zone(rg, nameToIdx, columns, col, rowStart, sizeBase).forall(z =>
+      literal(value, z.space).forall(x => test(z.mn, z.mx, x)))
 
   /** Convert a pushed literal to the column's physical comparison space. */
   private def toComparable(value: Any, ct: ColumnType): Option[Double] = {

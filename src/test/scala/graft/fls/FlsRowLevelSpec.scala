@@ -125,6 +125,70 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql("DROP TABLE fls_rl_m")
   }
 
+  test("MERGE matching a row in the default partition never loses the match") {
+    import org.apache.spark.sql.connector.write.RowLevelOperation.Command
+    import org.apache.spark.sql.util.CaseInsensitiveStringMap
+    import graft.fls.connector.{FlsInputPartition, FlsPartitioning, FlsRowLevelOperation, FlsScan}
+    val sp = spark; import sp.implicits._
+    val dir = s"$tmp/merge_defpart"
+    val default = s"k=${FlsPartitioning.DefaultPartitionName}"
+    // a hive layout with a NULL partition, built by hand: the writer
+    // rejects NULL partition values, external tools emit the default one
+    Seq("k=a" -> 1L, "k=b" -> 2L, default -> 3L).foreach { case (part, id) =>
+      Seq((id, s"old-$id")).toDF("id", "body").coalesce(1)
+        .write.format("fls").mode("overwrite").save(s"$dir/$part")
+    }
+    // a match in the NULL partition makes the runtime filter
+    // `k IN (NULL, 'a')`, which is never TRUE there: the group scan
+    // must still plan that partition's file
+    def planned(keys: Any*): Set[String] = {
+      val scan = new FlsRowLevelOperation(Command.MERGE,
+          spark.read.format("fls").load(dir).schema,
+          new CaseInsensitiveStringMap(Map("path" -> dir).asJava), spark)
+        .newScanBuilder(CaseInsensitiveStringMap.empty()).build().asInstanceOf[FlsScan]
+      scan.filter(Array[org.apache.spark.sql.sources.Filter](
+        org.apache.spark.sql.sources.In("k", keys.toArray)))
+      scan.planInputPartitions().toSet.flatMap((p: org.apache.spark.sql.connector.read.InputPartition) =>
+        p.asInstanceOf[FlsInputPartition].chunks.map(c =>
+          new org.apache.hadoop.fs.Path(c.file).getParent.getName))
+    }
+    assert(planned(null, "a") == Set("k=a", default))
+    assert(planned("a") == Set("k=a"))
+    assert(planned(null) == Set(default))
+
+    spark.sql("DROP TABLE IF EXISTS fls_rl_dp")
+    spark.sql("CREATE TABLE fls_rl_dp (id BIGINT, body STRING, k STRING) " +
+      s"USING fls PARTITIONED BY (k) LOCATION '$dir'")
+    def rows = spark.table("fls_rl_dp").select("id", "body").as[(Long, String)]
+      .collect().toSet
+    def merge(ids: Long*): Unit = {
+      ids.map(i => (i, s"merged-$i")).toDF("id", "body")
+        .createOrReplaceTempView("rl_defpart_src")
+      spark.sql("""
+        MERGE INTO fls_rl_dp t USING rl_defpart_src s ON t.id = s.id
+        WHEN MATCHED THEN UPDATE SET t.body = s.body
+        WHEN NOT MATCHED THEN INSERT (id, body, k) VALUES (s.id, s.body, 'c')""")
+    }
+    val before = fileNames(dir)
+    // end to end, the rewrite then refuses the NULL partition value: a
+    // loud failure, not a lost update plus a duplicate insert. One write
+    // task, so the job fails whole — a listing-mode task that commits
+    // while another fails can outlive the job's abort (a separate defect)
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    val e = try intercept[Exception](merge(1L, 3L))
+      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("NULL in partition column")), e)
+    assert(rows == Set((1L, "old-1"), (2L, "old-2"), (3L, "old-3")))
+    assert(fileNames(dir) == before)
+    // a MERGE that matches only `k = 'a'` leaves the default partition alone
+    merge(1L, 4L)
+    assert(rows == Set((1L, "merged-1"), (2L, "old-2"), (3L, "old-3"), (4L, "merged-4")))
+    val kept = before.filterNot(_.contains("k=a"))
+    assert(kept.subsetOf(fileNames(dir)), s"${kept -- fileNames(dir)}")
+    spark.sql("DROP TABLE fls_rl_dp")
+  }
+
   test("manifest table: UPDATE publishes ONE CAS version; old files stay for vacuum") {
     val dir = s"$tmp/manifest_u"
     mkPartitioned("fls_rl_mf", dir, "commit_mode" -> "manifest")

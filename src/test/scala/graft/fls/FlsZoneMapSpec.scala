@@ -124,6 +124,54 @@ class FlsZoneMapSpec extends AnyFunSuite {
     assert(!st.hasByteStats)
   }
 
+  test("a sorted runtime IN keeps exactly the zones the linear IN keeps") {
+    val rnd = new scala.util.Random(11)
+    val dCols = Array(ColumnDesc("d", ColumnType(TypeTag.DOUBLE)))
+    val dIdx = Map("d" -> 0)
+    // UTF-16 and UTF-8 order disagree on the last two: zones use bytes
+    val pool = Array("a", "b", "m", "zz", "\u00e9", "\uE000", "\uD83D\uDE00")
+    def bytesCmp(a: String, b: String): Int = {
+      val (x, y) = (a.getBytes("UTF-8"), b.getBytes("UTF-8"))
+      x.zip(y).map { case (p, q) => (p & 0xFF) - (q & 0xFF) }.find(_ != 0)
+        .getOrElse(x.length - y.length)
+    }
+    def agree(z: RowGroupDesc, names: Map[String, Int], cs: Array[ColumnDesc],
+        col: String, vs: Array[Any], rowStart: Long = 0L): Unit = {
+      val linear = FlsZoneMap.mayMatch(z, names, cs, Array(In(col, vs)), rowStart)
+      val sorted = FlsZoneMap.mayMatch(z, names, cs,
+        Array(FlsZoneMap.sortIns(And(IsNotNull(col), In(col, vs)))), rowStart)
+      assert(linear == sorted, s"$col IN (${vs.mkString(", ")}) on $rowStart")
+    }
+    for (_ <- 0 until 400) {
+      val n = rnd.nextInt(7)
+      val lo = rnd.nextInt(40) - 20
+      val hi = lo + rnd.nextInt(10)
+      def pick[T](gen: => T): Array[Any] = Array.fill[Any](n)(
+        if (rnd.nextInt(12) == 0) null else if (rnd.nextInt(12) == 0) "x" else gen)
+      val longs = pick((rnd.nextInt(60) - 30).toLong)
+      agree(rg(lo, hi), idx, cols, "x", longs)
+      agree(rg(lo, hi), idx, cols, "absent", longs)
+      agree(RowGroupDesc(hi - lo + 1, Array(SegmentDesc(0, 0, 0, false, 0, 0, 0, 0))),
+        idx, cols, connector.FlsVirtual.RowNumber, longs, rowStart = lo + 20L)
+      val ds = pick(rnd.nextInt(5) match {
+        case 0 => Double.NaN
+        case 1 => -0.0
+        case _ => rnd.nextInt(60) / 2.0 - 15
+      })
+      val dz = RowGroupDesc(1024, Array(SegmentDesc(0, 0, 0, hasStats = true, 0, 0,
+        lo / 2.0, hi / 2.0)))
+      agree(dz, dIdx, dCols, "d", ds)
+      val Array(smin, smax) = Array(pool(rnd.nextInt(pool.length)),
+        pool(rnd.nextInt(pool.length))).sortWith(bytesCmp(_, _) < 0)
+      agree(srg(smin, smax), sIdx, sCols, "s", pick(pool(rnd.nextInt(pool.length))))
+    }
+    // still an In for every other consumer (partition pruning, executors)
+    assert(FlsZoneMap.sortIns(In("x", Array[Any](3L, 1L))) match {
+      case In("x", vs) => vs.toSeq == Seq(3L, 1L)
+      case _ => false
+    })
+  }
+
   test("virtual row-number range pruning") {
     val plain = RowGroupDesc(1024, Array(SegmentDesc(0, 0, 0, false, 0, 0, 0, 0)))
     // row group covers rows [2048, 3072)
