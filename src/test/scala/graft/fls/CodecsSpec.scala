@@ -134,6 +134,7 @@ class CodecsSpec extends AnyFunSuite {
         case _: LongData => Format.Phys.LONG
         case _: DoubleData => Format.Phys.DOUBLE
         case _: BytesData => Format.Phys.BYTES
+        case other => fail(s"no scalar physical type for ${other.getClass.getSimpleName}")
       }
       Codecs.decode(w.toArray, enc, phys)
     }
@@ -384,5 +385,179 @@ class CodecsSpec extends AnyFunSuite {
           s"digits=$digits e=$e: fma=$fma div=${x / d}")
       }
     }
+  }
+
+  /** Seeded columns of every shape the encoder distinguishes, each with
+    * the encoding it must pick and the SHA-256 of its `encodeColumn`
+    * bytes: any change to the selection logic or to a tie-break shows up
+    * as a changed digest, so a faster encoder is held to the same files. */
+  private def pinnedColumns: Seq[(String, ColData, Boolean, Int)] = {
+    import Format.Enc._
+    val rng = new scala.util.Random(2024)
+    def shuffled[T: scala.reflect.ClassTag](xs: Array[T]): Array[T] = rng.shuffle(xs.toSeq).toArray
+    def strs(xs: Seq[String]): BytesData = mkBytes(xs)
+    // 8 × distinct == FFOR cost exactly: n = 1030 values over [0, 255]
+    // (bit width 8) cost 1030 + 2 × 9 = 1048 = 8 × 131
+    def boundary(distinct: Int): Array[Long] = {
+      val vals = (0L +: 255L +: (1L to 253L).take(distinct - 2)).toArray
+      shuffled(Array.tabulate(1030)(i => vals(i % distinct)))
+    }
+    val wide = Array.fill(100)(rng.nextLong())
+    val dictCap = Array.fill(1001)(rng.nextLong())
+    val words = Array("table", "query", "spark", "filter", "window", "batch",
+      "merge", "hash", "value", "column", "segment", "vector")
+    Seq(
+      ("long constant", LongData(Array.fill(3000)(7L)), false, CONSTANT),
+      ("long ffor", LongData(Array.fill(5000)(rng.nextInt(1 << 20).toLong)), false, FFOR),
+      ("long ffor extremes", LongData(Long.MinValue +: Long.MaxValue +: Array.fill(2046)(rng.nextLong())),
+        false, FFOR),
+      ("long dict extremes", LongData(Array.fill(2048)(
+        if (rng.nextBoolean()) Long.MinValue + rng.nextInt(5) else Long.MaxValue - rng.nextInt(5))),
+        false, DICT),
+      ("long dict", LongData(Array.fill(5000)(wide(rng.nextInt(wide.length)))), false, DICT),
+      ("long rle", LongData(Array.tabulate(5000)(i => wide(i / 100))), false, RLE),
+      ("long freq", LongData(Array.tabulate(5000)(i =>
+        if (i % 20 == 7) rng.nextLong() else 42L)), false, FREQ),
+      ("long freq min value", LongData(Array.tabulate(4000)(i =>
+        if (i % 50 == 3) i.toLong else Long.MinValue)), false, FREQ),
+      ("long count tie", LongData(shuffled(Array.tabulate(4000)(i =>
+        if (i % 2 == 0) 9L else -9L))), false, DICT),
+      ("long count tie ffor", LongData(shuffled(Array.tabulate(4000)(i =>
+        if (i < 1000) 5L else if (i < 2000) 3L else i.toLong))), false, FFOR),
+      ("long stop boundary at 8x distinct", LongData(boundary(131)), false, FFOR),
+      ("long stop boundary past 8x distinct", LongData(boundary(132)), false, FFOR),
+      ("long dict at dictCap", LongData(shuffled(Array.tabulate(2000)(i => dictCap(i % 1000)))),
+        false, DICT),
+      ("long dict past dictCap", LongData(shuffled(Array.tabulate(2000)(i => dictCap(i % 1001)))),
+        false, FFOR),
+      ("long tiny", LongData(Array(3L, 1L, 3L)), false, FFOR),
+      ("long transposed", LongData(Array.fill(4096)(rng.nextInt(100000).toLong)), true, TRANSPOSED),
+      ("double constant", DoubleData(Array.fill(2000)(2.5)), false, CONSTANT),
+      ("double alp", DoubleData(Array.fill(4000)(rng.nextInt(1000000) / 100.0)), false, ALP),
+      ("double dict nan and zeros", DoubleData(Array.fill(4000)(rng.nextInt(6) match {
+        case 0 => Double.NaN
+        case 1 => -0.0
+        case 2 => 0.0
+        case 3 => math.Pi
+        case 4 => 1.0 / 3.0
+        case _ => java.lang.Double.longBitsToDouble(0x7FF8000000000001L)
+      })), false, DICT),
+      ("double alp_rd", DoubleData(Array.fill(8000)(rng.nextDouble() * 1e17 + 1e16)), false, ALP_RD),
+      ("double alp_rd count ties", DoubleData(Array.tabulate(6144)(i =>
+        math.scalb(1.0 + rng.nextDouble(), i % 12 - 6))), false, ALP_RD),
+      ("double plain", DoubleData(Array.fill(3000)(
+        java.lang.Double.longBitsToDouble(rng.nextLong()))), false, PLAIN),
+      ("double transposed", DoubleData(Array.fill(2048)(rng.nextDouble() * 1000)), true, TRANSPOSED),
+      ("string empty", strs(Seq.fill(500)("")), false, CONSTANT),
+      ("string one value", strs(Seq.fill(500)("only")), false, CONSTANT),
+      ("string empty and one", strs(Seq.tabulate(600)(i => if (i % 3 == 0) "" else "x")),
+        false, DICT),
+      ("string freq", strs(Seq.tabulate(20000)(i =>
+        if (i % 97 == 5) s"outlier-$i" else "the-dominant-value-of-this-column")), false, FREQ),
+      ("string at dictCap", strs(Seq.tabulate(40)(i =>
+        if (i < 19) s"u$i-${"z" * 40}" else "a" * 200)), false, DICT),
+      ("string past dictCap", strs(Seq.tabulate(40)(i =>
+        if (i < 20) s"u$i-${"z" * 40}" else "a" * 200)), false, FSST),
+      ("string count tie", strs(shuffled(Array.tabulate(3000)(i =>
+        if (i % 2 == 0) "even" else "odd")).toSeq), false, DICT),
+      ("string rle", strs(Seq.tabulate(4000)(i => s"run-${i / 250}")), false, RLE),
+      ("string dict", strs(Seq.fill(4000)(words(rng.nextInt(words.length)))), false, DICT),
+      ("string fsst_dict", strs(Seq.fill(2000)(rng.nextInt(300)).map(k =>
+        s"$k " + (0 until 6).map(j => words((k * 7 + j * 3) % words.length)).mkString(" "))),
+        false, FSST_DICT),
+      ("string fsst", strs(Seq.tabulate(3000)(i =>
+        s"doc$i " + (0 until 8).map(_ => words(rng.nextInt(words.length))).mkString(" "))),
+        false, FSST),
+      ("bytes plain", BytesData(Array.tabulate(501)(_ * 6), Array.fill(3000)(rng.nextInt(256).toByte)),
+        false, PLAIN)
+    )
+  }
+
+  /** Recorded from the encoder that used boxed hash maps for its
+    * distinct scans and frequency counts. */
+  private val pinnedDigests: Map[String, String] = Map(
+    "long constant" ->
+      "ed72c165a30708d866c6831490433151c14e65729218487309c44f8776cb5eec",
+    "long ffor" ->
+      "f17caba6460e15c437076efc1d611dd1889f48244ce8c6ec4337d2770e1c892b",
+    "long ffor extremes" ->
+      "c408bcddbca665be463d23a22d5262804fac7c639960295db7658ff22139ea53",
+    "long dict extremes" ->
+      "3d8b9cf7c55e3fa1eb26b17e8bd06f8aa4665dd6236848bcba27134d0f14041e",
+    "long dict" ->
+      "90bee7162f5575342a65ac6946c31ecebf070c94dc106d580f7e341111e63490",
+    "long rle" ->
+      "e17a64eb6978a624f424e10b9af65c8fec8d0bb693c60b369cf6faf344296a4c",
+    "long freq" ->
+      "002352473ebdf9722767fede3373e6c456eef0d632cfc20170009e496480c708",
+    "long freq min value" ->
+      "eb6996d1c699079bd2511a064587ff4b08ec183b76122e4821c4ef8806628214",
+    "long count tie" ->
+      "d4c2b7e36cd9e2500de9647642545e7bff9a2127ab1fb30e38cda4a8ad19d663",
+    "long count tie ffor" ->
+      "3955df4bab4f1e5cc549a30e6fab7d73aa80bc0795731413b80f04f4171db364",
+    "long stop boundary at 8x distinct" ->
+      "580d573d26efc85dda240026876a014b6067ee2d2c29956dffc4d9320bf5c02f",
+    "long stop boundary past 8x distinct" ->
+      "a5fda4b35e132a2daba6b0e8572bc38e5fdd0b7fbc8df6b6d518814ccd26e615",
+    "long dict at dictCap" ->
+      "ed3d14d90057fbb440414f114d24354e881cfd7882f80bcb77d3b6bebcf6005e",
+    "long dict past dictCap" ->
+      "0e408acf6def1ccc4e48096395a7fb1b77544e4da96e981cde1b27ce1f0a9587",
+    "long tiny" ->
+      "ef5c4c4c393c8ef2ded5fe64022fea0d90ec8ce70b43d4955598cdde2580329d",
+    "long transposed" ->
+      "c3bdedcad2e4da99d7836ef1bf1243c26007f33ecbf03247a3fb6d88654645ad",
+    "double constant" ->
+      "07f8f66cc7e97f4871dd24746c2427ea6740a1bd49648b40fd7c247a101c24b7",
+    "double alp" ->
+      "eec470dcd4560f149b185d4f7008cbb1b832802db09b09ba5b9fd2ad07d73a75",
+    "double dict nan and zeros" ->
+      "17db8fa672d41f3bef9e79a9681c707182b71798e827a39ab8e4397154858907",
+    "double alp_rd" ->
+      "5f50e19a173065e9614d1f9b68f222c19e57be777257a67aec27688010f5793c",
+    "double alp_rd count ties" ->
+      "e47fcd2bd6c717d1627d8cf27520686f6ca5369e2d03dad6d3a609e94847060f",
+    "double plain" ->
+      "14cf831348750ec069ae446d02edb703fd0e3d59e546c01b70d516fd629c0372",
+    "double transposed" ->
+      "c0c55ac9b26c870f72c7193eb998108b8490c9280997576cf414590fd1b5a2f0",
+    "string empty" ->
+      "cf5cb2f4d37db6ef4456abfbcdc112844e93c25fec167470d3f2e51a57c5d166",
+    "string one value" ->
+      "da960b7b2fda4b35ef73e2bd69dd94d1142eff20c277800f8b61ac0e9c2d06a0",
+    "string empty and one" ->
+      "874811f0782f663a1ff6b5c7de282769c7bb4006fc5b44b5a80c2c03d0b608b4",
+    "string freq" ->
+      "6421ce019c3094d5ab53b17e45a4d352ca3e3eb6510b3df362e72633317b410b",
+    "string at dictCap" ->
+      "9274b9753264bb519a15e30f79d36729fdcf5b6101de7bcbcb36bf4db0ec5b2c",
+    "string past dictCap" ->
+      "87a80fcbd8d03298c479a5d7ff233756466159b41184935b39d3350ec8a2b0c5",
+    "string count tie" ->
+      "f47aeb6690d88f239358c216f2baec17f4ade8c0ad844218a507f5efafc95f37",
+    "string rle" ->
+      "d4257ae0d79c4bc285da7df3eaf6d856c24f70217730539c89cdd04a41859077",
+    "string dict" ->
+      "d80f8ee1b937407c969c121f3074c587b8fb2dbc26af0ab9b8362b6b3baf4834",
+    "string fsst_dict" ->
+      "a82f1728dcded5ec80fad896d449ec33a9da36584f2046456666d4c514c6ebae",
+    "string fsst" ->
+      "5123f316ef9811ba9d250cbd51584635009b225a898cd06f83839cba26d01cdb",
+    "bytes plain" ->
+      "4a90e16e6872a942ccb79c106791a6bd580aca83c76fd07056dc35b6d71149e4"
+  )
+
+  test("Encoder output is byte-identical per column shape (pinned SHA-256)") {
+    def sha(b: Array[Byte]): String =
+      java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    val bad = pinnedColumns.flatMap { case (name, col, transpose, want) =>
+      val w = new ByteWriter()
+      val (enc, _) = Encoder.encodeColumn(col, w, transpose)
+      val digest = sha(w.toArray)
+      if (enc == want && pinnedDigests.get(name).contains(digest)) None
+      else Some(s"""$name: encoding $enc (expected $want), digest "$digest"""")
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
 }
