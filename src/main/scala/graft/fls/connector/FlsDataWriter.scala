@@ -3,11 +3,15 @@ package graft.fls.connector
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
+import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.Platform
 
 import graft.fls._
 import graft.fls.Format._
+import FlsDataWriter._
 
 /** Per-task writer: buffers rows into columnar builders, flushes a row
   * group at exactly `rowGroupSize` rows, rotates files after
@@ -88,7 +92,7 @@ class FlsDataWriter(
     def clear(): Unit
   }
 
-  private final class LongBuilder(get: (InternalRow, Int) => Long) extends Builder {
+  private final class LongBuilder(get: LongGet) extends Builder {
     private var arr = new Array[Long](rowGroupSize)
     private var n = 0
     def add(row: InternalRow, ord: Int): Unit = { arr(n) = get(row, ord); n += 1 }
@@ -96,7 +100,7 @@ class FlsDataWriter(
     def clear(): Unit = n = 0
   }
 
-  private final class DoubleBuilder(get: (InternalRow, Int) => Double) extends Builder {
+  private final class DoubleBuilder(get: DoubleGet) extends Builder {
     private var arr = new Array[Double](rowGroupSize)
     private var n = 0
     def add(row: InternalRow, ord: Int): Unit = { arr(n) = get(row, ord); n += 1 }
@@ -104,93 +108,111 @@ class FlsDataWriter(
     def clear(): Unit = n = 0
   }
 
-  private final class BytesBuilder(get: (InternalRow, Int) => Array[Byte]) extends Builder {
-    private var offsets = new Array[Int](rowGroupSize + 1)
-    private var bytes = new Array[Byte](rowGroupSize * 8)
+  /** Growable bytes-plus-offsets staging, one slice per appended value:
+    * the row-group buffer of BYTES columns and the flattened stream of
+    * bytes array elements and map entries. */
+  private final class SliceBuffer(rows: Int) {
+    private var offsets = new Array[Int](rows + 1)
+    var bytes = new Array[Byte](rowGroupSize * 8)
     private var n = 0
-    def add(row: InternalRow, ord: Int): Unit = {
-      val b = get(row, ord)
-      val end = offsets(n) + b.length
+    /** Appends a `len`-byte slice; returns its start in [[bytes]]. */
+    def reserve(len: Int): Int = {
+      if (n + 1 >= offsets.length) offsets = java.util.Arrays.copyOf(offsets, offsets.length * 2)
+      val at = offsets(n)
+      val end = at + len
       if (end > bytes.length) {
         var cap = bytes.length
         while (cap < end) cap <<= 1
         bytes = java.util.Arrays.copyOf(bytes, cap)
       }
-      System.arraycopy(b, 0, bytes, offsets(n), b.length)
       offsets(n + 1) = end
       n += 1
+      at
     }
-    def result(): ColData =
-      BytesData(java.util.Arrays.copyOf(offsets, n + 1),
-        java.util.Arrays.copyOf(bytes, offsets(n)))
+    def add(b: Array[Byte]): Unit = {
+      val at = reserve(b.length)
+      System.arraycopy(b, 0, bytes, at, b.length)
+    }
+    def result(): BytesData =
+      BytesData(java.util.Arrays.copyOf(offsets, n + 1), java.util.Arrays.copyOf(bytes, offsets(n)))
     def clear(): Unit = n = 0
   }
 
-  /** LIST columns: per-row offsets + a growable flattened element store.
-    * Float elements keep their raw 32-bit patterns as longs (see
-    * [[graft.fls.Format.elemPhysOf]]); null ELEMENTS are rejected like
-    * null scalars (the format stores no NULLs at any nesting level). */
+  /** STRING: each value's UTF-8 bytes are copied straight from the
+    * `UTF8String` into the row-group buffer, with no array per value. */
+  private final class Utf8Builder extends Builder {
+    private val buf = new SliceBuffer(rowGroupSize)
+    def add(row: InternalRow, ord: Int): Unit = {
+      val s = row.getUTF8String(ord)
+      val at = buf.reserve(s.numBytes)
+      s.writeToMemory(buf.bytes, Platform.BYTE_ARRAY_OFFSET + at)
+    }
+    def result(): ColData = buf.result()
+    def clear(): Unit = buf.clear()
+  }
+
+  private final class BytesBuilder(get: BytesGet) extends Builder {
+    private val buf = new SliceBuffer(rowGroupSize)
+    def add(row: InternalRow, ord: Int): Unit = buf.add(get(row, ord))
+    def result(): ColData = buf.result()
+    def clear(): Unit = buf.clear()
+  }
+
+  /** Flattened stream of LIST elements or MAP keys/values. Float values
+    * keep their raw 32-bit patterns as longs (see
+    * [[graft.fls.Format.elemPhysOf]]). */
+  private sealed trait Store {
+    def append(a: ArrayData, j: Int): Unit
+    def result(): ColData
+    def reset(): Unit
+  }
+  private final class LongStore(get: LongGet) extends Store {
+    private var arr = new Array[Long](math.max(16, rowGroupSize))
+    private var m = 0
+    def append(a: ArrayData, j: Int): Unit = {
+      if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
+      arr(m) = get(a, j); m += 1
+    }
+    def result(): ColData = LongData(java.util.Arrays.copyOf(arr, m))
+    def reset(): Unit = m = 0
+  }
+  private final class DoubleStore extends Store {
+    private var arr = new Array[Double](math.max(16, rowGroupSize))
+    private var m = 0
+    def append(a: ArrayData, j: Int): Unit = {
+      if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
+      arr(m) = a.getDouble(j); m += 1
+    }
+    def result(): ColData = DoubleData(java.util.Arrays.copyOf(arr, m))
+    def reset(): Unit = m = 0
+  }
+  private final class BytesStore(get: BytesGet) extends Store {
+    private val buf = new SliceBuffer(math.max(16, rowGroupSize))
+    def append(a: ArrayData, j: Int): Unit = buf.add(get(a, j))
+    def result(): ColData = buf.result()
+    def reset(): Unit = buf.clear()
+  }
+
+  /** `what` names the rejected role in the error ("array element",
+    * "map key/value"). */
+  private def mkStore(dt: DataType, what: String): Store = dt match {
+    case FloatType => new LongStore((a, j) =>
+      java.lang.Float.floatToRawIntBits(a.getFloat(j)).toLong & 0xFFFFFFFFL)
+    case DoubleType => new DoubleStore
+    case StringType => new BytesStore((a, j) => a.getUTF8String(j).getBytes)
+    case BinaryType => new BytesStore((a, j) => a.getBinary(j))
+    case t if integralGet.isDefinedAt(t) => new LongStore(integralGet(t))
+    case other =>
+      throw new UnsupportedOperationException(s"fls write: unsupported $what $other")
+  }
+
+  /** LIST columns: per-row offsets + a flattened element [[Store]]; null
+    * ELEMENTS are rejected like null scalars (the format stores no NULLs
+    * at any nesting level). */
   private final class ArrayColBuilder(name: String, et: DataType) extends Builder {
     private var offsets = new Array[Int](rowGroupSize + 1)
     private var n = 0
-
-    private sealed trait ElemStore {
-      def append(a: org.apache.spark.sql.catalyst.util.ArrayData, j: Int): Unit
-      def result(total: Int): ColData
-    }
-    private final class LongStore(get: (org.apache.spark.sql.catalyst.util.ArrayData, Int) => Long)
-      extends ElemStore {
-      var arr = new Array[Long](math.max(16, rowGroupSize))
-      def append(a: org.apache.spark.sql.catalyst.util.ArrayData, j: Int): Unit = {
-        if (offsets(n) + j >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-        arr(offsets(n) + j) = get(a, j)
-      }
-      def result(total: Int): ColData = LongData(java.util.Arrays.copyOf(arr, total))
-    }
-    private final class DoubleStore extends ElemStore {
-      var arr = new Array[Double](math.max(16, rowGroupSize))
-      def append(a: org.apache.spark.sql.catalyst.util.ArrayData, j: Int): Unit = {
-        if (offsets(n) + j >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-        arr(offsets(n) + j) = a.getDouble(j)
-      }
-      def result(total: Int): ColData = DoubleData(java.util.Arrays.copyOf(arr, total))
-    }
-    private final class BytesStore(get: (org.apache.spark.sql.catalyst.util.ArrayData, Int) => Array[Byte])
-      extends ElemStore {
-      var eOffsets = new Array[Int](math.max(16, rowGroupSize) + 1)
-      var bytes = new Array[Byte](rowGroupSize * 8)
-      def append(a: org.apache.spark.sql.catalyst.util.ArrayData, j: Int): Unit = {
-        val e = offsets(n) + j
-        if (e + 1 >= eOffsets.length) eOffsets = java.util.Arrays.copyOf(eOffsets, eOffsets.length * 2)
-        val b = get(a, j)
-        val end = eOffsets(e) + b.length
-        if (end > bytes.length) {
-          var cap = bytes.length
-          while (cap < end) cap <<= 1
-          bytes = java.util.Arrays.copyOf(bytes, cap)
-        }
-        System.arraycopy(b, 0, bytes, eOffsets(e), b.length)
-        eOffsets(e + 1) = end
-      }
-      def result(total: Int): ColData =
-        BytesData(java.util.Arrays.copyOf(eOffsets, total + 1),
-          java.util.Arrays.copyOf(bytes, eOffsets(total)))
-    }
-
-    private val store: ElemStore = et match {
-      case FloatType => new LongStore((a, j) =>
-        java.lang.Float.floatToRawIntBits(a.getFloat(j)).toLong & 0xFFFFFFFFL)
-      case DoubleType => new DoubleStore
-      case BooleanType => new LongStore((a, j) => if (a.getBoolean(j)) 1L else 0L)
-      case ByteType => new LongStore((a, j) => a.getByte(j).toLong)
-      case ShortType => new LongStore((a, j) => a.getShort(j).toLong)
-      case IntegerType | DateType => new LongStore((a, j) => a.getInt(j).toLong)
-      case LongType | TimestampType | TimestampNTZType => new LongStore((a, j) => a.getLong(j))
-      case StringType => new BytesStore((a, j) => a.getUTF8String(j).getBytes)
-      case BinaryType => new BytesStore((a, j) => a.getBinary(j))
-      case other =>
-        throw new UnsupportedOperationException(s"fls write: unsupported array element $other")
-    }
+    private val store = mkStore(et, "array element")
 
     def add(row: InternalRow, ord: Int): Unit = {
       val a = row.getArray(ord)
@@ -213,86 +235,18 @@ class FlsDataWriter(
       offsets(n + 1) = offsets(n) + len
       n += 1
     }
-    def result(): ColData =
-      ArrayColData(java.util.Arrays.copyOf(offsets, n + 1), store.result(offsets(n)))
-    def clear(): Unit = n = 0
+    def result(): ColData = ArrayColData(java.util.Arrays.copyOf(offsets, n + 1), store.result())
+    def clear(): Unit = { n = 0; store.reset() }
   }
 
-  /** MAP columns: per-row entry counts + growable flattened key/value
-    * stores (same physical streams as array elements — float keys or
-    * values ride as raw 32-bit patterns). NULL map VALUES are rejected
-    * like null scalars; Spark map keys cannot be null by contract. */
+  /** MAP columns: per-row entry counts + flattened key and value
+    * [[Store]]s. NULL map VALUES are rejected like null scalars; Spark
+    * map keys cannot be null by contract. */
   private final class MapColBuilder(name: String, kt: DataType, vt: DataType) extends Builder {
-    import org.apache.spark.sql.catalyst.util.ArrayData
     private var offsets = new Array[Int](rowGroupSize + 1)
     private var n = 0
-
-    private sealed trait Store {
-      def append(a: ArrayData, j: Int): Unit
-      def result(): ColData
-      def reset(): Unit
-    }
-    private final class LongS(get: (ArrayData, Int) => Long) extends Store {
-      private var arr = new Array[Long](math.max(16, rowGroupSize))
-      private var m = 0
-      def append(a: ArrayData, j: Int): Unit = {
-        if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-        arr(m) = get(a, j); m += 1
-      }
-      def result(): ColData = LongData(java.util.Arrays.copyOf(arr, m))
-      def reset(): Unit = m = 0
-    }
-    private final class DoubleS extends Store {
-      private var arr = new Array[Double](math.max(16, rowGroupSize))
-      private var m = 0
-      def append(a: ArrayData, j: Int): Unit = {
-        if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-        arr(m) = a.getDouble(j); m += 1
-      }
-      def result(): ColData = DoubleData(java.util.Arrays.copyOf(arr, m))
-      def reset(): Unit = m = 0
-    }
-    private final class BytesS(get: (ArrayData, Int) => Array[Byte]) extends Store {
-      private var eOffsets = new Array[Int](math.max(16, rowGroupSize) + 1)
-      private var bytes = new Array[Byte](rowGroupSize * 8)
-      private var m = 0
-      def append(a: ArrayData, j: Int): Unit = {
-        if (m + 1 >= eOffsets.length)
-          eOffsets = java.util.Arrays.copyOf(eOffsets, eOffsets.length * 2)
-        val b = get(a, j)
-        val end = eOffsets(m) + b.length
-        if (end > bytes.length) {
-          var cap = bytes.length
-          while (cap < end) cap <<= 1
-          bytes = java.util.Arrays.copyOf(bytes, cap)
-        }
-        System.arraycopy(b, 0, bytes, eOffsets(m), b.length)
-        eOffsets(m + 1) = end
-        m += 1
-      }
-      def result(): ColData =
-        BytesData(java.util.Arrays.copyOf(eOffsets, m + 1),
-          java.util.Arrays.copyOf(bytes, eOffsets(m)))
-      def reset(): Unit = m = 0
-    }
-
-    private def mkStore(dt: DataType): Store = dt match {
-      case FloatType => new LongS((a, j) =>
-        java.lang.Float.floatToRawIntBits(a.getFloat(j)).toLong & 0xFFFFFFFFL)
-      case DoubleType => new DoubleS
-      case BooleanType => new LongS((a, j) => if (a.getBoolean(j)) 1L else 0L)
-      case ByteType => new LongS((a, j) => a.getByte(j).toLong)
-      case ShortType => new LongS((a, j) => a.getShort(j).toLong)
-      case IntegerType | DateType => new LongS((a, j) => a.getInt(j).toLong)
-      case LongType | TimestampType | TimestampNTZType => new LongS((a, j) => a.getLong(j))
-      case StringType => new BytesS((a, j) => a.getUTF8String(j).getBytes)
-      case BinaryType => new BytesS((a, j) => a.getBinary(j))
-      case other =>
-        throw new UnsupportedOperationException(s"fls write: unsupported map key/value $other")
-    }
-
-    private val kStore = mkStore(kt)
-    private val vStore = mkStore(vt)
+    private val kStore = mkStore(kt, "map key/value")
+    private val vStore = mkStore(vt, "map key/value")
 
     def add(row: InternalRow, ord: Int): Unit = {
       val m = row.getMap(ord)
@@ -329,32 +283,21 @@ class FlsDataWriter(
     def clear(): Unit = n = 0
   }
 
-  /** Builder for struct field j (of k): navigates into the struct value
-    * at the PARENT ordinal and rejects null fields like null scalars. */
-  private def childBuilder(parent: String, k: Int, j: Int, ch: StructField): Builder = {
-    def nn[T](f: (InternalRow, Int) => T): (InternalRow, Int) => T = (r, i) => {
-      val s = r.getStruct(i, k)
+  /** Builder for struct field j (of k): reads the struct value at the
+    * PARENT ordinal, rejects a null field like a null scalar, and hands
+    * the field to its scalar builder. */
+  private final class StructFieldBuilder(fieldName: String, k: Int, j: Int, inner: Builder)
+    extends Builder {
+    def add(row: InternalRow, ord: Int): Unit = {
+      val s = row.getStruct(ord, k)
       if (s.isNullAt(j))
         throw new UnsupportedOperationException(
-          s"fls: NULL in struct field '$parent.${ch.name}' — the format stores no " +
+          s"fls: NULL in struct field '$fieldName' — the format stores no " +
             "NULLs (reference parity); coalesce() nulls away before writing")
-      f(s, j)
+      inner.add(s, j)
     }
-    ch.dataType match {
-      case BooleanType => new LongBuilder(nn((r, i) => if (r.getBoolean(i)) 1L else 0L))
-      case ByteType => new LongBuilder(nn((r, i) => r.getByte(i).toLong))
-      case ShortType => new LongBuilder(nn((r, i) => r.getShort(i).toLong))
-      case IntegerType | DateType => new LongBuilder(nn((r, i) => r.getInt(i).toLong))
-      case LongType | TimestampType | TimestampNTZType =>
-        new LongBuilder(nn((r, i) => r.getLong(i)))
-      case FloatType => new DoubleBuilder(nn((r, i) => r.getFloat(i).toDouble))
-      case DoubleType => new DoubleBuilder(nn((r, i) => r.getDouble(i)))
-      case StringType => new BytesBuilder(nn((r, i) => r.getUTF8String(i).getBytes))
-      case BinaryType => new BytesBuilder(nn((r, i) => r.getBinary(i)))
-      case other =>
-        throw new UnsupportedOperationException(
-          s"fls write: unsupported struct field type $other")
-    }
+    def result(): ColData = inner.result()
+    def clear(): Unit = inner.clear()
   }
 
   /** One builder per PHYSICAL column, aligned with [[colDescs]]. */
@@ -363,40 +306,48 @@ class FlsDataWriter(
       f.dataType match {
         case st: StructType =>
           new MarkerBuilder +: st.fields.zipWithIndex.map { case (ch, j) =>
-            childBuilder(f.name, st.fields.length, j, ch)
+            val inner = scalarBuilder(ch.dataType).getOrElse(
+              throw new UnsupportedOperationException(
+                s"fls write: unsupported struct field type ${ch.dataType}"))
+            new StructFieldBuilder(s"${f.name}.${ch.name}", st.fields.length, j, inner)
           }.toSeq
         case _ => Seq(mkBuilder(f))
       }
     }
 
-  private def mkBuilder(f: StructField): Builder = f.dataType match {
-    case BooleanType => new LongBuilder((r, i) => if (r.getBoolean(i)) 1L else 0L)
-    case ByteType => new LongBuilder((r, i) => r.getByte(i).toLong)
-    case ShortType => new LongBuilder((r, i) => r.getShort(i).toLong)
-    case IntegerType | DateType => new LongBuilder((r, i) => r.getInt(i).toLong)
-    case LongType | TimestampType | TimestampNTZType => new LongBuilder((r, i) => r.getLong(i))
-    case FloatType => new DoubleBuilder((r, i) => r.getFloat(i).toDouble)
-    case DoubleType => new DoubleBuilder((r, i) => r.getDouble(i))
-    case StringType => new BytesBuilder((r, i) => r.getUTF8String(i).getBytes)
-    case BinaryType => new BytesBuilder((r, i) => r.getBinary(i))
-    case d: DecimalType if d.precision <= 18 =>
-      new LongBuilder((r, i) => r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
-    case d: DecimalType =>
-      new BytesBuilder((r, i) =>
-        r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
-          .unscaledValue().toByteArray)
-    case ArrayType(et, _) => new ArrayColBuilder(f.name, et)
-    case MapType(kt, vt, _) => new MapColBuilder(f.name, kt, vt)
-    case other =>
-      throw new UnsupportedOperationException(s"fls write: unsupported type $other")
+  /** Builders for the types a struct field may also have. */
+  private def scalarBuilder(dt: DataType): Option[Builder] = dt match {
+    case t if integralGet.isDefinedAt(t) => Some(new LongBuilder(integralGet(t)))
+    case FloatType => Some(new DoubleBuilder((r, i) => r.getFloat(i).toDouble))
+    case DoubleType => Some(new DoubleBuilder((r, i) => r.getDouble(i)))
+    case StringType => Some(new Utf8Builder)
+    case BinaryType => Some(new BytesBuilder((r, i) => r.getBinary(i)))
+    case _ => None
   }
 
-  /** (schema ordinal, value-hash accessor) per sketched column —
-    * resolved and type-checked once at construction, refused loudly for
-    * nested types (no canonical value hash). Shared by the NDV and
-    * Bloom sketches (one definition of "same SQL value"). */
-  private def mkHashAccessors(names: Seq[String],
-      option: String): Array[(Int, (InternalRow, Int) => Long)] =
+  private def mkBuilder(f: StructField): Builder = scalarBuilder(f.dataType).getOrElse {
+    f.dataType match {
+      case d: DecimalType if d.precision <= 18 =>
+        new LongBuilder((r, i) => r.getDecimal(i, d.precision, d.scale).toUnscaledLong)
+      case d: DecimalType =>
+        new BytesBuilder((r, i) =>
+          r.getDecimal(i, d.precision, d.scale).toJavaBigDecimal
+            .unscaledValue().toByteArray)
+      case ArrayType(et, _) => new ArrayColBuilder(f.name, et)
+      case MapType(kt, vt, _) => new MapColBuilder(f.name, kt, vt)
+      case other =>
+        throw new UnsupportedOperationException(s"fls write: unsupported type $other")
+    }
+  }
+
+  /** A sketched column: its schema ordinal and its value hash. */
+  private final class HashAccessor(val ord: Int, val hash: LongGet)
+
+  /** One accessor per sketched column — resolved and type-checked once
+    * at construction, refused loudly for nested types (no canonical
+    * value hash). Shared by the NDV and Bloom sketches (one definition
+    * of "same SQL value"). */
+  private def mkHashAccessors(names: Seq[String], option: String): Array[HashAccessor] =
     names.toArray.map { name =>
       val ord =
         try schema.fieldIndex(name)
@@ -408,13 +359,10 @@ class FlsDataWriter(
       require(!partitionBy.contains(name),
         s"fls: $option names partition column '$name' — partition values " +
           "are exact from the directory layout; sketch data columns only")
-      val hash: (InternalRow, Int) => Long = schema.fields(ord).dataType match {
-        case BooleanType => (r, i) => Hll.hashLong(if (r.getBoolean(i)) 1L else 0L)
-        case ByteType => (r, i) => Hll.hashLong(r.getByte(i).toLong)
-        case ShortType => (r, i) => Hll.hashLong(r.getShort(i).toLong)
-        case IntegerType | DateType => (r, i) => Hll.hashLong(r.getInt(i).toLong)
-        case LongType | TimestampType | TimestampNTZType =>
-          (r, i) => Hll.hashLong(r.getLong(i))
+      val hash: LongGet = schema.fields(ord).dataType match {
+        case t if integralGet.isDefinedAt(t) =>
+          val get = integralGet(t)
+          (r, i) => Hll.hashLong(get(r, i))
         case FloatType => (r, i) => Hll.hashDouble(r.getFloat(i).toDouble)
         case DoubleType => (r, i) => Hll.hashDouble(r.getDouble(i))
         case StringType => (r, i) => Hll.hashBytes(r.getUTF8String(i).getBytes)
@@ -428,7 +376,7 @@ class FlsDataWriter(
           s"fls: $option cannot sketch '$name' of type $other — " +
             "sketches are for scalar join/group/lookup keys")
       }
-      (ord, hash)
+      new HashAccessor(ord, hash)
     }
 
   private val ndvAccessors = mkHashAccessors(ndvColumns, "ndv_columns")
@@ -473,14 +421,14 @@ class FlsDataWriter(
       }
       var s = 0
       while (s < ndvAccessors.length) {
-        val (ord, hash) = ndvAccessors(s)
-        sketches(s).addHash(hash(row, ord))
+        val a = ndvAccessors(s)
+        sketches(s).addHash(a.hash(row, a.ord))
         s += 1
       }
       var b = 0
       while (b < bloomAccessors.length) {
-        val (ord, hash) = bloomAccessors(b)
-        blooms(b).add(hash(row, ord))
+        val a = bloomAccessors(b)
+        blooms(b).add(a.hash(row, a.ord))
         b += 1
       }
       rowsInGroup += 1
@@ -507,7 +455,7 @@ class FlsDataWriter(
         lengths(currentRel) = writer.fileLength
         val ndv = ndvAccessors.indices.collect {
           case s if !sketches(s).isEmpty =>
-            schema.fields(ndvAccessors(s)._1).name ->
+            schema.fields(ndvAccessors(s).ord).name ->
               java.util.Arrays.copyOf(sketches(s).regs, sketches(s).regs.length)
         }.toMap
         var stats = writer.fileStats(ndv)
@@ -516,7 +464,7 @@ class FlsDataWriter(
           // final (attempt-unique) name, vouched only once the
           // manifest entry's "bf" pointer publishes
           val cols = bloomAccessors.indices.map { b =>
-            schema.fields(bloomAccessors(b)._1).name -> blooms(b).seal()
+            schema.fields(bloomAccessors(b).ord).name -> blooms(b).seal()
           }
           val bfRel = Bloom.write(new Path(dir).getFileSystem(conf),
             new Path(dir), currentRel, "bf", cols)
@@ -577,6 +525,9 @@ class FlsDataWriter(
     }
 
   private val buckets = scala.collection.mutable.LinkedHashMap[String, Bucket]()
+  /** The one bucket of an unpartitioned write, once opened: its rows
+    * skip the per-row bucket lookup. */
+  private var flat: Bucket = _
 
   private def bucketFor(row: InternalRow): Bucket = {
     val relDir =
@@ -597,7 +548,7 @@ class FlsDataWriter(
         }
         sb.toString
       }
-    buckets.getOrElseUpdate(relDir, {
+    val bucket = buckets.getOrElseUpdate(relDir, {
       if (buckets.size >= maxOpenPartitions)
         throw new IllegalStateException(
           s"fls: task opened more than $maxOpenPartitions partitions — " +
@@ -605,6 +556,8 @@ class FlsDataWriter(
             "or raise the max_open_partitions writer option")
       new Bucket(relDir)
     })
+    if (partIdx.isEmpty) flat = bucket
+    bucket
   }
 
   override def write(row: InternalRow): Unit = {
@@ -621,7 +574,7 @@ class FlsDataWriter(
       rowsSinceHbCheck = 0
       maybeHeartbeat()
     }
-    bucketFor(row).add(row)
+    (if (flat != null) flat else bucketFor(row)).add(row)
   }
 
   /** Rename temp files to final names. Spark's commit coordinator
@@ -661,6 +614,26 @@ class FlsDataWriter(
   }
 
   override def close(): Unit = ()
+}
+
+private[connector] object FlsDataWriter {
+  /** Reads one value as a long from a row, a struct value or an array.
+    * A single-method trait rather than a `Function2`: Scala does not
+    * specialize `Function2` on an object argument, so a closure of that
+    * shape boxes the ordinal and the result of every staged value. */
+  trait LongGet { def apply(g: SpecializedGetters, i: Int): Long }
+  trait DoubleGet { def apply(g: SpecializedGetters, i: Int): Double }
+  trait BytesGet { def apply(g: SpecializedGetters, i: Int): Array[Byte] }
+
+  /** Types stored as a plain long, the same way in a column, a struct
+    * field, an array element or a map entry. */
+  val integralGet: PartialFunction[DataType, LongGet] = {
+    case BooleanType => (g, i) => if (g.getBoolean(i)) 1L else 0L
+    case ByteType => (g, i) => g.getByte(i).toLong
+    case ShortType => (g, i) => g.getShort(i).toLong
+    case IntegerType | DateType => (g, i) => g.getInt(i).toLong
+    case LongType | TimestampType | TimestampNTZType => (g, i) => g.getLong(i)
+  }
 }
 
 object FlsCommit {

@@ -452,6 +452,9 @@ class CodecsSpec extends AnyFunSuite {
       ("string one value", strs(Seq.fill(500)("only")), false, CONSTANT),
       ("string empty and one", strs(Seq.tabulate(600)(i => if (i % 3 == 0) "" else "x")),
         false, DICT),
+      ("string long values", strs(Seq.tabulate(3000)(i => ("\u00ff" * 20) + (i % 5))), false, DICT),
+      ("bytes 0xFF prefixes", BytesData(Array.tabulate(1001)(_ * 20),
+        Array.tabulate(20000)(j => if (j % 20 < 18) -1.toByte else (j / 20 % 3).toByte)), false, DICT),
       ("string freq", strs(Seq.tabulate(20000)(i =>
         if (i % 97 == 5) s"outlier-$i" else "the-dominant-value-of-this-column")), false, FREQ),
       ("string at dictCap", strs(Seq.tabulate(40)(i =>
@@ -528,6 +531,10 @@ class CodecsSpec extends AnyFunSuite {
       "da960b7b2fda4b35ef73e2bd69dd94d1142eff20c277800f8b61ac0e9c2d06a0",
     "string empty and one" ->
       "874811f0782f663a1ff6b5c7de282769c7bb4006fc5b44b5a80c2c03d0b608b4",
+    "string long values" ->
+      "e686f3edc410eec2cf3c2e85679e5034ab0d63183dc1782fd8028ff72f82be5b",
+    "bytes 0xFF prefixes" ->
+      "6138aa8c511ac36700b76b06ba9228d9a10b5141273de5726ff1614cc5d07b41",
     "string freq" ->
       "6421ce019c3094d5ab53b17e45a4d352ca3e3eb6510b3df362e72633317b410b",
     "string at dictCap" ->
@@ -551,13 +558,73 @@ class CodecsSpec extends AnyFunSuite {
   test("Encoder output is byte-identical per column shape (pinned SHA-256)") {
     def sha(b: Array[Byte]): String =
       java.security.MessageDigest.getInstance("SHA-256").digest(b).map("%02x".format(_)).mkString
+    def sameBytes(a: Array[Byte], b: Array[Byte]) =
+      (a == null && b == null) || (a != null && b != null && a.sameElements(b))
     val bad = pinnedColumns.flatMap { case (name, col, transpose, want) =>
       val w = new ByteWriter()
-      val (enc, _) = Encoder.encodeColumn(col, w, transpose)
+      val (enc, desc) = Encoder.encodeColumn(col, w, transpose)
       val digest = sha(w.toArray)
-      if (enc == want && pinnedDigests.get(name).contains(digest)) None
-      else Some(s"""$name: encoding $enc (expected $want), digest "$digest"""")
+      // the zone-map stats equal those taken over every row
+      val full = Encoder.statsOf(col).copy(encoding = enc, offset = 0, length = w.size.toLong)
+      val statsOk = desc.copy(minBytes = null, maxBytes = null) ==
+        full.copy(minBytes = null, maxBytes = null) &&
+        sameBytes(desc.minBytes, full.minBytes) && sameBytes(desc.maxBytes, full.maxBytes)
+      if (enc == want && statsOk && pinnedDigests.get(name).contains(digest)) None
+      else Some(s"""$name: encoding $enc (expected $want), stats equal: $statsOk, digest "$digest"""")
     }
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  test("LongIdTable: first-seen ids and counts through growth and collisions") {
+    val rng = new scala.util.Random(61)
+    Seq(1, 7, 100, 5000).foreach { distinct =>
+      val pool = Array.fill(distinct)(rng.nextInt(4) match {
+        case 0 => rng.nextLong()
+        case 1 => rng.nextInt(64).toLong << 58 // equal low bits
+        case 2 => Long.MinValue + rng.nextInt(3)
+        case _ => rng.nextInt(1000).toLong
+      })
+      val keys = Array.fill(20000)(pool(rng.nextInt(distinct)))
+      val t = new Encoder.LongIdTable
+      val ids = scala.collection.mutable.Map[Long, Int]()
+      keys.foreach(k => assert(t.add(k) == ids.getOrElseUpdate(k, ids.size)))
+      assert(t.size == ids.size)
+      ids.foreach { case (k, id) =>
+        assert(t.keys(id) == k && t.counts(id) == keys.count(_ == k) && t.get(k) == id)
+      }
+      assert(t.get(Iterator.from(0).map(_.toLong).find(k => !ids.contains(k)).get) == -1)
+    }
+  }
+
+  test("SliceIdTable: an id per distinct slice, at its first row, with its count") {
+    val rng = new scala.util.Random(67)
+    val pool = Seq("", "a", "b", "ab", "ba", "\u0000", "\u0000\u0000") ++
+      Seq.fill(300)(new String(Array.fill(rng.nextInt(12))(('a' + rng.nextInt(3)).toChar)))
+    val strs = Seq.fill(6000)(pool(rng.nextInt(pool.length)))
+    val d = mkBytes(strs)
+    val t = new Encoder.SliceIdTable(d)
+    val ids = strs.indices.map(t.add)
+    val firstRow = strs.zipWithIndex.groupBy(_._1).map { case (v, rows) => v -> rows.map(_._2).min }
+    val distinct = strs.distinct
+    assert(t.size == distinct.size)
+    distinct.zipWithIndex.foreach { case (v, id) =>
+      assert(t.rows(id) == firstRow(v) && t.counts(id) == strs.count(_ == v), v)
+    }
+    strs.indices.foreach(i => assert(strs(t.rows(ids(i))) == strs(i)))
+  }
+
+  test("source guard: the encoder and the writer's staging stay box-free") {
+    def src(p: String): String = {
+      val path = java.nio.file.Paths.get(p)
+      assert(java.nio.file.Files.isRegularFile(path), s"run from the repository root: $p")
+      java.nio.file.Files.readString(path)
+    }
+    val encoder = src("src/main/scala/graft/fls/Encoder.scala")
+    assert(!encoder.contains("mutable.HashMap"), "Encoder.scala uses a boxed HashMap")
+    assert(!encoder.contains("updateWith"), "Encoder.scala counts through updateWith")
+    val writer = src("src/main/scala/graft/fls/connector/FlsDataWriter.scala")
+    val boxing = """\(\s*\w+\s*,\s*Int\s*\)\s*=>\s*(Long|Double)\b""".r
+    assert(boxing.findFirstIn(writer).isEmpty,
+      s"FlsDataWriter.scala builds a boxing closure: ${boxing.findFirstIn(writer)}")
   }
 }
