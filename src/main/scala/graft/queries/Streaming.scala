@@ -500,6 +500,13 @@ object Streaming {
     * store); the per-signup aggregation runs batch over it. Oracle =
     * the batch q82 SQL — the streaming drain must be COMPLETE, not
     * just plan-shaped. */
+  /** q92's per-micro-batch partials under `parts/batch=<id>`, read
+    * with exactly `schema`: recursive file lookup turns partition
+    * discovery off, which would otherwise add a `batch` column. */
+  private[graft] def readPartials(spark: SparkSession, parts: String,
+      schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).option("recursiveFileLookup", "true").parquet(parts)
+
   def q92StreamStreamRangeJoin(spark: SparkSession, dir: String): DataFrame = {
     val tenMinUs = 600L * 1000 * 1000
     val stream = eventsStream(spark, dir)
@@ -589,7 +596,7 @@ object Streaming {
       val partials =
         if (partsSchema != null) {
           new java.io.File(s"$out/parts").mkdirs()
-          spark.read.schema(partsSchema).parquet(s"$out/parts")
+          readPartials(spark, s"$out/parts", partsSchema)
         } else {
           // zero micro-batches ran (empty source): an empty frame with
           // the partial shape keeps the aggregate below well-typed

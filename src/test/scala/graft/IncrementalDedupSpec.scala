@@ -152,11 +152,11 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     // legitimately sign a doc twice and mask the duplicate check
     val docIds = docs().select("doc_id").distinct().orderBy("doc_id")
       .limit(60).collect().map(_.get(0))
-    docs().filter(col("doc_id").isin(docIds.take(20): _*))
+    docs().filter(col("doc_id").isin(docIds.take(20).toIndexedSeq: _*))
       .write.format("fls").mode("overwrite")
       .option("commit_mode", "manifest").save(dDir)
     IncrementalDedup.refresh(spark, dDir, gDir)
-    docs().filter(col("doc_id").isin(docIds.drop(20): _*))
+    docs().filter(col("doc_id").isin(docIds.drop(20).toIndexedSeq: _*))
       .write.format("fls").mode("append")
       .option("commit_mode", "manifest").save(dDir)
     // simulate an in-flight refresh: a FRESH lock refuses the second
