@@ -4,7 +4,6 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.SpecializedGetters
-import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.connector.write.{DataWriter, WriterCommitMessage}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.Platform
@@ -86,8 +85,12 @@ class FlsDataWriter(
     }
   }.toArray
 
+  /** Stages one physical column of a row group: `add(g, i)` reads value
+    * `i` of a row, a struct value or an array. The same builders stage a
+    * column and the flattened element, key or value stream of a LIST or
+    * MAP column, so each grows on demand. */
   private sealed trait Builder {
-    def add(row: InternalRow, ord: Int): Unit
+    def add(g: SpecializedGetters, i: Int): Unit
     def result(): ColData
     def clear(): Unit
   }
@@ -95,7 +98,10 @@ class FlsDataWriter(
   private final class LongBuilder(get: LongGet) extends Builder {
     private var arr = new Array[Long](rowGroupSize)
     private var n = 0
-    def add(row: InternalRow, ord: Int): Unit = { arr(n) = get(row, ord); n += 1 }
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
+      arr(n) = get(g, i); n += 1
+    }
     def result(): ColData = LongData(java.util.Arrays.copyOf(arr, n))
     def clear(): Unit = n = 0
   }
@@ -103,21 +109,22 @@ class FlsDataWriter(
   private final class DoubleBuilder(get: DoubleGet) extends Builder {
     private var arr = new Array[Double](rowGroupSize)
     private var n = 0
-    def add(row: InternalRow, ord: Int): Unit = { arr(n) = get(row, ord); n += 1 }
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      if (n == arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
+      arr(n) = get(g, i); n += 1
+    }
     def result(): ColData = DoubleData(java.util.Arrays.copyOf(arr, n))
     def clear(): Unit = n = 0
   }
 
-  /** Growable bytes-plus-offsets staging, one slice per appended value:
-    * the row-group buffer of BYTES columns and the flattened stream of
-    * bytes array elements and map entries. */
-  private final class SliceBuffer(rows: Int) {
-    private var offsets = new Array[Int](rows + 1)
-    var bytes = new Array[Byte](rowGroupSize * 8)
+  /** Bytes-plus-offsets staging, one slice per value. */
+  private abstract class SliceBuilder extends Builder {
+    private var offsets = new Array[Int](rowGroupSize + 1)
+    protected var bytes = new Array[Byte](rowGroupSize * 8)
     private var n = 0
     /** Appends a `len`-byte slice; returns its start in [[bytes]]. */
-    def reserve(len: Int): Int = {
-      if (n + 1 >= offsets.length) offsets = java.util.Arrays.copyOf(offsets, offsets.length * 2)
+    protected final def reserve(len: Int): Int = {
+      if (n + 1 == offsets.length) offsets = java.util.Arrays.copyOf(offsets, offsets.length * 2)
       val at = offsets(n)
       val end = at + len
       if (end > bytes.length) {
@@ -129,93 +136,50 @@ class FlsDataWriter(
       n += 1
       at
     }
-    def add(b: Array[Byte]): Unit = {
-      val at = reserve(b.length)
-      System.arraycopy(b, 0, bytes, at, b.length)
-    }
-    def result(): BytesData =
+    def result(): ColData =
       BytesData(java.util.Arrays.copyOf(offsets, n + 1), java.util.Arrays.copyOf(bytes, offsets(n)))
     def clear(): Unit = n = 0
   }
 
   /** STRING: each value's UTF-8 bytes are copied straight from the
-    * `UTF8String` into the row-group buffer, with no array per value. */
-  private final class Utf8Builder extends Builder {
-    private val buf = new SliceBuffer(rowGroupSize)
-    def add(row: InternalRow, ord: Int): Unit = {
-      val s = row.getUTF8String(ord)
-      val at = buf.reserve(s.numBytes)
-      s.writeToMemory(buf.bytes, Platform.BYTE_ARRAY_OFFSET + at)
+    * `UTF8String` into the buffer, with no array per value. */
+  private final class Utf8Builder extends SliceBuilder {
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      val s = g.getUTF8String(i)
+      val at = reserve(s.numBytes)
+      s.writeToMemory(bytes, Platform.BYTE_ARRAY_OFFSET + at)
     }
-    def result(): ColData = buf.result()
-    def clear(): Unit = buf.clear()
   }
 
-  private final class BytesBuilder(get: BytesGet) extends Builder {
-    private val buf = new SliceBuffer(rowGroupSize)
-    def add(row: InternalRow, ord: Int): Unit = buf.add(get(row, ord))
-    def result(): ColData = buf.result()
-    def clear(): Unit = buf.clear()
+  private final class BytesBuilder(get: BytesGet) extends SliceBuilder {
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      val b = get(g, i)
+      val at = reserve(b.length)
+      System.arraycopy(b, 0, bytes, at, b.length)
+    }
   }
 
-  /** Flattened stream of LIST elements or MAP keys/values. Float values
+  /** Builder of a LIST element or MAP key/value stream: float values
     * keep their raw 32-bit patterns as longs (see
-    * [[graft.fls.Format.elemPhysOf]]). */
-  private sealed trait Store {
-    def append(a: ArrayData, j: Int): Unit
-    def result(): ColData
-    def reset(): Unit
-  }
-  private final class LongStore(get: LongGet) extends Store {
-    private var arr = new Array[Long](math.max(16, rowGroupSize))
-    private var m = 0
-    def append(a: ArrayData, j: Int): Unit = {
-      if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-      arr(m) = get(a, j); m += 1
-    }
-    def result(): ColData = LongData(java.util.Arrays.copyOf(arr, m))
-    def reset(): Unit = m = 0
-  }
-  private final class DoubleStore extends Store {
-    private var arr = new Array[Double](math.max(16, rowGroupSize))
-    private var m = 0
-    def append(a: ArrayData, j: Int): Unit = {
-      if (m >= arr.length) arr = java.util.Arrays.copyOf(arr, arr.length * 2)
-      arr(m) = a.getDouble(j); m += 1
-    }
-    def result(): ColData = DoubleData(java.util.Arrays.copyOf(arr, m))
-    def reset(): Unit = m = 0
-  }
-  private final class BytesStore(get: BytesGet) extends Store {
-    private val buf = new SliceBuffer(math.max(16, rowGroupSize))
-    def append(a: ArrayData, j: Int): Unit = buf.add(get(a, j))
-    def result(): ColData = buf.result()
-    def reset(): Unit = buf.clear()
+    * [[graft.fls.Format.elemPhysOf]]); `what` names the role in the
+    * error for an unsupported type. */
+  private def elemBuilder(dt: DataType, what: String): Builder = dt match {
+    case FloatType => new LongBuilder((g, i) =>
+      java.lang.Float.floatToRawIntBits(g.getFloat(i)).toLong & 0xFFFFFFFFL)
+    case other => scalarBuilder(other).getOrElse(
+      throw new UnsupportedOperationException(s"fls write: unsupported $what $other"))
   }
 
-  /** `what` names the rejected role in the error ("array element",
-    * "map key/value"). */
-  private def mkStore(dt: DataType, what: String): Store = dt match {
-    case FloatType => new LongStore((a, j) =>
-      java.lang.Float.floatToRawIntBits(a.getFloat(j)).toLong & 0xFFFFFFFFL)
-    case DoubleType => new DoubleStore
-    case StringType => new BytesStore((a, j) => a.getUTF8String(j).getBytes)
-    case BinaryType => new BytesStore((a, j) => a.getBinary(j))
-    case t if integralGet.isDefinedAt(t) => new LongStore(integralGet(t))
-    case other =>
-      throw new UnsupportedOperationException(s"fls write: unsupported $what $other")
-  }
-
-  /** LIST columns: per-row offsets + a flattened element [[Store]]; null
+  /** LIST columns: per-row offsets + a flattened element builder; null
     * ELEMENTS are rejected like null scalars (the format stores no NULLs
     * at any nesting level). */
   private final class ArrayColBuilder(name: String, et: DataType) extends Builder {
     private var offsets = new Array[Int](rowGroupSize + 1)
     private var n = 0
-    private val store = mkStore(et, "array element")
+    private val elems = elemBuilder(et, "array element")
 
-    def add(row: InternalRow, ord: Int): Unit = {
-      val a = row.getArray(ord)
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      val a = g.getArray(i)
       val len = a.numElements()
       // Flattened offsets are Int: a row group whose total element count
       // crosses 2^31 must fail with a clear message, not wrap negative.
@@ -229,27 +193,27 @@ class FlsDataWriter(
           throw new UnsupportedOperationException(
             s"fls: NULL element in array column '$name' — the format stores no NULLs " +
               "(reference parity); filter or fill null elements before writing")
-        store.append(a, j)
+        elems.add(a, j)
         j += 1
       }
       offsets(n + 1) = offsets(n) + len
       n += 1
     }
-    def result(): ColData = ArrayColData(java.util.Arrays.copyOf(offsets, n + 1), store.result())
-    def clear(): Unit = { n = 0; store.reset() }
+    def result(): ColData = ArrayColData(java.util.Arrays.copyOf(offsets, n + 1), elems.result())
+    def clear(): Unit = { n = 0; elems.clear() }
   }
 
   /** MAP columns: per-row entry counts + flattened key and value
-    * [[Store]]s. NULL map VALUES are rejected like null scalars; Spark
-    * map keys cannot be null by contract. */
+    * builders. NULL map VALUES are rejected like null scalars; Spark map
+    * keys cannot be null by contract. */
   private final class MapColBuilder(name: String, kt: DataType, vt: DataType) extends Builder {
     private var offsets = new Array[Int](rowGroupSize + 1)
     private var n = 0
-    private val kStore = mkStore(kt, "map key/value")
-    private val vStore = mkStore(vt, "map key/value")
+    private val keys = elemBuilder(kt, "map key/value")
+    private val values = elemBuilder(vt, "map key/value")
 
-    def add(row: InternalRow, ord: Int): Unit = {
-      val m = row.getMap(ord)
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      val m = g.getMap(i)
       val len = m.numElements()
       if (len > Int.MaxValue - offsets(n))
         throw new UnsupportedOperationException(
@@ -263,22 +227,22 @@ class FlsDataWriter(
           throw new UnsupportedOperationException(
             s"fls: NULL value in map column '$name' — the format stores no NULLs " +
               "(reference parity); filter or fill null values before writing")
-        kStore.append(ka, j)
-        vStore.append(va, j)
+        keys.add(ka, j)
+        values.add(va, j)
         j += 1
       }
       offsets(n + 1) = offsets(n) + len
       n += 1
     }
     def result(): ColData =
-      MapColData(java.util.Arrays.copyOf(offsets, n + 1), kStore.result(), vStore.result())
-    def clear(): Unit = { n = 0; kStore.reset(); vStore.reset() }
+      MapColData(java.util.Arrays.copyOf(offsets, n + 1), keys.result(), values.result())
+    def clear(): Unit = { n = 0; keys.clear(); values.clear() }
   }
 
   /** STRUCT parent: counts rows, encodes to a zero-byte segment. */
   private final class MarkerBuilder extends Builder {
     private var n = 0
-    def add(row: InternalRow, ord: Int): Unit = n += 1
+    def add(g: SpecializedGetters, i: Int): Unit = n += 1
     def result(): ColData = StructMarker(n)
     def clear(): Unit = n = 0
   }
@@ -288,8 +252,8 @@ class FlsDataWriter(
     * the field to its scalar builder. */
   private final class StructFieldBuilder(fieldName: String, k: Int, j: Int, inner: Builder)
     extends Builder {
-    def add(row: InternalRow, ord: Int): Unit = {
-      val s = row.getStruct(ord, k)
+    def add(g: SpecializedGetters, i: Int): Unit = {
+      val s = g.getStruct(i, k)
       if (s.isNullAt(j))
         throw new UnsupportedOperationException(
           s"fls: NULL in struct field '$fieldName' — the format stores no " +
