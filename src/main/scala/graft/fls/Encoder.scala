@@ -254,12 +254,18 @@ object Encoder {
 
     private def home(k: Long): Int = ((k * 0x9E3779B97F4A7C15L) >>> shift).toInt
 
-    /** Adds one occurrence of `k` and returns its id. */
-    def add(k: Long): Int = {
+    /** The slot holding `k`, or the empty slot where it would go. */
+    private def slotOf(k: Long): Int = {
       val mask = slotIds.length - 1
       var s = home(k)
-      var id1 = slotIds(s)
-      while (id1 != 0 && slotKeys(s) != k) { s = (s + 1) & mask; id1 = slotIds(s) }
+      while (slotIds(s) != 0 && slotKeys(s) != k) s = (s + 1) & mask
+      s
+    }
+
+    /** Adds one occurrence of `k` and returns its id. */
+    def add(k: Long): Int = {
+      val s = slotOf(k)
+      val id1 = slotIds(s)
       if (id1 != 0) { counts(id1 - 1) += 1; id1 - 1 }
       else {
         val id = size
@@ -275,13 +281,7 @@ object Encoder {
     }
 
     /** The id of `k`, or -1 when it was never added. */
-    def get(k: Long): Int = {
-      val mask = slotIds.length - 1
-      var s = home(k)
-      var id1 = slotIds(s)
-      while (id1 != 0 && slotKeys(s) != k) { s = (s + 1) & mask; id1 = slotIds(s) }
-      id1 - 1
-    }
+    def get(k: Long): Int = slotIds(slotOf(k)) - 1
 
     private def grow(): Unit = {
       val cap = 2 * slotIds.length
