@@ -5,175 +5,86 @@ import org.apache.spark.sql.functions._
 
 /** Incremental RESIDUAL-IVFADC maintenance (r17) — the q126 recall
   * rung (encode vector − cell centroid, recall@5 1.000 vs plain PQ's
-  * 0.950) with the [[IncrementalPq]] cursor discipline. The residual
-  * artifact depends on TWO frozen inputs: the IVF centroids (which
-  * define each vector's cell and the subtraction anchor) and the
-  * residual-trained codebooks. [[refresh]]:
-  *
-  *  1. brings the cell assignments current through
-  *     [[IncrementalIvf.refresh]] (appended vectors assign against the
-  *     FROZEN centroids — no recluster, no drift in the anchors);
-  *  2. encodes ONLY the appended vectors' residuals against the frozen
-  *     residual codebooks and appends `(vec_id, codes, src_version)` in
-  *     one manifest commit (cursor = max(src_version) from the table's
-  *     own manifest stats — the atomic-CAS trick verbatim).
-  *
-  * EXACTNESS: with both inputs frozen, encoding is a pure function of
-  * the vector — a patched table is BIT-IDENTICAL to re-encoding the
-  * whole corpus against the same centroids + codebooks
-  * (spec-asserted). INVALIDATION: if the underlying IVF index
-  * RECLUSTERS (its own drift threshold), the subtraction anchors
-  * change and every stored code is stale — the refresh
-  * detects the IVF marker change and retrains from scratch; the
-  * `graft.pq.drift` corpus-growth threshold retrains the codebooks
-  * the same way [[IncrementalPq]] does. Non-append corpus ranges make
-  * `changes_from_version` itself refuse; [[rebuild]] recovers. */
+  * 0.950) under the [[IncrementalArtifact]] protocol. The residual
+  * codes freeze TWO inputs: the IVF centroids (each vector's cell and
+  * subtraction anchor) and the residual-trained codebooks. [[refresh]]
+  * first brings the cell assignments current through
+  * [[IncrementalIvf.refresh]], then encodes only the appended vectors'
+  * residuals. An IVF RECLUSTER moves every anchor, so a changed IVF
+  * marker retrains the codes whole; `graft.pq.drift` retrains the
+  * codebooks as in [[IncrementalPq]]. */
 object IncrementalAdc {
 
   final case class RefreshStats(fromVersion: Long, toVersion: Long,
       vecsEncoded: Long, rebuilt: Boolean)
 
-  private def markerOf(adcDir: String) =
-    new java.io.File(s"$adcDir/_adc_inc_done")
-
-  private def readText(f: java.io.File): String = {
-    val src = scala.io.Source.fromFile(f)
-    try src.mkString finally src.close()
-  }
-
-  private def ivfMarkerText(ivfDir: String): String = {
-    val f = new java.io.File(s"$ivfDir/_ivf_inc_done")
-    require(f.exists(), s"graft adc: no IVF index marker at $ivfDir")
-    readText(f)
-  }
-
-  /** The frozen subtraction anchors: (cell, cn) from the IVF index's
-    * persisted centroid table — the shared [[Similarity.adcAnchors]]
-    * convention, so the gate and this maintainer can never diverge. */
-  private def anchors(spark: SparkSession, ivfDir: String): DataFrame =
-    Similarity.adcAnchors(
-      spark.read.format("fls").load(s"$ivfDir/_centroids"))
-
   /** Residual frame for `u` (vec_id, uv-normalized): join each vector
     * to its assigned cell (ar=1 rows of the IVF index) and subtract
-    * the cell's normalized centroid ([[Similarity.adcResiduals]]). */
+    * the cell's normalized centroid ([[Similarity.adcResiduals]]). The
+    * anchors come from the IVF index's persisted centroids through the
+    * shared [[Similarity.adcAnchors]] convention, so the gate and this
+    * maintainer can never diverge. */
   private def residualsOf(spark: SparkSession, u: DataFrame,
       ivfDir: String): DataFrame = {
     val cells = spark.read.format("fls").load(ivfDir)
       .filter(col("ar") === 1)
       .select(col("vec_id"), col("cent_id").as("cell"))
-    Similarity.adcResiduals(u, cells, anchors(spark, ivfDir))
+    Similarity.adcResiduals(u, cells, Similarity.adcAnchors(
+      spark.read.format("fls").load(s"$ivfDir/_centroids")))
   }
 
-  /** Packed residual codes (vec_id, codes) for `resid` against a
-    * frozen codebook — [[Similarity.pqCodesAgainst]]; the centroid
-    * add-back lives in the scoring kernel, not the artifact. */
-  private def codesOf(spark: SparkSession, resid: DataFrame,
-      cb: DataFrame): DataFrame =
-    Similarity.pqCodesAgainst(spark, resid, cb)
-
-  /** Bring the residual codes table at `adcDir` up to the corpus
-    * head. The IVF index at `ivfDir` is refreshed first (and owns its
-    * own geometry/drift policy); an IVF RECLUSTER invalidates this
-    * artifact whole. No-op (zero encode jobs) when already current. */
-  def refresh(spark: SparkSession, corpusDir: String, ivfDir: String,
-      adcDir: String, nprobe: Int = 2,
-      maxCentroids: Long = -1L): RefreshStats =
-      IncrementalDedup.withRefreshLock(adcDir) {
-    val ivfSt = IncrementalIvf.refresh(spark, corpusDir, ivfDir, nprobe,
-      maxCentroids)
-    val ivfStamp = ivfMarkerText(ivfDir)
+  private final class Residuals(spark: SparkSession, corpusDir: String,
+      ivfDir: String, adcDir: String, nprobe: Int, maxCentroids: Long)
+      extends IncrementalPq.Codes(spark, corpusDir, adcDir, "_adc_inc_done") {
     // head = the version the IVF refresh just covered, NOT a fresh
     // read: a corpus append landing between the two would leave
     // vectors with no assignment — residualsOf's inner join would
     // silently drop them while the cursor advanced past them, losing
-    // them from the artifact forever. Reads below pin to this version.
-    val head = ivfSt.toVersion
-    val marker = markerOf(adcDir)
-    def corpus() = spark.read.format("fls")
-      .option("manifest_version", head.toString).load(corpusDir)
-    if (!marker.exists())
-      return buildAll(spark, corpus(), ivfDir, adcDir, head, ivfStamp)
-    // an unparseable (truncated/garbled) marker means "no marker" —
-    // rebuild, never throw from refresh (ADVICE r18)
-    val saved = (try readText(marker) catch { case _: Exception => "" })
-      .split('\n')
-    // head line: n=<count>[;fmt=codes] — a pre-codes artifact (rv
-    // reconstructions) must rebuild whole, never take a codes patch
-    val headParts = saved.head.split(';')
-    if (!headParts.exists(_ == "fmt=codes"))
-      return buildAll(spark, corpus(), ivfDir, adcDir, head, ivfStamp)
-    val builtNOpt = headParts.headOption.filter(_.startsWith("n="))
-      .flatMap(s => scala.util.Try(s.stripPrefix("n=").toLong).toOption)
-    if (builtNOpt.isEmpty)
-      return buildAll(spark, corpus(), ivfDir, adcDir, head, ivfStamp)
-    val builtN = builtNOpt.get
-    if (saved.drop(1).mkString("\n") != ivfStamp) {
-      // the IVF index reclustered: every subtraction anchor moved —
-      // stored codes are stale as a SET, retrain
-      val st = buildAll(spark, corpus(), ivfDir, adcDir, head, ivfStamp)
-      return st.copy(fromVersion = IncrementalDedup.cursorOf(spark, adcDir))
+    // them from the artifact forever. The protocol pins every corpus
+    // read to this version.
+    override def head(): Long = IncrementalIvf.refresh(spark, corpusDir,
+      ivfDir, nprobe, maxCentroids).toVersion
+    /** The IVF index's marker state, stored in this artifact's marker
+      * under `ivf.`-prefixed keys. */
+    private def ivfStamp: Map[String, String] = {
+      val s = IncrementalArtifact.readState(
+        new java.io.File(ivfDir, IncrementalIvf.Frozen.marker))
+      require(s.isDefined, s"graft adc: no IVF index marker at $ivfDir")
+      s.get.map { case (k, v) => s"ivf.$k" -> v }
     }
-    val cursor = IncrementalDedup.cursorOf(spark, adcDir)
-    if (cursor >= head) return RefreshStats(cursor, head, 0L, rebuilt = false)
-    val drift = sys.props.get("graft.pq.drift").map(_.toDouble).getOrElse(2.0)
-    val nNow = corpus().count() // footer-served metadata count
-    if (nNow > builtN * drift) {
-      val st = buildAll(spark, corpus(), ivfDir, adcDir, head, ivfStamp)
-      return st.copy(fromVersion = cursor)
-    }
-    // refuses loudly on a non-append range (the q105 contract)
-    val added = spark.read.format("fls")
-      .option("changes_from_version", cursor.toString)
-      .option("changes_to_version", head.toString)
-      .load(corpusDir)
-    val cb = spark.read.format("fls").load(s"$adcDir/_codebook")
-    val resid = residualsOf(spark, IncrementalPq.normalized(added)
-      .select(col("vec_id"), col("uv")), ivfDir)
-    codesOf(spark, resid, cb)
-      .withColumn("src_version", lit(head))
-      .write.format("fls").mode("append")
-      .option("commit_mode", "manifest").save(adcDir)
-    val n = added.select("vec_id").distinct().count()
-    RefreshStats(cursor, head, n, rebuilt = false)
-  }
-
-  /** Verification hook: frozen-anchor + frozen-codebook encode of an
-    * arbitrary normalized (vec_id, uv) frame — specs re-encode the
-    * whole corpus through it to assert the patch is bit-identical. */
-  def encodeAgainst(spark: SparkSession, u: DataFrame, ivfDir: String,
-      cb: DataFrame): DataFrame =
-    codesOf(spark, residualsOf(spark, u, ivfDir), cb)
-
-  /** Recovery from a non-append-only range, and the retraining path. */
-  def rebuild(spark: SparkSession, corpusDir: String, ivfDir: String,
-      adcDir: String): RefreshStats = {
-    markerOf(adcDir).delete()
-    refresh(spark, corpusDir, ivfDir, adcDir)
-  }
-
-  private def buildAll(spark: SparkSession, corpus: DataFrame,
-      ivfDir: String, adcDir: String, head: Long,
-      ivfStamp: String): RefreshStats = {
-    val n = corpus.count()
-    require(n > 0, "fls adc: empty corpus")
-    val resid = residualsOf(spark,
+    // the IVF index reclustered: every subtraction anchor moved —
+    // stored codes are stale as a SET, retrain
+    override def stale(state: Map[String, String]): Boolean =
+      state.filter(_._1.startsWith("ivf.")) != ivfStamp
+    override def vectors(corpus: DataFrame): DataFrame = residualsOf(spark,
       IncrementalPq.normalized(corpus).select(col("vec_id"), col("uv")),
       ivfDir)
-    markerOf(adcDir).delete() // invalidate BEFORE the overwrite
-    val g = Similarity.pqGeomOf(resid)
-    val cb = Similarity.pqCodebook(spark, resid, g)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      codesOf(spark, resid, cb)
-        .withColumn("src_version", lit(head))
-        .write.format("fls").mode("overwrite")
-        .option("commit_mode", "manifest").save(adcDir)
-      cb.write.format("fls").mode("overwrite")
-        .option("commit_mode", "manifest").save(s"$adcDir/_codebook")
-    } finally cb.unpersist()
-    IncrementalDedup.writeMarkerAtomic(markerOf(adcDir),
-      s"n=$n;fmt=codes\n$ivfStamp")
-    RefreshStats(0L, head, n, rebuilt = true)
+    override def build(corpus: DataFrame, n: Long,
+        overwrite: DataFrame => Unit): Map[String, String] =
+      super.build(corpus, n, overwrite) ++ ivfStamp
   }
+
+  /** Bring the IVF index at `ivfDir` (which owns its own geometry and
+    * drift policy), then the residual codes at `adcDir`, up to the
+    * corpus head ([[IncrementalArtifact.refresh]]). */
+  def refresh(spark: SparkSession, corpusDir: String, ivfDir: String,
+      adcDir: String, nprobe: Int = 2,
+      maxCentroids: Long = -1L): RefreshStats = IncrementalArtifact.refresh(
+    new Residuals(spark, corpusDir, ivfDir, adcDir, nprobe, maxCentroids)).as(
+    RefreshStats)
+
+  /** Frozen-anchor + frozen-codebook encode of a normalized (vec_id,
+    * uv) frame into packed residual codes (the centroid add-back lives
+    * in the scoring kernel, not the artifact) — what [[refresh]] does to
+    * appended vectors; specs re-encode the whole corpus through it to
+    * assert the patch is bit-identical. */
+  def encodeAgainst(spark: SparkSession, u: DataFrame, ivfDir: String,
+      cb: DataFrame): DataFrame =
+    Similarity.pqCodesAgainst(spark, residualsOf(spark, u, ivfDir), cb)
+
+  /** Refresh the IVF index, then retrain and re-encode the residual
+    * codes from the current snapshot. */
+  def rebuild(spark: SparkSession, corpusDir: String, ivfDir: String,
+      adcDir: String): RefreshStats = IncrementalArtifact.rebuild(
+    new Residuals(spark, corpusDir, ivfDir, adcDir, 2, -1L)).as(RefreshStats)
 }

@@ -1,118 +1,57 @@
 package graft.queries
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import org.apache.spark.sql.graftexprs.GraftFunctions
-import graft.fls.FlsManifest
+import IncrementalArtifact.{Artifact, Model}
 
-/** Incremental PQ index maintenance — the [[IncrementalIvf]] cursor
-  * discipline applied to the product-quantization artifact (q124): the
+/** Incremental PQ index maintenance — the [[IncrementalArtifact]]
+  * protocol applied to the product-quantization artifact (q124): the
   * codebooks train ONCE (seeds + one exact-decimal Lloyd pass, frozen
   * thereafter — the FAISS operational shape: train on a corpus sample,
-  * encode forever), and each [[refresh]] ENCODES ONLY the corpus files
-  * appended since the cursor (`changes_from_version`) against the
-  * frozen codebooks, appending the new packed codes in one manifest
-  * commit stamped with the source version. Cursor = `max(src_version)`
-  * from the PQ table's own manifest stats, so the append and the
-  * cursor advance are one atomic CAS.
-  *
-  * EXACTNESS OF THE PATCH: encoding is a pure function of (vector,
-  * codebook), so a patched table is BIT-IDENTICAL to re-encoding the
-  * whole corpus against the same frozen codebooks (spec-asserted).
-  * What drifts is the codebook itself: its Lloyd means summarize the
-  * BUILD-TIME distribution, so past `graft.pq.drift` (default 2×
-  * corpus growth) refresh RETRAINS — the one O(corpus) case, by
-  * design. Non-append ranges (DELETE / OVERWRITE / equality deletes)
-  * make `changes_from_version` itself refuse — stale codes
-  * would serve deleted vectors — and [[rebuild]] recovers. */
+  * encode forever), and each [[refresh]] ENCODES ONLY the appended
+  * vectors against the frozen codebooks. The codebook's Lloyd means
+  * summarize the BUILD-TIME distribution, so past `graft.pq.drift`
+  * (default 2× corpus growth) refresh RETRAINS. The `fmt=codes` fence
+  * (r18) keeps a pre-codes artifact, which stored rv reconstructions,
+  * from taking a codes patch: it rebuilds whole instead. */
 object IncrementalPq {
 
   final case class RefreshStats(fromVersion: Long, toVersion: Long,
       vecsEncoded: Long, rebuilt: Boolean)
 
-  private[graft] def normalized(df: DataFrame): DataFrame = df
-    .select(col("vec_id"),
-      expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-    .withColumn("nr", sqrt(GraftFunctions.arrayDot(col("v"), col("v"))))
-    .select(col("vec_id"), col("v"), col("nr"),
-      expr("transform(v, x -> x / nr)").as("uv"))
+  private[graft] def normalized(df: DataFrame): DataFrame = IncrementalIvf
+    .vecsOf(df).withColumn("uv", expr("transform(v, x -> x / nr)"))
 
-  private def markerOf(idxDir: String) =
-    new java.io.File(s"$idxDir/_pq_inc_done")
-
-  private def readMarker(f: java.io.File): String = {
-    val src = scala.io.Source.fromFile(f)
-    try src.mkString finally src.close()
-  }
-
-  private def corpusHead(spark: SparkSession, corpusDir: String): Long = {
-    val root = new Path(corpusDir)
-    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    FlsManifest.readVersioned(fs, root).map(_._1).getOrElse(
-      throw new IllegalArgumentException(
-        s"fls: $corpusDir has no manifest log — incremental PQ " +
-          "maintenance needs a commit_mode=manifest embeddings table"))
-  }
-
-  /** Bring the PQ codes table at `idxDir` up to the corpus head:
-    * a full train+encode when no index exists (or the corpus outgrew
-    * the drift threshold), otherwise an O(new data) encode against
-    * the frozen codebooks. No-op (zero jobs) when already current. */
-  def refresh(spark: SparkSession, corpusDir: String,
-      idxDir: String): RefreshStats =
-      IncrementalDedup.withRefreshLock(idxDir) {
-    val head = corpusHead(spark, corpusDir)
-    val marker = markerOf(idxDir)
-    // PINNED at `head` (see IncrementalIvf.refresh): a live read racing
-    // a concurrent append would encode extra vectors under head's
-    // stamp, and the next refresh would re-encode them (duplicates)
-    def corpus() = spark.read.format("fls")
-      .option("manifest_version", head.toString).load(corpusDir)
-    if (!marker.exists()) return buildAll(spark, corpus(), idxDir, head)
-    // an unparseable (truncated/garbled) marker means "no marker":
-    // fall into the rebuild the fmt fence provides, never throw from
-    // refresh (ADVICE r18; writes are atomic since r19, this guards
-    // markers left by a pre-r19 crash)
-    val saved: Map[String, String] =
-      try readMarker(marker).split(';').iterator.map(_.split("=", 2))
-        .collect { case Array(k, v) => k -> v }.toMap
-      catch { case _: Exception => Map.empty }
-    // artifact-format fence (r18): a pre-codes artifact stores rv
-    // reconstructions — PATCHING codes rows into it would mix schemas;
-    // rebuild whole instead
-    if (!saved.get("fmt").contains("codes"))
-      return buildAll(spark, corpus(), idxDir, head)
-    val builtNOpt = saved.get("n")
-      .flatMap(s => scala.util.Try(s.toLong).toOption)
-    if (builtNOpt.isEmpty) return buildAll(spark, corpus(), idxDir, head)
-    val builtN = builtNOpt.get
-    val cursor = IncrementalDedup.cursorOf(spark, idxDir)
-    if (cursor >= head) return RefreshStats(cursor, head, 0L, rebuilt = false)
-    // codebook drift: the frozen Lloyd means summarize the BUILD
-    // distribution — past the threshold, retrain (O(corpus), by design)
-    val drift = sys.props.get("graft.pq.drift").map(_.toDouble).getOrElse(2.0)
-    val nNow = corpus().count() // footer-served metadata count
-    if (nNow > builtN * drift) {
-      val st = buildAll(spark, corpus(), idxDir, head)
-      return st.copy(fromVersion = cursor)
+  /** Codes of the corpus's `vectors` against a codebook trained at
+    * build; [[IncrementalAdc]] is this artifact over residual vectors. */
+  private[queries] class Codes(spark: SparkSession, corpusDir: String,
+      idxDir: String, marker: String)
+      extends Artifact(spark, corpusDir, idxDir) {
+    def model = Some(Model(marker, "codes", "graft.pq.drift"))
+    def vectors(corpus: DataFrame): DataFrame = normalized(corpus)
+    def build(corpus: DataFrame, n: Long,
+        overwrite: DataFrame => Unit): Map[String, String] = {
+      val u = vectors(corpus)
+      val cb = Similarity.pqCodebook(spark, u)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try {
+        overwrite(Similarity.pqCodesAgainst(spark, u, cb))
+        cb.write.format("fls").mode("overwrite")
+          .option("commit_mode", "manifest").save(s"$idxDir/_codebook")
+      } finally cb.unpersist()
+      Map.empty
     }
-    // refuses loudly on a non-append range (the q105 contract)
-    val added = spark.read.format("fls")
-      .option("changes_from_version", cursor.toString)
-      .option("changes_to_version", head.toString)
-      .load(corpusDir)
-    val cb = spark.read.format("fls").load(s"$idxDir/_codebook")
-    Similarity.pqCodesAgainst(spark, normalized(added), cb)
-      .withColumn("src_version", lit(head))
-      .write.format("fls").mode("append")
-      .option("commit_mode", "manifest").save(idxDir)
-    // one codes row per appended vector — count the (small) delta, not
-    // the corpus-sized codes table
-    val n = added.select("vec_id").distinct().count()
-    RefreshStats(cursor, head, n, rebuilt = false)
+    def encodeDelta(added: DataFrame, state: Map[String, String]): DataFrame =
+      Similarity.pqCodesAgainst(spark, vectors(added),
+        spark.read.format("fls").load(s"$idxDir/_codebook"))
   }
+
+  /** Bring the PQ codes table at `idxDir` up to the corpus head
+    * ([[IncrementalArtifact.refresh]]). */
+  def refresh(spark: SparkSession, corpusDir: String,
+      idxDir: String): RefreshStats = IncrementalArtifact.refresh(
+    new Codes(spark, corpusDir, idxDir, "_pq_inc_done")).as(RefreshStats)
 
   /** Verification hook: frozen-codebook encode of an arbitrary
     * normalized (vec_id, uv) frame — what [[refresh]] does to appended
@@ -121,30 +60,8 @@ object IncrementalPq {
   def encodeAgainst(spark: SparkSession, u: DataFrame,
       cb: DataFrame): DataFrame = Similarity.pqCodesAgainst(spark, u, cb)
 
-  /** Recovery from a non-append-only range, and the retraining path. */
+  /** Retrain and re-encode from the current snapshot. */
   def rebuild(spark: SparkSession, corpusDir: String,
-      idxDir: String): RefreshStats = {
-    markerOf(idxDir).delete()
-    refresh(spark, corpusDir, idxDir)
-  }
-
-  private def buildAll(spark: SparkSession, corpus: DataFrame,
-      idxDir: String, head: Long): RefreshStats = {
-    val n = corpus.count()
-    require(n > 0, "fls pq: empty corpus")
-    val u = normalized(corpus)
-    markerOf(idxDir).delete() // invalidate BEFORE the overwrite
-    val cb = Similarity.pqCodebook(spark, u)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      Similarity.pqCodesAgainst(spark, u, cb)
-        .withColumn("src_version", lit(head))
-        .write.format("fls").mode("overwrite")
-        .option("commit_mode", "manifest").save(idxDir)
-      cb.write.format("fls").mode("overwrite")
-        .option("commit_mode", "manifest").save(s"$idxDir/_codebook")
-    } finally cb.unpersist()
-    IncrementalDedup.writeMarkerAtomic(markerOf(idxDir), s"n=$n;fmt=codes")
-    RefreshStats(0L, head, n, rebuilt = true)
-  }
+      idxDir: String): RefreshStats = IncrementalArtifact.rebuild(
+    new Codes(spark, corpusDir, idxDir, "_pq_inc_done")).as(RefreshStats)
 }

@@ -124,16 +124,12 @@ object Similarity {
       meta: String)(body: => Unit): DataFrame = {
     synchronized {
       val marker = new java.io.File(s"$path/_ivf_done")
-      val current = marker.exists() &&
-        (try {
-          val src = scala.io.Source.fromFile(marker)
-          try src.mkString == meta finally src.close()
-        } catch { case _: Exception => false })
+      val current = IncrementalArtifact.readMarker(marker).contains(meta)
       if (!current) {
         indexBuilds += 1
         evictArtifactCaches(path)
         body
-        IncrementalDedup.writeMarkerAtomic(marker, meta)
+        IncrementalArtifact.writeMarkerAtomic(marker, meta)
       }
     }
     spark.read.format("fls").load(path)

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.queries.{Dedup, IncrementalDedup}
+import graft.queries.{Dedup, IncrementalArtifact, IncrementalDedup}
 
 /** Incremental MinHash signatures ([[IncrementalDedup]]): the refresh
   * reads ONLY the files appended since the cursor (scan-bytes
@@ -65,7 +65,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
       .option("commit_mode", "manifest").save(docsDir)
     val s1 = IncrementalDedup.refresh(spark, docsDir, sigDir)
     assert(s1.fromVersion == 0L && s1.toVersion == 1L && s1.docsSigned > 0)
-    assert(IncrementalDedup.cursorOf(spark, sigDir) == 1L)
+    assert(IncrementalArtifact.cursorOf(spark, sigDir) == 1L)
     // total bytes of the FULL docs table so far (what a naive refresh
     // would re-read)
     val fullBytes = new java.io.File(docsDir).listFiles()
@@ -189,7 +189,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     val started = new java.util.concurrent.CountDownLatch(1)
     @volatile var holderResult: Option[String] = None
     val holder = new Thread(() => {
-      holderResult = Some(IncrementalDedup.withRefreshLock(dir, ttl) {
+      holderResult = Some(IncrementalArtifact.withRefreshLock(dir, ttl) {
         started.countDown()
         Thread.sleep(3 * ttl) // a refresh legitimately outliving the TTL
         "done"
@@ -199,7 +199,7 @@ class IncrementalDedupSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(started.await(5, java.util.concurrent.TimeUnit.SECONDS))
     Thread.sleep(2 * ttl) // well past the TTL — only heartbeats keep it live
     val e = intercept[java.util.ConcurrentModificationException](
-      IncrementalDedup.withRefreshLock(dir, ttl) { "stolen" })
+      IncrementalArtifact.withRefreshLock(dir, ttl) { "stolen" })
     assert(e.getMessage.contains("another refresh"),
       s"a live-heartbeat lock past its TTL must refuse, got: ${e.getMessage}")
     holder.join(10000)
