@@ -404,6 +404,10 @@ class CodecsSpec extends AnyFunSuite {
     }
     val wide = Array.fill(100)(rng.nextLong())
     val dictCap = Array.fill(1001)(rng.nextLong())
+    // the FSST12 shapes draw from their own generator, so adding them
+    // left every earlier shape's input unchanged
+    val rng12 = new scala.util.Random(4096)
+    val vocab = Array.fill(1500)(Array.fill(7)(('a' + rng12.nextInt(26)).toChar).mkString + " ")
     val words = Array("table", "query", "spark", "filter", "window", "batch",
       "merge", "hash", "value", "column", "segment", "vector")
     Seq(
@@ -472,7 +476,15 @@ class CodecsSpec extends AnyFunSuite {
         s"doc$i " + (0 until 8).map(_ => words(rng.nextInt(words.length))).mkString(" "))),
         false, FSST),
       ("bytes plain", BytesData(Array.tabulate(501)(_ * 6), Array.fill(3000)(rng.nextInt(256).toByte)),
-        false, PLAIN)
+        false, PLAIN),
+      // 1500 random 7-letter words: more frequent symbols than 8-bit
+      // FSST's 255 codes hold
+      ("string fsst12", strs(Seq.fill(3000)((0 until 12).map(_ =>
+        vocab(rng12.nextInt(vocab.length))).mkString)), false, FSST12),
+      ("string fsst12_dict", {
+        val docs = Array.fill(1000)((0 until 12).map(_ => vocab(rng12.nextInt(vocab.length))).mkString)
+        strs(Seq.fill(3000)(docs(rng12.nextInt(docs.length))))
+      }, false, FSST12_DICT)
     )
   }
 
@@ -552,7 +564,11 @@ class CodecsSpec extends AnyFunSuite {
     "string fsst" ->
       "5123f316ef9811ba9d250cbd51584635009b225a898cd06f83839cba26d01cdb",
     "bytes plain" ->
-      "4a90e16e6872a942ccb79c106791a6bd580aca83c76fd07056dc35b6d71149e4"
+      "4a90e16e6872a942ccb79c106791a6bd580aca83c76fd07056dc35b6d71149e4",
+    "string fsst12" ->
+      "f7118288e782dc667200f48398d616f80a0daeeeb7c04f4c0dff872b6a863ad2",
+    "string fsst12_dict" ->
+      "e646b0441282ab5d98e62a4d87d23a2a73711a4ff5d48f88916442ab120bf6ff"
   )
 
   test("Encoder output is byte-identical per column shape (pinned SHA-256)") {
@@ -571,6 +587,65 @@ class CodecsSpec extends AnyFunSuite {
         sameBytes(desc.minBytes, full.minBytes) && sameBytes(desc.maxBytes, full.maxBytes)
       if (enc == want && statsOk && pinnedDigests.get(name).contains(digest)) None
       else Some(s"""$name: encoding $enc (expected $want), stats equal: $statsOk, digest "$digest"""")
+    }
+    assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
+  }
+
+  /** `n` rows of `col` from row `from`, in order, or reversed. */
+  private def rows(col: ColData, from: Int, n: Int, reverse: Boolean): ColData = {
+    def ix(i: Int) = if (reverse) from + n - 1 - i else from + i
+    col match {
+      case LongData(v) => LongData(Array.tabulate(n)(i => v(ix(i))))
+      case DoubleData(v) => DoubleData(Array.tabulate(n)(i => v(ix(i))))
+      case b: BytesData => mkBytesRaw((0 until n).map { i =>
+        java.util.Arrays.copyOfRange(b.bytes, b.offsets(ix(i)), b.offsets(ix(i) + 1))
+      })
+      case other => fail(s"no row slice for ${other.getClass.getSimpleName}")
+    }
+  }
+
+  private def mkBytesRaw(vals: Seq[Array[Byte]]): BytesData =
+    BytesData(vals.scanLeft(0)(_ + _.length).toArray, vals.flatten.toArray)
+
+  test("a recycled holder decodes like a fresh one: same length twice, then a new length") {
+    import Format.{ColumnType, TypeTag}
+    val rng = new scala.util.Random(71)
+    def listCol(n: Int): ColData = {
+      val lens = Array.fill(n)(rng.nextInt(5))
+      ArrayColData(lens.scanLeft(0)(_ + _), LongData(Array.fill(lens.sum)(rng.nextInt(1000).toLong)))
+    }
+    def mapCol(n: Int): ColData = {
+      val lens = Array.fill(n)(rng.nextInt(4))
+      val m = lens.sum
+      MapColData(lens.scanLeft(0)(_ + _), LongData(Array.tabulate(m)(i => (i % 50).toLong)),
+        LongData(Array.fill(m)(rng.nextInt(1 << 20).toLong)))
+    }
+    // three row groups per shape: two of one length, one of another
+    val shapes: Seq[(String, ColumnType, Boolean, Seq[ColData])] =
+      pinnedColumns.map { case (name, col, transpose, _) =>
+        val ct = col match {
+          case _: LongData => ColumnType(TypeTag.INT64)
+          case _: DoubleData => ColumnType(TypeTag.DOUBLE)
+          case _ => ColumnType(TypeTag.STRING)
+        }
+        val n = col.n
+        (name, ct, transpose, Seq(col, rows(col, 0, n, reverse = true),
+          rows(col, n / 3, n - n / 3, reverse = false)))
+      } ++ Seq(
+        ("list of long", ColumnType(TypeTag.LIST, TypeTag.INT64), false,
+          Seq(listCol(3000), listCol(3000), listCol(1700))),
+        ("map of long to long", ColumnType(TypeTag.MAP, TypeTag.INT64, TypeTag.INT64), false,
+          Seq(mapCol(3000), mapCol(3000), mapCol(1700))))
+    val bad = shapes.flatMap { case (name, ct, transpose, groups) =>
+      val bufs = new Codecs.ReuseBufs
+      groups.zipWithIndex.flatMap { case (col, g) =>
+        val w = new ByteWriter()
+        val (enc, _) = Encoder.encodeColumn(col, w, transpose)
+        val got = Codecs.decodeReuse(w.toArray, enc, ct, bufs)
+        val want = Codecs.decode(w.toArray, enc, ct)
+        if (Codecs.contentEquals(got, want) && Codecs.contentEquals(want, col)) None
+        else Some(s"$name: row group $g (encoding $enc) decodes differently through the holder")
+      }
     }
     assert(bad.isEmpty, bad.mkString("\n", "\n", ""))
   }
