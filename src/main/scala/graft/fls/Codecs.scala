@@ -171,15 +171,9 @@ object Codecs {
     }
   }
 
-  def decodeFFOR(in: ByteReader): Array[Long] = decodeFFORReuse(in, null)
-
-  /** As decodeFFOR, writing into `reuse` when its length matches —
-    * recycling row-group output arrays saves the JVM's mandatory
-    * zeroing of a fresh 512 KB allocation (~2 ns/value measured, ~20%
-    * of the whole ALP decode). */
-  def decodeFFORReuse(in: ByteReader, reuse: Array[Long]): Array[Long] = {
+  private def decodeFFOR(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
     val n = in.readInt()
-    val out = if (reuse != null && reuse.length == n) reuse else new Array[Long](n)
+    val out = bufs.fitLongs(n)
     var start = 0
     while (start < n) {
       val len = math.min(VecSize, n - start)
@@ -215,39 +209,28 @@ object Codecs {
     out.writeBytes(d.bytes, 0, total)
   }
 
-  def decodePlainLong(in: ByteReader): Array[Long] =
-    decodePlainLongReuse(in, null)
-
-  def decodePlainLongReuse(in: ByteReader, reuse: Array[Long]): Array[Long] = {
+  private def decodePlainLong(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
     val n = in.readInt()
-    val out = if (reuse != null && reuse.length == n) reuse else new Array[Long](n)
+    val out = bufs.fitLongs(n)
     in.readLongsInto(out, n)
     out
   }
 
-  def decodePlainDouble(in: ByteReader): Array[Double] =
-    decodePlainDoubleReuse(in, null)
-
-  def decodePlainDoubleReuse(in: ByteReader, reuse: Array[Double]): Array[Double] = {
+  private def decodePlainDouble(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
     val n = in.readInt()
-    val out = if (reuse != null && reuse.length == n) reuse else new Array[Double](n)
+    val out = bufs.fitDoubles(n)
     var i = 0
     while (i < n) { out(i) = in.readDouble(); i += 1 }
     out
   }
 
-  def decodePlainBytes(in: ByteReader): BytesData =
-    decodePlainBytesReuse(in, null)
-
-  def decodePlainBytesReuse(in: ByteReader, bufs: ReuseBufs): BytesData = {
+  private def decodePlainBytes(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt()
-    val lens = decodeFFORReuse(in, if (bufs == null) null else bufs.fitLongs(n))
+    val lens = decodeFFOR(in, bufs.scratch)
     val total = in.readInt()
-    val bytes =
-      if (bufs == null) in.readBytes(total)
-      else { val b = bufs.fitBytesCap(total); in.readBytesInto(b, total); b }
-    val offsets = if (bufs == null) new Array[Int](n + 1) else bufs.fitInts(n + 1)
-    offsets(0) = 0 // reused arrays carry junk; the loop fills 1..n
+    val bytes = bufs.fitBytesCap(total)
+    in.readBytesInto(bytes, total)
+    val offsets = bufs.fitOffsets(n)
     var i = 0
     while (i < n) { offsets(i + 1) = offsets(i) + lens(i).toInt; i += 1 }
     BytesData(offsets, bytes)
@@ -261,21 +244,21 @@ object Codecs {
     out.writeInt(n); out.writeInt(v.length); out.writeBytes(v)
   }
 
-  def decodeConstLong(in: ByteReader): Array[Long] = {
+  private def decodeConstLong(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
     val n = in.readInt(); val v = in.readLong()
-    val out = new Array[Long](n); Arrays.fill(out, v); out
+    val out = bufs.fitLongs(n); Arrays.fill(out, v); out
   }
 
-  def decodeConstDouble(in: ByteReader): Array[Double] = {
+  private def decodeConstDouble(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
     val n = in.readInt(); val v = in.readDouble()
-    val out = new Array[Double](n); Arrays.fill(out, v); out
+    val out = bufs.fitDoubles(n); Arrays.fill(out, v); out
   }
 
-  def decodeConstBytes(in: ByteReader): BytesData = {
+  private def decodeConstBytes(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt(); val len = in.readInt()
     val v = in.readBytes(len)
-    val bytes = new Array[Byte](len * n)
-    val offsets = new Array[Int](n + 1)
+    val bytes = bufs.fitBytesCap(len * n)
+    val offsets = bufs.fitOffsets(n)
     var i = 0
     while (i < n) {
       System.arraycopy(v, 0, bytes, i * len, len)
@@ -294,44 +277,12 @@ object Codecs {
     encodeFFOR(codes, out)
   }
 
-  def decodeDictLong(in: ByteReader): Array[Long] =
-    decodeDictLongReuse(in, null)
-
-  def decodeDictLongReuse(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
-    val n = in.readInt()
-    val dictSize = in.readInt()
-    val dict = in.readLongs(dictSize)
-    val codes = decodeFFORReuse(in, if (bufs == null) null else bufs.fitLongs2(n))
-    checkCodes(codes, dictSize)
-    val out = if (bufs == null) new Array[Long](n) else bufs.fitLongs(n)
-    var i = 0
-    while (i < n) { out(i) = dict(codes(i).toInt); i += 1 }
-    out
-  }
-
   def encodeDictDouble(n: Int, dict: Array[Double], codes: Array[Long], out: ByteWriter): Unit = {
     out.writeInt(n)
     out.writeInt(dict.length)
     var i = 0
     while (i < dict.length) { out.writeDouble(dict(i)); i += 1 }
     encodeFFOR(codes, out)
-  }
-
-  def decodeDictDouble(in: ByteReader): Array[Double] =
-    decodeDictDoubleReuse(in, null)
-
-  def decodeDictDoubleReuse(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
-    val n = in.readInt()
-    val dictSize = in.readInt()
-    val dict = new Array[Double](dictSize)
-    var i = 0
-    while (i < dictSize) { dict(i) = in.readDouble(); i += 1 }
-    val codes = decodeFFORReuse(in, if (bufs == null) null else bufs.fitLongs(n))
-    checkCodes(codes, dictSize)
-    val out = if (bufs == null) new Array[Double](n) else bufs.fitDoubles(n)
-    i = 0
-    while (i < n) { out(i) = dict(codes(i).toInt); i += 1 }
-    out
   }
 
   /** Range-check decoded index arrays (dictionary codes, exception
@@ -354,31 +305,6 @@ object Codecs {
     }
   }
 
-  /** Returns (dictionary, codes) un-gathered — the numeric analog of
-    * [[decodeDictBytesRaw]] for the zero-copy dictionary-vector scan. */
-  def decodeDictLongRaw(in: ByteReader): (Array[Long], Array[Long]) = {
-    val n = in.readInt()
-    val dictSize = in.readInt()
-    val dict = in.readLongs(dictSize)
-    val codes = decodeFFOR(in)
-    require(codes.length == n)
-    checkCodes(codes, dictSize)
-    (dict, codes)
-  }
-
-  /** See [[decodeDictLongRaw]]. */
-  def decodeDictDoubleRaw(in: ByteReader): (Array[Double], Array[Long]) = {
-    val n = in.readInt()
-    val dictSize = in.readInt()
-    val dict = new Array[Double](dictSize)
-    var i = 0
-    while (i < dictSize) { dict(i) = in.readDouble(); i += 1 }
-    val codes = decodeFFOR(in)
-    require(codes.length == n)
-    checkCodes(codes, dictSize)
-    (dict, codes)
-  }
-
   def encodeDictBytes(n: Int, dict: BytesData, codes: Array[Long], out: ByteWriter): Unit = {
     out.writeInt(n)
     out.writeInt(dict.n)
@@ -386,25 +312,79 @@ object Codecs {
     encodeFFOR(codes, out)
   }
 
-  /** Returns (dictionary, codes) — the scan keeps the dictionary around
-    * and serves codes, the zero-copy trick of the reference's string
-    * dict kernel (/root/reference/.../kernels/dictionary_kernel.hpp:93-99). */
-  def decodeDictBytesRaw(in: ByteReader): (BytesData, Array[Long]) = {
+  /** THE parser of the dictionary layouts — DICT (long, double, bytes),
+    * FSST_DICT and FSST12_DICT — as (dictionary, codes), ≙ the
+    * reference's Prepare step (dictionary_kernel.hpp:52-103): the scan
+    * serves the pair through a Spark dictionary vector, and [[decode]]
+    * gathers it. The codes are the holder's scratch; the dictionary,
+    * which the gather reads from, decodes into fresh arrays. */
+  def dictParts(in: ByteReader, enc: Int, phys: Int, bufs: ReuseBufs): (ColData, Array[Long]) = {
+    import Format.Phys
     val n = in.readInt()
-    val _ = in.readInt() // dict size (redundant with dict payload)
-    val dict = decodePlainBytes(in)
-    val codes = decodeFFOR(in)
-    require(codes.length == n)
+    val dict = (enc, phys) match {
+      case (Enc.DICT, Phys.LONG) => LongData(in.readLongs(in.readInt()))
+      case (Enc.DICT, Phys.DOUBLE) =>
+        val d = new Array[Double](in.readInt())
+        var i = 0
+        while (i < d.length) { d(i) = in.readDouble(); i += 1 }
+        DoubleData(d)
+      case (Enc.DICT, Phys.BYTES) =>
+        in.readInt() // dict size (redundant with dict payload)
+        decodePlainBytes(in, fresh)
+      case (Enc.FSST_DICT, Phys.BYTES) => decodeFsst(in, fresh)
+      case (Enc.FSST12_DICT, Phys.BYTES) => decodeFsst12(in, fresh)
+      case other => throw new IllegalStateException(s"fls: bad (encoding, phys) pair $other")
+    }
+    val codes = decodeFFOR(in, bufs.scratch)
+    require(codes.length == n, s"fls: ${codes.length} dictionary codes for $n rows")
     checkCodes(codes, dict.n)
     (dict, codes)
+  }
+
+  /** THE gather (DICT, FSST_DICT, FSST12_DICT and EXP_DICT):
+    * `dict(codes(i))` is row i, written into the holder's output arrays.
+    * `codes` must already be range-checked against `dict.n`. */
+  private def gather(dict: ColData, codes: Array[Long], bufs: ReuseBufs): ColData = {
+    val n = codes.length
+    dict match {
+      case LongData(vs) =>
+        val out = bufs.fitLongs(n)
+        var i = 0
+        while (i < n) { out(i) = vs(codes(i).toInt); i += 1 }
+        LongData(out)
+      case DoubleData(vs) =>
+        val out = bufs.fitDoubles(n)
+        var i = 0
+        while (i < n) { out(i) = vs(codes(i).toInt); i += 1 }
+        DoubleData(out)
+      case BytesData(offsets, bytes) =>
+        val outOff = bufs.fitOffsets(n)
+        var total = 0
+        var i = 0
+        while (i < n) {
+          val c = codes(i).toInt
+          total += offsets(c + 1) - offsets(c)
+          outOff(i + 1) = total
+          i += 1
+        }
+        val outBytes = bufs.fitBytesCap(total)
+        i = 0
+        while (i < n) {
+          val c = codes(i).toInt
+          System.arraycopy(bytes, offsets(c), outBytes, outOff(i), offsets(c + 1) - offsets(c))
+          i += 1
+        }
+        BytesData(outOff, outBytes)
+      case other => throw new UnsupportedOperationException(
+        s"fls: dictionary decoded to ${other.getClass.getSimpleName} — " +
+          "dictionaries over nested columns are not supported")
+    }
   }
 
   // ---------- EQUAL (MCC EXP_EQUAL): cross-column reference ----------
 
   /** Payload of an EQUAL segment: just the source column's index. */
   def encodeEqual(target: Int, out: ByteWriter): Unit = out.writeInt(target)
-
-  def decodeEqualTarget(bytes: Array[Byte]): Int = new ByteReader(bytes).readInt()
 
   // ---- EXP_DICT (MCC external dictionary): codes into another column ----
 
@@ -417,50 +397,22 @@ object Codecs {
     encodeFFOR(codes, out)
   }
 
-  def decodeExpDictParts(bytes: Array[Byte]): (Int, Array[Long]) = {
-    val in = new ByteReader(bytes)
-    val source = in.readInt()
-    (source, decodeFFOR(in))
-  }
-
-  /** Gather `source` through `codes` (the EXP_DICT materialization). */
-  def gatherExpDict(source: ColData, codes: Array[Long]): ColData = {
-    val n = codes.length
-    checkCodes(codes, source.n)
-    source match {
-      case LongData(vs) =>
-        val out = new Array[Long](n)
-        var i = 0
-        while (i < n) { out(i) = vs(codes(i).toInt); i += 1 }
-        LongData(out)
-      case DoubleData(vs) =>
-        val out = new Array[Double](n)
-        var i = 0
-        while (i < n) { out(i) = vs(codes(i).toInt); i += 1 }
-        DoubleData(out)
-      case BytesData(offsets, bytes) =>
-        val outOff = new Array[Int](n + 1)
-        var total = 0
-        var i = 0
-        while (i < n) {
-          val r = codes(i).toInt
-          total += offsets(r + 1) - offsets(r)
-          outOff(i + 1) = total
-          i += 1
-        }
-        val outBytes = new Array[Byte](total)
-        i = 0
-        while (i < n) {
-          val r = codes(i).toInt
-          System.arraycopy(bytes, offsets(r), outBytes, outOff(i),
-            offsets(r + 1) - offsets(r))
-          i += 1
-        }
-        BytesData(outOff, outBytes)
-      case other => throw new UnsupportedOperationException(
-        s"fls: EXP_DICT source decoded to ${other.getClass.getSimpleName} — " +
-          "external dictionaries over nested columns are not supported")
-    }
+  /** THE segment resolver for the cross-column encodings (≙ reference
+    * fls_reader.cpp:43-82): EQUAL is its source column `decodeAt(target)`,
+    * EXP_DICT is `decodeAt(source)` gathered through its codes. Every
+    * other encoding decodes on its own. `decodeAt(c)` decodes column c
+    * of the same row group — the scan memoizes it, the file reader
+    * re-reads. */
+  def resolveSegment(bytes: Array[Byte], enc: Int, ct: Format.ColumnType,
+      bufs: ReuseBufs, decodeAt: Int => ColData): ColData = enc match {
+    case Enc.EQUAL => decodeAt(new ByteReader(bytes).readInt())
+    case Enc.EXP_DICT =>
+      val in = new ByteReader(bytes)
+      val source = decodeAt(in.readInt())
+      val codes = decodeFFOR(in, bufs.scratch)
+      checkCodes(codes, source.n)
+      gather(source, codes, bufs)
+    case _ => decode(bytes, enc, ct, bufs)
   }
 
   /** Exact physical-content equality (the writer-side MCC detector). */
@@ -488,61 +440,6 @@ object Codecs {
     case _ => false
   }
 
-  /** (dictionary, codes) for any dictionary-family bytes encoding, or
-    * None — lets the scan serve codes through a shared dictionary
-    * vector instead of gathering every value eagerly. */
-  def decodeDictParts(bytes: Array[Byte], enc: Int): Option[(BytesData, Array[Long])] = {
-    val in = new ByteReader(bytes)
-    enc match {
-      case Enc.DICT => Some(decodeDictBytesRaw(in))
-      case Enc.FSST_DICT =>
-        val n = in.readInt()
-        val dict = decodeFsst(in)
-        val codes = decodeFFOR(in)
-        require(codes.length == n)
-        Some((dict, codes))
-      case Enc.FSST12_DICT =>
-        val n = in.readInt()
-        val dict = decodeFsst12(in)
-        val codes = decodeFFOR(in)
-        require(codes.length == n)
-        Some((dict, codes))
-      case _ => None
-    }
-  }
-
-  def decodeDictBytes(in: ByteReader): BytesData =
-    decodeDictBytesReuse(in, null)
-
-  def decodeDictBytesReuse(in: ByteReader, bufs: ReuseBufs): BytesData = {
-    val n0 = in.readInt()
-    val _ = in.readInt() // dict size (redundant with dict payload)
-    val dict = decodePlainBytes(in) // small; not worth recycling
-    val codes = decodeFFORReuse(in, if (bufs == null) null else bufs.fitLongs(n0))
-    require(codes.length == n0)
-    checkCodes(codes, dict.n)
-    val n = codes.length
-    val offsets = if (bufs == null) new Array[Int](n + 1) else bufs.fitInts(n + 1)
-    offsets(0) = 0
-    var total = 0
-    var i = 0
-    while (i < n) {
-      val c = codes(i).toInt
-      total += dict.offsets(c + 1) - dict.offsets(c)
-      offsets(i + 1) = total
-      i += 1
-    }
-    val bytes = if (bufs == null) new Array[Byte](total) else bufs.fitBytesCap(total)
-    i = 0
-    while (i < n) {
-      val c = codes(i).toInt
-      val start = dict.offsets(c)
-      System.arraycopy(dict.bytes, start, bytes, offsets(i), dict.offsets(c + 1) - start)
-      i += 1
-    }
-    BytesData(offsets, bytes)
-  }
-
   // ---------- RLE (K13/K14): run values + FFOR-packed run lengths ----------
 
   def encodeRleLong(n: Int, runVals: Array[Long], runLens: Array[Long], out: ByteWriter): Unit = {
@@ -552,12 +449,12 @@ object Codecs {
     encodeFFOR(runLens, out)
   }
 
-  def decodeRleLong(in: ByteReader): Array[Long] = {
+  private def decodeRleLong(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
     val n = in.readInt()
     val nRuns = in.readInt()
     val vals = in.readLongs(nRuns)
-    val lens = decodeFFOR(in)
-    val out = new Array[Long](n)
+    val lens = decodeFFOR(in, fresh)
+    val out = bufs.fitLongs(n)
     var pos = 0
     var r = 0
     while (r < nRuns) {
@@ -566,8 +463,14 @@ object Codecs {
       pos = end
       r += 1
     }
+    checkRuns(pos, n)
     out
   }
+
+  /** Runs must cover every row: a recycled output array still holds the
+    * previous row group past the last run. */
+  private def checkRuns(covered: Int, n: Int): Unit =
+    if (covered != n) throw new IllegalStateException(s"runs cover $covered of $n rows")
 
   def encodeRleDouble(n: Int, runVals: Array[Double], runLens: Array[Long], out: ByteWriter): Unit = {
     out.writeInt(n)
@@ -577,14 +480,14 @@ object Codecs {
     encodeFFOR(runLens, out)
   }
 
-  def decodeRleDouble(in: ByteReader): Array[Double] = {
+  private def decodeRleDouble(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
     val n = in.readInt()
     val nRuns = in.readInt()
     val vals = new Array[Double](nRuns)
     var i = 0
     while (i < nRuns) { vals(i) = in.readDouble(); i += 1 }
-    val lens = decodeFFOR(in)
-    val out = new Array[Double](n)
+    val lens = decodeFFOR(in, fresh)
+    val out = bufs.fitDoubles(n)
     var pos = 0
     var r = 0
     while (r < nRuns) {
@@ -593,6 +496,7 @@ object Codecs {
       pos = end
       r += 1
     }
+    checkRuns(pos, n)
     out
   }
 
@@ -603,12 +507,12 @@ object Codecs {
     encodeFFOR(runLens, out)
   }
 
-  def decodeRleBytes(in: ByteReader): BytesData = {
+  private def decodeRleBytes(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt()
     val nRuns = in.readInt()
-    val vals = decodePlainBytes(in)
-    val lens = decodeFFOR(in)
-    val offsets = new Array[Int](n + 1)
+    val vals = decodePlainBytes(in, fresh)
+    val lens = decodeFFOR(in, fresh)
+    val offsets = bufs.fitOffsets(n)
     var total = 0
     var pos = 0
     var r = 0
@@ -620,7 +524,8 @@ object Codecs {
       pos += rl
       r += 1
     }
-    val bytes = new Array[Byte](total)
+    checkRuns(pos, n)
+    val bytes = bufs.fitBytesCap(total)
     pos = 0
     r = 0
     while (r < nRuns) {
@@ -649,7 +554,7 @@ object Codecs {
 
   /** Correctly-rounded x/div via Markstein reciprocal-multiply + two-FMA
     * correction. This is THE decode arithmetic: `alpExact` and
-    * `decodeAlpReuse` both call it, so encoder exactness and decoder
+    * `decodeAlp` both call it, so encoder exactness and decoder
     * output agree bitwise by construction (and the expression itself is
     * verified bitwise against divsd over 60M random (digits, e)
     * samples). Plain reciprocal multiply — the ALP paper's shape —
@@ -723,19 +628,14 @@ object Codecs {
     }
   }
 
-  def decodeAlp(in: ByteReader): Array[Double] = decodeAlpReuse(in, null, null)
-
-  /** As decodeAlp with donated buffers: `reuse` becomes the output when
-    * sized right; `intScratch` recycles the FFOR digits array (free
-    * again once this returns). */
-  def decodeAlpReuse(in: ByteReader, reuse: Array[Double],
-      intScratch: Array[Long]): Array[Double] = {
+  /** The digits decode into the holder's scratch. */
+  private def decodeAlp(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
     val n = in.readInt()
     val e = in.readByte() & 0xff
-    val ints = decodeFFORReuse(in, intScratch)
+    val ints = decodeFFOR(in, bufs.scratch)
     val div = Pow10(e)
     val rcp = 1.0 / div
-    val out = if (reuse != null && reuse.length == n) reuse else new Array[Double](n)
+    val out = bufs.fitDoubles(n)
     // marksteinDiv = correctly-rounded x/div with ~15% less loop time
     // than the hardware divide on the measured long→double path; the
     // SAME helper gates encoder exactness (alpExact), so round-trip is
@@ -747,7 +647,7 @@ object Codecs {
     }
     val nEx = in.readInt()
     if (nEx > 0) {
-      val exPos = decodeFFOR(in)
+      val exPos = decodeFFOR(in, fresh)
       checkCodes(exPos, n)
       var k = 0
       while (k < nEx) { out(exPos(k).toInt) = in.readDouble(); k += 1 }
@@ -775,15 +675,15 @@ object Codecs {
     out.writeBytes(encBytes)
   }
 
-  def decodeFsst(in: ByteReader): BytesData = {
+  private def decodeFsst(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt()
     val table = Fsst.readTable(in)
-    val encLens = decodeFFOR(in)
+    val encLens = decodeFFOR(in, bufs.scratch)
     val total = in.readInt()
     val encBytes = in.readBytes(total)
     val out = scala.collection.mutable.ArrayBuilder.make[Byte]
     out.sizeHint(total * 3)
-    val offsets = new Array[Int](n + 1)
+    val offsets = bufs.fitOffsets(n)
     var pos = 0
     var i = 0
     while (i < n) {
@@ -800,37 +700,6 @@ object Codecs {
     out.writeInt(n)
     encodeFsst(dict, table, out)
     encodeFFOR(codes, out)
-  }
-
-  def decodeFsstDict(in: ByteReader): BytesData = {
-    val n = in.readInt()
-    val dict = decodeFsst(in)
-    val codes = decodeFFOR(in)
-    require(codes.length == n)
-    gatherDict(dict, codes)
-  }
-
-  private def gatherDict(dict: BytesData, codes: Array[Long]): BytesData = {
-    val n = codes.length
-    checkCodes(codes, dict.n)
-    val offsets = new Array[Int](n + 1)
-    var total = 0
-    var i = 0
-    while (i < n) {
-      val c = codes(i).toInt
-      total += dict.offsets(c + 1) - dict.offsets(c)
-      offsets(i + 1) = total
-      i += 1
-    }
-    val bytes = new Array[Byte](total)
-    i = 0
-    while (i < n) {
-      val c = codes(i).toInt
-      val s = dict.offsets(c)
-      System.arraycopy(dict.bytes, s, bytes, offsets(i), dict.offsets(c + 1) - s)
-      i += 1
-    }
-    BytesData(offsets, bytes)
   }
 
   // ---------- FSST12 (K11) & FSST12-dict (K12) ----------
@@ -853,15 +722,15 @@ object Codecs {
     out.writeBytes(packed)
   }
 
-  def decodeFsst12(in: ByteReader): BytesData = {
+  private def decodeFsst12(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt()
     val table = Fsst12.readTable(in)
-    val codeCounts = decodeFFOR(in)
+    val codeCounts = decodeFFOR(in, bufs.scratch)
     val packedLen = in.readInt()
     val packed = in.readBytes(packedLen)
     val out = scala.collection.mutable.ArrayBuilder.make[Byte]
     out.sizeHint(packedLen * 4)
-    val offsets = new Array[Int](n + 1)
+    val offsets = bufs.fitOffsets(n)
     var codePos = 0
     var i = 0
     while (i < n) {
@@ -878,14 +747,6 @@ object Codecs {
     out.writeInt(n)
     encodeFsst12(dict, table, out)
     encodeFFOR(codes, out)
-  }
-
-  def decodeFsst12Dict(in: ByteReader): BytesData = {
-    val n = in.readInt()
-    val dict = decodeFsst12(in)
-    val codes = decodeFFOR(in)
-    require(codes.length == n)
-    gatherDict(dict, codes)
   }
 
   // ---------- FREQ (K15): frequent value + patched exceptions ----------
@@ -912,16 +773,16 @@ object Codecs {
     }
   }
 
-  def decodeFreqLong(in: ByteReader): Array[Long] = {
+  private def decodeFreqLong(in: ByteReader, bufs: ReuseBufs): Array[Long] = {
     val n = in.readInt()
     val freqVal = in.readLong()
-    val out = new Array[Long](n)
+    val out = bufs.fitLongs(n)
     Arrays.fill(out, freqVal)
     val nEx = in.readInt()
     if (nEx > 0) {
-      val exPos = decodeFFOR(in)
+      val exPos = decodeFFOR(in, fresh)
       checkCodes(exPos, n)
-      val exVal = decodeFFOR(in)
+      val exVal = decodeFFOR(in, fresh)
       var k = 0
       while (k < nEx) { out(exPos(k).toInt) = exVal(k); k += 1 }
     }
@@ -980,14 +841,14 @@ object Codecs {
     }
   }
 
-  def decodeFreqBytes(in: ByteReader): BytesData = {
+  private def decodeFreqBytes(in: ByteReader, bufs: ReuseBufs): BytesData = {
     val n = in.readInt()
     val freqLen = in.readInt()
     val freqVal = in.readBytes(freqLen)
     val nEx = in.readInt()
+    val offsets = bufs.fitOffsets(n)
     if (nEx == 0) {
-      val offsets = new Array[Int](n + 1)
-      val bytes = new Array[Byte](n * freqLen)
+      val bytes = bufs.fitBytesCap(n * freqLen)
       var i = 0
       while (i < n) {
         System.arraycopy(freqVal, 0, bytes, i * freqLen, freqLen)
@@ -996,12 +857,11 @@ object Codecs {
       }
       BytesData(offsets, bytes)
     } else {
-      val exPos = decodeFFOR(in)
+      val exPos = decodeFFOR(in, fresh)
       checkCodes(exPos, n)
-      val ex = decodePlainBytes(in)
+      val ex = decodePlainBytes(in, fresh)
       val exTotal = ex.offsets(ex.n)
-      val offsets = new Array[Int](n + 1)
-      val bytes = new Array[Byte]((n - nEx) * freqLen + exTotal)
+      val bytes = bufs.fitBytesCap((n - nEx) * freqLen + exTotal)
       var i = 0
       var k = 0
       var pos = 0
@@ -1061,7 +921,7 @@ object Codecs {
     if (exPos.nonEmpty) { encodeFFOR(exPos, out); encodeFFOR(exLeft, out) }
   }
 
-  def decodeAlpRd(in: ByteReader): Array[Double] = {
+  private def decodeAlpRd(in: ByteReader, bufs: ReuseBufs): Array[Double] = {
     val n = in.readInt()
     val rightBits = in.readByte() & 0xff
     val dictN = in.readByte() & 0xff
@@ -1077,13 +937,13 @@ object Codecs {
     while (i < n) { lefts(i) = dict(leftCodes(i).toInt); i += 1 }
     val nEx = in.readInt()
     if (nEx > 0) {
-      val exPos = decodeFFOR(in)
+      val exPos = decodeFFOR(in, fresh)
       checkCodes(exPos, n)
-      val exLeft = decodeFFOR(in)
+      val exLeft = decodeFFOR(in, fresh)
       var k = 0
       while (k < nEx) { lefts(exPos(k).toInt) = exLeft(k); k += 1 }
     }
-    val out = new Array[Double](n)
+    val out = bufs.fitDoubles(n)
     i = 0
     while (i < n) {
       out(i) = java.lang.Double.longBitsToDouble((lefts(i) << rightBits) | rights(i))
@@ -1091,8 +951,6 @@ object Codecs {
     }
     out
   }
-
-  // ---------- dispatch ----------
 
   // ---------- TRANSPOSED (K16): FastLanes interleaved vector layout ----------
 
@@ -1160,38 +1018,45 @@ object Codecs {
     out
   }
 
-  /** `elemPhys` is the element stream's physical kind, used only when
-    * `phys == Phys.ARRAY` (-1 otherwise). Scan-side callers compute it
-    * as `Format.elemPhysOf(colType.elem.tag)`. */
-  def decode(bytes: Array[Byte], enc: Int, phys: Int, elemPhys: Int = -1,
-      elemPhys2: Int = -1): ColData =
-    decodeFrom(new ByteReader(bytes), enc, phys, elemPhys, elemPhys2)
+  // ---------- dispatch ----------
 
-  /** Per-segment recycled buffers for [[decodeReuse]] — the codec
-    * adopts/replaces the arrays as sizes demand, the caller just keeps
-    * one holder per segment alive across row groups. */
+  /** Per-segment recycled arrays: the caller keeps one holder per
+    * segment alive across row groups, and a kernel writes its top-level
+    * output into the holder's slots (adopted or replaced as sizes
+    * demand). A recycled row-group array skips the JVM's zeroing of a
+    * fresh 512 KB allocation (~2 ns/value measured, ~20% of the ALP
+    * decode). The returned ColData may alias the holder's arrays; they
+    * stay valid until the next decode with the same holder. Only the
+    * top-level output and the one code/digit [[scratch]] go through the
+    * holder: payloads a gather or expansion reads from (dictionary
+    * values, run values and lengths, exception lists, LIST/MAP lengths
+    * and children) decode into fresh arrays, or MAP values would
+    * overwrite MAP keys. */
   final class ReuseBufs {
-    var longs: Array[Long] = null
-    /** Second long slot: dict decodes need codes AND output at once. */
-    var longs2: Array[Long] = null
-    var doubles: Array[Double] = null
-    var ints: Array[Int] = null
-    var bytes: Array[Byte] = null
+    private var longs: Array[Long] = null
+    private var doubles: Array[Double] = null
+    private var ints: Array[Int] = null
+    private var bytes: Array[Byte] = null
+    private var scratch0: ReuseBufs = null
+    /** The segment's one code/digit scratch: dictionary codes, ALP
+      * digits, byte-string lengths. */
+    private[Codecs] def scratch: ReuseBufs = {
+      if (scratch0 == null) scratch0 = new ReuseBufs
+      scratch0
+    }
     private[Codecs] def fitLongs(n: Int): Array[Long] = {
       if (longs == null || longs.length != n) longs = new Array[Long](n)
       longs
-    }
-    private[Codecs] def fitLongs2(n: Int): Array[Long] = {
-      if (longs2 == null || longs2.length != n) longs2 = new Array[Long](n)
-      longs2
     }
     private[Codecs] def fitDoubles(n: Int): Array[Double] = {
       if (doubles == null || doubles.length != n) doubles = new Array[Double](n)
       doubles
     }
-    /** Exact length (ColData.n derives from offsets.length). */
-    private[Codecs] def fitInts(n: Int): Array[Int] = {
-      if (ints == null || ints.length != n) ints = new Array[Int](n)
+    /** Offsets of `n` strings: exact length n+1 (ColData.n derives from
+      * it), first entry 0 — a recycled array carries the last group. */
+    private[Codecs] def fitOffsets(n: Int): Array[Int] = {
+      if (ints == null || ints.length != n + 1) ints = new Array[Int](n + 1)
+      ints(0) = 0
       ints
     }
     /** Capacity-based: BytesData consumers only read ranges the offsets
@@ -1202,114 +1067,78 @@ object Codecs {
     }
   }
 
-  /** As `decode(bytes, enc, ct)` recycling the holder's arrays for the
-    * hot NUMERIC paths (FFOR/ALP/PLAIN over long/double) — reused
-    * row-group arrays skip the JVM's zeroing of each fresh 512 KB
-    * allocation (~2 ns/value measured, ~20% of the ALP decode). Every
-    * other (encoding, type) pair falls through to the allocating path.
-    * The returned ColData may alias the holder's arrays; they stay
-    * valid until the next decodeReuse with the same holder. */
-  def decodeReuse(bytes: Array[Byte], enc: Int, ct: Format.ColumnType,
-      bufs: ReuseBufs): ColData = {
-    import Format.{Phys, TypeTag}
-    if (bufs == null || TypeTag.isNestedTag(ct.tag)) decode(bytes, enc, ct)
-    else (enc, Format.physOf(ct.tag)) match {
-      case (Enc.FFOR, Phys.LONG) =>
-        val n = BitsLE.getInt(bytes, 0)
-        LongData(decodeFFORReuse(new ByteReader(bytes), bufs.fitLongs(n)))
-      case (Enc.ALP, Phys.DOUBLE) =>
-        val n = BitsLE.getInt(bytes, 0)
-        DoubleData(decodeAlpReuse(new ByteReader(bytes),
-          bufs.fitDoubles(n), bufs.fitLongs(n)))
-      case (Enc.PLAIN, Phys.LONG) =>
-        val n = BitsLE.getInt(bytes, 0)
-        LongData(decodePlainLongReuse(new ByteReader(bytes), bufs.fitLongs(n)))
-      case (Enc.PLAIN, Phys.DOUBLE) =>
-        val n = BitsLE.getInt(bytes, 0)
-        DoubleData(decodePlainDoubleReuse(new ByteReader(bytes), bufs.fitDoubles(n)))
-      case (Enc.DICT, Phys.LONG) =>
-        LongData(decodeDictLongReuse(new ByteReader(bytes), bufs))
-      case (Enc.DICT, Phys.DOUBLE) =>
-        DoubleData(decodeDictDoubleReuse(new ByteReader(bytes), bufs))
-      case (Enc.DICT, Phys.BYTES) =>
-        decodeDictBytesReuse(new ByteReader(bytes), bufs)
-      case (Enc.PLAIN, Phys.BYTES) =>
-        decodePlainBytesReuse(new ByteReader(bytes), bufs)
-      case _ => decode(bytes, enc, ct)
+  /** A holder for a payload that a gather or expansion reads from. */
+  private def fresh: ReuseBufs = new ReuseBufs
+
+  /** THE dispatcher: decode one segment by its column's footer type.
+    * The scan passes each segment's own holder; every other caller gets
+    * a fresh one, so the result owns its arrays. */
+  def decode(bytes: Array[Byte], enc: Int, ct: Format.ColumnType,
+      bufs: ReuseBufs = new ReuseBufs): ColData = {
+    import Format.{TypeTag, elemPhysOf, physOf}
+    val in = new ByteReader(bytes)
+    ct.tag match {
+      case TypeTag.STRUCT => StructMarker(0) // parents carry no data
+      case TypeTag.MAP => decodeFrom(in, enc, Format.Phys.MAP,
+        elemPhysOf(ct.mapKey.tag), elemPhysOf(ct.mapValue.tag), bufs)
+      case TypeTag.LIST => decodeFrom(in, enc, Format.Phys.ARRAY, elemPhysOf(ct.elem.tag), -1, bufs)
+      case tag => decodeFrom(in, enc, physOf(tag), -1, -1, bufs)
     }
   }
 
-  /** Convenience: decode by the column's footer type. */
-  def decode(bytes: Array[Byte], enc: Int, ct: Format.ColumnType): ColData =
-    if (ct.tag == Format.TypeTag.STRUCT) StructMarker(0) // parents carry no data
-    else if (ct.tag == Format.TypeTag.MAP)
-      decode(bytes, enc, Format.Phys.MAP,
-        Format.elemPhysOf(ct.mapKey.tag), Format.elemPhysOf(ct.mapValue.tag))
-    else decode(bytes, enc, Format.physOf(ct.tag),
-      if (ct.tag == Format.TypeTag.LIST) Format.elemPhysOf(ct.elem.tag) else -1)
-
-  private def decodeFrom(in: ByteReader, enc: Int, phys: Int, elemPhys: Int = -1,
-      elemPhys2: Int = -1): ColData = {
+  /** `elemPhys` is a LIST's element stream kind or a MAP's key stream
+    * kind, `elemPhys2` a MAP's value stream kind. */
+  private def decodeFrom(in: ByteReader, enc: Int, phys: Int, elemPhys: Int,
+      elemPhys2: Int, bufs: ReuseBufs): ColData = {
+    import Format.Phys
+    // a LIST/MAP's per-row lengths, as n+1 offsets
+    def rowOffsets(): Array[Int] = {
+      val n = in.readInt()
+      val lengths = decodeFrom(in, in.readByte() & 0xff, Phys.LONG, -1, -1, fresh) match {
+        case LongData(vs) => vs
+        case other => throw new IllegalStateException(s"fls: lengths decoded to $other")
+      }
+      require(lengths.length == n, s"fls: lengths count ${lengths.length} != $n")
+      val offsets = new Array[Int](n + 1)
+      var i = 0
+      while (i < n) { offsets(i + 1) = offsets(i) + lengths(i).toInt; i += 1 }
+      offsets
+    }
+    def child(p: Int): ColData = decodeFrom(in, in.readByte() & 0xff, p, -1, -1, fresh)
     (enc, phys) match {
-      case (Enc.MAP, Format.Phys.MAP) =>
-        val n = in.readInt()
-        val lEnc = in.readByte() & 0xff
-        val lengths = decodeFrom(in, lEnc, Format.Phys.LONG) match {
-          case LongData(vs) => vs
-          case other =>
-            throw new IllegalStateException(s"fls: MAP lengths decoded to $other")
-        }
-        val offsets = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { offsets(i + 1) = offsets(i) + lengths(i).toInt; i += 1 }
-        val kEnc = in.readByte() & 0xff
-        val keys = decodeFrom(in, kEnc, elemPhys)
-        val vEnc = in.readByte() & 0xff
-        val values = decodeFrom(in, vEnc, elemPhys2)
-        MapColData(offsets, keys, values)
-      case (Enc.ARRAY, Format.Phys.ARRAY) =>
-        val n = in.readInt()
-        val lEnc = in.readByte() & 0xff
-        val lengths = decodeFrom(in, lEnc, Format.Phys.LONG) match {
-          case LongData(vs) => vs
-          case other =>
-            throw new IllegalStateException(s"fls: ARRAY lengths decoded to $other")
-        }
-        require(lengths.length == n, s"fls: ARRAY lengths count ${lengths.length} != $n")
-        val offsets = new Array[Int](n + 1)
-        var i = 0
-        while (i < n) { offsets(i + 1) = offsets(i) + lengths(i).toInt; i += 1 }
-        val vEnc = in.readByte() & 0xff
-        ArrayColData(offsets, decodeFrom(in, vEnc, elemPhys))
+      case (Enc.MAP, Phys.MAP) =>
+        val offsets = rowOffsets()
+        val keys = child(elemPhys)
+        MapColData(offsets, keys, child(elemPhys2))
+      case (Enc.ARRAY, Phys.ARRAY) =>
+        val offsets = rowOffsets()
+        ArrayColData(offsets, child(elemPhys))
       case (Enc.TRANSPOSED, _) =>
-        val inner = in.readByte() & 0xff
-        decodeFrom(in, inner, phys) match {
+        decodeFrom(in, in.readByte() & 0xff, phys, -1, -1, bufs) match {
           case LongData(vs) => LongData(untransposeLongs(vs))
           case DoubleData(vs) => DoubleData(untransposeDoubles(vs))
           case other =>
             throw new IllegalStateException(s"fls: TRANSPOSED over non-numeric $other")
         }
-      case (Enc.PLAIN, Format.Phys.LONG) => LongData(decodePlainLong(in))
-      case (Enc.PLAIN, Format.Phys.DOUBLE) => DoubleData(decodePlainDouble(in))
-      case (Enc.PLAIN, Format.Phys.BYTES) => decodePlainBytes(in)
-      case (Enc.CONSTANT, Format.Phys.LONG) => LongData(decodeConstLong(in))
-      case (Enc.CONSTANT, Format.Phys.DOUBLE) => DoubleData(decodeConstDouble(in))
-      case (Enc.CONSTANT, Format.Phys.BYTES) => decodeConstBytes(in)
-      case (Enc.FFOR, Format.Phys.LONG) => LongData(decodeFFOR(in))
-      case (Enc.DICT, Format.Phys.LONG) => LongData(decodeDictLong(in))
-      case (Enc.DICT, Format.Phys.DOUBLE) => DoubleData(decodeDictDouble(in))
-      case (Enc.DICT, Format.Phys.BYTES) => decodeDictBytes(in)
-      case (Enc.RLE, Format.Phys.LONG) => LongData(decodeRleLong(in))
-      case (Enc.RLE, Format.Phys.DOUBLE) => DoubleData(decodeRleDouble(in))
-      case (Enc.RLE, Format.Phys.BYTES) => decodeRleBytes(in)
-      case (Enc.ALP, Format.Phys.DOUBLE) => DoubleData(decodeAlp(in))
-      case (Enc.FSST, Format.Phys.BYTES) => decodeFsst(in)
-      case (Enc.FSST_DICT, Format.Phys.BYTES) => decodeFsstDict(in)
-      case (Enc.FSST12, Format.Phys.BYTES) => decodeFsst12(in)
-      case (Enc.FSST12_DICT, Format.Phys.BYTES) => decodeFsst12Dict(in)
-      case (Enc.FREQ, Format.Phys.LONG) => LongData(decodeFreqLong(in))
-      case (Enc.FREQ, Format.Phys.BYTES) => decodeFreqBytes(in)
-      case (Enc.ALP_RD, Format.Phys.DOUBLE) => DoubleData(decodeAlpRd(in))
+      case (Enc.DICT | Enc.FSST_DICT | Enc.FSST12_DICT, _) =>
+        val (dict, codes) = dictParts(in, enc, phys, bufs)
+        gather(dict, codes, bufs)
+      case (Enc.PLAIN, Phys.LONG) => LongData(decodePlainLong(in, bufs))
+      case (Enc.PLAIN, Phys.DOUBLE) => DoubleData(decodePlainDouble(in, bufs))
+      case (Enc.PLAIN, Phys.BYTES) => decodePlainBytes(in, bufs)
+      case (Enc.CONSTANT, Phys.LONG) => LongData(decodeConstLong(in, bufs))
+      case (Enc.CONSTANT, Phys.DOUBLE) => DoubleData(decodeConstDouble(in, bufs))
+      case (Enc.CONSTANT, Phys.BYTES) => decodeConstBytes(in, bufs)
+      case (Enc.FFOR, Phys.LONG) => LongData(decodeFFOR(in, bufs))
+      case (Enc.RLE, Phys.LONG) => LongData(decodeRleLong(in, bufs))
+      case (Enc.RLE, Phys.DOUBLE) => DoubleData(decodeRleDouble(in, bufs))
+      case (Enc.RLE, Phys.BYTES) => decodeRleBytes(in, bufs)
+      case (Enc.ALP, Phys.DOUBLE) => DoubleData(decodeAlp(in, bufs))
+      case (Enc.FSST, Phys.BYTES) => decodeFsst(in, bufs)
+      case (Enc.FSST12, Phys.BYTES) => decodeFsst12(in, bufs)
+      case (Enc.FREQ, Phys.LONG) => LongData(decodeFreqLong(in, bufs))
+      case (Enc.FREQ, Phys.BYTES) => decodeFreqBytes(in, bufs)
+      case (Enc.ALP_RD, Phys.DOUBLE) => DoubleData(decodeAlpRd(in, bufs))
       case other =>
         throw new IllegalStateException(s"fls: bad (encoding, phys) pair $other")
     }

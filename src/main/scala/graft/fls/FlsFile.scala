@@ -168,14 +168,7 @@ final class FlsFileReader(val path: Path, conf: Configuration) extends AutoClose
 
   def decodeSegment(rgIdx: Int, colIdx: Int): ColData =
     FlsErrors.wrap(s"rowGroup=$rgIdx column=$colIdx of $path") {
-      val seg = table.rowGroups(rgIdx).segments(colIdx)
-      val bytes = readSegmentBytes(seg)
-      val d =
-        if (seg.encoding == Format.Enc.EQUAL)
-          // MCC: resolve the cross-column reference (one hop by construction)
-          decodeSegment(rgIdx, Codecs.decodeEqualTarget(bytes))
-        else
-          Codecs.decode(bytes, seg.encoding, table.columns(colIdx).colType)
+      val d = decodeAt(rgIdx, colIdx)
       // a segment can be internally consistent yet disagree with the
       // footer's row count — that's corruption, not a shorter column
       if (d.n != table.rowGroups(rgIdx).nTuples)
@@ -183,6 +176,14 @@ final class FlsFileReader(val path: Path, conf: Configuration) extends AutoClose
           s"segment decoded ${d.n} rows, footer says ${table.rowGroups(rgIdx).nTuples}")
       d
     }
+
+  /** One column of one row group, its cross-column references resolved;
+    * fresh arrays, so the caller may keep the result. */
+  private def decodeAt(rgIdx: Int, colIdx: Int): ColData = {
+    val seg = table.rowGroups(rgIdx).segments(colIdx)
+    Codecs.resolveSegment(readSegmentBytes(seg), seg.encoding, table.columns(colIdx).colType,
+      new Codecs.ReuseBufs, decodeAt(rgIdx, _))
+  }
 
   override def close(): Unit = if (in != null) { in.close(); in = null }
 }

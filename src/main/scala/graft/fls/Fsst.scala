@@ -53,70 +53,68 @@ object Fsst {
     v
   }
 
+  /** The code of the longest symbol at `pos` ending by `until`, or -1. */
+  private[fls] def codeAt(t: SymbolTable, data: Array[Byte], pos: Int, until: Int): Int = {
+    val avail = math.min(MaxSymbolLen, until - pos)
+    val codes = t.byFirstByte((data(pos) & 0xff).toInt)
+    var i = 0
+    while (i < codes.length) {
+      val c = codes(i)
+      if (t.lens(c) <= avail && packAt(data, pos, t.lens(c)) == t.packed(c)) return c
+      i += 1
+    }
+    -1
+  }
+
   /** Train a table on a sample (bounded; callers pass ≤ ~64KB). */
-  def train(sample: Array[Byte], rounds: Int = 5): SymbolTable = {
+  def train(sample: Array[Byte], rounds: Int = 5): SymbolTable =
+    trainTable(sample, rounds, MaxSymbols, literalsGain = true)
+
+  /** The training loop of both code widths: keeps the `maxSymbols`
+    * candidates of best gain. A candidate is a symbol or literal the
+    * current table emits, or two adjacent ones concatenated; its gain
+    * is its length times its count, counted in one primitive table per
+    * length. With `literalsGain` false (FSST12, whose literals cost 12
+    * bits against 8 raw) lone literals earn nothing. */
+  private[fls] def trainTable(sample: Array[Byte], rounds: Int, maxSymbols: Int,
+      literalsGain: Boolean): SymbolTable = {
     var table = new SymbolTable(Array.empty, Array.empty)
     if (sample.isEmpty) return table
     var r = 0
     while (r < rounds) {
-      // encode sample with current table, counting (code-or-literal)
-      // occurrences and adjacent concatenations
-      val gain = mutable.HashMap[(Long, Int), Long]()
+      val byLen = Array.fill(MaxSymbolLen)(new Encoder.LongIdTable) // length - 1
       var pos = 0
       var prevPacked = 0L
       var prevLen = 0
       while (pos < sample.length) {
-        val (p, l) = matchAt(table, sample, pos)
-        gain.updateWith((p, l))(g => Some(g.getOrElse(0L) + l))
-        if (prevLen > 0 && prevLen + l <= MaxSymbolLen) {
-          val cat = prevPacked | (p << (8 * prevLen))
-          gain.updateWith((cat, prevLen + l))(g => Some(g.getOrElse(0L) + prevLen + l))
-        }
+        val c = codeAt(table, sample, pos, sample.length)
+        val p = if (c >= 0) table.packed(c) else sample(pos) & 0xffL
+        val l = if (c >= 0) table.lens(c) else 1
+        if (literalsGain || l > 1) byLen(l - 1).add(p)
+        if (prevLen > 0 && prevLen + l <= MaxSymbolLen)
+          byLen(prevLen + l - 1).add(prevPacked | (p << (8 * prevLen)))
         prevPacked = p; prevLen = l
         pos += l
       }
-      // keep best 255 by gain; singles with gain 1 only pay off when
-      // frequent, the gain metric handles that
-      val chosen = gain.toArray
-        .sortBy { case ((p, l), g) => (-g, l, p) }
-        .take(MaxSymbols)
-      table = new SymbolTable(chosen.map(_._1._1), chosen.map(_._1._2))
+      // best gain first; (-gain, len, packed) is a total order, so ties
+      // break deterministically
+      val chosen = (1 to MaxSymbolLen).flatMap { l =>
+        val t = byLen(l - 1)
+        (0 until t.size).map(id => (t.counts(id).toLong * l, l, t.keys(id)))
+      }.sortBy { case (g, l, p) => (-g, l, p) }.take(maxSymbols)
+      table = new SymbolTable(chosen.map(_._3).toArray, chosen.map(_._2).toArray)
       r += 1
     }
     table
   }
 
-  /** Longest symbol match at pos, else (byte, 1) literal. */
-  @inline private def matchAt(t: SymbolTable, data: Array[Byte], pos: Int): (Long, Int) = {
-    val avail = math.min(MaxSymbolLen, data.length - pos)
-    val codes = t.byFirstByte((data(pos) & 0xff).toInt)
-    var i = 0
-    while (i < codes.length) {
-      val c = codes(i)
-      val l = t.lens(c)
-      if (l <= avail && packAt(data, pos, l) == t.packed(c)) return (t.packed(c), l)
-      i += 1
-    }
-    (data(pos) & 0xffL, 1)
-  }
-
   /** Encode one string; returns bytes appended to `out`. */
   def encode(t: SymbolTable, data: Array[Byte], from: Int, until: Int,
       out: mutable.ArrayBuilder[Byte]): Int = {
-    // code index for exact (packed,len) lookups
     var written = 0
     var pos = from
     while (pos < until) {
-      val avail = math.min(MaxSymbolLen, until - pos)
-      val codes = t.byFirstByte((data(pos) & 0xff).toInt)
-      var matched = -1
-      var i = 0
-      while (matched < 0 && i < codes.length) {
-        val c = codes(i)
-        val l = t.lens(c)
-        if (l <= avail && packAt(data, pos, l) == t.packed(c)) matched = c
-        i += 1
-      }
+      val matched = codeAt(t, data, pos, until)
       if (matched >= 0) {
         out += matched.toByte
         written += 1
@@ -159,6 +157,13 @@ object Fsst {
 
   def writeTable(t: SymbolTable, out: ByteWriter): Unit = {
     out.writeByte(t.nSymbols)
+    writeSymbols(t, out)
+  }
+
+  def readTable(in: ByteReader): SymbolTable = readSymbols(in, in.readByte() & 0xff)
+
+  /** The symbols after the count, whose width differs per code width. */
+  private[fls] def writeSymbols(t: SymbolTable, out: ByteWriter): Unit = {
     var c = 0
     while (c < t.nSymbols) {
       out.writeByte(t.lens(c))
@@ -167,8 +172,7 @@ object Fsst {
     }
   }
 
-  def readTable(in: ByteReader): SymbolTable = {
-    val n = in.readByte() & 0xff
+  private[fls] def readSymbols(in: ByteReader, n: Int): SymbolTable = {
     val packed = new Array[Long](n)
     val lens = new Array[Int](n)
     var c = 0
@@ -190,56 +194,11 @@ object Fsst12 {
   val MaxSymbols = 4096 - 256
   val LiteralBase = 256
 
-  /** Reuses Fsst's gain-trainer shape with the larger code space. */
-  def train(sample: Array[Byte], rounds: Int = 5): Fsst.SymbolTable = {
-    var table = new Fsst.SymbolTable(Array.empty, Array.empty)
-    if (sample.isEmpty) return table
-    var r = 0
-    while (r < rounds) {
-      val gain = scala.collection.mutable.HashMap[(Long, Int), Long]()
-      var pos = 0
-      var prevPacked = 0L
-      var prevLen = 0
-      while (pos < sample.length) {
-        val (p, l) = matchAt(table, sample, pos)
-        // literals gain nothing (they cost 12 bits vs 8 raw) — only
-        // multi-byte symbols earn table slots
-        if (l > 1) gain.updateWith((p, l))(g => Some(g.getOrElse(0L) + l))
-        if (prevLen > 0 && prevLen + l <= Fsst.MaxSymbolLen) {
-          val cat = prevPacked | (p << (8 * prevLen))
-          gain.updateWith((cat, prevLen + l))(g => Some(g.getOrElse(0L) + prevLen + l))
-        }
-        prevPacked = p; prevLen = l
-        pos += l
-      }
-      val chosen = gain.toArray
-        .sortBy { case ((p, l), g) => (-g, l, p) }
-        .take(MaxSymbols)
-      table = new Fsst.SymbolTable(chosen.map(_._1._1), chosen.map(_._1._2))
-      r += 1
-    }
-    table
-  }
-
-  @inline private def packAt(data: Array[Byte], pos: Int, len: Int): Long = {
-    var v = 0L
-    var i = 0
-    while (i < len) { v |= (data(pos + i) & 0xffL) << (8 * i); i += 1 }
-    v
-  }
-
-  @inline private def matchAt(t: Fsst.SymbolTable, data: Array[Byte], pos: Int): (Long, Int) = {
-    val avail = math.min(Fsst.MaxSymbolLen, data.length - pos)
-    val codes = t.byFirstByte((data(pos) & 0xff).toInt)
-    var i = 0
-    while (i < codes.length) {
-      val c = codes(i)
-      val l = t.lens(c)
-      if (l <= avail && packAt(data, pos, l) == t.packed(c)) return (t.packed(c), l)
-      i += 1
-    }
-    (data(pos) & 0xffL, 1)
-  }
+  /** Fsst's trainer over the larger code space; literals gain nothing
+    * (they cost 12 bits vs 8 raw), so only multi-byte symbols earn
+    * table slots. */
+  def train(sample: Array[Byte], rounds: Int = 5): Fsst.SymbolTable =
+    Fsst.trainTable(sample, rounds, MaxSymbols, literalsGain = false)
 
   /** Encode one string into 12-bit codes appended to `codes`. */
   def encode(t: Fsst.SymbolTable, data: Array[Byte], from: Int, until: Int,
@@ -247,16 +206,7 @@ object Fsst12 {
     var n = 0
     var pos = from
     while (pos < until) {
-      val avail = math.min(Fsst.MaxSymbolLen, until - pos)
-      val cands = t.byFirstByte((data(pos) & 0xff).toInt)
-      var matched = -1
-      var i = 0
-      while (matched < 0 && i < cands.length) {
-        val c = cands(i)
-        val l = t.lens(c)
-        if (l <= avail && packAt(data, pos, l) == t.packed(c)) matched = c
-        i += 1
-      }
+      val matched = Fsst.codeAt(t, data, pos, until)
       if (matched >= 0) {
         codes += LiteralBase + matched
         pos += t.lens(matched)
@@ -318,24 +268,8 @@ object Fsst12 {
 
   def writeTable(t: Fsst.SymbolTable, out: ByteWriter): Unit = {
     out.writeInt(t.nSymbols)
-    var c = 0
-    while (c < t.nSymbols) {
-      out.writeByte(t.lens(c))
-      out.writeLong(t.packed(c))
-      c += 1
-    }
+    Fsst.writeSymbols(t, out)
   }
 
-  def readTable(in: ByteReader): Fsst.SymbolTable = {
-    val n = in.readInt()
-    val packed = new Array[Long](n)
-    val lens = new Array[Int](n)
-    var c = 0
-    while (c < n) {
-      lens(c) = in.readByte() & 0xff
-      packed(c) = in.readLong()
-      c += 1
-    }
-    new Fsst.SymbolTable(packed, lens)
-  }
+  def readTable(in: ByteReader): Fsst.SymbolTable = Fsst.readSymbols(in, in.readInt())
 }

@@ -171,9 +171,9 @@ class FlsPartitionReader(
         java.util.Arrays.copyOf(out, k)
     }
 
-  /** Per-SEGMENT recycled decode buffers (see Codecs.decodeReuse): a
-    * row group's numeric output arrays get reused by the next group of
-    * the same column instead of re-allocating+zeroing 512 KB each time.
+  /** Per-SEGMENT recycled decode buffers (see [[Codecs.ReuseBufs]]): a
+    * row group's output arrays get reused by the next group of the same
+    * column instead of re-allocating+zeroing 512 KB each time.
     * Safe because a group's decoded data is consumed (filled into
     * vectors) strictly before the next decodeGroup, and each segment
     * index owns its own slot. Reset on chunk advance (column count and
@@ -203,28 +203,23 @@ class FlsPartitionReader(
     val rowGroup = chunk.rowGroups(g)
     colDicts = new Array(readSchema.fields.length)
     colDictIds = new Array(readSchema.fields.length)
-    // MCC resolution: an EQUAL segment widens this reader's reads to its
-    // source column (≙ reference fls_reader.cpp:583-590, which widens to
-    // the full row group; the dependency is explicit here, so only the
-    // referenced segment is read). Memoized — N duplicates of one source
-    // decode it once.
+    // MCC resolution: an EQUAL or EXP_DICT segment widens this reader's
+    // reads to its source column (≙ reference fls_reader.cpp:583-590,
+    // which widens to the full row group; the dependency is explicit
+    // here, so only the referenced segment is read). Memoized — N
+    // duplicates of one source decode it once.
     val memo = scala.collection.mutable.HashMap[Int, ColData]()
+    def readSeg(idx: Int): Array[Byte] = {
+      val seg = rowGroup.segments(idx)
+      val segBytes = new Array[Byte](seg.length.toInt)
+      in.readFully(seg.offset, segBytes)
+      segBytes
+    }
     def decodeAt(idx: Int): ColData = memo.get(idx) match {
       case Some(d) => d
       case None =>
-        val seg = rowGroup.segments(idx)
-        val segBytes = new Array[Byte](seg.length.toInt)
-        in.readFully(seg.offset, segBytes)
-        val d =
-          if (seg.encoding == Enc.EQUAL) decodeAt(Codecs.decodeEqualTarget(segBytes))
-          else if (seg.encoding == Enc.EXP_DICT) {
-            // MCC external dictionary: widen the read to the dependency
-            // column (full-row-group projection of it, like EQUAL) and
-            // gather its values through this column's codes
-            val (src, codes) = Codecs.decodeExpDictParts(segBytes)
-            Codecs.gatherExpDict(decodeAt(src), codes)
-          } else Codecs.decodeReuse(segBytes, seg.encoding,
-            chunk.fileColumns(idx).colType, segBufs(idx))
+        val d = Codecs.resolveSegment(readSeg(idx), rowGroup.segments(idx).encoding,
+          chunk.fileColumns(idx).colType, segBufs(idx), decodeAt)
         memo(idx) = d
         d
     }
@@ -294,47 +289,19 @@ class FlsPartitionReader(
           // sf0.1 — cache-resident data re-fetched through the dict
           // indirection costs more than one bulk copy); past it the
           // dictionary path wins (~23% at 64×, memory-bandwidth-bound).
-          val dictableBytes = useDictVectors && phys == Phys.BYTES &&
-            seg.encoding != Enc.EQUAL && seg.encoding != Enc.EXP_DICT &&
-            (f.dataType == StringType || f.dataType == BinaryType)
-          val dictableNum = useDictVectors && seg.encoding == Enc.DICT &&
-            ((phys == Phys.LONG && longDictServable(f, fi)) ||
-              (phys == Phys.DOUBLE &&
-                (f.dataType == DoubleType || f.dataType == FloatType)))
-          if (dictableNum) {
-            val segBytes = new Array[Byte](seg.length.toInt)
-            in.readFully(seg.offset, segBytes)
-            if (phys == Phys.LONG) {
-              val (dict, codes) = Codecs.decodeDictLongRaw(new ByteReader(segBytes))
-              colDicts(fi) = new FlsLongDictionary(dict)
-              DictLongs(dict, codes)
-            } else {
-              val (dict, codes) = Codecs.decodeDictDoubleRaw(new ByteReader(segBytes))
-              colDicts(fi) = new FlsDoubleDictionary(dict)
-              DictDoubles(dict, codes)
-            }
-          } else if (dictableBytes) {
-            val segBytes = new Array[Byte](seg.length.toInt)
-            in.readFully(seg.offset, segBytes)
-            Codecs.decodeDictParts(segBytes, seg.encoding) match {
-              case Some((dict, codes)) =>
-                val values = new Array[Array[Byte]](dict.n)
-                var i = 0
-                while (i < dict.n) {
-                  values(i) = java.util.Arrays.copyOfRange(
-                    dict.bytes, dict.offsets(i), dict.offsets(i + 1))
-                  i += 1
-                }
-                colDicts(fi) = new FlsBytesDictionary(values)
-                DictBytes(values, codes)
-              case None =>
-                // non-dictionary encoding: decode the bytes ALREADY read
-                // (a decodeAt here would re-read the same segment) and
-                // share via the memo for any EQUAL reference to it
-                val d = Codecs.decode(segBytes, seg.encoding, phys)
-                memo(idx) = d
-                d
-            }
+          val dictable = useDictVectors && (seg.encoding match {
+            case Enc.DICT | Enc.FSST_DICT | Enc.FSST12_DICT => true
+            case _ => false
+          }) && (phys match {
+            case Phys.BYTES => f.dataType == StringType || f.dataType == BinaryType
+            case Phys.LONG => longDictServable(f, fi)
+            case Phys.DOUBLE => f.dataType == DoubleType || f.dataType == FloatType
+            case _ => false
+          })
+          if (dictable) {
+            val (dict, codes) = Codecs.dictParts(new ByteReader(readSeg(idx)),
+              seg.encoding, phys, segBufs(idx))
+            dictColumn(fi, dict, codes)
           } else decodeAt(idx)
         }
     }
@@ -616,6 +583,20 @@ class FlsPartitionReader(
     var i = 0
     while (i < codes.length) { ids(i) = codes(i).toInt; i += 1 }
     ids
+  }
+
+  /** THE dictionary-vector constructor: installs the column's Spark
+    * dictionary and keeps the codes un-gathered. */
+  private def dictColumn(fi: Int, dict: ColData, codes: Array[Long]): ColData = dict match {
+    case LongData(d) => colDicts(fi) = new FlsLongDictionary(d); DictLongs(d, codes)
+    case DoubleData(d) => colDicts(fi) = new FlsDoubleDictionary(d); DictDoubles(d, codes)
+    case b: BytesData =>
+      val values = Array.tabulate(b.n)(i =>
+        java.util.Arrays.copyOfRange(b.bytes, b.offsets(i), b.offsets(i + 1)))
+      colDicts(fi) = new FlsBytesDictionary(values)
+      DictBytes(values, codes)
+    case other => throw new IllegalStateException(
+      s"fls: dictionary decoded to ${other.getClass.getSimpleName}")
   }
 
   /** Can a LONG-domain dict group be served through a dictionary vector

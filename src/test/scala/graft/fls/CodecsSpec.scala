@@ -24,10 +24,26 @@ class CodecsSpec extends AnyFunSuite {
     }
   }
 
+  private def decodeAs(w: ByteWriter, enc: Int, ct: Format.ColumnType): ColData =
+    Codecs.decode(w.toArray, enc, ct)
+  private def longsOf(w: ByteWriter, enc: Int): Array[Long] =
+    decodeAs(w, enc, Format.ColumnType(Format.TypeTag.INT64)).asInstanceOf[LongData].v
+  private def doublesOf(w: ByteWriter, enc: Int): Array[Double] =
+    decodeAs(w, enc, Format.ColumnType(Format.TypeTag.DOUBLE)).asInstanceOf[DoubleData].v
+  private def bytesOf(w: ByteWriter, enc: Int): BytesData =
+    decodeAs(w, enc, Format.ColumnType(Format.TypeTag.STRING)).asInstanceOf[BytesData]
+
+  private def scalarType(col: ColData): Format.ColumnType = Format.ColumnType(col match {
+    case _: LongData => Format.TypeTag.INT64
+    case _: DoubleData => Format.TypeTag.DOUBLE
+    case _: BytesData => Format.TypeTag.STRING
+    case other => fail(s"no scalar type for ${other.getClass.getSimpleName}")
+  })
+
   private def viaFFOR(vs: Array[Long]): Array[Long] = {
     val w = new ByteWriter()
     Codecs.encodeFFOR(vs, w)
-    Codecs.decodeFFOR(new ByteReader(w.toArray))
+    longsOf(w, Format.Enc.FFOR)
   }
 
   test("FFOR round-trips arbitrary longs incl. extremes") {
@@ -55,7 +71,7 @@ class CodecsSpec extends AnyFunSuite {
     val (e, _) = Codecs.alpChooseExponent(vs)
     val w = new ByteWriter()
     Codecs.encodeAlp(vs, e, w)
-    val out = Codecs.decodeAlp(new ByteReader(w.toArray))
+    val out = doublesOf(w, Format.Enc.ALP)
     vs.indices.foreach { i =>
       assert(java.lang.Double.doubleToRawLongBits(out(i)) ==
         java.lang.Double.doubleToRawLongBits(vs(i)), s"index $i")
@@ -76,7 +92,7 @@ class CodecsSpec extends AnyFunSuite {
       val (e, _) = Codecs.alpChooseExponent(vs)
       val w = new ByteWriter()
       Codecs.encodeAlp(vs, e, w)
-      val out = Codecs.decodeAlp(new ByteReader(w.toArray))
+      val out = doublesOf(w, Format.Enc.ALP)
       vs.indices.foreach { i =>
         assert(java.lang.Double.doubleToRawLongBits(out(i)) ==
           java.lang.Double.doubleToRawLongBits(vs(i)))
@@ -90,7 +106,7 @@ class CodecsSpec extends AnyFunSuite {
     val runLens = Array(100L, 50L, 1L)
     val w = new ByteWriter()
     Codecs.encodeRleLong(vs.length, runVals, runLens, w)
-    assert(Codecs.decodeRleLong(new ByteReader(w.toArray)).sameElements(vs))
+    assert(longsOf(w, Format.Enc.RLE).sameElements(vs))
   }
 
   private def mkBytes(strs: Seq[String]): BytesData = {
@@ -108,35 +124,29 @@ class CodecsSpec extends AnyFunSuite {
 
     val w1 = new ByteWriter()
     Codecs.encodePlainBytes(d, w1)
-    assert(strsOf(Codecs.decodePlainBytes(new ByteReader(w1.toArray))) == strs)
+    assert(strsOf(bytesOf(w1, Format.Enc.PLAIN)) == strs)
 
     val w2 = new ByteWriter()
     Codecs.encodeConstBytes(4, "xy".getBytes, w2)
-    assert(strsOf(Codecs.decodeConstBytes(new ByteReader(w2.toArray))) == Seq("xy", "xy", "xy", "xy"))
+    assert(strsOf(bytesOf(w2, Format.Enc.CONSTANT)) == Seq("xy", "xy", "xy", "xy"))
 
     val dict = mkBytes(Seq("alpha", "beta", "", "日本語"))
     val codes = Array(0L, 1L, 0L, 2L, 3L, 0L, 1L)
     val w3 = new ByteWriter()
     Codecs.encodeDictBytes(strs.length, dict, codes, w3)
-    assert(strsOf(Codecs.decodeDictBytes(new ByteReader(w3.toArray))) == strs)
+    assert(strsOf(bytesOf(w3, Format.Enc.DICT)) == strs)
 
     val runs = Seq("aa", "aa", "bb", "bb", "bb", "c")
     val w4 = new ByteWriter()
     Codecs.encodeRleBytes(6, mkBytes(Seq("aa", "bb", "c")), Array(2L, 3L, 1L), w4)
-    assert(strsOf(Codecs.decodeRleBytes(new ByteReader(w4.toArray))) == runs)
+    assert(strsOf(bytesOf(w4, Format.Enc.RLE)) == runs)
   }
 
   test("Encoder picks sane encodings and round-trips through decode") {
     def roundTrip(col: ColData): ColData = {
       val w = new ByteWriter()
       val (enc, _) = Encoder.encodeColumn(col, w)
-      val phys = col match {
-        case _: LongData => Format.Phys.LONG
-        case _: DoubleData => Format.Phys.DOUBLE
-        case _: BytesData => Format.Phys.BYTES
-        case other => fail(s"no scalar physical type for ${other.getClass.getSimpleName}")
-      }
-      Codecs.decode(w.toArray, enc, phys)
+      decodeAs(w, enc, scalarType(col))
     }
 
     // constant
@@ -161,7 +171,7 @@ class CodecsSpec extends AnyFunSuite {
     fuzzLongs(3) { vs =>
       val w = new ByteWriter()
       val (enc, _) = Encoder.encodeColumn(LongData(vs), w)
-      val out = Codecs.decode(w.toArray, enc, Format.Phys.LONG).asInstanceOf[LongData].v
+      val out = longsOf(w, enc)
       assert(out.sameElements(vs))
     }
   }
@@ -177,7 +187,7 @@ class CodecsSpec extends AnyFunSuite {
     val table = Fsst.train(sample)
     val w = new ByteWriter()
     Codecs.encodeFsst(d, table, w)
-    assert(strsOf(Codecs.decodeFsst(new ByteReader(w.toArray))) == strs)
+    assert(strsOf(bytesOf(w, Format.Enc.FSST)) == strs)
     assert(w.size < d.bytes.length / 2, s"fsst ${w.size} vs raw ${d.bytes.length}")
   }
 
@@ -191,7 +201,7 @@ class CodecsSpec extends AnyFunSuite {
     val table = Fsst.train(java.util.Arrays.copyOf(bytes, bytes.length))
     val w = new ByteWriter()
     Codecs.encodeFsst(d, table, w)
-    val back = Codecs.decodeFsst(new ByteReader(w.toArray))
+    val back = bytesOf(w, Format.Enc.FSST)
     assert(back.offsets.sameElements(d.offsets))
     assert(back.bytes.sameElements(d.bytes))
   }
@@ -201,7 +211,7 @@ class CodecsSpec extends AnyFunSuite {
     vs(17) = -1L; vs(900) = 7L; vs(4999) = Long.MaxValue
     val w = new ByteWriter()
     Codecs.encodeFreqLong(vs, 42L, w)
-    assert(Codecs.decodeFreqLong(new ByteReader(w.toArray)).sameElements(vs))
+    assert(longsOf(w, Format.Enc.FREQ).sameElements(vs))
   }
 
   test("FREQ bytes round-trips dominated string columns (incl. edge shapes)") {
@@ -213,18 +223,18 @@ class CodecsSpec extends AnyFunSuite {
     val w = new ByteWriter()
     val dom = strs.indexOf("the-dominant-value")
     Codecs.encodeFreqBytes(d, d.offsets(dom), d.offsets(dom + 1), w)
-    assert(strsOf(Codecs.decodeFreqBytes(new ByteReader(w.toArray))) == strs)
+    assert(strsOf(bytesOf(w, Format.Enc.FREQ)) == strs)
     // no exceptions at all
     val pure = mkBytes(Seq.fill(100)("same"))
     val w2 = new ByteWriter()
     Codecs.encodeFreqBytes(pure, 0, 4, w2)
-    assert(strsOf(Codecs.decodeFreqBytes(new ByteReader(w2.toArray))) == Seq.fill(100)("same"))
+    assert(strsOf(bytesOf(w2, Format.Enc.FREQ)) == Seq.fill(100)("same"))
     // exceptions at both ends, empty strings among exceptions
     val edge = Seq("", "x", "x", "x", "") ++ Seq.fill(50)("x") :+ ""
     val de = mkBytes(edge)
     val w3 = new ByteWriter()
     Codecs.encodeFreqBytes(de, de.offsets(1), de.offsets(2), w3)
-    assert(strsOf(Codecs.decodeFreqBytes(new ByteReader(w3.toArray))) == edge)
+    assert(strsOf(bytesOf(w3, Format.Enc.FREQ)) == edge)
   }
 
   test("Encoder picks FREQ for a scattered-dominant string column and compresses") {
@@ -239,7 +249,7 @@ class CodecsSpec extends AnyFunSuite {
     val w = new ByteWriter()
     val (enc, _) = Encoder.encodeColumn(d, w)
     assert(enc == Format.Enc.FREQ, s"expected FREQ, got $enc")
-    assert(strsOf(Codecs.decode(w.toArray, enc, Format.Phys.BYTES).asInstanceOf[BytesData]) == strs)
+    assert(strsOf(bytesOf(w, enc)) == strs)
     val dictSize = {
       val w2 = new ByteWriter()
       val distinct = strs.distinct
@@ -266,7 +276,7 @@ class CodecsSpec extends AnyFunSuite {
       val di = strs.indexOf(domStr)
       val w = new ByteWriter()
       Codecs.encodeFreqBytes(d, d.offsets(di), d.offsets(di + 1), w)
-      assert(strsOf(Codecs.decodeFreqBytes(new ByteReader(w.toArray))) == strs, s"trial $trial")
+      assert(strsOf(bytesOf(w, Format.Enc.FREQ)) == strs, s"trial $trial")
     }
   }
 
@@ -290,13 +300,13 @@ class CodecsSpec extends AnyFunSuite {
     val (enc, desc) = Encoder.encodeColumn(LongData(vs), w, transpose = true)
     assert(enc == Format.Enc.TRANSPOSED)
     assert(desc.hasStats && desc.minLong == vs.min && desc.maxLong == vs.max)
-    val back = Codecs.decode(w.toArray, enc, Format.Phys.LONG).asInstanceOf[LongData].v
+    val back = longsOf(w, enc)
     assert(back.sameElements(vs))
     val dvs = Array.fill(2048)(rng.nextDouble() * 1000)
     val w2 = new ByteWriter()
     val (enc2, _) = Encoder.encodeColumn(DoubleData(dvs), w2, transpose = true)
     assert(enc2 == Format.Enc.TRANSPOSED)
-    val back2 = Codecs.decode(w2.toArray, enc2, Format.Phys.DOUBLE).asInstanceOf[DoubleData].v
+    val back2 = doublesOf(w2, enc2)
     dvs.indices.foreach(i => assert(
       java.lang.Double.doubleToRawLongBits(back2(i)) ==
         java.lang.Double.doubleToRawLongBits(dvs(i))))
@@ -308,7 +318,7 @@ class CodecsSpec extends AnyFunSuite {
     val w = new ByteWriter()
     val (enc, _) = Encoder.encodeColumn(DoubleData(vs), w)
     assert(enc == Format.Enc.ALP_RD, s"expected ALP_RD, got $enc")
-    val out = Codecs.decode(w.toArray, enc, Format.Phys.DOUBLE).asInstanceOf[DoubleData].v
+    val out = doublesOf(w, enc)
     vs.indices.foreach { i =>
       assert(java.lang.Double.doubleToRawLongBits(out(i)) ==
         java.lang.Double.doubleToRawLongBits(vs(i)))
@@ -325,7 +335,7 @@ class CodecsSpec extends AnyFunSuite {
     val w = new ByteWriter()
     val (enc, _) = Encoder.encodeColumn(d, w)
     assert(enc == Format.Enc.FSST, s"expected FSST, got $enc")
-    assert(strsOf(Codecs.decode(w.toArray, enc, Format.Phys.BYTES).asInstanceOf[BytesData]) == strs)
+    assert(strsOf(bytesOf(w, enc)) == strs)
   }
 
   test("FSST12 round-trips and wins on high-symbol-count corpora") {
@@ -338,7 +348,7 @@ class CodecsSpec extends AnyFunSuite {
     val table = Fsst12.train(java.util.Arrays.copyOfRange(d.bytes, 0, math.min(d.bytes.length, 1 << 16)))
     val w = new ByteWriter()
     Codecs.encodeFsst12(d, table, w)
-    assert(strsOf(Codecs.decodeFsst12(new ByteReader(w.toArray))) == strs)
+    assert(strsOf(bytesOf(w, Format.Enc.FSST12)) == strs)
     assert(w.size < d.bytes.length, s"fsst12 ${w.size} vs raw ${d.bytes.length}")
   }
 
@@ -361,7 +371,7 @@ class CodecsSpec extends AnyFunSuite {
     val table = Fsst12.train(java.util.Arrays.copyOf(bytes, bytes.length))
     val w = new ByteWriter()
     Codecs.encodeFsst12(d, table, w)
-    val back = Codecs.decodeFsst12(new ByteReader(w.toArray))
+    val back = bytesOf(w, Format.Enc.FSST12)
     assert(back.offsets.sameElements(d.offsets))
     assert(back.bytes.sameElements(d.bytes))
   }
@@ -623,13 +633,8 @@ class CodecsSpec extends AnyFunSuite {
     // three row groups per shape: two of one length, one of another
     val shapes: Seq[(String, ColumnType, Boolean, Seq[ColData])] =
       pinnedColumns.map { case (name, col, transpose, _) =>
-        val ct = col match {
-          case _: LongData => ColumnType(TypeTag.INT64)
-          case _: DoubleData => ColumnType(TypeTag.DOUBLE)
-          case _ => ColumnType(TypeTag.STRING)
-        }
         val n = col.n
-        (name, ct, transpose, Seq(col, rows(col, 0, n, reverse = true),
+        (name, scalarType(col), transpose, Seq(col, rows(col, 0, n, reverse = true),
           rows(col, n / 3, n - n / 3, reverse = false)))
       } ++ Seq(
         ("list of long", ColumnType(TypeTag.LIST, TypeTag.INT64), false,
@@ -641,7 +646,7 @@ class CodecsSpec extends AnyFunSuite {
       groups.zipWithIndex.flatMap { case (col, g) =>
         val w = new ByteWriter()
         val (enc, _) = Encoder.encodeColumn(col, w, transpose)
-        val got = Codecs.decodeReuse(w.toArray, enc, ct, bufs)
+        val got = Codecs.decode(w.toArray, enc, ct, bufs)
         val want = Codecs.decode(w.toArray, enc, ct)
         if (Codecs.contentEquals(got, want) && Codecs.contentEquals(want, col)) None
         else Some(s"$name: row group $g (encoding $enc) decodes differently through the holder")
@@ -688,18 +693,39 @@ class CodecsSpec extends AnyFunSuite {
     strs.indices.foreach(i => assert(strs(t.rows(ids(i))) == strs(i)))
   }
 
+  private def src(p: String): String = {
+    val path = java.nio.file.Paths.get(p)
+    assert(java.nio.file.Files.isRegularFile(path), s"run from the repository root: $p")
+    java.nio.file.Files.readString(path)
+  }
+
   test("source guard: the encoder and the writer's staging stay box-free") {
-    def src(p: String): String = {
-      val path = java.nio.file.Paths.get(p)
-      assert(java.nio.file.Files.isRegularFile(path), s"run from the repository root: $p")
-      java.nio.file.Files.readString(path)
-    }
     val encoder = src("src/main/scala/graft/fls/Encoder.scala")
     assert(!encoder.contains("mutable.HashMap"), "Encoder.scala uses a boxed HashMap")
     assert(!encoder.contains("updateWith"), "Encoder.scala counts through updateWith")
+    val fsst = src("src/main/scala/graft/fls/Fsst.scala")
+    assert(!fsst.contains("HashMap") && !fsst.contains("updateWith"),
+      "Fsst.scala counts symbol gains in a boxed map")
     val writer = src("src/main/scala/graft/fls/connector/FlsDataWriter.scala")
     val boxing = """\(\s*\w+\s*,\s*Int\s*\)\s*=>\s*(Long|Double)\b""".r
     assert(boxing.findFirstIn(writer).isEmpty,
       s"FlsDataWriter.scala builds a boxing closure: ${boxing.findFirstIn(writer)}")
+  }
+
+  test("source guard: Codecs keeps one dispatcher and one dictionary parser") {
+    val codecs = src("src/main/scala/graft/fls/Codecs.scala")
+    Seq("""def decode\w*Reuse""", """decodeDict\w*Raw""").foreach { p =>
+      assert(p.r.findFirstIn(codecs).isEmpty, s"Codecs.scala has a twin entry point: ${p.r.findFirstIn(codecs)}")
+    }
+    // each top-level member runs from its `def` to the next one
+    val defs = """(?m)^  (?:private |@inline )*def (\w+)""".r.findAllMatchIn(codecs).toSeq
+    val bodies = defs.zip(defs.drop(1).map(_.start) :+ codecs.length)
+      .map { case (m, end) => (m.group(1), codecs.substring(m.start, end)) }
+    val fsstCallers = bodies.collect {
+      case (name, body) if name != "decodeFsst" && name != "decodeFsst12" &&
+        (body.contains("decodeFsst(") || body.contains("decodeFsst12(")) => name
+    }
+    assert(fsstCallers.toSet == Set("dictParts", "decodeFrom"),
+      s"FSST kernels reached from: ${fsstCallers.mkString(", ")}")
   }
 }

@@ -146,41 +146,59 @@ class FlsCorruptionSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("dictionary codes out of range are corruption, not an index crash") {
-    // unit-level: every dict/exception-position decode path refuses a
-    // code past its target BEFORE the .toInt gather could truncate a
-    // huge corrupt value onto a VALID slot (silent wrong data). The
-    // throw is unlabeled here — file context attaches at the reader
-    // boundary (covered below).
+    // unit-level: both readings of a dictionary layout — the
+    // dictionary-vector parts and the gathered decode — refuse a code
+    // past the dictionary BEFORE the .toInt gather could truncate a huge
+    // corrupt value onto a VALID slot (silent wrong data). The throw is
+    // unlabeled here — file context attaches at the reader boundary
+    // (covered below).
+    def refused(bytes: Array[Byte], enc: Int, tag: Int): Unit = {
+      val ct = ColumnType(tag)
+      assert(intercept[IllegalStateException] {
+        Codecs.dictParts(new ByteReader(bytes), enc, physOf(tag), new Codecs.ReuseBufs)
+      }.getMessage.contains("out of range"), s"dictionary parts of enc $enc, tag $tag")
+      assert(intercept[IllegalStateException] {
+        Codecs.decode(bytes, enc, ct)
+      }.getMessage.contains("out of range"), s"gathered decode of enc $enc, tag $tag")
+    }
     val dict = Array(10L, 20L, 30L)
-    val codes = Array(0L, 1L, 2L, 7L) // 7 >= dict size
     val w = new ByteWriter()
-    Codecs.encodeDictLong(new Array[Long](4), dict, codes, w)
-    assert(intercept[IllegalStateException] {
-      Codecs.decodeDictLongRaw(new ByteReader(w.toArray))
-    }.getMessage.contains("out of range"))
-    // the GATHERED path must refuse too — before this check its .toInt
-    // could map (2^32 + 1) onto dict(1) silently
+    Codecs.encodeDictLong(new Array[Long](4), dict, Array(0L, 1L, 2L, 7L), w) // 7 >= dict size
+    refused(w.toArray, Enc.DICT, TypeTag.INT64)
+    // before the range check, .toInt mapped (2^32 + 1) onto dict(1) silently
     val wTrunc = new ByteWriter()
     Codecs.encodeDictLong(new Array[Long](3), dict, Array(0L, (1L << 32) + 1L, 2L), wTrunc)
-    assert(intercept[IllegalStateException] {
-      Codecs.decodeDictLong(new ByteReader(wTrunc.toArray))
-    }.getMessage.contains("out of range"))
+    refused(wTrunc.toArray, Enc.DICT, TypeTag.INT64)
 
     val wd = new ByteWriter()
     Codecs.encodeDictDouble(3, Array(1.5, 2.5), Array(0L, 5L, 1L), wd)
-    assert(intercept[IllegalStateException] {
-      Codecs.decodeDictDoubleRaw(new ByteReader(wd.toArray))
-    }.getMessage.contains("out of range"))
+    refused(wd.toArray, Enc.DICT, TypeTag.DOUBLE)
 
-    val bd = {
-      val bw = new ByteWriter()
-      val dictBytes = BytesData(Array(0, 1, 2), "ab".getBytes)
-      Codecs.encodeDictBytes(3, dictBytes, Array(1L, 9L, 0L), bw)
-      bw.toArray
-    }
+    val dictBytes = BytesData(Array(0, 1, 2), "ab".getBytes)
+    val bd = new ByteWriter()
+    Codecs.encodeDictBytes(3, dictBytes, Array(1L, 9L, 0L), bd)
+    refused(bd.toArray, Enc.DICT, TypeTag.STRING)
+
+    val wordy = BytesData(Array(0, 11, 22), "alpha-alpha".getBytes ++ "beta-beta-b".getBytes)
+    val fd = new ByteWriter()
+    Codecs.encodeFsstDict(3, wordy, Array(0L, 1L, 2L), Fsst.train(wordy.bytes), fd)
+    refused(fd.toArray, Enc.FSST_DICT, TypeTag.STRING)
+  }
+
+  test("RLE runs that stop short of the row count are corruption") {
+    // a recycled output array still holds the previous row group past
+    // the last run, so a short run list must be refused, not served
+    val bufs = new Codecs.ReuseBufs
+    val ct = ColumnType(TypeTag.INT64)
+    val ok = new ByteWriter()
+    Codecs.encodeRleLong(5, Array(1L, 2L), Array(3L, 2L), ok)
+    assert(Codecs.contentEquals(Codecs.decode(ok.toArray, Enc.RLE, ct, bufs),
+      LongData(Array(1L, 1L, 1L, 2L, 2L))))
+    val short = new ByteWriter()
+    Codecs.encodeRleLong(5, Array(7L, 8L), Array(2L, 2L), short)
     assert(intercept[IllegalStateException] {
-      Codecs.decodeDictBytesRaw(new ByteReader(bd))
-    }.getMessage.contains("out of range"))
+      Codecs.decode(short.toArray, Enc.RLE, ct, bufs)
+    }.getMessage.contains("runs cover 4 of 5 rows"))
   }
 
   /** Drive a hand-built single-segment file through the SCAN so the

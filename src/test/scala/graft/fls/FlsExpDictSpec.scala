@@ -13,13 +13,44 @@ import graft.fls.connector.{FlsInputPartition, FlsPartitionReader}
   * emits it, but a file carrying it (reference EXP_DICT_* with a
   * dependency column) must materialize correctly — the reader widens to
   * the dependency column's segment and gathers through the codes. The
-  * file here is synthetic: segments laid out by hand, descriptors built
-  * directly, the reader driven through its public InputPartition
-  * surface. */
+  * file here is synthetic: segments and footer laid out by hand, the
+  * scan driven through its public InputPartition surface and the
+  * file-level reader through `decodeSegment`. */
 class FlsExpDictSpec extends AnyFunSuite {
 
-  private def seg(enc: Int, off: Long, len: Long) =
-    SegmentDesc(enc, off, len, hasStats = false, 0L, 0L, 0.0, 0.0)
+  /** Lay `segs` (encoding, payload) out as one row group of `n` rows in
+    * a complete file: header, segments, footer, tail. */
+  private def writeFile(dir: String, cols: Array[ColumnDesc], n: Int,
+      segs: Seq[(Int, Array[Byte])]): (java.io.File, RowGroupDesc) = {
+    val w = new ByteWriter()
+    w.writeBytes(Magic); w.writeByte(Version.toInt)
+    val descs = segs.map { case (enc, bytes) =>
+      val off = w.size.toLong
+      w.writeBytes(bytes)
+      SegmentDesc(enc, off, bytes.length.toLong, hasStats = false, 0L, 0L, 0.0, 0.0)
+    }
+    val rg = RowGroupDesc(n, descs.toArray)
+    val fw = new ByteWriter()
+    Format.writeFooter(fw, TableDesc(cols, Array(rg)))
+    w.writeBytes(fw.toArray)
+    w.writeLong(fw.size.toLong)
+    w.writeBytes(Magic)
+    val file = new java.io.File(dir, "synthetic.fls")
+    Files.write(file.toPath, w.toArray)
+    (file, rg)
+  }
+
+  /** The file-level reader resolves the EXP_DICT segment like the scan. */
+  private def decodeSegment(file: java.io.File, col: Int): ColData = {
+    val r = new FlsFileReader(new org.apache.hadoop.fs.Path(file.getAbsolutePath), new Configuration())
+    try r.decodeSegment(0, col) finally r.close()
+  }
+
+  private def strsOf(d: ColData): Seq[String] = d match {
+    case b: BytesData =>
+      (0 until b.n).map(i => new String(b.bytes, b.offsets(i), b.offsets(i + 1) - b.offsets(i), "UTF-8"))
+    case other => fail(s"expected bytes, got ${other.getClass.getSimpleName}")
+  }
 
   private def readAll(reader: FlsPartitionReader,
       get: org.apache.spark.sql.vectorized.ColumnarBatch => Seq[Seq[Any]]): Seq[Seq[Any]] = {
@@ -50,18 +81,12 @@ class FlsExpDictSpec extends AnyFunSuite {
     Codecs.encodeFFOR(ids, w2)
     val seg2 = w2.toArray
 
-    val file = new java.io.File(tmp, "synthetic.fls")
-    val fos = new java.io.FileOutputStream(file)
-    try { fos.write(seg0); fos.write(seg1); fos.write(seg2) } finally fos.close()
-
     val cols = Array(
       ColumnDesc("country_src", ColumnType(TypeTag.STRING)),
       ColumnDesc("country", ColumnType(TypeTag.STRING)),
       ColumnDesc("id", ColumnType(TypeTag.INT64)))
-    val rg = RowGroupDesc(n, Array(
-      seg(Enc.PLAIN, 0, seg0.length),
-      seg(Enc.EXP_DICT, seg0.length, seg1.length),
-      seg(Enc.FFOR, seg0.length + seg1.length, seg2.length)))
+    val (file, rg) = writeFile(tmp, cols, n,
+      Seq((Enc.PLAIN, seg0), (Enc.EXP_DICT, seg1), (Enc.FFOR, seg2)))
     val part = FlsInputPartition.single(file.getAbsolutePath, rg, cols, 0L, 0)
     val schema = StructType(Seq(
       StructField("country", StringType, nullable = false),
@@ -71,6 +96,7 @@ class FlsExpDictSpec extends AnyFunSuite {
       Seq(b.column(0).getUTF8String(i).toString, b.column(1).getLong(i))))
     val exp = (0 until n).map(i => Seq(dictVals(i % 3), i.toLong))
     assert(rows == exp, s"EXP_DICT gather wrong: $rows")
+    assert(strsOf(decodeSegment(file, 1)) == (0 until n).map(i => dictVals(i % 3)))
   }
 
   test("EXP_DICT works when the dependency column is ALSO projected") {
@@ -86,15 +112,10 @@ class FlsExpDictSpec extends AnyFunSuite {
     val w1 = new ByteWriter()
     Codecs.encodeExpDict(0, codes, w1)
     val seg1 = w1.toArray
-    val file = new java.io.File(tmp, "s.fls")
-    val fos = new java.io.FileOutputStream(file)
-    try { fos.write(seg0); fos.write(seg1) } finally fos.close()
     val cols = Array(
       ColumnDesc("src", ColumnType(TypeTag.STRING)),
       ColumnDesc("derived", ColumnType(TypeTag.STRING)))
-    val rg = RowGroupDesc(n, Array(
-      seg(Enc.PLAIN, 0, seg0.length),
-      seg(Enc.EXP_DICT, seg0.length, seg1.length)))
+    val (file, rg) = writeFile(tmp, cols, n, Seq((Enc.PLAIN, seg0), (Enc.EXP_DICT, seg1)))
     val part = FlsInputPartition.single(file.getAbsolutePath, rg, cols, 0L, 0)
     // NOTE: src has 3 rows, derived has 6 — projecting both from one
     // row group is not meaningful data-wise, but the reader must still
@@ -104,6 +125,7 @@ class FlsExpDictSpec extends AnyFunSuite {
     val rows = readAll(reader, b => (0 until b.numRows()).map(i =>
       Seq(b.column(0).getUTF8String(i).toString)))
     assert(rows == (0 until n).map(i => Seq(vals((i * 2) % 3))))
+    assert(strsOf(decodeSegment(file, 1)) == (0 until n).map(i => vals((i * 2) % 3)))
   }
 
   test("EXP_DICT over a numeric dependency column") {
@@ -117,20 +139,19 @@ class FlsExpDictSpec extends AnyFunSuite {
     val w1 = new ByteWriter()
     Codecs.encodeExpDict(0, codes, w1)
     val seg1 = w1.toArray
-    val file = new java.io.File(tmp, "s.fls")
-    val fos = new java.io.FileOutputStream(file)
-    try { fos.write(seg0); fos.write(seg1) } finally fos.close()
     val cols = Array(
       ColumnDesc("src", ColumnType(TypeTag.INT64)),
       ColumnDesc("derived", ColumnType(TypeTag.INT64)))
-    val rg = RowGroupDesc(n, Array(
-      seg(Enc.FFOR, 0, seg0.length),
-      seg(Enc.EXP_DICT, seg0.length, seg1.length)))
+    val (file, rg) = writeFile(tmp, cols, n, Seq((Enc.FFOR, seg0), (Enc.EXP_DICT, seg1)))
     val part = FlsInputPartition.single(file.getAbsolutePath, rg, cols, 0L, 0)
     val schema = StructType(Seq(StructField("derived", LongType, nullable = false)))
     val reader = new FlsPartitionReader(part, schema, new Configuration())
     val rows = readAll(reader, b => (0 until b.numRows()).map(i =>
       Seq(b.column(0).getLong(i))))
     assert(rows == (0 until n).map(i => Seq(srcVals(i % 4))))
+    decodeSegment(file, 1) match {
+      case LongData(v) => assert(v.toSeq == (0 until n).map(i => srcVals(i % 4)))
+      case other => fail(s"expected longs, got ${other.getClass.getSimpleName}")
+    }
   }
 }
