@@ -397,22 +397,43 @@ object Codecs {
     encodeFFOR(codes, out)
   }
 
-  /** THE segment resolver for the cross-column encodings (≙ reference
-    * fls_reader.cpp:43-82): EQUAL is its source column `decodeAt(target)`,
-    * EXP_DICT is `decodeAt(source)` gathered through its codes. Every
-    * other encoding decodes on its own. `decodeAt(c)` decodes column c
-    * of the same row group — the scan memoizes it, the file reader
-    * re-reads. */
-  def resolveSegment(bytes: Array[Byte], enc: Int, ct: Format.ColumnType,
-      bufs: ReuseBufs, decodeAt: Int => ColData): ColData = enc match {
-    case Enc.EQUAL => decodeAt(new ByteReader(bytes).readInt())
-    case Enc.EXP_DICT =>
-      val in = new ByteReader(bytes)
-      val source = decodeAt(in.readInt())
-      val codes = decodeFFOR(in, bufs.scratch)
-      checkCodes(codes, source.n)
-      gather(source, codes, bufs)
-    case _ => decode(bytes, enc, ct, bufs)
+  /** THE segment resolver of one row group (MCC, ≙ reference
+    * fls_reader.cpp:43-82), for the scan and `FlsFileReader` alike:
+    * `apply(c)` decodes column c once. EQUAL is its source column,
+    * EXP_DICT its source gathered through its codes; every other
+    * encoding decodes on its own. Memoized, so N duplicates of one
+    * source decode it once. A reference out of range, or to a column
+    * still being resolved (an EQUAL/EXP_DICT cycle), is corruption.
+    * `read` fetches a segment's bytes; `bufs(c)` is column c's holder. */
+  final class GroupResolver(rg: Format.RowGroupDesc, cols: Array[Format.ColumnDesc],
+      read: Format.SegmentDesc => Array[Byte], bufs: Int => ReuseBufs)
+    extends (Int => ColData) {
+    private val memo = new Array[ColData](cols.length)
+    private val open = new Array[Boolean](cols.length)
+
+    def apply(c: Int): ColData = {
+      if (c < 0 || c >= cols.length)
+        throw new IllegalStateException(s"segment reference to column $c of ${cols.length}")
+      if (memo(c) == null) {
+        if (open(c))
+          throw new IllegalStateException(s"segment reference cycle through column $c")
+        open(c) = true
+        val seg = rg.segments(c)
+        val bytes = read(seg)
+        memo(c) = seg.encoding match {
+          case Enc.EQUAL => apply(new ByteReader(bytes).readInt())
+          case Enc.EXP_DICT =>
+            val in = new ByteReader(bytes)
+            val source = apply(in.readInt())
+            val codes = decodeFFOR(in, bufs(c).scratch)
+            checkCodes(codes, source.n)
+            gather(source, codes, bufs(c))
+          case enc => decode(bytes, enc, cols(c).colType, bufs(c))
+        }
+        open(c) = false
+      }
+      memo(c)
+    }
   }
 
   /** Exact physical-content equality (the writer-side MCC detector). */

@@ -166,24 +166,20 @@ final class FlsFileReader(val path: Path, conf: Configuration) extends AutoClose
     bytes
   }
 
-  def decodeSegment(rgIdx: Int, colIdx: Int): ColData =
-    FlsErrors.wrap(s"rowGroup=$rgIdx column=$colIdx of $path") {
-      val d = decodeAt(rgIdx, colIdx)
-      // a segment can be internally consistent yet disagree with the
-      // footer's row count — that's corruption, not a shorter column
-      if (d.n != table.rowGroups(rgIdx).nTuples)
-        throw new IllegalStateException(
-          s"segment decoded ${d.n} rows, footer says ${table.rowGroups(rgIdx).nTuples}")
-      d
-    }
-
   /** One column of one row group, its cross-column references resolved;
     * fresh arrays, so the caller may keep the result. */
-  private def decodeAt(rgIdx: Int, colIdx: Int): ColData = {
-    val seg = table.rowGroups(rgIdx).segments(colIdx)
-    Codecs.resolveSegment(readSegmentBytes(seg), seg.encoding, table.columns(colIdx).colType,
-      new Codecs.ReuseBufs, decodeAt(rgIdx, _))
-  }
+  def decodeSegment(rgIdx: Int, colIdx: Int): ColData =
+    FlsErrors.wrap(s"rowGroup=$rgIdx column=$colIdx of $path") {
+      val rg = table.rowGroups(rgIdx)
+      val d = new Codecs.GroupResolver(rg, table.columns, readSegmentBytes,
+        _ => new Codecs.ReuseBufs)(colIdx)
+      // a segment can be internally consistent yet disagree with the
+      // footer's row count — that's corruption, not a shorter column
+      if (d.n != rg.nTuples)
+        throw new IllegalStateException(
+          s"segment decoded ${d.n} rows, footer says ${rg.nTuples}")
+      d
+    }
 
   override def close(): Unit = if (in != null) { in.close(); in = null }
 }

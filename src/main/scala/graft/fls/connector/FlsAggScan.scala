@@ -135,11 +135,7 @@ class FlsAggScan(
           val out = new Array[Any](nG + row.values.length)
           var g = 0
           while (g < nG) {
-            val v = FlsPartitioning.castRaw(row.raw(g), schema.fields(g).dataType)
-            out(g) = v match {
-              case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-              case other => other
-            }
+            out(g) = FlsPartitioning.internal(row.raw(g), schema.fields(g).dataType)
             g += 1
           }
           var j = 0

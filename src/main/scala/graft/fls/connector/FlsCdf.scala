@@ -9,7 +9,6 @@ import org.apache.spark.sql.connector.catalog.{SupportsRead, Table, TableCapabil
 import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Scan, ScanBuilder, SupportsPushDownRequiredColumns}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.util.SerializableConfiguration
 
 import graft.fls.{FlsDeleteVectors, FlsFileStats, FlsFooters, FlsManifest, Format}
 
@@ -375,9 +374,8 @@ object FlsCdf {
     val root = new Path(dir)
     val fs = root.getFileSystem(conf)
     val qdir = fs.makeQualified(root).toString.stripSuffix("/") + "/"
-    val units = scala.collection.mutable.ArrayBuffer[FlsRgUnit]()
-    var fileIdx = 0
-    planBranches(fs, root, dir, from, to).foreach { br =>
+    var fileIdx = -1
+    planBranches(fs, root, dir, from, to).flatMap { br =>
       val listed = FlsFooters.listStatuses(Seq(dir), conf, Some(br.scanVersion))
       val byRel = listed.map { case (st, meta) =>
         st.getPath.toString.stripPrefix(qdir) -> (st, meta)
@@ -392,23 +390,18 @@ object FlsCdf {
       val entries = FlsFooters.fetchMeta(specs.map(s => byRel(s.rel)), conf)
         .map(e => e.copy(table = Format.applyRenames(e.table, dataSchema)))
       val disc = FlsPartitioning.discover(Seq(dir), entries.map(_.file), conf)
-      specs.zip(entries).foreach { case (spec, e) =>
-        val pvals: Map[String, String] = disc.pvalsOf(e.file.toString)
+      specs.zip(entries).flatMap { case (spec, e) =>
+        val f = e.file.toString
         val cdf = FlsCdfChunkSpec(br.changeType, br.commitVersion, spec.emitDiff)
         // emit-mode chunks must NOT also exclude the live DV: the diff
         // IS the (exact) selection; live-row chunks keep their version's
         // DV so already-deleted rows never resurrect in the feed
         val dv = if (spec.emitDiff.isDefined) None else e.dv
-        var rowStart = 0L
-        e.table.rowGroups.foreach { rg =>
-          units += FlsRgUnit(e.file.toString, rg, rowStart, fileIdx, pvals,
-            e.table.columns, dv, Some(cdf))
-          rowStart += rg.nTuples
-        }
         fileIdx += 1
+        FlsRgPlanner.plan(f, e.table,
+          FlsFileCtx(fileIdx, disc.pvalsOf(f), dv, cdf = Some(cdf)), Array.empty, Map.empty)
       }
     }
-    units.toSeq
   }
 }
 
@@ -509,6 +502,5 @@ class FlsCdfScan(fullSchema: StructType, requiredSchema: StructType,
     new FlsCdfMicroBatchStream(fullSchema, requiredSchema, options, session)
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema,
-      new SerializableConfiguration(hadoopConf))
+    FlsReaderFactory(requiredSchema, options, hadoopConf)
 }

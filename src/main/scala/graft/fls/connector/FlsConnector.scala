@@ -898,10 +898,6 @@ class FlsScan(
         FlsPartitioning.mayMatch(fs, partTypes, partDisc.keys, raw))
     }
 
-  /** Zone-map row-group pruning happens HERE, once, on the driver —
-    * the planner-side equivalent of the reference's lazily-built skip
-    * list (/root/reference/src/reader/row_group_filter.cpp:62-73;
-    * SURVEY.md §3.1 step 4). */
   /** Row-level-operation mode (set by FlsRowLevelScanBuilder): every
     * pruning decision collapses to FILE granularity — a file whose ANY
     * row group may match is read WHOLE (no row-group pruning, no
@@ -924,71 +920,23 @@ class FlsScan(
   private[connector] var onPlannedEq: Option[Set[String] => Unit] = None
 
   override def planInputPartitions(): Array[InputPartition] = {
-    if (groupGranularity) {
-      val allFilters = filters ++ runtimeFilters
-      val survivors = pruneFiles(allFilters).map(_._1.toString).toSet
-      val units = mutable.ArrayBuffer[FlsRgUnit]()
-      val keptFiles = mutable.ArrayBuffer[String]()
-      files.zipWithIndex.foreach { case ((file, table, _), fileIdx) =>
-        if (survivors.contains(file.toString)) {
-          val nameToIdx = table.columns.map(_.name).zipWithIndex.toMap
-          var rowStart = 0L
-          val anyMayMatch = {
-            var rs = 0L
-            table.rowGroups.exists { rg =>
-              val m = FlsZoneMap.mayMatch(rg, nameToIdx, table.columns, allFilters,
-                rs, FlsVirtual.sizeVirtuals(options))
-              rs += rg.nTuples
-              m
-            }
-          }
-          if (anyMayMatch) {
-            keptFiles += file.toString
-            val pvals: Map[String, String] =
-              partDisc.pvalsOf(file.toString)
-            table.rowGroups.foreach { rg =>
-              units += FlsRgUnit(file.toString, rg, rowStart, fileIdx, pvals,
-                table.columns, dvByFile.get(file.toString),
-                eq = eqByFile.getOrElse(file.toString, Nil))
-              rowStart += rg.nTuples
-            }
-          }
-        }
-      }
-      onPlanned.foreach(_(keptFiles.toSeq))
-      onPlannedDv.foreach(_(dvByFile.filter(kv => keptFiles.contains(kv._1))))
-      onPlannedEq.foreach(_(eqByFile.filter(kv => keptFiles.contains(kv._1))
-        .values.flatten.toSet))
-      return FlsSplitPacking.pack(units.toSeq, session)
-    }
-    val units = mutable.ArrayBuffer[FlsRgUnit]()
     val allFilters = filters ++ runtimeFilters
     val survivors = pruneFiles(allFilters).map(_._1.toString).toSet
-    files.zipWithIndex.foreach { case ((file, table, _), fileIdx) =>
-      if (survivors.contains(file.toString)) {
-        val nameToIdx = table.columns.map(_.name).zipWithIndex.toMap
-        val pvals: Map[String, String] =
-          partDisc.pvalsOf(file.toString)
-        var rowStart = 0L
-        table.rowGroups.foreach { rg =>
-          if (FlsZoneMap.mayMatch(rg, nameToIdx, table.columns, allFilters, rowStart,
-              FlsVirtual.sizeVirtuals(options))) {
-            units += FlsRgUnit(file.toString, rg, rowStart, fileIdx, pvals,
-              table.columns, dvByFile.get(file.toString),
-              eq = eqByFile.getOrElse(file.toString, Nil))
-          }
-          rowStart += rg.nTuples
-        }
-      }
+    val sizeVirtuals = FlsVirtual.sizeVirtuals(options)
+    val units = scanEntries.zipWithIndex.flatMap { case (e, fileIdx) =>
+      val f = e.file.toString
+      if (!survivors.contains(f)) Nil
+      else FlsRgPlanner.plan(f, e.table, FlsFileCtx(fileIdx, partDisc.pvalsOf(f), e.dv, e.eq),
+        allFilters, sizeVirtuals, wholeFile = groupGranularity)
     }
-    // delta (merge-on-read) row-level ops capture the scan-time DV
-    // pointers of every planned file for the commit's conflict check
-    onPlannedDv.foreach(_(dvByFile.filter { case (f, _) =>
-      units.exists(_.file == f)
-    }))
-    onPlannedEq.foreach(_(eqByFile.filter { case (f, _) =>
-      units.exists(_.file == f)
-    }.values.flatten.toSet))
+    // row-level operations capture the kept files, with their scan-time
+    // DV pointers and equality residuals, for the commit's checks
+    val kept = units.map(_.file).distinct
+    val keptSet = kept.toSet
+    onPlanned.foreach(_(kept))
+    onPlannedDv.foreach(_(dvByFile.filter(kv => keptSet.contains(kv._1))))
+    onPlannedEq.foreach(_(eqByFile.filter(kv => keptSet.contains(kv._1)).values.flatten.toSet))
+    if (groupGranularity) return FlsSplitPacking.pack(units, session)
     // TopN pruning (no filters): greedily cover n rows by best
     // boundary stat, drop groups that cannot reach the bound
     topN match {
@@ -1003,7 +951,7 @@ class FlsScan(
         // (union_by_name may mix decimal scales); otherwise skip pruning.
         val uniform = Format.uniformColType(files.map(_._2), colName).isDefined
         val withStats = if (!uniform) Nil
-        else units.toSeq.flatMap { u =>
+        else units.flatMap { u =>
           val idx = u.cols.indexWhere(_.name == colName)
           if (idx < 0) None
           else {
@@ -1056,39 +1004,23 @@ class FlsScan(
       // partition-pure splits: pack WITHIN each partition key so every
       // split carries exactly one key (HasPartitionKey contract); key
       // order is stabilized for deterministic planning
-      val grouped = units.toSeq.groupBy(u => partDisc.keys.map(u.pvals))
+      val grouped = units.groupBy(u => partDisc.keys.map(u.ctx.pvals))
       grouped.toSeq.sortBy(_._1.map(String.valueOf).mkString("\u0000"))
         .flatMap { case (raw, us) =>
           val keyVals: Array[Any] = partDisc.keys.zip(raw).map { case (k, r) =>
-            toInternal(FlsPartitioning.castRaw(r, partTypes(k)))
+            FlsPartitioning.internal(r, partTypes(k))
           }.toArray
           FlsSplitPacking.pack(us, session).map {
             case p: FlsInputPartition => p.copy(keyVals = keyVals)
             case p => p
           }
         }.toArray
-    } else FlsSplitPacking.pack(units.toSeq, session)
-  }
-
-  /** External partition value → Catalyst-internal representation for
-    * the HasPartitionKey row (strings must be UTF8String there). */
-  private def toInternal(v: Any): Any = v match {
-    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
-    case other => other
+    } else FlsSplitPacking.pack(units, session)
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new FlsReaderFactory(readSchema(), new SerializableConfiguration(hadoopConf),
-      // tri-state: explicit true/false wins; absent = size-adaptive
-      if (options.containsKey("string_dictionary"))
-        Some(options.getBoolean("string_dictionary", false)) else None,
-      FlsVirtual.sizeVirtuals(options),
-      // executor-side selection vectors: static + runtime (DPP) conjuncts
-      // (OFF in group-granularity mode — the replace write needs every
-      // row of the kept files back)
-      if (groupGranularity) Array.empty[Filter] else filters ++ runtimeFilters,
-      options.getDouble("filter_keep_ratio", 0.0),
-      options.getLong("string_dictionary_auto_rows", 512L * 1024))
+    FlsReaderFactory(readSchema(), options, hadoopConf,
+      if (groupGranularity) Array.empty[Filter] else filters ++ runtimeFilters)
 
   /** Scan progress metrics (≙ reference GetProgressInFile,
     * /root/reference/src/reader/fls_reader.cpp:556-558 — Spark surfaces
@@ -1269,17 +1201,39 @@ object FlsInputPartition {
       FlsFileChunk(file, Array(rg), Array(rowStart), cols, fileIndex, pvals)))
 }
 
-/** One prunable/packable unit: a single row group of a single file. */
-case class FlsRgUnit(
-    file: String,
-    rg: RowGroupDesc,
-    rowStart: Long,
+/** A file's scan context besides its footer: what every one of its row
+  * groups carries into the reader. */
+final case class FlsFileCtx(
     fileIdx: Int,
-    pvals: Map[String, String],
-    cols: Array[ColumnDesc],
+    pvals: Map[String, String] = Map.empty,
     dv: Option[String] = None,
-    cdf: Option[FlsCdfChunkSpec] = None,
-    eq: Seq[String] = Nil)
+    eq: Seq[String] = Nil,
+    cdf: Option[FlsCdfChunkSpec] = None)
+
+/** One prunable/packable unit: a single row group of a single file. */
+case class FlsRgUnit(file: String, cols: Array[ColumnDesc], ctx: FlsFileCtx,
+    rg: RowGroupDesc, rowStart: Long)
+
+/** THE row-group planner of every fls read — batch scan, file stream
+  * and change feed: one file's footer plus its context become that
+  * file's [[FlsRgUnit]]s, on the driver, once (≙ the reference's
+  * row-group filter, `src/reader/row_group_filter.cpp:20-199`). A
+  * group is kept when its zone maps may match every filter
+  * (`sizeVirtuals` compare `<col>_size` filters against LIST
+  * element-count bounds). `wholeFile` (row-level group scans) keeps
+  * every group of a file in which any group may match: the replace
+  * write gets back exactly what the scan returns. */
+object FlsRgPlanner {
+  def plan(file: String, table: TableDesc, ctx: FlsFileCtx, filters: Array[Filter],
+      sizeVirtuals: Map[String, String], wholeFile: Boolean = false): Seq[FlsRgUnit] = {
+    val nameToIdx = table.columns.map(_.name).zipWithIndex.toMap
+    val starts = table.rowGroups.scanLeft(0L)(_ + _.nTuples)
+    val may = table.rowGroups.indices.filter(g => FlsZoneMap.mayMatch(table.rowGroups(g),
+      nameToIdx, table.columns, filters, starts(g), sizeVirtuals))
+    val kept = if (wholeFile && may.nonEmpty) table.rowGroups.indices else may
+    kept.map(g => FlsRgUnit(file, table.columns, ctx, table.rowGroups(g), starts(g)))
+  }
+}
 
 /** Parquet-style split packing (mirrors Spark's
   * `FilePartition.maxSplitBytes` + packing loop): row groups cost
@@ -1292,8 +1246,7 @@ case class FlsRgUnit(
   * sane task counts (splits span files via chunks). */
 object FlsSplitPacking {
   def pack(units: Seq[FlsRgUnit],
-      session: org.apache.spark.sql.SparkSession =
-        org.apache.spark.sql.SparkSession.active): Array[InputPartition] = {
+      session: org.apache.spark.sql.SparkSession): Array[InputPartition] = {
     if (units.isEmpty) return Array.empty
     val conf = session.sessionState.conf
     val openCost = conf.filesOpenCostInBytes
@@ -1310,8 +1263,8 @@ object FlsSplitPacking {
     var cur: FlsRgUnit = null
     var curCost = 0L
     def sealChunk(): Unit = if (rgs.nonEmpty) {
-      chunks += FlsFileChunk(cur.file, rgs.toArray, starts.toArray,
-        cur.cols, cur.fileIdx, cur.pvals, cur.dv, cur.cdf, cur.eq)
+      chunks += FlsFileChunk(cur.file, rgs.toArray, starts.toArray, cur.cols,
+        cur.ctx.fileIdx, cur.ctx.pvals, cur.ctx.dv, cur.ctx.cdf, cur.ctx.eq)
       rgs.clear(); starts.clear()
     }
     def flush(): Unit = {
@@ -1325,7 +1278,7 @@ object FlsSplitPacking {
       if (cur != null && curCost + cost(u) > target) flush()
       // a CDF feed can scan the SAME file under two branch contexts
       // (e.g. rows deleted then restored) — never merge across them
-      else if (cur != null && (u.file != cur.file || u.cdf != cur.cdf)) sealChunk()
+      else if (cur != null && (u.file != cur.file || u.ctx.cdf != cur.ctx.cdf)) sealChunk()
       cur = u
       rgs += u.rg
       starts += u.rowStart
@@ -1336,12 +1289,9 @@ object FlsSplitPacking {
   }
 }
 
-class FlsReaderFactory(readSchema: StructType, conf: SerializableConfiguration,
-    stringDictionary: Option[Boolean] = None,
-    sizeBase: Map[String, String] = Map.empty,
-    rowFilters: Array[Filter] = Array.empty,
-    filterKeepRatio: Double = 0.0,
-    stringDictAutoRows: Long = 512L * 1024)
+class FlsReaderFactory private (readSchema: StructType, conf: SerializableConfiguration,
+    stringDictionary: Option[Boolean], sizeBase: Map[String, String],
+    rowFilters: Array[Filter], filterKeepRatio: Double, stringDictAutoRows: Long)
   extends PartitionReaderFactory {
 
   override def supportColumnarReads(partition: InputPartition): Boolean = true
@@ -1353,6 +1303,23 @@ class FlsReaderFactory(readSchema: StructType, conf: SerializableConfiguration,
       partition: InputPartition): PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] =
     new FlsPartitionReader(partition.asInstanceOf[FlsInputPartition], readSchema, conf.value,
       stringDictionary, sizeBase, rowFilters, filterKeepRatio, stringDictAutoRows)
+}
+
+object FlsReaderFactory {
+  /** THE reader configuration of every fls read: the only reader of the
+    * `array_size`, `string_dictionary` (tri-state: explicit true/false
+    * wins, absent = size-adaptive), `string_dictionary_auto_rows` and
+    * `filter_keep_ratio` options. `rowFilters` are the conjuncts the
+    * reader applies as selection vectors — none for a row-level group
+    * scan, whose replace write needs every row of the kept files back. */
+  def apply(readSchema: StructType, options: CaseInsensitiveStringMap,
+      hadoopConf: Configuration, rowFilters: Array[Filter] = Array.empty): FlsReaderFactory =
+    new FlsReaderFactory(readSchema, new SerializableConfiguration(hadoopConf),
+      if (options.containsKey("string_dictionary"))
+        Some(options.getBoolean("string_dictionary", false)) else None,
+      FlsVirtual.sizeVirtuals(options), rowFilters,
+      options.getDouble("filter_keep_ratio", 0.0),
+      options.getLong("string_dictionary_auto_rows", 512L * 1024))
 }
 
 // --------------------------------------------------------------- write

@@ -37,42 +37,31 @@ object FlsDefaults {
     if (!field.metadata.contains(ExistsKey)) None
     else Option(ResolveDefaultColumns.getExistenceDefaultValue(field))
 
-  /** Fill `len` slots of `vec` with the internal-format constant. */
-  def fill(vec: WritableColumnVector, dt: DataType, v: Any, len: Int): Unit = {
-    var i = 0
-    dt match {
-      case BooleanType =>
-        val x = v.asInstanceOf[Boolean]
-        while (i < len) { vec.putBoolean(i, x); i += 1 }
-      case ByteType =>
-        val x = v.asInstanceOf[Byte]
-        while (i < len) { vec.putByte(i, x); i += 1 }
-      case ShortType =>
-        val x = v.asInstanceOf[Short]
-        while (i < len) { vec.putShort(i, x); i += 1 }
-      case IntegerType | DateType =>
-        val x = v.asInstanceOf[Int]
-        while (i < len) { vec.putInt(i, x); i += 1 }
-      case LongType | TimestampType | TimestampNTZType =>
-        val x = v.asInstanceOf[Long]
-        while (i < len) { vec.putLong(i, x); i += 1 }
-      case FloatType =>
-        val x = v.asInstanceOf[Float]
-        while (i < len) { vec.putFloat(i, x); i += 1 }
-      case DoubleType =>
-        val x = v.asInstanceOf[Double]
-        while (i < len) { vec.putDouble(i, x); i += 1 }
-      case StringType =>
-        val b = v.asInstanceOf[UTF8String].getBytes
-        while (i < len) { vec.putByteArray(i, b, 0, b.length); i += 1 }
-      case BinaryType =>
-        val b = v.asInstanceOf[Array[Byte]]
+  /** Fill `len` slots of `vec` with the internal-format constant (null
+    * = NULLs): the one constant-vector fill of the scan, for DEFAULTs,
+    * partition values and the virtual tag columns alike. */
+  def fill(vec: WritableColumnVector, dt: DataType, v: Any, len: Int): Unit =
+    if (v == null) vec.putNulls(0, len)
+    else dt match {
+      case BooleanType => vec.putBooleans(0, len, v.asInstanceOf[Boolean])
+      case ByteType => vec.putBytes(0, len, v.asInstanceOf[Byte])
+      case ShortType => vec.putShorts(0, len, v.asInstanceOf[Short])
+      case IntegerType | DateType => vec.putInts(0, len, v.asInstanceOf[Int])
+      case LongType | TimestampType | TimestampNTZType => vec.putLongs(0, len, v.asInstanceOf[Long])
+      case FloatType => vec.putFloats(0, len, v.asInstanceOf[Float])
+      case DoubleType => vec.putDoubles(0, len, v.asInstanceOf[Double])
+      case StringType | BinaryType =>
+        val b = v match {
+          case s: UTF8String => s.getBytes
+          case bytes => bytes.asInstanceOf[Array[Byte]]
+        }
+        var i = 0
         while (i < len) { vec.putByteArray(i, b, 0, b.length); i += 1 }
       case d: DecimalType =>
         val x = v.asInstanceOf[Decimal]
+        var i = 0
         while (i < len) { vec.putDecimal(i, x, d.precision); i += 1 }
       case other => throw new IllegalStateException(
-        s"fls: unservable DEFAULT type $other (guarded at ALTER)")
+        s"fls: unservable constant type $other (DEFAULTs are guarded at ALTER)")
     }
-  }
 }

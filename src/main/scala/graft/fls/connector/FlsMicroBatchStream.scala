@@ -7,7 +7,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.connector.read.InputPartition
 import org.apache.spark.sql.connector.read.streaming.{MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, SupportsAdmissionControl, SupportsTriggerAvailableNow}
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{DataType, StringType, StructType}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 import graft.fls._
 
@@ -35,10 +35,10 @@ case class FlsOffset(batchId: Long) extends Offset {
   * that a job rollback deleted anyway is skipped with a warning (its
   * data was never committed).
   *
-  * Each logged file plans like the batch path: one InputPartition per
-  * row group, descriptors serialized into the partition, partition
-  * columns parsed from the path, pushed filters applied as zone-map +
-  * partition pruning. */
+  * Each logged file plans like the batch path, through the same
+  * row-group planner ([[FlsRgPlanner]]) and reader configuration
+  * ([[FlsReaderFactory]]): partition columns parsed from the path,
+  * pushed filters applied as partition + zone-map pruning. */
 class FlsMicroBatchStream(
     tableSchema: StructType,
     requiredSchema: StructType,
@@ -280,10 +280,10 @@ class FlsMicroBatchStream(
     // stream start); values parse per file from its path
     val partTypes: Map[String, DataType] =
       tableSchema.fields.map(f => f.name -> f.dataType).toMap
-    val parts = mutable.ArrayBuffer[FlsRgUnit]()
-    footers.zipWithIndex.foreach { case (entry, fileIdx) =>
+    val sizeVirtuals = FlsVirtual.sizeVirtuals(options)
+    val units = footers.zipWithIndex.flatMap { case (entry, fileIdx) =>
+      val f = entry.file.toString
       val kvs = FlsPartitioning.valuesFor(bases, entry.file)
-      val pvals = kvs.toMap
       val keys = kvs.map(_._1)
       val raw = kvs.map(_._2).toArray
       val fileTypes = partTypes.filter { case (k, _) => keys.contains(k) }
@@ -292,38 +292,21 @@ class FlsMicroBatchStream(
       // file landing mid-stream may not — such a file cannot be
       // processed correctly at all, so fail loudly instead of emitting
       // unfiltered rows
-      consumedFilters.foreach { f =>
-        require(FlsPartitioning.evaluates(f, fileTypes, keys, raw).isDefined,
+      consumedFilters.foreach { c =>
+        require(FlsPartitioning.evaluates(c, fileTypes, keys, raw).isDefined,
           s"fls stream: file ${entry.file} cannot decide the consumed partition " +
-            s"filter $f (layout changed mid-stream?) — restart the query or fix the layout")
+            s"filter $c (layout changed mid-stream?) — restart the query or fix the layout")
       }
-      val keep = keys.isEmpty || FlsPartitioning.mayMatch(filters,
-        fileTypes, keys, raw)
-      if (keep) {
-        val table = entry.table
-        val nameToIdx = table.columns.map(_.name).zipWithIndex.toMap
-        var rowStart = 0L
-        table.rowGroups.foreach { rg =>
-          if (FlsZoneMap.mayMatch(rg, nameToIdx, table.columns, filters, rowStart)) {
-            parts += FlsRgUnit(entry.file.toString, rg, rowStart, fileIdx, pvals,
-              table.columns, dv = dvByFile.get(entry.file.toString),
-              eq = eqByFile.getOrElse(entry.file.toString, Nil))
-          }
-          rowStart += rg.nTuples
-        }
-      }
+      if (keys.nonEmpty && !FlsPartitioning.mayMatch(filters, fileTypes, keys, raw)) Nil
+      else FlsRgPlanner.plan(f, entry.table,
+        FlsFileCtx(fileIdx, kvs.toMap, dvByFile.get(f), eqByFile.getOrElse(f, Nil)),
+        filters, sizeVirtuals)
     }
-    FlsSplitPacking.pack(parts.toSeq)
+    FlsSplitPacking.pack(units, session)
   }
 
   override def createReaderFactory(): org.apache.spark.sql.connector.read.PartitionReaderFactory =
-    new FlsReaderFactory(requiredSchema,
-      new org.apache.spark.util.SerializableConfiguration(hadoopConf),
-      if (options.containsKey("string_dictionary"))
-        Some(options.getBoolean("string_dictionary", false)) else None,
-      rowFilters = filters, // executor-side selection vectors (FlsRowFilter)
-      filterKeepRatio = options.getDouble("filter_keep_ratio", 0.0),
-      stringDictAutoRows = options.getLong("string_dictionary_auto_rows", 512L * 1024))
+    FlsReaderFactory(requiredSchema, options, hadoopConf, filters)
 
   override def commit(end: Offset): Unit = {
     val e = end.asInstanceOf[FlsOffset].batchId

@@ -6,6 +6,7 @@ import org.apache.spark.sql.connector.read.PartitionReader
 import org.apache.spark.sql.execution.vectorized.OnHeapColumnVector
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.vectorized.{ColumnVector, ColumnarBatch}
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.fls._
 import graft.fls.Format._
@@ -78,109 +79,135 @@ class FlsPartitionReader(
   private var rowsFilteredTotal = 0L
   private var in: org.apache.hadoop.fs.FSDataInputStream = _
   private var decoded: Array[ColData] = _ // null slots = virtual/absent columns
-  /** File-side type per projected field (None = virtual or absent in
-    * this file — absent happens under union_by_name). Per chunk. */
-  private var fileTypes: Array[Option[ColumnType]] =
-    if (chunk == null) Array.empty else mkFileTypes(chunk)
-
-  private def mkFileTypes(c: FlsFileChunk): Array[Option[ColumnType]] =
-    readSchema.fields.map { f =>
-      c.fileColumns.find(_.name == f.name).map(_.colType)
-    }
-  /** Row-level predicates compiled against the CURRENT chunk's column
-    * types (recompiled on chunk advance — union_by_name lets types
-    * drift across files). */
-  private var preds: Array[FlsRowFilter.Pred] =
-    if (chunk == null) Array.empty
-    else FlsRowFilter.compile(rowFilters, readSchema, fileTypes, sizeBase)
-  /** Adaptive conjunct order (reset with `preds` on chunk advance —
-    * compile can drop different conjuncts per file under
-    * union_by_name, so positions don't transfer). */
-  private var adaptOrder = new FlsRowFilter.AdaptiveOrder(preds.length)
   private val vectors: Array[OnHeapColumnVector] =
     readSchema.fields.map(f => new OnHeapColumnVector(BatchSize, f.dataType))
   private val batch = new ColumnarBatch(vectors.asInstanceOf[Array[ColumnVector]])
 
-  /** Frozen exists-DEFAULT per projected field (resolved once per
-    * reader from the field metadata; None = no default → absent columns
-    * read as NULL). Served for files predating an
-    * `ALTER ... ADD COLUMN ... DEFAULT` ([[FlsDefaults]]). */
-  private val existsDefaultCache =
-    scala.collection.mutable.HashMap.empty[String, Option[Any]]
-  private def existsDefault(f: StructField): Option[Any] =
-    existsDefaultCache.getOrElseUpdate(f.name, FlsDefaults.existenceDefault(f))
-
-  /** Per-column dictionary (zero-copy string path); parallel to
-    * `decoded`, non-null only for DictBytes columns. */
+  /** Per-column dictionary (zero-copy dictionary path); parallel to
+    * `decoded`, non-null only for Dict* columns. */
   private var colDicts: Array[org.apache.spark.sql.execution.vectorized.Dictionary] = _
   private var colDictIds: Array[Array[Int]] = _
   /** Reused selection scratch (one per reader, sized to the largest row
     * group seen) — a fresh 64Ki-int array per group is pure churn. */
   private var selScratch: Array[Int] = _
 
-  /** Current chunk's delete-vector positions (sorted, file-absolute;
-    * null = none) — one tiny sidecar read per chunk, applied to every
-    * row group as the FIRST selection conjunct. Independent of
-    * `rowFilters`: deletes have no Catalyst residual to re-check them,
-    * so they apply in every scan mode, including the row-level group
-    * scans that turn scan-side filters off. */
-  private var dvPositions: Array[Long] =
-    if (chunk == null) null else loadDv(chunk)
-  private def loadDv(c: FlsFileChunk): Array[Long] =
-    c.dv.map(p => graft.fls.FlsDeleteVectors.readAbsolute(p, conf)).orNull
+  /** Frozen exists-DEFAULT per projected field (null = none), resolved
+    * once per reader from the field metadata ([[FlsDefaults]]). */
+  private lazy val existsDefaults: Array[Any] =
+    readSchema.fields.map(f => FlsDefaults.existenceDefault(f).orNull)
 
-  /** Current chunk's equality-delete exclusions, compiled against THIS
-    * file's column types ([[graft.fls.FlsEqResidual]]) — like the DV,
-    * applied unconditionally in every scan mode (no Catalyst residual
-    * re-checks them), by decoding the predicate column (memo-shared
-    * with the projection) and narrowing the selection. */
-  private var eqExcls: Array[graft.fls.FlsEqResidual.Excl] =
-    if (chunk == null) Array.empty else mkEqExcls(chunk)
-  private def mkEqExcls(c: FlsFileChunk): Array[graft.fls.FlsEqResidual.Excl] =
-    if (c.eq.isEmpty) Array.empty
-    else graft.fls.FlsEqResidual.compile(c.eq, c.fileColumns)
+  // ---- per-chunk state, set by openChunk
 
-  /** Change-data-feed emit mode: serve ONLY these file-absolute
-    * positions (sorted; the set difference of the chunk's two sidecars,
-    * computed here where the sidecars live — one task-side read each,
-    * no position ever crosses the driver). Replaces the DV exclusion as
-    * the base selection (the planner guarantees `dv` is unset on
-    * emit-mode chunks). Null = ordinary scan. */
-  private var emitPositions: Array[Long] =
-    if (chunk == null) null else loadEmit(chunk)
-  private def loadEmit(c: FlsFileChunk): Array[Long] =
-    c.cdf.flatMap(_.emitDiff) match {
-      case None => null
-      case Some((a, b)) =>
-        def posOf(p: Option[String]): Array[Long] = p match {
-          case None => Array.empty[Long]
-          case Some(abs) => graft.fls.FlsDeleteVectors.readAbsolute(abs, conf)
-        }
-        val ap = posOf(a)
-        val bp = posOf(b)
-        // sorted-merge difference ap \ bp
-        val out = new Array[Long](ap.length)
-        var k = 0
-        var i = 0
-        var j = 0
-        while (i < ap.length) {
-          while (j < bp.length && bp(j) < ap(i)) j += 1
-          if (j >= bp.length || bp(j) != ap(i)) { out(k) = ap(i); k += 1 }
-          i += 1
-        }
-        java.util.Arrays.copyOf(out, k)
+  /** File-side type per projected field (None = virtual or absent in
+    * this file — absent happens under union_by_name). */
+  private var fileTypes: Array[Option[ColumnType]] = _
+  /** Row-level predicates compiled against the chunk's column types
+    * (union_by_name lets types drift across files), and their adaptive
+    * conjunct order (compile can drop different conjuncts per file, so
+    * positions don't transfer). */
+  private var preds: Array[FlsRowFilter.Pred] = _
+  private var adaptOrder: FlsRowFilter.AdaptiveOrder = _
+  /** The chunk's base selection: sorted file-absolute positions (null =
+    * none) that are the ONLY rows served (`baseKeep`, change-data-feed
+    * emit mode: the set difference of the chunk's two sidecars, computed
+    * here where the sidecars live) or rows never served (its delete
+    * vector). One tiny sidecar read per chunk, applied to every row
+    * group before any other conjunct, in every scan mode: no Catalyst
+    * residual re-checks either. The planner never sets both. */
+  private var basePositions: Array[Long] = _
+  private var baseKeep = false
+  /** Equality-delete exclusions compiled against THIS file's column
+    * types ([[graft.fls.FlsEqResidual]]) — like the DV, applied
+    * unconditionally, by decoding the predicate column (memo-shared with
+    * the projection) and narrowing the selection. */
+  private var eqExcls: Array[graft.fls.FlsEqResidual.Excl] = _
+  /** Per-SEGMENT recycled decode buffers (see [[Codecs.ReuseBufs]]): a
+    * group's output arrays are reused by the next group of the same
+    * column — safe because a group is filled into vectors strictly
+    * before the next decodeGroup, and each segment index owns its slot. */
+  private var segBufs: Array[Codecs.ReuseBufs] = _
+  /** Per projected field, the value it holds in every row of the chunk
+    * when the file serves it without data (null = not a constant: file
+    * data, a row number, or NULLs): a partition value, a feed tag, the
+    * file index or path, or an exists-DEFAULT. Evaluated at the first
+    * batch fill, so a partition value that does not parse fails there. */
+  private var constants: Array[Constant] = _
+
+  private final class Constant(v: => Any) { lazy val value: Any = v }
+
+  private def constantOf(f: StructField, fi: Int, c: FlsFileChunk): Constant =
+    if (c.partitionValues.contains(f.name))
+      new Constant(FlsPartitioning.internal(c.partitionValues(f.name), f.dataType))
+    else (f.name, f.dataType, c.cdf) match {
+      case (FlsCdf.ChangeType, StringType, Some(cdf)) =>
+        new Constant(UTF8String.fromString(cdf.changeType))
+      case (FlsCdf.CommitVersion, LongType, Some(cdf)) => new Constant(cdf.commitVersion)
+      case (FlsVirtual.FileIndex, LongType, _) => new Constant(c.fileIndex.toLong)
+      case (FlsVirtual.MetaFile, StringType, _) => new Constant(UTF8String.fromString(c.file))
+      case _ if f.metadata.contains(FlsDefaults.ExistsKey) => new Constant(existsDefaults(fi))
+      case _ => null
     }
 
-  /** Per-SEGMENT recycled decode buffers (see [[Codecs.ReuseBufs]]): a
-    * row group's output arrays get reused by the next group of the same
-    * column instead of re-allocating+zeroing 512 KB each time.
-    * Safe because a group's decoded data is consumed (filled into
-    * vectors) strictly before the next decodeGroup, and each segment
-    * index owns its own slot. Reset on chunk advance (column count and
-    * sizes can change across files). */
-  private var segBufs: Array[Codecs.ReuseBufs] =
-    if (chunk == null) Array.empty
-    else Array.fill(chunk.fileColumns.length)(new Codecs.ReuseBufs)
+  private def openChunk(c: FlsFileChunk): Unit = {
+    fileTypes = readSchema.fields.map(f => c.fileColumns.find(_.name == f.name).map(_.colType))
+    preds = FlsRowFilter.compile(rowFilters, readSchema, fileTypes, sizeBase)
+    adaptOrder = new FlsRowFilter.AdaptiveOrder(preds.length)
+    def positions(p: String) = graft.fls.FlsDeleteVectors.readAbsolute(p, conf)
+    c.cdf.flatMap(_.emitDiff) match {
+      case Some((a, b)) =>
+        // sorted-merge difference a \ b
+        val ap = a.map(positions).getOrElse(Array.empty[Long])
+        val bp = b.map(positions).getOrElse(Array.empty[Long])
+        val out = new Array[Long](ap.length)
+        var k = 0
+        var j = 0
+        ap.foreach { v =>
+          while (j < bp.length && bp(j) < v) j += 1
+          if (j >= bp.length || bp(j) != v) { out(k) = v; k += 1 }
+        }
+        basePositions = java.util.Arrays.copyOf(out, k)
+        baseKeep = true
+      case None =>
+        basePositions = c.dv.map(positions).orNull
+        baseKeep = false
+    }
+    eqExcls =
+      if (c.eq.isEmpty) Array.empty else graft.fls.FlsEqResidual.compile(c.eq, c.fileColumns)
+    segBufs = Array.fill(c.fileColumns.length)(new Codecs.ReuseBufs)
+    constants = readSchema.fields.zipWithIndex.map { case (f, fi) => constantOf(f, fi, c) }
+  }
+  if (chunk != null) openChunk(chunk)
+
+  /** The selection scratch, grown to hold `n` row indices. */
+  private def scratch(n: Int): Array[Int] = {
+    if (selScratch == null || selScratch.length < n) selScratch = new Array[Int](n)
+    selScratch
+  }
+
+  /** Base selection of the group's rows [start, start+n) from
+    * `basePositions`, written to `sel` as group-relative indices: the
+    * listed rows (keep mode) or every other row (drop mode). Returns
+    * the selection count, or -1 when the group drops no row. */
+  private def baseSelect(sel: Array[Int], start: Long, n: Int): Int = {
+    val pos = basePositions
+    var lo = java.util.Arrays.binarySearch(pos, start)
+    if (lo < 0) lo = -lo - 1
+    var hi = java.util.Arrays.binarySearch(pos, start + n)
+    if (hi < 0) hi = -hi - 1
+    var k = 0
+    if (baseKeep) {
+      while (lo < hi) { sel(k) = (pos(lo) - start).toInt; k += 1; lo += 1 }
+    } else {
+      if (hi == lo) return -1
+      var i = 0
+      while (i < n) {
+        if (lo < hi && pos(lo) == start + i) lo += 1
+        else { sel(k) = i; k += 1 }
+        i += 1
+      }
+    }
+    k
+  }
 
   /** Decode row group `g` of the current chunk eagerly. The file handle
     * opens once per CHUNK (not per row group — that per-task open was
@@ -206,23 +233,13 @@ class FlsPartitionReader(
     // MCC resolution: an EQUAL or EXP_DICT segment widens this reader's
     // reads to its source column (≙ reference fls_reader.cpp:583-590,
     // which widens to the full row group; the dependency is explicit
-    // here, so only the referenced segment is read). Memoized — N
-    // duplicates of one source decode it once.
-    val memo = scala.collection.mutable.HashMap[Int, ColData]()
-    def readSeg(idx: Int): Array[Byte] = {
-      val seg = rowGroup.segments(idx)
+    // here, so only the referenced segment is read)
+    def readSeg(seg: SegmentDesc): Array[Byte] = {
       val segBytes = new Array[Byte](seg.length.toInt)
       in.readFully(seg.offset, segBytes)
       segBytes
     }
-    def decodeAt(idx: Int): ColData = memo.get(idx) match {
-      case Some(d) => d
-      case None =>
-        val d = Codecs.resolveSegment(readSeg(idx), rowGroup.segments(idx).encoding,
-          chunk.fileColumns(idx).colType, segBufs(idx), decodeAt)
-        memo(idx) = d
-        d
-    }
+    val decodeAt = new Codecs.GroupResolver(rowGroup, chunk.fileColumns, readSeg, segBufs)
     def decodeCol(f: StructField, fi: Int): ColData = {
         val idx = chunk.fileColumns.indexWhere(_.name == f.name)
         if (idx < 0) {
@@ -245,14 +262,10 @@ class FlsPartitionReader(
                   s"fls: ${f.name} base column decoded to ${other.getClass.getSimpleName}")
               }
             case _ =>
-              if (f.name == FlsVirtual.RowNumber || f.name == FlsVirtual.FileIndex ||
-                f.name == FlsVirtual.MetaFile || f.name == FlsVirtual.MetaPos ||
-                (chunk.cdf.isDefined && (f.name == FlsCdf.ChangeType ||
-                  f.name == FlsCdf.CommitVersion)) || // feed tag constants
-                chunk.partitionValues.contains(f.name) || // constant from the path
-                f.nullable || // nullable+absent: union_by_name missing column
-                // NOT NULL + DEFAULT: the fill serves the exists-default
-                f.metadata.contains(FlsDefaults.ExistsKey)) null
+              // served without data: a constant, a row number, or (a
+              // nullable column this file lacks, union_by_name) NULLs
+              if (constants(fi) != null || f.name == FlsVirtual.RowNumber ||
+                f.name == FlsVirtual.MetaPos || f.nullable) null
               else throw new IllegalArgumentException(
                 s"fls: column ${f.name} not present in ${chunk.file}")
           }
@@ -299,7 +312,7 @@ class FlsPartitionReader(
             case _ => false
           })
           if (dictable) {
-            val (dict, codes) = Codecs.dictParts(new ByteReader(readSeg(idx)),
+            val (dict, codes) = Codecs.dictParts(new ByteReader(readSeg(seg)),
               seg.encoding, phys, segBufs(idx))
             dictColumn(fi, dict, codes)
           } else decodeAt(idx)
@@ -334,50 +347,12 @@ class FlsPartitionReader(
     // evaluable conjunct writes kept indices directly (filterAll),
     // avoiding the identity-array init and its indirection.
     var selCount = -1
-    var sel: Array[Int] = null
-    // Delete vector first: the alive rows ARE the base selection the
-    // pushed conjuncts then narrow. Binary-search the group's slice of
-    // the sorted file-absolute positions.
-    var dvApplied = false
-    if (emitPositions != null) {
-      // CDF emit mode: the diffed position set IS the base selection
-      // (possibly empty for this group). dvApplied forces compaction —
-      // like deletes, no residual FilterExec re-checks the emit set.
-      val start = chunk.rowStarts(g)
-      var lo = java.util.Arrays.binarySearch(emitPositions, start)
-      if (lo < 0) lo = -lo - 1
-      var hi = java.util.Arrays.binarySearch(emitPositions, start + rgTuples)
-      if (hi < 0) hi = -hi - 1
-      if (selScratch == null || selScratch.length < rgTuples)
-        selScratch = new Array[Int](rgTuples)
-      sel = selScratch
-      var k = 0
-      var d = lo
-      while (d < hi) { sel(k) = (emitPositions(d) - start).toInt; k += 1; d += 1 }
-      selCount = k
-      dvApplied = true
-    } else if (dvPositions != null && dvPositions.length > 0) {
-      val start = chunk.rowStarts(g)
-      var lo = java.util.Arrays.binarySearch(dvPositions, start)
-      if (lo < 0) lo = -lo - 1
-      var hi = java.util.Arrays.binarySearch(dvPositions, start + rgTuples)
-      if (hi < 0) hi = -hi - 1
-      if (hi > lo) {
-        if (selScratch == null || selScratch.length < rgTuples)
-          selScratch = new Array[Int](rgTuples)
-        sel = selScratch
-        var k = 0
-        var i = 0
-        var d = lo
-        while (i < rgTuples) {
-          if (d < hi && dvPositions(d) == start + i) d += 1
-          else { sel(k) = i; k += 1 }
-          i += 1
-        }
-        selCount = k
-        dvApplied = true
-      }
-    }
+    val sel = scratch(rgTuples)
+    // Base selection first (delete vector, or a change feed's emit set):
+    // the rows it serves ARE what the pushed conjuncts then narrow.
+    // dvApplied forces compaction — no residual FilterExec re-checks it.
+    if (basePositions != null) selCount = baseSelect(sel, chunk.rowStarts(g), rgTuples)
+    var dvApplied = selCount >= 0
     // Equality-delete residuals: decode each predicate's column(s)
     // (memo-shared with the projection) and drop matching rows from the
     // selection — mandatory like the DV (dvApplied forces compaction:
@@ -387,7 +362,7 @@ class FlsPartitionReader(
     // compiled non-applicable and is skipped whole. Emit mode never
     // coexists (the CDF refuses ranges containing an equality-delete
     // commit).
-    if (eqExcls.length > 0 && emitPositions == null) {
+    if (eqExcls.length > 0 && !baseKeep) {
       var x = 0
       while (x < eqExcls.length && selCount != 0) {
         val ex = eqExcls(x)
@@ -396,10 +371,7 @@ class FlsPartitionReader(
         if (ex.applicable &&
             !graft.fls.FlsEqResidual.groupNoMatch(ex, rowGroup)) {
           val del = graft.fls.FlsEqResidual.deletedMask(ex, decodeAt)
-          if (selScratch == null || selScratch.length < rgTuples)
-            selScratch = new Array[Int](rgTuples)
           if (selCount < 0) {
-            sel = selScratch
             var k = 0
             var i = 0
             while (i < rgTuples) {
@@ -424,9 +396,6 @@ class FlsPartitionReader(
       }
     }
     if (preds.nonEmpty) {
-      if (selScratch == null || selScratch.length < rgTuples)
-        selScratch = new Array[Int](rgTuples)
-      sel = selScratch
       // conjuncts run in adaptOrder.perm order (adaptive reordering by
       // observed cost × selectivity; exact under any order — each
       // conjunct only narrows the selection)
@@ -522,13 +491,7 @@ class FlsPartitionReader(
         cIdx += 1
         if (cIdx >= part.chunks.length) { chunk = null; return false }
         chunk = part.chunks(cIdx)
-        dvPositions = loadDv(chunk)
-        emitPositions = loadEmit(chunk)
-        eqExcls = mkEqExcls(chunk)
-        fileTypes = mkFileTypes(chunk)
-        preds = FlsRowFilter.compile(rowFilters, readSchema, fileTypes, sizeBase)
-        adaptOrder = new FlsRowFilter.AdaptiveOrder(preds.length)
-        segBufs = Array.fill(chunk.fileColumns.length)(new Codecs.ReuseBufs)
+        openChunk(chunk)
         gIdx = -1
         decoded = null
       } else {
@@ -547,7 +510,9 @@ class FlsPartitionReader(
       // (FlsDictMixedGroupSpec locks this). Cleared HERE, for every
       // column shape, so no fill case can forget it.
       vectors(c).setDictionary(null)
-      fill(vectors(c), readSchema.fields(c), decoded(c), rowPos, len)
+      if (decoded(c) == null && constants(c) != null)
+        FlsDefaults.fill(vectors(c), readSchema.fields(c).dataType, constants(c).value, len)
+      else fill(vectors(c), readSchema.fields(c), decoded(c), rowPos, len)
       c += 1
     }
     batch.setNumRows(len)
@@ -681,73 +646,15 @@ class FlsPartitionReader(
       start: Int,
       len: Int): Unit = {
     (data, field.dataType) match {
-      case (null, dt) if chunk.partitionValues.contains(field.name) =>
-        // hive partition column: one value per file, parsed from the
-        // path by FlsPartitioning and filled as a constant vector
-        val raw = chunk.partitionValues(field.name)
-        if (raw == null) vec.putNulls(0, len)
-        else dt match {
-          case IntegerType | DateType =>
-            val v = graft.fls.connector.FlsPartitioning.castRaw(raw, dt)
-              .asInstanceOf[Int]
-            var i = 0
-            while (i < len) { vec.putInt(i, v); i += 1 }
-          case LongType =>
-            val v = raw.trim.toLong
-            var i = 0
-            while (i < len) { vec.putLong(i, v); i += 1 }
-          case ShortType =>
-            val v = raw.trim.toShort
-            var i = 0
-            while (i < len) { vec.putShort(i, v); i += 1 }
-          case ByteType =>
-            val v = raw.trim.toByte
-            var i = 0
-            while (i < len) { vec.putByte(i, v); i += 1 }
-          case BooleanType =>
-            val v = raw.trim.toBoolean
-            var i = 0
-            while (i < len) { vec.putBoolean(i, v); i += 1 }
-          case StringType =>
-            val b = raw.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-            var i = 0
-            while (i < len) { vec.putByteArray(i, b, 0, b.length); i += 1 }
-          case other =>
-            throw new IllegalStateException(s"fls: partition column type $other")
-        }
-      case (null, StringType) if chunk.cdf.isDefined &&
-          field.name == FlsCdf.ChangeType =>
-        // change-data-feed tag: one constant per chunk, like a
-        // partition value ('insert' | 'delete')
-        val b = chunk.cdf.get.changeType
-          .getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var i = 0
-        while (i < len) { vec.putByteArray(i, b, 0, b.length); i += 1 }
-      case (null, LongType) if chunk.cdf.isDefined &&
-          field.name == FlsCdf.CommitVersion =>
-        val v = chunk.cdf.get.commitVersion
-        var i = 0
-        while (i < len) { vec.putLong(i, v); i += 1 }
-      case (null, LongType) if field.name == FlsVirtual.FileIndex =>
-        var i = 0
-        while (i < len) { vec.putLong(i, chunk.fileIndex.toLong); i += 1 }
       case (null, LongType) if field.name == FlsVirtual.RowNumber ||
           field.name == FlsVirtual.MetaPos =>
         val base = groupRowStart + start
         var i = 0
         while (i < len) { vec.putLong(i, base + i); i += 1 }
-      case (null, StringType) if field.name == FlsVirtual.MetaFile =>
-        val b = chunk.file.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-        var i = 0
-        while (i < len) { vec.putByteArray(i, b, 0, b.length); i += 1 }
       case (null, _) =>
-        // column absent from this file: a frozen exists-DEFAULT (added
-        // via ALTER ... ADD COLUMN d T DEFAULT x) serves as a constant
-        // vector; otherwise union_by_name semantics → NULLs
-        existsDefault(field) match {
-          case Some(v) => FlsDefaults.fill(vec, field.dataType, v, len)
-          case None => vec.putNulls(0, len)
-        }
+        // column absent from this file and no constant: union_by_name
+        // semantics → NULLs
+        vec.putNulls(0, len)
       case (LongData(vs), d: DecimalType)
           if fileTypes(fieldIdx(field)).exists(_.tag == TypeTag.UINT64) =>
         // u64 read fallback: the stored long is the RAW 64-bit pattern;

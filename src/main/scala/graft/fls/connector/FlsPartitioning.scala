@@ -208,6 +208,13 @@ object FlsPartitioning {
     }
   }
 
+  /** [[castRaw]] in Catalyst's internal form (strings as UTF8String):
+    * the value a constant vector or a partition-key row holds. */
+  def internal(raw: String, dt: DataType): Any = castRaw(raw, dt) match {
+    case s: String => org.apache.spark.unsafe.types.UTF8String.fromString(s)
+    case v => v
+  }
+
   /** Hive path form of a partition value read from an InternalRow. */
   def pathString(dt: DataType, row: org.apache.spark.sql.catalyst.InternalRow, ord: Int): String =
     dt match {

@@ -67,6 +67,47 @@ class FlsArraySizeSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
   }
 
+  /** A manifest table (so the change feed can read it) of 3000 rows,
+    * array length = id % 7, in 1024-row groups. */
+  private lazy val manifestDir: String = {
+    val dir = Files.createTempDirectory("fls-asize-manifest").toString
+    spark.range(0, 3000).toDF("id")
+      .selectExpr("id", "array_repeat(CAST(id AS FLOAT), CAST(id % 7 AS INT)) AS v")
+      .coalesce(1).write.format("fls").option("commit_mode", "manifest")
+      .option("row_group_size", 1024).mode("overwrite").save(dir)
+    dir
+  }
+
+  private def assertSizes(rows: Seq[org.apache.spark.sql.Row]): Unit = {
+    assert(rows.map(_.getLong(0)).sorted == (0L until 3000L))
+    rows.foreach { r =>
+      assert(r.getLong(1) == r.getLong(2), s"row ${r.getLong(0)}: v_size != size(v)")
+    }
+  }
+
+  test("v_size equals size(v) on a streaming read (inferred schema, AvailableNow)") {
+    val got = new java.util.concurrent.ConcurrentLinkedQueue[org.apache.spark.sql.Row]()
+    val q = spark.readStream.format("fls").option("array_size", "v").load(manifestDir)
+      .select(col("id"), col("v_size"), size(col("v")).cast("long"))
+      .writeStream
+      .foreachBatch { (batch: org.apache.spark.sql.DataFrame, _: Long) =>
+        batch.collect().foreach(got.add)
+      }
+      .option("checkpointLocation",
+        Files.createTempDirectory("fls-asize-ckpt").toString)
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow()).start()
+    q.awaitTermination()
+    import scala.jdk.CollectionConverters._
+    assertSizes(got.iterator().asScala.toSeq)
+  }
+
+  test("v_size equals size(v) on a change-feed read") {
+    val feed = spark.read.format("fls").option("array_size", "v")
+      .option("cdf_from_version", "0").load(manifestDir)
+    assertSizes(feed.select(col("id"), col("v_size"), size(col("v")).cast("long"))
+      .collect().toSeq)
+  }
+
   test("element-count stats prune row groups on v_size filters (footer-only)") {
     import org.apache.spark.sql.sources._
     assert(planned(varDir) == 8)

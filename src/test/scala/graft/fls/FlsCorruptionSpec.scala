@@ -247,6 +247,63 @@ class FlsCorruptionSpec extends AnyFunSuite with BeforeAndAfterAll {
       t.getMessage)
   }
 
+  /** Lay `segs` (encoding, payload) out as one `n`-row group of INT64
+    * columns in a complete file (header, segments, footer, tail), then
+    * read column 0 through BOTH readers — the file reader's
+    * `decodeSegment` and the scan — and return their two failures. */
+  private def readBothWays(n: Int, segs: Seq[(Int, Array[Byte])]): Seq[Throwable] = {
+    import graft.fls.connector.{FlsInputPartition, FlsPartitionReader}
+    import org.apache.spark.sql.types.{LongType, StructField, StructType}
+    val w = new ByteWriter()
+    w.writeBytes(Magic); w.writeByte(Version.toInt)
+    val rg = RowGroupDesc(n, segs.map { case (enc, bytes) =>
+      val off = w.size.toLong
+      w.writeBytes(bytes)
+      SegmentDesc(enc, off, bytes.length.toLong, hasStats = false, 0L, 0L, 0.0, 0.0)
+    }.toArray)
+    val cols = segs.indices.map(i => ColumnDesc(s"c$i", ColumnType(TypeTag.INT64))).toArray
+    val fw = new ByteWriter()
+    Format.writeFooter(fw, TableDesc(cols, Array(rg)))
+    w.writeBytes(fw.toArray)
+    w.writeLong(fw.size.toLong)
+    w.writeBytes(Magic)
+    val file = new File(Files.createTempDirectory("fls-corrupt-ref").toFile, "r.fls")
+    Files.write(file.toPath, w.toArray)
+    val conf = new org.apache.hadoop.conf.Configuration()
+    val fileReader = new FlsFileReader(new org.apache.hadoop.fs.Path(file.getAbsolutePath), conf)
+    val viaFile = intercept[Throwable] {
+      try fileReader.decodeSegment(0, 0) finally fileReader.close()
+    }
+    val scan = new FlsPartitionReader(
+      FlsInputPartition.single(file.getAbsolutePath, rg, cols, 0L, 0),
+      StructType(Seq(StructField("c0", LongType, nullable = false))), conf)
+    val viaScan = intercept[Throwable] {
+      try { while (scan.next()) scan.get() } finally scan.close()
+    }
+    Seq(viaFile, viaScan)
+  }
+
+  test("an EQUAL segment naming itself is corruption, not a stack overflow") {
+    val self = new ByteWriter()
+    Codecs.encodeEqual(0, self)
+    readBothWays(4, Seq((Enc.EQUAL, self.toArray))).foreach { t =>
+      assert(flsLabeled(t) && t.getMessage.contains("cycle"),
+        s"${t.getClass.getName}: ${t.getMessage}")
+    }
+  }
+
+  test("a two-column EQUAL/EXP_DICT reference cycle is corruption, not a stack overflow") {
+    val toOne = new ByteWriter()
+    Codecs.encodeEqual(1, toOne)
+    val toZero = new ByteWriter()
+    Codecs.encodeExpDict(0, Array(0L, 1L, 0L, 1L), toZero)
+    readBothWays(4, Seq((Enc.EQUAL, toOne.toArray), (Enc.EXP_DICT, toZero.toArray)))
+      .foreach { t =>
+        assert(flsLabeled(t) && t.getMessage.contains("cycle"),
+          s"${t.getClass.getName}: ${t.getMessage}")
+      }
+  }
+
   test("byte-flip fuzz: every failure is fls-labeled, reads never crash bare") {
     val (d, f) = writeTable()
     val pristine = bytesOf(f)

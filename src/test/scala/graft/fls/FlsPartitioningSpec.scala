@@ -80,6 +80,27 @@ class FlsPartitioningSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dtDirs = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .map(_.getName).filterNot(_.startsWith("_"))
     assert(dtDirs.toSet == Set("dt=2026-08-10", "dt=2026-08-11", "dt=2026-08-12"))
+
+    // BIGINT, SMALLINT and TINYINT partition columns under a declared
+    // schema, one of them NULL
+    val sp = spark; import sp.implicits._
+    val wdir = s"$tmp/int_widths"
+    val rows = Seq((1L, 5000000000L, 300.toShort, 7.toByte),
+      (2L, -1L, (-2).toShort, (-128).toByte), (3L, 5000000000L, 300.toShort, 127.toByte))
+    rows.toDF("id", "b", "s", "t").repartition(col("b"), col("s"), col("t"))
+      .write.format("fls").mode("overwrite").option("partition_by", "b,s,t").save(wdir)
+    // the writer refuses NULL partition values; external tools write
+    // __HIVE_DEFAULT_PARTITION__
+    Seq(4L).toDF("id").coalesce(1).write.format("fls").mode("overwrite")
+      .save(s"$wdir/b=${FlsPartitioning.DefaultPartitionName}/s=9/t=1")
+    val declared = StructType(Seq(StructField("id", LongType),
+      StructField("b", LongType), StructField("s", ShortType), StructField("t", ByteType)))
+    val widths = spark.read.format("fls").schema(declared).load(wdir)
+    assert(widths.schema == declared)
+    val got = widths.collect().map(r =>
+      (r.getLong(0), Option(r.get(1)), r.getShort(2), r.getByte(3))).sortBy(_._1).toSeq
+    assert(got == rows.map { case (i, b, s, t) => (i, Some(b), s, t) } :+
+      ((4L, None, 9.toShort, 1.toByte)))
   }
 
   test("partition filter plans zero input partitions for non-matching dirs") {
