@@ -199,25 +199,14 @@ object FlsMaintenance {
       w.save(tmpDir.toString)
       // move outputs to final table-relative names (attempt-unique file
       // names can't collide); invisible until the swap below publishes
-      val outputs = scala.collection.mutable.ArrayBuffer[(Path, String, Long)]()
-      FlsFile.walkFiles(fs, tmpDir, Seq(".fls", ".fls.footer")) { (s, rel) =>
-        outputs += ((s.getPath, rel, s.getLen))
-      }
-      outputs.foreach { case (src, rel, len) =>
-        val dst = new Path(root, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"fls compact: rename $src -> $dst failed")
-        moved += ((rel, len))
-      }
+      moved ++= publishOutputs(fs, root, tmpDir)
       val outEntries = moved.collect {
         case (rel, len) if rel.endsWith(".fls") => FlsManifest.Entry(rel, len, 0L)
       }.toSeq
       FlsManifest.commit(fs, root, compactId, conf,
           op = "compact", dataChange = false) { (curV, current) =>
         val cur = current.getOrElse(throw new IllegalStateException(
-          s"fls compact: $dir lost its manifest mid-compaction (concurrent " +
-            "rename-mode overwrite?) — aborting"))
+          s"fls compact: $dir lost its manifest mid-compaction — aborting"))
         // the predicate SET in force must be exactly the frozen one:
         // a predicate ADDED since the freeze would be silently undone
         // (outputs built without its residual, fresh birth versions
@@ -404,18 +393,7 @@ object FlsMaintenance {
       // rows == 0 still writes (a schema-only file): the swap must
       // leave the table readable even if every subject row was deleted
       w.save(tmpDir.toString)
-      val outputs = scala.collection.mutable.ArrayBuffer[(Path, String, Long)]()
-      FlsFile.walkFiles(fs, tmpDir, Seq(".fls", ".fls.footer")) { (s, rel) =>
-        outputs += ((s.getPath, rel, s.getLen))
-      }
-      outputs.foreach { case (src, rel, len) =>
-        val dst = new Path(root, rel)
-        fs.mkdirs(dst.getParent)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(
-            s"fls absorb_deletes: rename $src -> $dst failed")
-        moved += ((rel, len))
-      }
+      moved ++= publishOutputs(fs, root, tmpDir)
       val outEntries = moved.collect {
         case (rel, len) if rel.endsWith(".fls") =>
           FlsManifest.Entry(rel, len, 0L)
@@ -617,6 +595,18 @@ object FlsMaintenance {
     FlsManifest.sweepOrphanChunks(fs, root,
       ttlMs = olderThanHours * 3600L * 1000L)
     VacuumStats(deleted, bytes)
+  }
+
+  /** Moves a rewrite's outputs from its stage directory to the same
+    * table-relative names — invisible until the caller's manifest swap
+    * names them. */
+  private def publishOutputs(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      tmpDir: Path): Seq[(String, Long)] = {
+    val outputs = scala.collection.mutable.ArrayBuffer[(Path, String)]()
+    FlsFile.walkFiles(fs, tmpDir, Seq(".fls", ".fls.footer")) { (s, rel) =>
+      outputs += ((s.getPath, rel))
+    }
+    connector.FlsCommit.publish(fs, root, outputs.toSeq)
   }
 
   /** Cluster the rewrite: partitioned tables group by partition key so

@@ -4,8 +4,9 @@ import java.nio.charset.StandardCharsets
 
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
-/** Versioned manifest commit for object stores. Rename-based task commit
-  * is atomic on HDFS/local but copy+delete on S3-like stores — a visible
+/** Versioned manifest commit for object stores. Rename-based commit
+  * (staged files renamed at job commit) is atomic per file on HDFS/local
+  * but copy+delete on S3-like stores — a visible
   * non-atomic window per file. In `commit_mode=manifest` the table's
   * contents are defined by ONE small immutable file per table version,
   * `_fls_manifest_log/v<N>`: tasks write data files directly under
@@ -1701,10 +1702,14 @@ object FlsManifest {
     (prev, newV)
   }
 
-  /** Drop every manifest artifact (legacy file + versioned log) —
-    * reverts the table to listing mode. */
-  def delete(fs: FileSystem, dir: Path): Unit = {
-    try fs.delete(manifestPath(dir), false) catch { case _: Throwable => () }
-    try fs.delete(logDir(dir), true) catch { case _: Throwable => () }
+  /** Whether the table has a manifest (a version in the main log, or the
+    * legacy single file) — the same test [[readVersioned]] makes, with
+    * its re-check of the log for the legacy-migration window, without
+    * reading one. */
+  def exists(fs: FileSystem, dir: Path): Boolean = {
+    def logHasVersion: Boolean =
+      try fs.listStatus(logDir(dir)).exists(s => parseVersionName(s.getPath.getName).isDefined)
+      catch { case _: java.io.FileNotFoundException => false }
+    logHasVersion || fs.exists(manifestPath(dir)) || logHasVersion
   }
 }

@@ -1525,10 +1525,11 @@ object FlsWriteLayout {
   * one addition: the epoch's writeId is DETERMINISTIC
   * (`<queryId>-e<epoch>`), so a retried epoch (driver crash between the
   * sink commit and Spark's commit log) converges instead of
-  * duplicating — task commit replaces prior-attempt final names, job
-  * commit reconciles the exact committed set and deletes any other
-  * file of the same writeId, and a manifest republish drops the
-  * crashed attempt's entries. Idle triggers on a populated table
+  * duplicating — job commit publishes over the prior attempt's final
+  * names and deletes any other file of the same writeId, and a manifest
+  * republish drops the crashed attempt's entries. An epoch abort never
+  * touches the prior attempt's files: it deletes only files this job
+  * moved out of staging. Idle triggers on a populated table
   * commit nothing (no schema-only file per empty epoch). Composes with
   * `partition_by`, `commit_mode=manifest`, and the fls STREAMING READ —
   * an fls-to-fls pipeline is readStream → transform → writeStream. */
@@ -1569,17 +1570,18 @@ case class FlsStreamingWriterFactory(base: FlsWriterFactory, queryId: String)
 }
 
 /** Job-level write coordination. Tasks stage files under
-  * `_temporary/<writeId>/<attempt>/` and rename to final names on task
-  * commit (see [[FlsDataWriter]]); job `commit` then finalizes EXACTLY
-  * the file set named in the commit messages — deleting any stale
-  * same-writeId file a crashed-mid-commit attempt left behind — and only
-  * then, for truncate mode, deletes the files of previous jobs (so old
-  * data survives until the new data is fully committed). `abort` rolls
-  * back every renamed file plus the staging dir. */
+  * `_temporary/<writeId>/<attempt>/` and leave them there on task commit
+  * (see [[FlsDataWriter]]); job `commit` moves EXACTLY the files named in
+  * the commit messages to their final names ([[FlsCommit.publish]]) —
+  * the one point where a staged file becomes visible — then deletes any
+  * stale same-writeId file a retried epoch's prior attempt left, and
+  * only then, for truncate mode, the files of previous jobs (so old data
+  * survives until the new data is fully committed). `abort` deletes the
+  * message-named files this job already moved, then the staging dir. */
 class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     /** Streaming epochs pass a DETERMINISTIC id (queryId + epoch) so an
-      * epoch retry converges: task commit replaces prior-attempt final
-      * names, job commit reconciles the exact set, and the manifest
+      * epoch retry converges: job commit publishes over prior-attempt
+      * final names and reconciles the exact set, and the manifest
       * drops prior-attempt entries of the same writeId. Batch writes
       * keep the random default. */
     writeIdOverride: Option[String] = None,
@@ -1641,18 +1643,29 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
   private val bloomFpp = options.getDouble("bloom_fpp", 0.01)
   private val stagingTtlMs =
     options.getLong("staging_ttl_hours", 24L) * 3600L * 1000L
-  /** `rename` (default): staged temp files rename on task commit —
-    * atomic on HDFS/local. `manifest`: tasks write attempt-unique final
-    * names directly and job commit atomically publishes `_fls_manifest`
-    * naming the exact table contents — the object-store-safe mode (see
-    * [[graft.fls.FlsManifest]]). */
-  private val commitMode = {
-    val m = Option(options.get("commit_mode")).getOrElse("rename")
-    require(m == "rename" || m == "manifest",
-      s"fls: commit_mode must be 'rename' or 'manifest', got '$m'")
+  private val commitMode: Option[String] = {
+    val m = Option(options.get("commit_mode"))
+    require(m.forall(v => v == "rename" || v == "manifest"),
+      s"fls: commit_mode must be 'rename' or 'manifest', got '${m.get}'")
     m
   }
-  private val manifestMode = commitMode == "manifest"
+  /** A table with a manifest always commits through it: readers plan
+    * from the manifest, and only a new version keeps the table's
+    * history, time travel and tags. `commit_mode` picks the mode only
+    * for a table without one. `rename` (default): tasks stage files and
+    * job commit renames them to final names — atomic per file on
+    * HDFS/local. `manifest`: tasks write attempt-unique final names
+    * directly and job commit atomically publishes `_fls_manifest`
+    * naming the exact table contents — the object-store-safe mode (see
+    * [[graft.fls.FlsManifest]]). */
+  private lazy val manifestMode: Boolean = commitMode.contains("manifest") || {
+    val dir = new Path(path)
+    val has = graft.fls.FlsManifest.exists(dir.getFileSystem(hadoopConf), dir)
+    require(!(has && commitMode.contains("rename")),
+      s"fls: commit_mode=rename on $path, which has a manifest — a " +
+        "manifest table commits through its manifest; drop the option")
+    has
+  }
   private val writeId = writeIdOverride.getOrElse(UUID.randomUUID().toString)
 
   partitionBy.foreach { c =>
@@ -1751,28 +1764,20 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       "fls: branch writes need commit_mode=manifest — the branch IS a " +
         "manifest lineage")
     var committedLen = messages.flatMap {
-      case FlsCommitMessage(files, lengths, _) => files.zip(lengths) // dir-relative paths
+      case FlsCommitMessage(files, lengths, _, _) => files.zip(lengths) // dir-relative paths
       case _ => Array.empty[(String, Long)]
     }.toMap
     // per-file stats JSON by rel path (manifest-level pruning); absent
     // for the driver-side empty-write and legacy messages
     val committedStats: Map[String, String] = messages.flatMap {
-      case FlsCommitMessage(files, _, stats) if stats.length == files.length =>
+      case FlsCommitMessage(files, _, stats, _) if stats.length == files.length =>
         files.zip(stats).filter(_._2 != null)
       case _ => Array.empty[(String, String)]
     }.toMap
     if (committedLen.isEmpty && skipEmptyCommit &&
         graft.fls.FlsFile.listDataStatuses(dir, conf).nonEmpty) {
-      // an idle trigger on a populated table: clean our staging (a prior
-      // attempt of this epoch may have staged files) and do nothing. In
-      // manifest mode uncommitted final-named junk is invisible anyway
-      // (vacuum reclaims it) — a recursive walk per idle trigger would
-      // be an O(table) listing tax on an otherwise O(1) no-op.
-      if (!manifestMode)
-        walkManaged(fs, dir) { (s, _) =>
-          if (s.getPath.getName.contains(s"-$writeId-"))
-            try fs.delete(s.getPath, false) catch { case _: Throwable => () }
-        }
+      // an idle trigger on a populated table: nothing to publish; drop
+      // whatever a prior attempt of this epoch staged
       FlsCommit.removeStaging(fs, dir, writeId)
       return
     }
@@ -1782,34 +1787,21 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       FlsCommit.removeStaging(fs, dir, writeId)
       return
     }
-    if (committedLen.isEmpty && overwriteFilters.isEmpty && replaceFilesThunk.isEmpty) {
-      // empty result set: write one schema-only (zero row group) file so
-      // a later read sees the schema instead of "no .fls files" — the
-      // DSv2 analog of parquet's empty-write behavior. Staged and
-      // renamed like every other file: a driver killed mid-write must
-      // not leave a truncated final-named file. (A partitioned empty
-      // write keeps only the DATA schema — there are no paths to carry
-      // the partition values of zero rows.)
-      val name = f"part-${0}%05d-$writeId-${0}%04d.fls"
-      val stage = new Path(new Path(new Path(dir, FlsCommit.TempDirName), writeId), "driver")
-      val tmp = new Path(stage, name)
-      val w = new FlsFileWriter(tmp, conf,
-        Format.physicalColumns(
-          info.schema().fields.filterNot(f => partitionBy.contains(f.name)).toSeq),
-        inlineFooter)
-      w.close()
-      val renames = Seq(tmp -> name) ++
-        (if (inlineFooter) Nil else Seq(graft.fls.FlsFile.footerPath(tmp) -> (name + ".footer")))
-      renames.foreach { case (src, dstName) =>
-        val dst = new Path(dir, dstName)
-        if (fs.exists(dst)) fs.delete(dst, false)
-        if (!fs.rename(src, dst))
-          throw new java.io.IOException(s"fls commit: rename $src -> $dst failed")
-      }
-      committedLen = renames.map { case (_, dstName) =>
-        dstName -> (if (dstName.endsWith(".fls")) w.fileLength else -1L)
-      }.toMap
+    // staged (rename-mode) files become visible here and only here:
+    // exactly the files the messages name, from the attempts that
+    // committed. An empty result set adds one schema-only file so a
+    // later read sees the schema instead of "no .fls files" — the DSv2
+    // analog of parquet's empty-write behavior.
+    val staged = messages.toSeq.flatMap {
+      case FlsCommitMessage(files, _, _, staging) if staging != null =>
+        files.toSeq.map(rel => new Path(staging, rel) -> rel)
+      case _ => Nil
     }
+    val emptyFile =
+      if (committedLen.isEmpty && overwriteFilters.isEmpty && replaceFilesThunk.isEmpty)
+        stageSchemaOnly(conf, dir, f"part-${0}%05d-$writeId-${0}%04d.fls")
+      else Nil
+    committedLen ++= FlsCommit.publish(fs, dir, staged ++ emptyFile)
     val committed = committedLen.keySet
 
     /** Row-level replace set as dir-relative paths. */
@@ -1898,10 +1890,12 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
                 committed.contains(e.rel) || e.rel.contains(s"-$writeId-"))
               case None =>
                 // appending onto a pre-manifest (listing-mode) table: seed
-                // the manifest from one last recursive listing
+                // the manifest from one last recursive listing — without
+                // this job's own uncommitted attempt files
                 val seeded = scala.collection.mutable.ArrayBuffer[graft.fls.FlsManifest.Entry]()
                 walkManaged(fs, dir) { (s, rel) =>
-                  if (rel.endsWith(".fls") && !committed.contains(rel))
+                  if (rel.endsWith(".fls") && !committed.contains(rel) &&
+                      !rel.contains(s"-$writeId-"))
                     seeded += graft.fls.FlsManifest.Entry(rel, s.getLen, s.getModificationTime)
                 }
                 seeded.toSeq
@@ -1997,7 +1991,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         graft.fls.FlsManifest.commit(fs, dir, writeId, conf,
           op = manifestOp, ref = branch)(fullMerge)
     }
-    if (epochDeltaRemoved.isDefined) {
+    def cleanup(): Unit = if (epochDeltaRemoved.isDefined) {
       // O(delta) epoch cleanup: delete exactly the crashed prior
       // attempt's published files + their sidecars (the entries the
       // marker-path commit dropped) — a recursive table walk per
@@ -2014,14 +2008,12 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
           try fs.delete(new Path(dir, r), false) catch { case _: Throwable => () })
       }
     } else {
+      val listed = scala.collection.mutable.ArrayBuffer[(org.apache.hadoop.fs.FileStatus, String)]()
+      walkManaged(fs, dir) { (s, rel) => listed += ((s, rel)) }
       val doomedNow: Set[String] =
         if (manifestMode) Set.empty
-        else {
-          val rels = scala.collection.mutable.ArrayBuffer[String]()
-          walkManaged(fs, dir) { (_, rel) => if (rel.endsWith(".fls")) rels += rel }
-          doomedAmong(rels.toSeq)
-        }
-      walkManaged(fs, dir) { (s, rel) =>
+        else doomedAmong(listed.collect { case (_, rel) if rel.endsWith(".fls") => rel }.toSeq)
+      listed.foreach { case (s, rel) =>
         if (!committed.contains(rel)) {
           val thisJobs = s.getPath.getName.contains(s"-$writeId-")
           val doomed = doomedNow.contains(rel) ||
@@ -2037,101 +2029,59 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         }
       }
       if (!manifestMode && doomedNow.nonEmpty &&
-          graft.fls.FlsFile.listDataStatuses(dir, conf).isEmpty) {
+          graft.fls.FlsFile.listDataStatuses(dir, conf).isEmpty)
         // a filter overwrite with zero new rows can empty the table —
         // leave it readable, like every other emptying path
-        val p = new Path(dir, f"part-${0}%05d-$writeId-${9999}%04d.fls")
-        val w = new FlsFileWriter(p, conf,
-          Format.physicalColumns(
-            info.schema().fields.filterNot(f => partitionBy.contains(f.name)).toSeq),
-          inlineFooter = true)
-        w.close()
-      }
+        FlsCommit.publish(fs, dir,
+          stageSchemaOnly(conf, dir, f"part-${0}%05d-$writeId-${9999}%04d.fls"))
     }
-    if (!manifestMode)
-      // a rename-mode write over a former manifest table reverts it to
-      // listing mode — a stale manifest must not shadow the new files.
-      // But files a crashed manifest-mode job left behind at final names
-      // were only invisible BECAUSE the manifest did not vouch for them
-      // (partial files would fail footer parsing; complete-but-
-      // uncommitted files would silently add rows once listing becomes
-      // the source of truth) — so sweep everything the old manifest
-      // doesn't name before deleting it. Sidecar footers are vouched
-      // for by their data file (the manifest names only `.fls`).
-      scala.util.Try(graft.fls.FlsManifest.read(fs, dir)) match {
-        case scala.util.Success(Some(old)) =>
-          // APPEND over a DV'd manifest table must not revert to
-          // listing mode: listing cannot serve delete vectors, so the
-          // kept old files would RESURRECT their deleted rows. (A
-          // truncating overwrite is fine — nothing old survives.)
-          require(doTruncate || !old.exists(e =>
-              graft.fls.FlsFileStats.dvOf(e.stats).isDefined),
-            "fls: a rename-mode append over a merge-on-read table would " +
-              "resurrect delete-vectored rows — write with " +
-              "commit_mode=manifest, or compact the table first")
-          val named = old.map(_.rel).toSet
-          // a concurrent rename-mode job's task-committed files are not
-          // vouched by the old manifest either — files of any writeId
-          // with a LIVE staging tree are that job's, not crashed junk
-          val inFlight: Set[String] = {
-            val td = new Path(dir, FlsCommit.TempDirName)
-            try fs.listStatus(td).filter(_.isDirectory).map(_.getPath.getName).toSet
-            catch { case _: java.io.FileNotFoundException => Set.empty }
-          }
-          def vouched(rel: String): Boolean =
-            named.contains(rel) ||
-              (rel.endsWith(".footer") && named.contains(rel.stripSuffix(".footer")))
-          walkManaged(fs, dir) { (s, rel) =>
-            val live = inFlight.exists(w => s.getPath.getName.contains(s"-$w-"))
-            if (!vouched(rel) && !committed.contains(rel) && !live)
-              try fs.delete(s.getPath, false) catch { case _: Throwable => () }
-          }
-          graft.fls.FlsManifest.delete(fs, dir)
-        case scala.util.Success(None) => ()
-        case scala.util.Failure(_) =>
-          // corrupt manifest: we cannot know what it vouched for, so
-          // sweep nothing — but DO delete it (self-heal to listing mode,
-          // the pre-existing behavior) and say loudly that uncommitted
-          // junk it may have been hiding can now surface
-          org.slf4j.LoggerFactory.getLogger(getClass).warn(
-            s"fls: deleting CORRUPT manifest at $dir during rename-mode commit — " +
-              "files it may have been hiding (crashed manifest-job leftovers) " +
-              "are now visible to listing readers; validate the table")
-          graft.fls.FlsManifest.delete(fs, dir)
-      }
+    // In manifest mode the publish above IS the commit: a throw from here
+    // on would make Spark abort a write readers already see, so cleanup
+    // is best effort (what it leaves, the manifest hides). In listing
+    // mode the deletes are part of the commit and must succeed.
+    if (manifestMode) FlsCommit.bestEffort(s"cleanup after publishing $dir")(cleanup())
+    else cleanup()
     FlsCommit.removeStaging(fs, dir, writeId)
     FlsCommit.sweepOrphans(fs, dir, writeId, stagingTtlMs)
   }
 
+  /** Writes a schema-only (zero row group) file into this job's driver
+    * staging dir, to be published under `name` like every task file: a
+    * driver killed mid-write leaves no truncated final-named file. (A
+    * partitioned table keeps only the DATA schema — there are no paths
+    * to carry the partition values of zero rows.) */
+  private def stageSchemaOnly(conf: Configuration, dir: Path,
+      name: String): Seq[(Path, String)] = {
+    val tmp = new Path(new Path(new Path(new Path(dir, FlsCommit.TempDirName),
+      writeId), "driver"), name)
+    new FlsFileWriter(tmp, conf,
+      Format.physicalColumns(
+        info.schema().fields.filterNot(f => partitionBy.contains(f.name)).toSeq),
+      inlineFooter).close()
+    (tmp -> name) +:
+      (if (inlineFooter) Nil else Seq(graft.fls.FlsFile.footerPath(tmp) -> (name + ".footer")))
+  }
+
+  /** Only the job commit moves staged files to final names, and only the
+    * ones its messages name: a message-named final whose staged copy is
+    * gone is one this job moved before it failed, and is rolled back.
+    * Every other final-named file is left alone — a retried epoch's
+    * prior attempt published it, another job owns it, or it is a
+    * direct (manifest-mode) write no manifest names, which vacuum
+    * reclaims. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val conf = hadoopConf
     val dir = new Path(path)
-    val fs = dir.getFileSystem(conf)
-    if (writeIdOverride.isDefined) {
-      // STREAMING epoch abort must never delete final-named files: in
-      // rename mode the deterministic names may BE a prior attempt's
-      // data that a published manifest still names or a listing reader
-      // already sees (deleting them strands manifest entries / loses
-      // visible rows); in manifest mode uncommitted files are invisible
-      // anyway. The epoch's next attempt replaces the names on task
-      // commit and its job commit reconciles the exact set — leftover
-      // junk is bounded by one epoch and converges on the next success.
-      try FlsCommit.removeStaging(fs, dir, writeId) catch { case _: Throwable => () }
-      return
-    }
+    val fs = dir.getFileSystem(hadoopConf)
     messages.foreach {
-      case FlsCommitMessage(files, _, _) =>
-        files.foreach(f =>
-          try fs.delete(new Path(dir, f), false) catch { case _: Throwable => () })
+      case FlsCommitMessage(files, _, _, staging) if staging != null =>
+        files.foreach { rel =>
+          FlsCommit.bestEffort(s"rolling back $rel under $dir") {
+            if (!fs.exists(new Path(staging, rel))) fs.delete(new Path(dir, rel), false)
+          }
+        }
       case _ => ()
     }
-    // Any file of this writeId outside the commit messages (crashed
-    // mid-commit) plus the whole staging tree.
-    walkManaged(fs, dir) { (s, _) =>
-      if (s.getPath.getName.contains(s"-$writeId-"))
-        try fs.delete(s.getPath, false) catch { case _: Throwable => () }
-    }
-    try FlsCommit.removeStaging(fs, dir, writeId) catch { case _: Throwable => () }
+    FlsCommit.removeStaging(fs, dir, writeId)
   }
 }
 
@@ -2153,12 +2103,13 @@ case class FlsWriterFactory(
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     // taskId is unique per task ATTEMPT, so speculative twins stage to
-    // disjoint temp dirs and the commit coordinator picks one winner;
-    // the writeId level keeps CONCURRENT JOBS' staging trees disjoint
-    // (commit/abort only ever delete their own writeId subtree). In
-    // direct (manifest) mode the taskId goes INTO the final file name,
-    // so twins write disjoint final files and only the committed
-    // attempt's names enter the manifest.
+    // disjoint temp dirs and the job commit publishes only the files of
+    // the attempt the commit coordinator let commit; the writeId level
+    // keeps CONCURRENT JOBS' staging trees disjoint (commit/abort only
+    // ever delete their own writeId subtree). In direct (manifest) mode
+    // the taskId goes INTO the final file name, so twins write disjoint
+    // final files and only the committed attempt's names enter the
+    // manifest.
     new FlsDataWriter(dir, schema, rowGroupSize, rowGroupsPerFile,
       conf.value,
       if (directWrite) f"part-$partitionId%05d-$writeId-$taskId"

@@ -33,12 +33,15 @@ import FlsDataWriter._
   * finalize/abort pair, /root/reference/src/writer/fls_writer.cpp:332-347):
   * every file is created under `dir/_temporary/<writeId>/<taskUid>/<rel>`
   * — a path unique to this task ATTEMPT, so a speculative duplicate never
-  * writes the same bytes stream. On task commit (authorized once per
-  * partition by Spark's OutputCommitCoordinator) the temp files are
-  * renamed to their deterministic final names; `abort` deletes every
-  * temp file this attempt produced, not just the open one. Commit
-  * messages carry dir-RELATIVE paths so the job commit's exact-set
-  * reconciliation works through partition subdirectories. */
+  * writes the same bytes stream. Task commit (authorized once per
+  * partition by Spark's OutputCommitCoordinator) only closes the files:
+  * they stay staged, and its message names their dir-RELATIVE final
+  * paths plus the attempt's staging directory. Files become visible
+  * only at job commit, which moves exactly the files its messages name
+  * ([[FlsCommit.publish]]) — the shape of Hadoop's `FileOutputCommitter`
+  * v1, so a task that commits after its job aborted publishes nothing.
+  * `abort` deletes every temp file this attempt produced, not just the
+  * open one. */
 class FlsDataWriter(
     dir: String,
     schema: StructType,
@@ -541,29 +544,16 @@ class FlsDataWriter(
     (if (flat != null) flat else bucketFor(row)).add(row)
   }
 
-  /** Rename temp files to final names. Spark's commit coordinator
-    * guarantees exactly one attempt per partition reaches here, so the
-    * deterministic final names cannot be raced; a leftover final from a
-    * crashed-mid-commit prior attempt of the SAME partition is replaced. */
+  /** Close every file and name them. Nothing is renamed here: staged
+    * files stay under this attempt's staging directory until the job
+    * commit publishes them (direct-write files are already at their
+    * final, attempt-unique names). */
   override def commit(): WriterCommitMessage = {
     buckets.valuesIterator.foreach(_.finish())
-    val finals =
-      if (directWrite) written.map(_._2) // already at final names
-      else {
-        val fs = tempDir.getFileSystem(conf)
-        val out = written.map { case (tmp, finalRel) =>
-          val dst = new Path(dir, finalRel)
-          if (fs.exists(dst)) fs.delete(dst, false)
-          else fs.mkdirs(dst.getParent) // first file of a new partition dir
-          if (!fs.rename(tmp, dst))
-            throw new java.io.IOException(s"fls commit: rename $tmp -> $dst failed")
-          finalRel
-        }
-        try fs.delete(tempDir, true) catch { case _: Throwable => () }
-        out
-      }
+    val finals = written.map(_._2)
     FlsCommitMessage(finals.toArray, finals.map(lengths.getOrElse(_, -1L)).toArray,
-      finals.map(fileStats.getOrElse(_, null)).toArray)
+      finals.map(fileStats.getOrElse(_, null)).toArray,
+      if (directWrite) null else tempDir.toString)
   }
 
   /** Delete EVERY file this attempt wrote (rotated ones included), then
@@ -603,11 +593,45 @@ private[connector] object FlsDataWriter {
 object FlsCommit {
   val TempDirName = "_temporary"
 
+  private lazy val log = org.slf4j.LoggerFactory.getLogger(getClass)
+
+  /** Moves staged files to their dir-relative final names under `root` —
+    * the one step that makes a staged data file visible. Creates each
+    * missing parent directory, replaces a file already at the final name
+    * (a retried streaming epoch reuses its names), and fails loudly when
+    * the file system refuses a rename. Returns each rel with its
+    * published length. */
+  def publish(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      staged: Seq[(Path, String)]): Seq[(String, Long)] = {
+    staged.map { case (_, rel) => new Path(root, rel).getParent }.distinct
+      .foreach(fs.mkdirs)
+    staged.map { case (src, rel) =>
+      val dst = new Path(root, rel)
+      if (!fs.rename(src, dst) &&
+          !(fs.exists(dst) && fs.delete(dst, false) && fs.rename(src, dst)))
+        throw new java.io.IOException(s"fls commit: rename $src -> $dst failed")
+      rel -> fs.getFileStatus(dst).getLen
+    }
+  }
+
+  /** Runs a cleanup step that must not fail its caller — one that runs
+    * after a commit point, where a throw would make Spark abort a write
+    * that already committed. A failure is logged and leaves junk that
+    * readers never see. */
+  def bestEffort(what: String)(step: => Unit): Unit =
+    try step
+    catch {
+      case e: Exception => log.warn(s"fls: $what failed; continuing", e)
+    }
+
   /** Remove ONE job's staging subtree (`_temporary/<writeId>`), then the
     * shared `_temporary` root only if now empty — concurrent jobs'
-    * staged files are never touched. */
+    * staged files are never touched. Best effort: the orphan sweep
+    * reclaims a tree this leaves. */
   def removeStaging(fs: org.apache.hadoop.fs.FileSystem, dir: Path, writeId: String): Unit = {
-    fs.delete(new Path(new Path(dir, TempDirName), writeId), true)
+    bestEffort(s"removing staging of $writeId under $dir") {
+      fs.delete(new Path(new Path(dir, TempDirName), writeId), true)
+    }
     try fs.delete(new Path(dir, TempDirName), false) catch { case _: Throwable => () }
   }
 
@@ -632,7 +656,7 @@ object FlsCommit {
             newestMtime(fs, s.getPath) < cutoff) {
           try {
             fs.delete(s.getPath, true)
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
+            log.warn(
               s"fls: swept orphaned staging tree ${s.getPath} — no write " +
                 s"activity (incl. heartbeats) for over $ttlMs ms; if that job " +
                 "was alive, raise the staging_ttl_hours writer option")
@@ -658,9 +682,12 @@ object FlsCommit {
 
 /** `files` are dir-RELATIVE final paths (partition subdirs included);
   * `lengths` align with `files` (data-file byte sizes for the manifest;
-  * -1 for sidecar footer entries). */
-/** `stats(i)` is the per-file stats JSON for `files(i)` (null when the
-  * writer had nothing prunable; always null at sidecar-footer slots). */
+  * -1 for sidecar footer entries). `stats(i)` is the per-file stats JSON
+  * for `files(i)` (null when the writer had nothing prunable; always null
+  * at sidecar-footer slots). `staging` is the attempt's staging
+  * directory, holding `files` at the same relative paths until the job
+  * commit publishes them; null for direct (manifest-mode) writes, whose
+  * files are already at their final names. */
 case class FlsCommitMessage(files: Array[String], lengths: Array[Long],
-    stats: Array[String] = Array.empty)
+    stats: Array[String] = Array.empty, staging: String = null)
   extends WriterCommitMessage

@@ -402,14 +402,25 @@ object FlsDelete {
           StructField(FlsVirtual.FileIndex, LongType, nullable = false))
     }
 
+    /** Fills a fresh stage directory, moves its files to table-root
+      * names, then drops the directory. */
+    def publishFrom(fill: Path => Unit): Seq[(String, Long)] = {
+      val stageDir = new Path(root, s"_delete_${UUID.randomUUID()}")
+      try {
+        fill(stageDir)
+        FlsCommit.publish(fs, root, FlsFile.listDataStatuses(stageDir, conf)
+          .map(st => st.getPath -> st.getPath.getName))
+      } finally try fs.delete(stageDir, true) catch { case _: Throwable => () }
+    }
+
     /** Schema-only file so an emptied table still reads (same contract
-      * as an empty write). */
-    def writeSchemaOnly(files: Seq[Path]): Path = {
-      val p = new Path(root, f"part-${0}%05d-${UUID.randomUUID()}-${0}%04d.fls")
-      val w = new FlsFileWriter(p, conf, Format.physicalColumns(dataFields(files)),
-        inlineFooter = true)
-      w.close()
-      p
+      * as an empty write), staged and published like every other file. */
+    def writeSchemaOnly(files: Seq[Path]): FlsManifest.Entry = {
+      val (rel, len) = publishFrom { d =>
+        new FlsFileWriter(new Path(d, f"part-${0}%05d-${UUID.randomUUID()}-${0}%04d.fls"),
+          conf, Format.physicalColumns(dataFields(files)), inlineFooter = true).close()
+      }.head
+      FlsManifest.Entry(rel, len, 0L)
     }
 
     /** Rewrite `targets` without the matching rows into `outDir`,
@@ -649,13 +660,7 @@ object FlsDelete {
                   })
                 }
               }
-              if (merged.nonEmpty) merged
-              else {
-                val pth = writeSchemaOnly(files)
-                val st2 = fs.getFileStatus(pth)
-                Seq(FlsManifest.Entry(pth.getName, st2.getLen,
-                  st2.getModificationTime))
-              }
+              if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files))
             }
           } catch {
             case e: Throwable =>
@@ -668,21 +673,13 @@ object FlsDelete {
         }
         // ---- copy-on-write: stage replacement files invisibly, then
         // publish ONE version
-        val staged = scala.collection.mutable.ArrayBuffer[(String, Long, Long)]()
-        val stageDir = new Path(root, s"_delete_${UUID.randomUUID()}")
-        if (rewriteTargets.nonEmpty) {
-          val dvOf = frozenEntries.flatMap(e =>
-            dvAbs(e).map(a => new Path(root, e.rel).toString -> a)).toMap
-          rewriteTo(rewriteTargets, p0.survivors, stageDir, dvOf)
-          FlsFile.listDataStatuses(stageDir, conf).foreach { st =>
-            val dst = new Path(root, st.getPath.getName)
-            if (!fs.rename(st.getPath, dst))
-              throw new java.io.IOException(s"fls delete: rename ${st.getPath} -> $dst failed")
-            val s2 = fs.getFileStatus(dst)
-            staged += ((dst.getName, s2.getLen, s2.getModificationTime))
+        val staged =
+          if (rewriteTargets.isEmpty) Nil
+          else {
+            val dvOf = frozenEntries.flatMap(e =>
+              dvAbs(e).map(a => new Path(root, e.rel).toString -> a)).toMap
+            publishFrom(rewriteTo(rewriteTargets, p0.survivors, _, dvOf))
           }
-          try fs.delete(stageDir, true) catch { case _: Throwable => () }
-        }
         try {
           FlsManifest.commit(fs, root, UUID.randomUUID().toString, conf,
               op = "delete") { (curV, cur) =>
@@ -731,21 +728,16 @@ object FlsDelete {
             val kept = entries.filter { e =>
               pNow.cls(new Path(root, e.rel).toString) == Keep
             }
-            val merged = kept ++ staged.map { case (rel, len, mtime) =>
-              FlsManifest.Entry(rel, len, mtime)
+            val merged = kept ++ staged.map { case (rel, len) =>
+              FlsManifest.Entry(rel, len, 0L)
             }
-            if (merged.nonEmpty) merged
-            else {
-              val p = writeSchemaOnly(files)
-              val st = fs.getFileStatus(p)
-              Seq(FlsManifest.Entry(p.getName, st.getLen, st.getModificationTime))
-            }
+            if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files))
             // dropped/rewritten inputs stay on disk for vacuum
           }
         } catch {
           case e: Throwable =>
             // unpublished replacements are junk; vacuum or best-effort now
-            staged.foreach { case (rel, _, _) =>
+            staged.foreach { case (rel, _) =>
               try fs.delete(new Path(root, rel), false) catch { case _: Throwable => () }
             }
             throw e
@@ -760,16 +752,8 @@ object FlsDelete {
         val doomed = files.filter(f => p0.cls(f.toString) == Drop)
         val rewriteTargets = files.filter(f => p0.cls(f.toString) == Straddle)
         // replacements land (as a normal append) BEFORE originals go
-        if (rewriteTargets.nonEmpty) {
-          val stageDir = new Path(root, s"_delete_${UUID.randomUUID()}")
-          rewriteTo(rewriteTargets, p0.survivors, stageDir)
-          FlsFile.listDataStatuses(stageDir, conf).foreach { st =>
-            val dst = new Path(root, st.getPath.getName)
-            if (!fs.rename(st.getPath, dst))
-              throw new java.io.IOException(s"fls delete: rename ${st.getPath} -> $dst failed")
-          }
-          try fs.delete(stageDir, true) catch { case _: Throwable => () }
-        }
+        if (rewriteTargets.nonEmpty)
+          publishFrom(rewriteTo(rewriteTargets, p0.survivors, _))
         val removals = doomed ++ rewriteTargets
         if (removals.size == files.size &&
             FlsFile.listDataFiles(root, conf).size == removals.size)

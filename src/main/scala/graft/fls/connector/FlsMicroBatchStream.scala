@@ -169,8 +169,8 @@ class FlsMicroBatchStream(
 
   /** All currently STABLE files: listed (manifest-aware), excluding
     * files of rename-mode jobs whose staging tree still exists — a file
-    * is visible at its final name from TASK commit but deletable until
-    * JOB commit (abort rollback, stale-attempt sweep), so it is
+    * is visible at its final name once its job commit publishes it but
+    * deletable until that commit ends (abort rollback), so it is
     * deferred to a later trigger instead of durably logged while it may
     * yet vanish. (Manifest tables never hit this: only published files
     * list at all.)

@@ -17,8 +17,8 @@ import graft.fls.connector._
 /** Write-commit protocol under task retry + speculative execution — the
   * cluster analog of the reference writer's finalize/abort guarantees
   * (/root/reference/src/writer/fls_writer.cpp:332-347). Tasks stage into
-  * attempt-unique temp dirs, rename on task commit, and the job commit
-  * finalizes exactly the committed file set. */
+  * attempt-unique temp dirs and leave their files there on task commit;
+  * the job commit publishes exactly the committed file set. */
 class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -104,10 +104,10 @@ class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val msgOk = ok.commit()
 
     // attempt 11 of partition 1 rotates two files, "crashes" after its
-    // renames (commit message lost — never reaches the driver)
+    // task commit (commit message lost — never reaches the driver)
     val crashed = new FlsDataWriterProbe(dir, factory, 1, 11L)
     (1L to (2L * Format.VecSize)).foreach(i => crashed.write(row(i + 100)))
-    crashed.commit() // renames happen; message discarded
+    crashed.commit() // files closed in staging; message discarded
 
     // retry attempt 12 produces FEWER files (one short row group)
     val retry = factory.createWriter(1, 12L)
@@ -153,6 +153,52 @@ class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     batch.abort(Array(msg, null)) // null ≙ a task that never committed
     assert(flsFiles(dir) == before, "job abort must restore the pre-job file set")
     assert(readLongs(dir) == (1L to 5L))
+  }
+
+  test("a task that commits after its job aborted publishes nothing") {
+    val dir = Files.createTempDirectory("fls-spec-late").toString
+    spark.range(1, 6).selectExpr("id AS v").write.format("fls").mode("append").save(dir)
+    val before = flsFiles(dir)
+
+    val batch = new FlsBatchWrite(writeInfo(dir), doTruncate = false)
+    val factory = batch.createBatchWriterFactory(null)
+    // authorised to commit just before another task failed: its rows are
+    // still buffered (less than one row group), so no file exists yet
+    val late = factory.createWriter(0, 1L)
+    (1L to 10L).foreach(i => late.write(row(i)))
+    batch.abort(Array(null)) // the failed task's slot; the late one has not committed
+    late.commit()            // writes its file only now, after the abort
+    assert(flsFiles(dir) == before, "a task committed after the abort left a visible file")
+    assert(readLongs(dir) == (1L to 5L))
+  }
+
+  test("a published manifest survives a cleanup failure after the publish") {
+    val dir = Files.createTempDirectory("fls-spec-cleanup").toString
+    spark.range(1, 6).selectExpr("id AS v").write.format("fls").mode("append")
+      .option("commit_mode", "manifest").save(dir)
+    spark.conf.set("fs.file.impl", classOf[DeleteFailingFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    try {
+      val batch = new FlsBatchWrite(writeInfo(dir, Map("commit_mode" -> "manifest")),
+        doTruncate = false)
+      val factory = batch.createBatchWriterFactory(null)
+      val a = factory.createWriter(0, 1L)
+      val twin = factory.createWriter(0, 2L) // its final-named files are junk to clean
+      (11L to 50L).foreach { i => a.write(row(i)); twin.write(row(i + 1000)) }
+      val msg = a.commit()
+      twin.commit() // denied by the coordinator in a real job: message never sent
+      DeleteFailingFs.armed = true
+      val failure =
+        try { batch.commit(Array(msg)); None }
+        catch { case e: Exception => Some(e) }
+        finally DeleteFailingFs.armed = false
+      failure.foreach(_ => batch.abort(Array(msg))) // what Spark does when commit throws
+      assert(failure.isEmpty, s"job commit failed after publishing its manifest: $failure")
+      assert(readLongs(dir) == (1L to 5L) ++ (11L to 50L))
+    } finally {
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
   }
 
   test("concurrent jobs appending to one directory never touch each other's staging") {
@@ -233,7 +279,7 @@ class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
 
 /** Test-only handle that drives a real writer for (partitionId, taskId)
   * but lets the test discard its commit message — simulating a task that
-  * crashed after renaming. */
+  * crashed after its task commit. */
 private class FlsDataWriterProbe(
     dir: String,
     factory: org.apache.spark.sql.connector.write.DataWriterFactory,
@@ -242,4 +288,16 @@ private class FlsDataWriterProbe(
   private val w = factory.createWriter(partitionId, taskId)
   def write(r: InternalRow): Unit = w.write(r)
   def commit(): WriterCommitMessage = w.commit()
+}
+
+/** Local file system whose `delete` fails while armed — a store that
+  * refuses cleanup after a commit point. */
+class DeleteFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def delete(p: Path, recursive: Boolean): Boolean =
+    if (DeleteFailingFs.armed) throw new java.io.IOException(s"injected delete failure: $p")
+    else super.delete(p, recursive)
+}
+
+object DeleteFailingFs {
+  @volatile var armed = false
 }

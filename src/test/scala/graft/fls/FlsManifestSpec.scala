@@ -102,6 +102,20 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       s"uncommitted attempt files survived outside the manifest: ${leftover.toSeq}")
   }
 
+  test("a job's first manifest commit leaves its own uncommitted attempt files out") {
+    val dir = Files.createTempDirectory("fls-man-seed-twin").toString
+    val batch = new FlsBatchWrite(writeInfo(dir), doTruncate = false)
+    val factory = batch.createBatchWriterFactory(null)
+    val a = factory.createWriter(0, 1L)
+    val b = factory.createWriter(0, 2L)
+    (1L to 100L).foreach { i => a.write(row(i)); b.write(row(i + 1000)) }
+    val msg = a.commit()
+    b.commit() // the losing twin closed its final-named file; no message reaches the job
+    // no manifest yet: the commit seeds one from a listing that sees b's file
+    batch.commit(Array(msg))
+    assert(readLongs(dir) == (1L to 100L))
+  }
+
   test("driver crash before job commit leaves the previous table state visible") {
     val dir = Files.createTempDirectory("fls-man-crash").toString
     val sp = spark; import sp.implicits._
@@ -155,20 +169,35 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readLongs(dir) == (1L to 20L))
   }
 
-  test("rename-mode write over a manifest table reverts it to listing mode") {
-    val dir = Files.createTempDirectory("fls-man-revert").toString
+  test("a plain write over a manifest table publishes a version") {
+    val dir = Files.createTempDirectory("fls-man-plain").toString
     val sp = spark; import sp.implicits._
     (1L to 10L).toDF("v").write.format("fls")
       .mode("overwrite").option("commit_mode", "manifest").save(dir)
-    (21L to 30L).toDF("v").write.format("fls").mode("overwrite").save(dir)
     val p = new Path(dir)
-    assert(FlsManifest.read(p.getFileSystem(spark.sessionState.newHadoopConf()), p).isEmpty,
-      "stale manifest must not shadow a rename-mode overwrite")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val (v0, _) = FlsManifest.readVersioned(fs, p).get
+    (21L to 30L).toDF("v").write.format("fls").mode("overwrite").save(dir)
+    val (v1, _) = FlsManifest.readVersioned(fs, p).get
+    assert(v1 == v0 + 1, "the overwrite must commit through the manifest")
     assert(readLongs(dir) == (21L to 30L))
+    // history and time travel survive the plain write
+    val pinned = spark.read.format("fls").option("manifest_version", v0.toString)
+      .load(dir).select("v").collect().map(_.getLong(0)).toSeq.sorted
+    assert(pinned == (1L to 10L), "the pre-overwrite version must stay readable")
+    // asking for listing mode on a manifest table fails loudly
+    val e = intercept[Exception] {
+      (31L to 32L).toDF("v").write.format("fls").mode("append")
+        .option("commit_mode", "rename").save(dir)
+    }
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("fls: commit_mode=rename")), e)
+    assert(readLongs(dir) == (21L to 30L))
+    assert(FlsManifest.readVersioned(fs, p).get._1 == v1)
   }
 
-  test("rename-mode append over a manifest table sweeps manifest-shadowed junk") {
-    val dir = Files.createTempDirectory("fls-man-revert-junk").toString
+  test("a plain write over a manifest table keeps crashed-job junk hidden") {
+    val dir = Files.createTempDirectory("fls-man-plain-junk").toString
     val sp = spark; import sp.implicits._
     (1L to 10L).toDF("v").coalesce(1).write.format("fls")
       .mode("overwrite").option("commit_mode", "manifest").save(dir)
@@ -185,16 +214,14 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       Array.fill[Byte](100)(0x42))
     assert(readLongs(dir) == (1L to 10L), "manifest must hide the junk")
 
-    // rename-mode APPEND reverts to listing mode: the junk must be
-    // swept, or listing readers would crash on the partial file and
-    // silently count the uncommitted rows
+    // a plain APPEND publishes a new version: the junk stays unnamed, so
+    // readers neither crash on the partial file nor count the
+    // uncommitted rows, and the table keeps its history
     (11L to 20L).toDF("v").write.format("fls").mode("append").save(dir)
     val p = new Path(dir)
-    assert(FlsManifest.read(p.getFileSystem(spark.sessionState.newHadoopConf()), p).isEmpty)
-    assert(!new java.io.File(dir, "part-00000-crashedjob-77.fls").exists(),
-      "uncommitted complete file survived the revert to listing mode")
-    assert(!new java.io.File(dir, "part-00001-crashedjob-77.fls").exists(),
-      "partial file survived the revert to listing mode")
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    assert(FlsManifest.versionsWithTimes(fs, p).size == 2,
+      "the append must add a version on top of the first")
     assert(readLongs(dir) == (1L to 20L))
   }
 

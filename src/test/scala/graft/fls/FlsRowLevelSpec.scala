@@ -171,12 +171,10 @@ class FlsRowLevelSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val before = fileNames(dir)
     // end to end, the rewrite then refuses the NULL partition value: a
-    // loud failure, not a lost update plus a duplicate insert. One write
-    // task, so the job fails whole — a listing-mode task that commits
-    // while another fails can outlive the job's abort (a separate defect)
-    spark.conf.set("spark.sql.shuffle.partitions", "1")
-    val e = try intercept[Exception](merge(1L, 3L))
-      finally spark.conf.set("spark.sql.shuffle.partitions", "4")
+    // loud failure, not a lost update plus a duplicate insert. With 4
+    // write tasks a sibling may commit after the job aborted; its files
+    // stay staged, since only the job commit publishes
+    val e = intercept[Exception](merge(1L, 3L))
     assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
       .exists(t => String.valueOf(t.getMessage).contains("NULL in partition column")), e)
     assert(rows == Set((1L, "old-1"), (2L, "old-2"), (3L, "old-3")))

@@ -11,7 +11,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * configures its reader through ONE factory method (`FlsReaderFactory`'s
   * `apply`), so a read option or a pruning rule reaches every path. The
   * source guard keeps a second planner or reader configuration from
-  * returning. */
+  * returning, and keeps the one step that moves a staged data file to
+  * its final name in `FlsCommit`. */
 class FlsScanPlanGuardSpec extends AnyFunSuite {
 
   private lazy val mainSources: Map[Path, String] = {
@@ -40,5 +41,18 @@ class FlsScanPlanGuardSpec extends AnyFunSuite {
 
   test("FlsReaderFactory is constructed only by its factory method") {
     assert(sites("new FlsReaderFactory\\b") == Seq(("FlsConnector.scala", "FlsReaderFactory")))
+  }
+
+  test("a staged data file becomes visible only through FlsCommit.publish") {
+    val renames = sites("\\bfs\\.rename\\(")
+    assert(renames.contains(("FlsDataWriter.scala", "FlsCommit")))
+    // every other rename moves something that is not a data file: a
+    // catalog table's directory, a file stream's batch log, a manifest
+    // version through its compare-and-swap
+    assert(renames.filterNot(_._2 == "FlsCommit").sorted == Seq(
+      ("FlsCas.scala", ""),
+      ("FlsCatalog.scala", "FlsCatalog"),
+      ("FlsMicroBatchStream.scala", "FlsMicroBatchStream"),
+      ("FlsMicroBatchStream.scala", "FlsMicroBatchStream")))
   }
 }

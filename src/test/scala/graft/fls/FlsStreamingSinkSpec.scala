@@ -103,8 +103,8 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val sw = new FlsStreamingWrite(writeInfo())
     val factory = sw.createStreamingWriterFactory(null)
 
-    // attempt 1 of epoch 7: task commits (files renamed to final names),
-    // then the driver "crashes" before the sink's job commit
+    // attempt 1 of epoch 7: task commits (its files stay staged), then
+    // the driver "crashes" before the sink's job commit publishes them
     val crashed = factory.createWriter(0, 1L, 7L)
     (1L to 40L).foreach(i => crashed.write(row(i)))
     crashed.commit()
@@ -117,6 +117,41 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
     assert(readLongs(dir) == (101L to 140L),
       "retried epoch must replace the crashed attempt's rows, not append to them")
+  }
+
+  test("a replayed epoch that writes fewer files drops its prior attempt's extra file") {
+    val dir = Files.createTempDirectory("fls-sink-fewer").toString
+    val vSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def options() = {
+        val m = new java.util.HashMap[String, String]()
+        m.put("path", dir)
+        m.put("row_group_size", Format.VecSize.toString)
+        m.put("row_groups_per_file", "1")
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(m)
+      }
+      override def queryId(): String = "q-fewer-test"
+      override def schema() = vSchema
+    }
+    def row(v: Long) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](v))
+
+    import graft.fls.connector._
+    val sw = new FlsStreamingWrite(info)
+    val factory = sw.createStreamingWriterFactory(null)
+    // epoch 2, attempt 1: two rotated files, PUBLISHED by its job commit;
+    // the driver dies before Spark's commit log records the batch
+    val a1 = factory.createWriter(0, 1L, 2L)
+    (1L to 2L * Format.VecSize).foreach(i => a1.write(row(i)))
+    sw.commit(2L, Array(a1.commit()))
+    assert(flsCount(dir) == 2)
+    // the replay writes one short file: it replaces the first name, and
+    // the job commit's same-writeId sweep must drop the second
+    val a2 = factory.createWriter(0, 2L, 2L)
+    (1L to 60L).foreach(i => a2.write(row(i + 10000)))
+    sw.commit(2L, Array(a2.commit()))
+    assert(readLongs(dir) == (10001L to 10060L))
   }
 
   test("retried epoch converges in manifest mode too (no duplicate manifest entries)") {
