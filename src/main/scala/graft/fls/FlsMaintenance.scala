@@ -199,7 +199,7 @@ object FlsMaintenance {
       w.save(tmpDir.toString)
       // move outputs to final table-relative names (attempt-unique file
       // names can't collide); invisible until the swap below publishes
-      moved ++= publishOutputs(fs, root, tmpDir)
+      moved ++= connector.FlsCommit.publishDir(fs, root, tmpDir)
       val outEntries = moved.collect {
         case (rel, len) if rel.endsWith(".fls") => FlsManifest.Entry(rel, len, 0L)
       }.toSeq
@@ -393,7 +393,7 @@ object FlsMaintenance {
       // rows == 0 still writes (a schema-only file): the swap must
       // leave the table readable even if every subject row was deleted
       w.save(tmpDir.toString)
-      moved ++= publishOutputs(fs, root, tmpDir)
+      moved ++= connector.FlsCommit.publishDir(fs, root, tmpDir)
       val outEntries = moved.collect {
         case (rel, len) if rel.endsWith(".fls") =>
           FlsManifest.Entry(rel, len, 0L)
@@ -595,18 +595,6 @@ object FlsMaintenance {
     FlsManifest.sweepOrphanChunks(fs, root,
       ttlMs = olderThanHours * 3600L * 1000L)
     VacuumStats(deleted, bytes)
-  }
-
-  /** Moves a rewrite's outputs from its stage directory to the same
-    * table-relative names — invisible until the caller's manifest swap
-    * names them. */
-  private def publishOutputs(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      tmpDir: Path): Seq[(String, Long)] = {
-    val outputs = scala.collection.mutable.ArrayBuffer[(Path, String)]()
-    FlsFile.walkFiles(fs, tmpDir, Seq(".fls", ".fls.footer")) { (s, rel) =>
-      outputs += ((s.getPath, rel))
-    }
-    connector.FlsCommit.publish(fs, root, outputs.toSeq)
   }
 
   /** Cluster the rewrite: partitioned tables group by partition key so

@@ -1526,10 +1526,11 @@ object FlsWriteLayout {
   * (`<queryId>-e<epoch>`), so a retried epoch (driver crash between the
   * sink commit and Spark's commit log) converges instead of
   * duplicating — job commit publishes over the prior attempt's final
-  * names and deletes any other file of the same writeId, and a manifest
-  * republish drops the crashed attempt's entries. An epoch abort never
-  * touches the prior attempt's files: it deletes only files this job
-  * moved out of staging. Idle triggers on a populated table
+  * names and retires any other file of the same writeId, and a manifest
+  * republish drops the crashed attempt's entries. The prior attempt's
+  * files the commit replaces or retires wait in the job's staging tree
+  * until the commit ends, so an epoch abort puts them back and the
+  * prior attempt stays visible. Idle triggers on a populated table
   * commit nothing (no schema-only file per empty epoch). Composes with
   * `partition_by`, `commit_mode=manifest`, and the fls STREAMING READ —
   * an fls-to-fls pipeline is readStream → transform → writeStream. */
@@ -1573,15 +1574,17 @@ case class FlsStreamingWriterFactory(base: FlsWriterFactory, queryId: String)
   * `_temporary/<writeId>/<attempt>/` and leave them there on task commit
   * (see [[FlsDataWriter]]); job `commit` moves EXACTLY the files named in
   * the commit messages to their final names ([[FlsCommit.publish]]) —
-  * the one point where a staged file becomes visible — then deletes any
-  * stale same-writeId file a retried epoch's prior attempt left, and
-  * only then, for truncate mode, the files of previous jobs (so old data
-  * survives until the new data is fully committed). `abort` deletes the
-  * message-named files this job already moved, then the staging dir. */
+  * the one point where a staged file becomes visible — then sets aside
+  * any stale same-writeId file a retried epoch's prior attempt left, and
+  * only then, for truncate mode, deletes the files of previous jobs (so
+  * old data survives until the new data is fully committed). `abort`
+  * deletes the message-named files this job already moved, puts back
+  * what it set aside, then drops the staging dir. */
 class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     /** Streaming epochs pass a DETERMINISTIC id (queryId + epoch) so an
       * epoch retry converges: job commit publishes over prior-attempt
-      * final names and reconciles the exact set, and the manifest
+      * final names (setting the old files aside) and reconciles the
+      * exact set, and the manifest
       * drops prior-attempt entries of the same writeId. Batch writes
       * keep the random default. */
     writeIdOverride: Option[String] = None,
@@ -1652,20 +1655,14 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
   /** A table with a manifest always commits through it: readers plan
     * from the manifest, and only a new version keeps the table's
     * history, time travel and tags. `commit_mode` picks the mode only
-    * for a table without one. `rename` (default): tasks stage files and
-    * job commit renames them to final names — atomic per file on
-    * HDFS/local. `manifest`: tasks write attempt-unique final names
-    * directly and job commit atomically publishes `_fls_manifest`
-    * naming the exact table contents — the object-store-safe mode (see
-    * [[graft.fls.FlsManifest]]). */
-  private lazy val manifestMode: Boolean = commitMode.contains("manifest") || {
-    val dir = new Path(path)
-    val has = graft.fls.FlsManifest.exists(dir.getFileSystem(hadoopConf), dir)
-    require(!(has && commitMode.contains("rename")),
-      s"fls: commit_mode=rename on $path, which has a manifest — a " +
-        "manifest table commits through its manifest; drop the option")
-    has
-  }
+    * for a table without one. `rename` (default): job commit renames
+    * the staged files to final names — atomic per file on HDFS/local.
+    * `manifest`: job commit also atomically publishes `_fls_manifest`
+    * naming the exact table contents (see [[graft.fls.FlsManifest]]).
+    * Decided at job commit, so a job that planned before another job's
+    * first manifest commit still lands in the manifest. */
+  private def viaManifest(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
+    commitMode.contains("manifest") || graft.fls.FlsManifest.exists(fs, dir)
   private val writeId = writeIdOverride.getOrElse(UUID.randomUUID().toString)
 
   partitionBy.foreach { c =>
@@ -1691,6 +1688,18 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     val conf = hadoopConf
     val dir = new Path(path)
     dir.getFileSystem(conf).mkdirs(dir)
+    // Tasks write attempt-unique final names directly only when a
+    // manifest already hides them until a version names them — the
+    // object-store-safe path, no renames. Otherwise they stage, and
+    // nothing of this job is visible before its commit.
+    val directWrite = graft.fls.FlsManifest.exists(dir.getFileSystem(conf), dir)
+    require(!(directWrite && commitMode.contains("rename")),
+      s"fls: commit_mode=rename on $path, which has a manifest — a " +
+        "manifest table commits through its manifest; drop the option")
+    require(bloomColumns.isEmpty || directWrite || commitMode.contains("manifest"),
+      "fls: bloom_columns needs commit_mode=manifest — the sidecar pointer " +
+        "lives in manifest stats (listing-mode tables have nowhere to " +
+        "record it)")
     overwriteFilters.foreach { fls =>
       // fail BEFORE tasks run when the filter cannot decide a file;
       // commit re-checks (concurrent appends) with the same contract
@@ -1742,7 +1751,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     }
     FlsWriterFactory(path, info.schema(), rowGroupSize, rowGroupsPerFile,
       new SerializableConfiguration(conf), writeId, inlineFooter, transpose,
-      partitionBy, maxOpenPartitions, manifestMode, ndvColumns,
+      partitionBy, maxOpenPartitions, directWrite, ndvColumns,
       bloomColumns, bloomFpp)
   }
 
@@ -1751,14 +1760,13 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     * convention) the read-side listing uses. */
   private def walkManaged(fs: org.apache.hadoop.fs.FileSystem, dir: Path)(
       visit: (org.apache.hadoop.fs.FileStatus, String) => Unit): Unit =
-    graft.fls.FlsFile.walkFiles(fs, dir,
-      Seq(".fls", ".fls.footer", graft.fls.FlsDeleteVectors.Suffix,
-        graft.fls.Bloom.Suffix))(visit)
+    graft.fls.FlsFile.walkFiles(fs, dir, FlsCommit.ManagedSuffixes)(visit)
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = hadoopConf
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
+    val manifestMode = viaManifest(fs, dir)
     require(manifestMode ||
         FlsDataSource.branchRef(options) == graft.fls.FlsManifest.MainRef,
       "fls: branch writes need commit_mode=manifest — the branch IS a " +
@@ -1801,7 +1809,11 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       if (committedLen.isEmpty && overwriteFilters.isEmpty && replaceFilesThunk.isEmpty)
         stageSchemaOnly(conf, dir, f"part-${0}%05d-$writeId-${0}%04d.fls")
       else Nil
-    committedLen ++= FlsCommit.publish(fs, dir, staged ++ emptyFile)
+    // a replayed epoch reuses its names: the prior attempt's files go
+    // aside, where an abort finds them again
+    val aside = FlsCommit.asideDir(dir, writeId)
+    committedLen ++= FlsCommit.publish(fs, dir, staged ++ emptyFile,
+      writeIdOverride.map(_ => aside))
     val committed = committedLen.keySet
 
     /** Row-level replace set as dir-relative paths. */
@@ -2023,8 +2035,12 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
           // longer names them (invisible to current readers), pinned
           // VERSION AS OF readers still resolve them, vacuum reclaims
           // them past the retention horizon. Listing-mode truncate must
-          // delete eagerly — the directory IS the table there.
-          if (thisJobs || (doTruncate && !manifestMode) || doomed)
+          // delete eagerly — the directory IS the table there. In
+          // listing mode a final name of this writeId not committed
+          // here is a replayed epoch's prior attempt: it goes aside,
+          // so an abort can put it back.
+          if (thisJobs && !manifestMode) FlsCommit.setAside(fs, dir, rel, aside)
+          else if (thisJobs || (doTruncate && !manifestMode) || doomed)
             fs.delete(s.getPath, false)
         }
       }
@@ -2063,12 +2079,12 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
   }
 
   /** Only the job commit moves staged files to final names, and only the
-    * ones its messages name: a message-named final whose staged copy is
-    * gone is one this job moved before it failed, and is rolled back.
-    * Every other final-named file is left alone — a retried epoch's
-    * prior attempt published it, another job owns it, or it is a
-    * direct (manifest-mode) write no manifest names, which vacuum
-    * reclaims. */
+    * ones its messages name. Abort undoes what a failed commit did: a
+    * message-named final whose staged copy is gone is one this job moved,
+    * and is deleted; a file the commit set aside (a replayed epoch's prior
+    * attempt) moves back. Every other final-named file is left alone —
+    * another job owns it, or it is a direct write, which only happens
+    * when a manifest already hides it, and vacuum reclaims. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
     val dir = new Path(path)
     val fs = dir.getFileSystem(hadoopConf)
@@ -2081,6 +2097,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         }
       case _ => ()
     }
+    FlsCommit.restoreAside(fs, dir, FlsCommit.asideDir(dir, writeId))
     FlsCommit.removeStaging(fs, dir, writeId)
   }
 }
@@ -2106,10 +2123,10 @@ case class FlsWriterFactory(
     // disjoint temp dirs and the job commit publishes only the files of
     // the attempt the commit coordinator let commit; the writeId level
     // keeps CONCURRENT JOBS' staging trees disjoint (commit/abort only
-    // ever delete their own writeId subtree). In direct (manifest) mode
-    // the taskId goes INTO the final file name, so twins write disjoint
-    // final files and only the committed attempt's names enter the
-    // manifest.
+    // ever delete their own writeId subtree). In direct mode (the table
+    // already has a manifest) the taskId goes INTO the final file name,
+    // so twins write disjoint final files and only the committed
+    // attempt's names enter the manifest.
     new FlsDataWriter(dir, schema, rowGroupSize, rowGroupsPerFile,
       conf.value,
       if (directWrite) f"part-$partitionId%05d-$writeId-$taskId"

@@ -40,8 +40,10 @@ import FlsDataWriter._
   * only at job commit, which moves exactly the files its messages name
   * ([[FlsCommit.publish]]) — the shape of Hadoop's `FileOutputCommitter`
   * v1, so a task that commits after its job aborted publishes nothing.
-  * `abort` deletes every temp file this attempt produced, not just the
-  * open one. */
+  * With `directWrite` (set only when the table already has a manifest)
+  * files go straight to attempt-unique final names instead, which the
+  * manifest hides until a version names them. `abort` deletes every
+  * file this attempt produced, not just the open one. */
 class FlsDataWriter(
     dir: String,
     schema: StructType,
@@ -348,15 +350,11 @@ class FlsDataWriter(
 
   private val ndvAccessors = mkHashAccessors(ndvColumns, "ndv_columns")
   private val bloomAccessors = mkHashAccessors(bloomColumns, "bloom_columns")
-  require(bloomAccessors.isEmpty || directWrite,
-    "fls: bloom_columns needs commit_mode=manifest — the sidecar pointer " +
-      "lives in manifest stats (listing-mode tables have nowhere to " +
-      "record it)")
 
   private val tempDir = new Path(new Path(dir, FlsCommit.TempDirName), taskUid)
-  /** (path written, dir-relative final path). In staged (rename) mode
-    * the written path lives under `_temporary/`; in direct (manifest)
-    * mode it IS the final path — the attempt-unique name makes staging
+  /** (path written, dir-relative final path). In staged mode the
+    * written path lives under `_temporary/`; in direct mode it IS the
+    * final path — the attempt-unique name makes staging
     * unnecessary and the manifest makes uncommitted files invisible. */
   private val written = scala.collection.mutable.ArrayBuffer[(Path, String)]()
   /** Closed data-file lengths by rel path (for the manifest). */
@@ -427,15 +425,15 @@ class FlsDataWriter(
         }.toMap
         var stats = writer.fileStats(ndv)
         if (bloomAccessors.nonEmpty && blooms.exists(_.size > 0)) {
-          // the sidecar travels like the data file: written at the
+          // the sidecar travels like the data file: staged or at the
           // final (attempt-unique) name, vouched only once the
           // manifest entry's "bf" pointer publishes
           val cols = bloomAccessors.indices.map { b =>
             schema.fields(bloomAccessors(b).ord).name -> blooms(b).seal()
           }
-          val bfRel = Bloom.write(new Path(dir).getFileSystem(conf),
-            new Path(dir), currentRel, "bf", cols)
-          written += ((new Path(dir, bfRel), bfRel))
+          val root = if (directWrite) new Path(dir) else tempDir
+          val bfRel = Bloom.write(root.getFileSystem(conf), root, currentRel, "bf", cols)
+          written += ((new Path(root, bfRel), bfRel))
           stats = FlsFileStats.withBf(stats, new Path(bfRel).getName)
         }
         fileStats(currentRel) = stats
@@ -597,22 +595,68 @@ object FlsCommit {
 
   /** Moves staged files to their dir-relative final names under `root` —
     * the one step that makes a staged data file visible. Creates each
-    * missing parent directory, replaces a file already at the final name
-    * (a retried streaming epoch reuses its names), and fails loudly when
-    * the file system refuses a rename. Returns each rel with its
-    * published length. */
+    * missing parent directory and fails loudly when the file system
+    * refuses a rename. A file already at a final name (a replayed
+    * streaming epoch reuses its names) is first moved into `aside`, so
+    * an abort can put it back ([[restoreAside]]); without `aside` the
+    * names must be fresh. Returns each rel with its published length. */
   def publish(fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      staged: Seq[(Path, String)]): Seq[(String, Long)] = {
+      staged: Seq[(Path, String)], aside: Option[Path] = None): Seq[(String, Long)] = {
     staged.map { case (_, rel) => new Path(root, rel).getParent }.distinct
       .foreach(fs.mkdirs)
     staged.map { case (src, rel) =>
       val dst = new Path(root, rel)
-      if (!fs.rename(src, dst) &&
-          !(fs.exists(dst) && fs.delete(dst, false) && fs.rename(src, dst)))
+      aside.foreach(a => if (fs.exists(dst)) setAside(fs, root, rel, a))
+      if (!fs.rename(src, dst))
         throw new java.io.IOException(s"fls commit: rename $src -> $dst failed")
       rel -> fs.getFileStatus(dst).getLen
     }
   }
+
+  /** Publishes every data file and footer sidecar under `stageDir` to the
+    * same relative name under `root`. */
+  def publishDir(fs: org.apache.hadoop.fs.FileSystem, root: Path,
+      stageDir: Path): Seq[(String, Long)] = {
+    val staged = scala.collection.mutable.ArrayBuffer[(Path, String)]()
+    graft.fls.FlsFile.walkFiles(fs, stageDir, Seq(".fls", ".fls.footer")) { (s, rel) =>
+      staged += ((s.getPath, rel))
+    }
+    publish(fs, root, staged.toSeq)
+  }
+
+  /** Where a job commit keeps the visible files it replaces or retires
+    * until the job ends: dropped with the job's staging tree, moved back
+    * by [[restoreAside]]. */
+  def asideDir(dir: Path, writeId: String): Path =
+    new Path(new Path(new Path(dir, TempDirName), writeId), "replaced")
+
+  /** Moves the visible file `root/rel` to `aside/rel`. */
+  def setAside(fs: org.apache.hadoop.fs.FileSystem, root: Path, rel: String,
+      aside: Path): Unit = {
+    val to = new Path(aside, rel)
+    fs.mkdirs(to.getParent)
+    if (!fs.rename(new Path(root, rel), to))
+      throw new java.io.IOException(s"fls commit: setting aside ${new Path(root, rel)} failed")
+  }
+
+  /** Moves every file set aside under `aside` back to its name under
+    * `root`. Best effort per file. */
+  def restoreAside(fs: org.apache.hadoop.fs.FileSystem, root: Path, aside: Path): Unit =
+    bestEffort(s"listing $aside") {
+      graft.fls.FlsFile.walkFiles(fs, aside, ManagedSuffixes) { (s, rel) =>
+        bestEffort(s"restoring $rel under $root") {
+          val dst = new Path(root, rel)
+          fs.mkdirs(dst.getParent)
+          if (!fs.rename(s.getPath, dst))
+            throw new java.io.IOException(s"rename ${s.getPath} -> $dst failed")
+        }
+      }
+    }
+
+  /** Suffixes of the files a table directory holds for its data: data
+    * files, footer, delete-vector and Bloom sidecars. */
+  val ManagedSuffixes: Seq[String] =
+    Seq(".fls", ".fls.footer", graft.fls.FlsDeleteVectors.Suffix, graft.fls.Bloom.Suffix)
 
   /** Runs a cleanup step that must not fail its caller — one that runs
     * after a commit point, where a throw would make Spark abort a write

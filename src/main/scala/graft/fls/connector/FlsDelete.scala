@@ -408,8 +408,7 @@ object FlsDelete {
       val stageDir = new Path(root, s"_delete_${UUID.randomUUID()}")
       try {
         fill(stageDir)
-        FlsCommit.publish(fs, root, FlsFile.listDataStatuses(stageDir, conf)
-          .map(st => st.getPath -> st.getPath.getName))
+        FlsCommit.publishDir(fs, root, stageDir)
       } finally try fs.delete(stageDir, true) catch { case _: Throwable => () }
     }
 
@@ -728,7 +727,7 @@ object FlsDelete {
             val kept = entries.filter { e =>
               pNow.cls(new Path(root, e.rel).toString) == Keep
             }
-            val merged = kept ++ staged.map { case (rel, len) =>
+            val merged = kept ++ staged.collect { case (rel, len) if rel.endsWith(".fls") =>
               FlsManifest.Entry(rel, len, 0L)
             }
             if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files))

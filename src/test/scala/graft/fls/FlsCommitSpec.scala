@@ -301,3 +301,14 @@ class DeleteFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
 object DeleteFailingFs {
   @volatile var armed = false
 }
+
+/** Local file system that refuses every rename `RenameFailingFs.fails`
+  * accepts — a store that fails mid-publish. */
+class RenameFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def rename(src: Path, dst: Path): Boolean =
+    !RenameFailingFs.fails(src, dst) && super.rename(src, dst)
+}
+
+object RenameFailingFs {
+  @volatile var fails: (Path, Path) => Boolean = (_, _) => false
+}

@@ -43,7 +43,7 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
         val m = new java.util.HashMap[String, String]()
         m.put("path", dir)
         m.put("commit_mode", "manifest")
-        extra.foreach { case (k, v) => m.put(k, v) }
+        extra.foreach { case (k, v) => if (v == null) m.remove(k) else m.put(k, v) }
         new CaseInsensitiveStringMap(m)
       }
       override def queryId(): String = "test-query"
@@ -85,17 +85,26 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   test("speculative twins in direct-write mode: loser's final-named files never publish") {
     val dir = Files.createTempDirectory("fls-man-twin").toString
-    val batch = new FlsBatchWrite(writeInfo(dir), doTruncate = false)
+    val sp = spark; import sp.implicits._
+    // an existing manifest is what lets tasks write final names directly
+    Seq(0L).toDF("v").write.format("fls").mode("append")
+      .option("commit_mode", "manifest").save(dir)
+    val batch = new FlsBatchWrite(
+      writeInfo(dir, Map("row_group_size" -> Format.VecSize.toString)), doTruncate = false)
     val factory = batch.createBatchWriterFactory(null)
     val a = factory.createWriter(0, 1L)
     val b = factory.createWriter(0, 2L) // twin attempt, same partition
-    (1L to 100L).foreach { i => a.write(row(i)); b.write(row(i + 1000)) }
+    val n = Format.VecSize + 100L // a full row group reaches disk before commit
+    (1L to n).foreach { i => a.write(row(i)); b.write(row(i + 100000)) }
     val msg = a.commit()
-    // twin b "crashes" WITHOUT abort — its direct-written files stay on
-    // disk into job commit, which must sweep them and keep them out of
-    // the manifest
+    val twinFiles = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(_.endsWith("-2-0000.fls"))
+    assert(twinFiles.nonEmpty, "the twin's final-named file must be on disk")
+    // twin b "crashes" WITHOUT abort — its direct-written file stays on
+    // disk into job commit, which must sweep it and keep it out of the
+    // manifest
     batch.commit(Array(msg))
-    assert(readLongs(dir) == (1L to 100L))
+    assert(readLongs(dir) == 0L +: (1L to n))
     val leftover = new java.io.File(dir).listFiles().map(_.getName)
       .filter(_.endsWith(".fls"))
     assert(leftover.forall(n => manifestEntries(dir).exists(_.rel == n)),
@@ -167,6 +176,46 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .mode("append").option("commit_mode", "manifest").save(dir)
     assert(manifestEntries(dir).nonEmpty)
     assert(readLongs(dir) == (1L to 20L))
+  }
+
+  test("an aborted manifest append onto a listing-mode table leaves it unchanged") {
+    val dir = Files.createTempDirectory("fls-man-abort-seed").toString
+    val sp = spark; import sp.implicits._
+    (1L to 10L).toDF("v").write.format("fls").mode("overwrite").save(dir) // rename mode
+    def files = new java.io.File(dir).listFiles().map(_.getName)
+      .filter(n => n.endsWith(".fls") || n.endsWith(".footer")).toSet
+    val before = files
+    // no manifest yet, so nothing hides a direct write: the tasks stage
+    val batch = new FlsBatchWrite(writeInfo(dir), doTruncate = false)
+    val factory = batch.createBatchWriterFactory(null)
+    val done = factory.createWriter(0, 1L)
+    (11L to 20L).foreach(i => done.write(row(i)))
+    val msg = done.commit()
+    val late = factory.createWriter(1, 2L)
+    (21L to 30L).foreach(i => late.write(row(i)))
+    batch.abort(Array(msg, null))
+    late.commit() // authorised before the abort, committing after it
+    assert(files == before, s"an aborted job left files: ${files -- before}")
+    assert(readLongs(dir) == (1L to 10L))
+    val p = new Path(dir)
+    assert(!FlsManifest.exists(p.getFileSystem(spark.sessionState.newHadoopConf()), p))
+  }
+
+  test("a plain job planned before the first manifest commit lands in the manifest") {
+    val dir = Files.createTempDirectory("fls-man-late-plain").toString
+    val sp = spark; import sp.implicits._
+    (1L to 10L).toDF("v").write.format("fls").mode("overwrite").save(dir) // rename mode
+    val plain = new FlsBatchWrite(writeInfo(dir, Map("commit_mode" -> null)), doTruncate = false)
+    val w = plain.createBatchWriterFactory(null).createWriter(0, 1L)
+    (11L to 20L).foreach(i => w.write(row(i)))
+    val msg = w.commit()
+    // another job's first manifest commit seeds from a listing that
+    // cannot see the plain job's staged file
+    (21L to 30L).toDF("v").write.format("fls")
+      .mode("append").option("commit_mode", "manifest").save(dir)
+    plain.commit(Array(msg))
+    assert(readLongs(dir) == (1L to 30L))
+    assert(manifestEntries(dir).exists(_.rel == msg.asInstanceOf[FlsCommitMessage].files.head))
   }
 
   test("a plain write over a manifest table publishes a version") {

@@ -154,6 +154,54 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readLongs(dir) == (10001L to 10060L))
   }
 
+  test("an aborted replay puts its prior attempt's published files back") {
+    val dir = Files.createTempDirectory("fls-sink-abort-replay").toString
+    val vSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("v",
+        org.apache.spark.sql.types.LongType, nullable = false)))
+    val info = new org.apache.spark.sql.connector.write.LogicalWriteInfo {
+      override def options() = {
+        val m = new java.util.HashMap[String, String]()
+        m.put("path", dir)
+        m.put("row_group_size", Format.VecSize.toString)
+        m.put("row_groups_per_file", "1")
+        new org.apache.spark.sql.util.CaseInsensitiveStringMap(m)
+      }
+      override def queryId(): String = "q-abort-replay-test"
+      override def schema() = vSchema
+    }
+    def row(v: Long) = new org.apache.spark.sql.catalyst.expressions.GenericInternalRow(Array[Any](v))
+
+    import graft.fls.connector._
+    val sw = new FlsStreamingWrite(info)
+    val factory = sw.createStreamingWriterFactory(null)
+    // epoch 3, attempt 1: two files, published; the batch never reaches
+    // Spark's commit log
+    val a1 = factory.createWriter(0, 1L, 3L)
+    (1L to 2L * Format.VecSize).foreach(i => a1.write(row(i)))
+    sw.commit(3L, Array(a1.commit()))
+    assert(flsCount(dir) == 2)
+    // the replay writes the same two names; its publish replaces the
+    // first, then the store refuses the second
+    val a2 = factory.createWriter(0, 2L, 3L)
+    (1L to 2L * Format.VecSize).foreach(i => a2.write(row(i + 100000)))
+    val msg = a2.commit()
+    spark.conf.set("fs.file.impl", classOf[RenameFailingFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    RenameFailingFs.fails = (src, dst) =>
+      src.toString.contains("/attempt-") && dst.getName.endsWith("-0001.fls")
+    try {
+      intercept[Exception](sw.commit(3L, Array(msg)))
+      sw.abort(3L, Array(msg)) // what Spark does when the commit throws
+    } finally {
+      RenameFailingFs.fails = (_, _) => false
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+    assert(readLongs(dir) == (1L to 2L * Format.VecSize),
+      "the abort must leave the prior attempt's rows visible")
+  }
+
   test("retried epoch converges in manifest mode too (no duplicate manifest entries)") {
     val dir = Files.createTempDirectory("fls-sink-retry-man").toString
     val vSchema = org.apache.spark.sql.types.StructType(Seq(
