@@ -1574,12 +1574,14 @@ case class FlsStreamingWriterFactory(base: FlsWriterFactory, queryId: String)
   * `_temporary/<writeId>/<attempt>/` and leave them there on task commit
   * (see [[FlsDataWriter]]); job `commit` moves EXACTLY the files named in
   * the commit messages to their final names ([[FlsCommit.publish]]) —
-  * the one point where a staged file becomes visible — then sets aside
-  * any stale same-writeId file a retried epoch's prior attempt left, and
-  * only then, for truncate mode, deletes the files of previous jobs (so
-  * old data survives until the new data is fully committed). `abort`
-  * deletes the message-named files this job already moved, puts back
-  * what it set aside, then drops the staging dir. */
+  * the one point where a staged file becomes visible — and only then,
+  * in listing mode, removes what the write replaces (truncate, filter
+  * or dynamic overwrite, row-level replace) and any stale same-writeId
+  * file a retried epoch's prior attempt left, so old data survives until
+  * the new data is fully committed. Removal moves those files aside into
+  * the job's staging tree, dropped when the commit ends. `abort` deletes
+  * the message-named files this job already moved, puts back what the
+  * commit set aside, then drops the staging dir. */
 class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     /** Streaming epochs pass a DETERMINISTIC id (queryId + epoch) so an
       * epoch retry converges: job commit publishes over prior-attempt
@@ -2034,14 +2036,14 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
           // every other manifest-mode replacement: the new manifest no
           // longer names them (invisible to current readers), pinned
           // VERSION AS OF readers still resolve them, vacuum reclaims
-          // them past the retention horizon. Listing-mode truncate must
-          // delete eagerly — the directory IS the table there. In
-          // listing mode a final name of this writeId not committed
-          // here is a replayed epoch's prior attempt: it goes aside,
-          // so an abort can put it back.
-          if (thisJobs && !manifestMode) FlsCommit.setAside(fs, dir, rel, aside)
-          else if (thisJobs || (doTruncate && !manifestMode) || doomed)
-            fs.delete(s.getPath, false)
+          // them past the retention horizon. Listing mode must remove
+          // eagerly — the directory IS the table there — and does so by
+          // moving files into the job's staging tree, so an abort puts
+          // back whatever a failed commit removed. (A final name of this
+          // writeId not committed here is a replayed epoch's prior
+          // attempt.)
+          if (manifestMode) { if (thisJobs) fs.delete(s.getPath, false) }
+          else if (thisJobs || doTruncate || doomed) FlsCommit.setAside(fs, dir, rel, aside)
         }
       }
       if (!manifestMode && doomedNow.nonEmpty &&
@@ -2054,7 +2056,8 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     // In manifest mode the publish above IS the commit: a throw from here
     // on would make Spark abort a write readers already see, so cleanup
     // is best effort (what it leaves, the manifest hides). In listing
-    // mode the deletes are part of the commit and must succeed.
+    // mode the removals are part of the commit and must succeed; abort
+    // undoes them.
     if (manifestMode) FlsCommit.bestEffort(s"cleanup after publishing $dir")(cleanup())
     else cleanup()
     FlsCommit.removeStaging(fs, dir, writeId)
@@ -2081,8 +2084,8 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
   /** Only the job commit moves staged files to final names, and only the
     * ones its messages name. Abort undoes what a failed commit did: a
     * message-named final whose staged copy is gone is one this job moved,
-    * and is deleted; a file the commit set aside (a replayed epoch's prior
-    * attempt) moves back. Every other final-named file is left alone —
+    * and is deleted; a file the commit set aside (a file the write
+    * replaces, or a replayed epoch's prior attempt) moves back. Every other final-named file is left alone —
     * another job owns it, or it is a direct write, which only happens
     * when a manifest already hides it, and vacuum reclaims. */
   override def abort(messages: Array[WriterCommitMessage]): Unit = {

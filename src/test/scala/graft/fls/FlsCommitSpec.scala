@@ -176,29 +176,47 @@ class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = Files.createTempDirectory("fls-spec-cleanup").toString
     spark.range(1, 6).selectExpr("id AS v").write.format("fls").mode("append")
       .option("commit_mode", "manifest").save(dir)
-    spark.conf.set("fs.file.impl", classOf[DeleteFailingFs].getName)
-    spark.conf.set("fs.file.impl.disable.cache", "true")
-    try {
-      val batch = new FlsBatchWrite(writeInfo(dir, Map("commit_mode" -> "manifest")),
-        doTruncate = false)
-      val factory = batch.createBatchWriterFactory(null)
-      val a = factory.createWriter(0, 1L)
-      val twin = factory.createWriter(0, 2L) // its final-named files are junk to clean
-      (11L to 50L).foreach { i => a.write(row(i)); twin.write(row(i + 1000)) }
-      val msg = a.commit()
-      twin.commit() // denied by the coordinator in a real job: message never sent
-      DeleteFailingFs.armed = true
-      val failure =
-        try { batch.commit(Array(msg)); None }
-        catch { case e: Exception => Some(e) }
-        finally DeleteFailingFs.armed = false
-      failure.foreach(_ => batch.abort(Array(msg))) // what Spark does when commit throws
-      assert(failure.isEmpty, s"job commit failed after publishing its manifest: $failure")
-      assert(readLongs(dir) == (1L to 5L) ++ (11L to 50L))
-    } finally {
-      spark.conf.unset("fs.file.impl")
-      spark.conf.unset("fs.file.impl.disable.cache")
+    val batch = new FlsBatchWrite(writeInfo(dir, Map("commit_mode" -> "manifest")),
+      doTruncate = false)
+    val factory = batch.createBatchWriterFactory(null)
+    val a = factory.createWriter(0, 1L)
+    val twin = factory.createWriter(0, 2L) // its final-named files are junk to clean
+    (11L to 50L).foreach { i => a.write(row(i)); twin.write(row(i + 1000)) }
+    val msg = a.commit()
+    twin.commit() // denied by the coordinator in a real job: message never sent
+    val failure = FaultyFs.during(spark, (_, dst) => dst == null) {
+      try { batch.commit(Array(msg)); None }
+      catch { case e: Exception => Some(e) }
     }
+    failure.foreach(_ => batch.abort(Array(msg))) // what Spark does when commit throws
+    assert(failure.isEmpty, s"job commit failed after publishing its manifest: $failure")
+    assert(readLongs(dir) == (1L to 5L) ++ (11L to 50L))
+  }
+
+  test("a failed overwrite commit puts the replaced files back") {
+    val dir = Files.createTempDirectory("fls-spec-ovw-fail").toString
+    spark.range(1, 6).selectExpr("id AS v").coalesce(1)
+      .write.format("fls").mode("append").save(dir)
+    spark.range(6, 11).selectExpr("id AS v").coalesce(1)
+      .write.format("fls").mode("append").save(dir)
+    val old = flsFiles(dir).toSet
+    assert(old.size == 2)
+    val batch = new FlsBatchWrite(writeInfo(dir), doTruncate = true)
+    val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
+    (100L to 120L).foreach(i => w.write(row(i)))
+    val msg = w.commit()
+    // the store refuses to remove whichever old file the commit reaches
+    // second, after the new file is published and the first is removed
+    var reached = 0
+    val tableRoot = new Path(dir).toUri.getPath
+    FaultyFs.during(spark, (src, _) =>
+        src.getParent.toUri.getPath == tableRoot && old(src.getName) &&
+          { reached += 1; reached > 1 }) {
+      intercept[Exception](batch.commit(Array(msg)))
+      batch.abort(Array(msg)) // what Spark does when commit throws
+    }
+    assert(flsFiles(dir).toSet == old)
+    assert(readLongs(dir) == (1L to 10L))
   }
 
   test("concurrent jobs appending to one directory never touch each other's staging") {
@@ -290,25 +308,31 @@ private class FlsDataWriterProbe(
   def commit(): WriterCommitMessage = w.commit()
 }
 
-/** Local file system whose `delete` fails while armed — a store that
-  * refuses cleanup after a commit point. */
-class DeleteFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
+/** Local file system that refuses every delete and rename
+  * `FaultyFs.refuses(src, dst)` accepts (`dst` is null for a delete) — a
+  * store that fails in the middle of a commit. */
+class FaultyFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def delete(p: Path, recursive: Boolean): Boolean =
-    if (DeleteFailingFs.armed) throw new java.io.IOException(s"injected delete failure: $p")
+    if (FaultyFs.refuses(p, null)) throw new java.io.IOException(s"injected delete failure: $p")
     else super.delete(p, recursive)
-}
-
-object DeleteFailingFs {
-  @volatile var armed = false
-}
-
-/** Local file system that refuses every rename `RenameFailingFs.fails`
-  * accepts — a store that fails mid-publish. */
-class RenameFailingFs extends org.apache.hadoop.fs.LocalFileSystem {
   override def rename(src: Path, dst: Path): Boolean =
-    !RenameFailingFs.fails(src, dst) && super.rename(src, dst)
+    !FaultyFs.refuses(src, dst) && super.rename(src, dst)
 }
 
-object RenameFailingFs {
-  @volatile var fails: (Path, Path) => Boolean = (_, _) => false
+object FaultyFs {
+  @volatile var refuses: (Path, Path) => Boolean = (_, _) => false
+
+  /** Runs `body` with `refuses` installed as the session's local file
+    * system. */
+  def during[T](spark: SparkSession, refuses: (Path, Path) => Boolean)(body: => T): T = {
+    spark.conf.set("fs.file.impl", classOf[FaultyFs].getName)
+    spark.conf.set("fs.file.impl.disable.cache", "true")
+    FaultyFs.refuses = refuses
+    try body
+    finally {
+      FaultyFs.refuses = (_, _) => false
+      spark.conf.unset("fs.file.impl")
+      spark.conf.unset("fs.file.impl.disable.cache")
+    }
+  }
 }

@@ -198,7 +198,7 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(files == before, s"an aborted job left files: ${files -- before}")
     assert(readLongs(dir) == (1L to 10L))
     val p = new Path(dir)
-    assert(!FlsManifest.exists(p.getFileSystem(spark.sessionState.newHadoopConf()), p))
+    assert(FlsManifest.read(p.getFileSystem(spark.sessionState.newHadoopConf()), p).isEmpty)
   }
 
   test("a plain job planned before the first manifest commit lands in the manifest") {

@@ -186,17 +186,10 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     val a2 = factory.createWriter(0, 2L, 3L)
     (1L to 2L * Format.VecSize).foreach(i => a2.write(row(i + 100000)))
     val msg = a2.commit()
-    spark.conf.set("fs.file.impl", classOf[RenameFailingFs].getName)
-    spark.conf.set("fs.file.impl.disable.cache", "true")
-    RenameFailingFs.fails = (src, dst) =>
-      src.toString.contains("/attempt-") && dst.getName.endsWith("-0001.fls")
-    try {
+    FaultyFs.during(spark, (src, dst) => dst != null &&
+        src.toString.contains("/attempt-") && dst.getName.endsWith("-0001.fls")) {
       intercept[Exception](sw.commit(3L, Array(msg)))
       sw.abort(3L, Array(msg)) // what Spark does when the commit throws
-    } finally {
-      RenameFailingFs.fails = (_, _) => false
-      spark.conf.unset("fs.file.impl")
-      spark.conf.unset("fs.file.impl.disable.cache")
     }
     assert(readLongs(dir) == (1L to 2L * Format.VecSize),
       "the abort must leave the prior attempt's rows visible")
