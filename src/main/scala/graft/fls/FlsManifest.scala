@@ -79,31 +79,6 @@ object FlsManifest {
   val ChunkTargetKey = "graft.fls.manifest.chunk.target"
   val DefaultChunkTarget = 8192
 
-  /** Epoch markers of a query that has not stamped ANY epoch for this
-    * many manifest versions AND for [[EpochRetireMsKey]] of wall time
-    * are RETIRED (r18 — the r17 verdict's marker-accretion gap: a
-    * table written by thousands of short-lived streaming queries
-    * otherwise keeps one stale marker per retired query on every kept
-    * pointer, bytes-bounded per line but unbounded in query count).
-    * BOTH clocks must expire: version age alone would demote a live
-    * slow-cadence stream on a busy multi-writer table (a 5-minute
-    * trigger among 10 commits/s passes thousands of versions between
-    * its own stamps) to a full merge on every epoch; wall age alone
-    * would never clear markers on an idle table. A LIVE query
-    * re-stamps on every epoch commit, so it can never age out within
-    * its trigger interval + retention; a RETURNING query whose markers
-    * were retired just pays the same one-time full-merge bootstrap as
-    * a brand-new query (the connector's headHasQid gate), then rides
-    * the O(delta) path again — retirement is a speed trade, never a
-    * correctness one. */
-  val EpochRetireKey = "graft.fls.manifest.epoch.retire.versions"
-  val DefaultEpochRetire = 64
-  /** Setting this to 0 (or negative) DELIBERATELY disables the wall
-    * clock — retirement then runs on version age alone, which demotes
-    * any stream whose trigger interval spans more foreign commits than
-    * [[EpochRetireKey]]; an explicit operator trade, never a default. */
-  val EpochRetireMsKey = "graft.fls.manifest.epoch.retire.ms"
-  val DefaultEpochRetireMs: Long = 7L * 24 * 3600 * 1000 // 7 days
   /** When this many reusable chunks have decayed below half the target
     * size (single-append commits each add a tiny chunk), fold them into
     * the delta and rewrite right-sized ones — amortized O(chunkTarget)
@@ -296,15 +271,6 @@ object FlsManifest {
         * JSON) — lets key-range DML planning skip the chunk unopened.
         * Null = no recorded stats: always open. */
       stats: String = null,
-      /** Streaming-epoch writeIds (`<queryId>-e<epoch>`) whose entries
-        * MAY live in this chunk (`w:` field, r17) — what lets a
-        * RETRIED epoch locate its crashed attempt's entries in O(1)
-        * chunk opens instead of parsing the whole manifest: the retry
-        * opens only chunks stamped with its own writeId. Conservative
-        * (folds/rewrites union markers), superseded markers (an older
-        * epoch of a query whose newer epoch is stamped anywhere in the
-        * commit) are pruned at each rewrite. */
-      epochs: Seq[String] = Nil,
       /** Minimum birth version over this chunk's entries (`b:` field,
         * r17; -1 = written before the field — prove nothing). The
         * equality-delete absorption proof for the O(delta) commit
@@ -343,7 +309,11 @@ object FlsManifest {
         * populated for every v2 file regardless of `resolveChunks`,
         * so [[commitDelta]] can plan which chunks to open without
         * reading any of them. */
-      pointers: Seq[Pointer] = Nil)
+      pointers: Seq[Pointer] = Nil,
+      /** Last committed epoch of each streaming query that has committed
+        * to this ref (`#stream\t<queryId>\t<epoch>` lines): carried by
+        * every commit, like `#eqdel`, so a replayed epoch is skipped. */
+      streams: Map[String, Long] = Map.empty)
 
   /** Newest (version, entries), or None when the table has no manifest
     * (listing mode). The legacy single-file manifest reads as version 0;
@@ -623,20 +593,41 @@ object FlsManifest {
           s"fls: corrupt #chunk line '$l' in $p")
         if (a.length >= 5) {
           // trailing fields are shape-tagged: `{...}` = chunk value
-          // stats, `w:<id>,<id>` = epoch markers, `b:<n>` = min birth
-          // version — any subset may follow the range
+          // stats, `b:<n>` = min birth version, `w:<id>,<id>` = epoch
+          // markers of earlier writers (read into `streams` below) —
+          // any subset may follow the range
           val tail = a.drop(5)
           val stats = tail.find(_.startsWith("{")).orNull
-          val epochs = tail.find(_.startsWith("w:")).toSeq
-            .flatMap(_.substring(2).split(',').filter(_.nonEmpty))
           val minBv = tail.find(_.startsWith("b:"))
             .map(_.substring(2).toLong).getOrElse(-1L)
           require(tail.forall(t => t.startsWith("{") || t.startsWith("w:") ||
               t.startsWith("b:")),
             s"fls: corrupt #chunk line '$l' in $p")
           Pointer(a(1), a(2).toLong, a(3), a(4),
-            ranged = true, stats = stats, epochs = epochs, minBv = minBv)
+            ranged = true, stats = stats, minBv = minBv)
         } else Pointer(a(1), a(2).toLong, "", "", ranged = false)
+      }
+    // Earlier writers recorded a committed epoch as a `w:` marker
+    // `<queryId>-e<epoch>[@<stamp>]` on the chunk pointers it wrote; a
+    // query without a `#stream` line reads its newest marker as one,
+    // and the next commit writes it back as a line.
+    val marked = lines.drop(1).iterator.filter(_.startsWith("#chunk\t"))
+      .flatMap(_.split('\t').drop(5).find(_.startsWith("w:")))
+      .flatMap(_.substring(2).split(',')).flatMap { m =>
+        val w = m.takeWhile(_ != '@')
+        val i = w.lastIndexOf("-e")
+        val e = if (i > 0) w.substring(i + 2) else ""
+        if (e.nonEmpty && e.length <= 18 && e.forall(_.isDigit))
+          Some((w.substring(0, i), e.toLong))
+        else None
+      }.toSeq.groupBy(_._1).map { case (q, es) => q -> es.map(_._2).max }
+    val streams = marked ++ lines.drop(1).filter(_.startsWith("#stream\t"))
+      .map { l =>
+        val a = l.split('\t')
+        require(a.length == 3 && a(2).nonEmpty && a(2).length <= 18 &&
+            a(2).forall(_.isDigit),
+          s"fls: corrupt #stream line '$l' in $p")
+        a(1) -> a(2).toLong
       }
     val chunks: Seq[(String, Seq[Entry])] =
       if (!resolveChunks) Nil
@@ -660,8 +651,21 @@ object FlsManifest {
       else (inline ++ chunks.flatMap(_._2)).sortBy(_.rel)
     val eq = lines.drop(1).filter(_.startsWith("#eqdel\t")).toSeq
       .map(_.substring("#eqdel\t".length))
-    Layout(meta, entries, cdc, chunks, eq, pointers)
+    Layout(meta, entries, cdc, chunks, eq, pointers, streams)
   }
+
+  /** Whether `head` records streaming epoch `(queryId, epoch)`: its
+    * line for the query is at or past the epoch, or, for a query
+    * without one, an inline entry carries the epoch's writeId infix
+    * `-<queryId>-e<epoch>-` (an inline epoch commit of an earlier
+    * writer). Opens no chunk. */
+  private[fls] def recordsEpoch(head: Layout, epoch: (String, Long)): Boolean =
+    head.streams.get(epoch._1) match {
+      case Some(last) => last >= epoch._2
+      case None =>
+        val infix = s"-${epoch._1}-e${epoch._2}-"
+        head.entries.exists(_.rel.contains(infix))
+    }
 
   /** The operation tag of one retained version (None = legacy manifest
     * or a version written before op tags — CDF treats those as
@@ -689,7 +693,11 @@ object FlsManifest {
     * exception propagates with nothing published. Returns the published
     * version. `op`/`dataChange` stamp the version's `#op` header line —
     * the change-data-feed skips `dataChange=false` commits (compaction
-    * churn is not row churn). */
+    * churn is not row churn). A streaming epoch passes `stream =
+    * (queryId, epoch)`: an attempt whose head already records it
+    * ([[recordsEpoch]]) publishes nothing and returns the head's
+    * version, so a replayed epoch keeps its first committed attempt;
+    * otherwise the version records it. */
   def commit(fs: FileSystem, dir: Path, writeId: String,
       conf: org.apache.hadoop.conf.Configuration, op: String = "append",
       dataChange: Boolean = true, cdc: Seq[CdcLine] = Nil,
@@ -709,11 +717,7 @@ object FlsManifest {
         * against concurrent commits introducing unproven old-bv
         * entries. -1 = off. */
       eqDropUpTo: Long = -1L,
-      /** Streaming-epoch writeId to STAMP on every chunk this commit
-        * writes (the retry-location markers, [[Pointer.epochs]]) —
-        * set by epoch commits so the NEXT attempt/epoch can ride the
-        * O(delta) path. */
-      epochAdd: Option[String] = None)(
+      stream: Option[(String, Long)] = None)(
       merge: (Long, Option[Seq[Entry]]) => Seq[Entry]): Long = {
     var attempt = 0
     while (attempt < MaxCasAttempts) {
@@ -722,6 +726,7 @@ object FlsManifest {
         s"fls: branch '$ref' of $dir does not exist — " +
           "CALL system.create_branch first")
       val curV = cur.map(_._1).getOrElse(0L)
+      if (stream.exists(s => cur.exists(c => recordsEpoch(c._2, s)))) return curV
       val merged0 = merge(curV, cur.map(_._2.entries))
       val next = curV + 1
       // stamp each NEW entry's birth version (first commit that added
@@ -773,8 +778,8 @@ object FlsManifest {
       val newChunks = writeContent(fs, dir, tmp, merged,
         Some(VersionMeta(op, dataChange, schemaV)), cdc,
         cur.map(_._2.chunks).getOrElse(Nil), conf, eqAll,
-        chunkStatCols(tableMeta.map(_._2)),
-        cur.map(_._2.pointers).getOrElse(Nil), epochAdd, next)
+        cur.map(_._2.streams).getOrElse(Map.empty[String, Long]) ++ stream,
+        chunkStatCols(tableMeta.map(_._2)))
       def dropNewChunks(): Unit = newChunks.foreach(p =>
         try fs.delete(p, false) catch { case _: Throwable => () })
       val won =
@@ -854,21 +859,8 @@ object FlsManifest {
       ref: String = MainRef, eqAdd: Seq[String] = Nil,
       /** See [[commit]]: proven-exact predicate drop (absorb). */
       eqDropUpTo: Long = -1L,
-      /** STREAMING-EPOCH append (r17): reconcile a possible prior
-        * attempt of this deterministic writeId before adding — chunks
-        * whose pointer carries the writeId's epoch marker are opened
-        * (≤ a handful, usually 0 on first attempts / 1 on retries) and
-        * their `-<writeId>-` entries dropped; every chunk written here
-        * is stamped with the marker so the NEXT attempt/epoch can do
-        * the same. This is what puts per-minute epochs on the O(delta)
-        * path: without markers a retry must scan ALL entries for its
-        * writeId (no rel range can locate an infix), which forced
-        * epochs through the full O(table) merge. */
-      epochWriteId: Option[String] = None,
-      /** Out-collector for the prior-attempt entries an epoch commit
-        * dropped (the caller deletes their files + sidecars) — cleared
-        * per CAS attempt so only the published attempt's survive. */
-      epochRemovedOut: scala.collection.mutable.Buffer[Entry] = null)(
+      /** See [[commit]]: a streaming epoch already recorded is skipped. */
+      stream: Option[(String, Long)] = None)(
       delta: Long => Delta)(
       fallback: (Long, Option[Seq[Entry]]) => Seq[Entry]): Long = {
     lastDeltaAttempts.set(0)
@@ -881,6 +873,7 @@ object FlsManifest {
           "CALL system.create_branch first")
       val curV = cur.map(_._1).getOrElse(0L)
       val layout = cur.map(_._2)
+      if (stream.exists(s => layout.exists(recordsEpoch(_, s)))) return curV
       val pointers = layout.map(_.pointers).getOrElse(Nil)
       val inlineMax = math.max(0, conf.getInt(InlineThresholdKey, DefaultInlineThreshold))
       val d = delta(curV)
@@ -893,41 +886,11 @@ object FlsManifest {
         // inline/legacy/missing head, or the result fits inline: the
         // full path is O(inline threshold) here by definition
         return commit(fs, dir, writeId, conf, op, dataChange, cdc, ref,
-          eqAdd, eqDropUpTo = eqDropUpTo, epochAdd = epochWriteId)(fallback)
-      // TOCTOU guard (r19): the caller chose the delta path from a
-      // PRE-commit snapshot ("some marker of my qid exists"). A
-      // concurrent foreign commit can retire the qid's
-      // (both-clocks-expired) markers inside that window; this attempt
-      // would then find no marker-stamped chunk to open and a crashed
-      // prior attempt's entries would survive as duplicates.
-      // Retirement is qid-atomic (deadEpochQids), so ZERO markers of
-      // the qid in the FRESH snapshot means the marker bootstrap is
-      // gone: take the full-merge path (same as the caller's
-      // first-epoch case), which reconciles by writeId infix over the
-      // whole table.
-      epochWriteId.foreach { w =>
-        val qid = epochQid(w).map(_._1)
-        val qidPresent = qid.exists(q => pointers.exists(
-          _.epochs.exists(m => epochQid(m).exists(_._1 == q))))
-        if (qid.isDefined && !qidPresent)
-          return commit(fs, dir, writeId, conf, op, dataChange, cdc, ref,
-            eqAdd, eqDropUpTo = eqDropUpTo, epochAdd = epochWriteId)(fallback)
-      }
+          eqAdd, eqDropUpTo = eqDropUpTo, stream = stream)(fallback)
       val next = curV + 1
       val touched = (d.removeRels ++ d.restate.map(_.rel)).toArray.sorted
       val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
-      val (mustOpen1, keep1) = pointers.partition(_.mayContainAny(touched))
-      // an epoch commit additionally opens the chunks stamped with ITS
-      // writeId — where a crashed prior attempt's entries live (0
-      // chunks on first attempts, ~1 on retries)
-      val (mustOpen0, keep0) = epochWriteId match {
-        case Some(w) =>
-          // markers carry an @stamp (age clock) — compare by base
-          val (mine, rest) = keep1.partition(
-            _.epochs.exists(m => epochBase(m) == w))
-          (mustOpen1 ++ mine, rest)
-        case None => (mustOpen1, keep1)
-      }
+      val (mustOpen0, keep0) = pointers.partition(_.mayContainAny(touched))
       // fold decayed small chunks into this commit's delta once enough
       // have piled up — the same amortization as the full path, decided
       // here from pointer COUNTS alone
@@ -956,25 +919,9 @@ object FlsManifest {
             s"fls commitDelta: '$r' is not in version $curV of $dir — a " +
               "concurrent commit removed or rewrote it; rerun the operation")
       }
-      // retried-epoch reconciliation: the prior attempt's entries (same
-      // deterministic writeId infix, attempt-unique names) are REPLACED
-      // by this attempt's — the same convergence the full path gets
-      // from its substring filter, at O(marker chunks) instead of
-      // O(table)
-      val epochDrop: Set[String] = epochWriteId match {
-        case Some(w) =>
-          val marker = s"-$w-"
-          openedEntries.iterator.map(_.rel).filter(_.contains(marker)).toSet
-        case None => Set.empty
-      }
-      if (epochRemovedOut != null) {
-        epochRemovedOut.clear() // per-attempt: only the published one counts
-        openedEntries.foreach(e =>
-          if (epochDrop.contains(e.rel)) epochRemovedOut += e)
-      }
       val restateByRel = d.restate.map(e => (e.rel, validEntry(e))).toMap
       val survivors = openedEntries.flatMap { e =>
-        if (d.removeRels.contains(e.rel) || epochDrop.contains(e.rel)) None
+        if (d.removeRels.contains(e.rel)) None
         else restateByRel.get(e.rel) match {
           case Some(n) =>
             // a restated entry inherits the old birth version unless
@@ -1017,25 +964,10 @@ object FlsManifest {
       val keep = keepOf(tableMeta.map(_._2))
       val tmp = new Path(new Path(new Path(dir, "_temporary"), writeId),
         f"manifest_v$next%020d")
-      // retire aged-out markers on the pointer lines this commit
-      // re-serializes (kept AND new) — qid-atomic over the COMMIT-WIDE
-      // marker view, see EpochRetireKey / deadEpochQids
-      val retireAfter =
-        math.max(1, conf.getInt(EpochRetireKey, DefaultEpochRetire)).toLong
-      val retireMs = conf.getLong(EpochRetireMsKey, DefaultEpochRetireMs)
-      val nowMs = System.currentTimeMillis()
-      val deadQids = deadEpochQids(
-        kept.flatMap(_.epochs) ++ mustOpen.flatMap(_.epochs),
-        next, retireAfter, retireMs, nowMs)
-      val keptR = kept.map(pt =>
-        if (pt.epochs.isEmpty) pt
-        else pt.copy(epochs =
-          retireEpochMarkers(pt.epochs, next, nowMs, deadQids)))
-      val newChunks = writeContentDelta(fs, dir, tmp, keptR, leftover,
+      val newChunks = writeContentDelta(fs, dir, tmp, kept, leftover,
         Some(VersionMeta(op, dataChange, schemaV)), cdc, conf, eqAll,
-        chunkStatCols(tableMeta.map(_._2)),
-        pruneEpochMarkers(mustOpen.flatMap(_.epochs), epochWriteId,
-          next, nowMs, deadQids))
+        layout.map(_.streams).getOrElse(Map.empty[String, Long]) ++ stream,
+        chunkStatCols(tableMeta.map(_._2)))
       def dropNewChunks(): Unit = newChunks.foreach(p =>
         try fs.delete(p, false) catch { case _: Throwable => () })
       beforePublishForTest()
@@ -1064,11 +996,8 @@ object FlsManifest {
   private def writeContentDelta(fs: FileSystem, dir: Path, p: Path,
       kept: Seq[Pointer], leftover: Seq[Entry], meta: Option[VersionMeta],
       cdc: Seq[CdcLine], conf: org.apache.hadoop.conf.Configuration,
-      eqDeletes: Seq[String], statCols: Seq[String] = Nil,
-      /** Epoch markers for every chunk WRITTEN here: the (pruned)
-        * union of the opened chunks' markers plus the committing
-        * epoch's own stamp. Kept pointers carry theirs verbatim. */
-      newEpochs: Seq[String] = Nil): Seq[Path] = {
+      eqDeletes: Seq[String], streams: Map[String, Long],
+      statCols: Seq[String]): Seq[Path] = {
     val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
     fs.mkdirs(chunksDir(dir))
     val written: Seq[(Pointer, Path)] =
@@ -1082,12 +1011,12 @@ object FlsManifest {
         } finally w.close()
         (Pointer(name, group.length, group.head.rel, group.last.rel,
           ranged = true, stats = chunkStatsFor(group, statCols),
-          epochs = newEpochs, minBv = minBvFor(group)), cp)
+          minBv = minBvFor(group)), cp)
       }.toSeq
     val out = writerFor(fs, p)
     try {
       out.write(HeaderV2); out.write('\n')
-      writeMetaLines(out, meta, cdc, eqDeletes)
+      writeMetaLines(out, meta, cdc, eqDeletes, streams)
       (kept ++ written.map(_._1)).sortBy(_.minRel)
         .foreach(writePointerLine(out, _))
     } finally out.close()
@@ -1125,18 +1054,8 @@ object FlsManifest {
       entries: Seq[Entry], meta: Option[VersionMeta], cdc: Seq[CdcLine],
       prevChunks: Seq[(String, Seq[Entry])],
       conf: org.apache.hadoop.conf.Configuration,
-      eqDeletes: Seq[String] = Nil,
-      statCols: Seq[String] = Nil,
-      /** Prior version's pointer lines — the epoch-marker carry
-        * source: reused chunks keep their markers by name; chunks this
-        * commit rewrites smear their markers (pruned of superseded
-        * epochs) onto the new chunks, so a marker survives every
-        * rewrite until its epoch is provably complete. */
-      prevPointers: Seq[Pointer] = Nil,
-      epochAdd: Option[String] = None,
-      /** The manifest version this content is being written FOR — the
-        * epoch-marker age clock ([[retireEpochMarkers]]). */
-      nextVersion: Long = 0L): Seq[Path] = {
+      eqDeletes: Seq[String], streams: Map[String, Long],
+      statCols: Seq[String]): Seq[Path] = {
     val inlineMax = math.max(0, conf.getInt(InlineThresholdKey, DefaultInlineThreshold))
     val chunked = entries.length > inlineMax
     // ---- plan the chunk layout (no-op for inline tables) ----
@@ -1182,40 +1101,17 @@ object FlsManifest {
     val out = writerFor(fs, p)
     try {
       out.write(if (v2) HeaderV2 else Header); out.write('\n')
-      writeMetaLines(out, meta, cdc, eqDeletes)
+      writeMetaLines(out, meta, cdc, eqDeletes, streams)
       if (chunked) {
-        // epoch-marker carry: reused chunks keep their markers by
-        // name; every chunk WRITTEN here takes the (superseded-pruned)
-        // union of the non-reused prior chunks' markers plus this
-        // commit's own epoch stamp — conservative (a retry may open a
-        // couple of chunks instead of exactly one) but never loses a
-        // live marker through a rewrite
-        val retireAfter =
-          math.max(1, conf.getInt(EpochRetireKey, DefaultEpochRetire)).toLong
-        val retireMs = conf.getLong(EpochRetireMsKey, DefaultEpochRetireMs)
-        val nowMs = System.currentTimeMillis()
-        val deadQids = deadEpochQids(prevPointers.flatMap(_.epochs),
-          nextVersion, retireAfter, retireMs, nowMs)
-        val markersByName = prevPointers.map(pt =>
-          pt.name -> retireEpochMarkers(pt.epochs, nextVersion, nowMs,
-            deadQids))
-          .toMap
-        val reusedNames = reused.map(_._1).toSet
-        val newMarkers = pruneEpochMarkers(
-          prevPointers.filterNot(pt => reusedNames.contains(pt.name))
-            .flatMap(_.epochs), epochAdd, nextVersion, nowMs, deadQids)
         // pointer lines, ordered by each chunk's first rel so the file
         // is deterministic for a given layout; each carries the chunk's
         // [minRel, maxRel] (entries are rel-sorted within a chunk) so
         // point-lookup reads skip non-intersecting chunks unopened
-        (reused.map { case (name, es) =>
-            (name, es, markersByName.getOrElse(name, Nil)) } ++
-          written.map(c => (c._1, c._2, newMarkers)))
-          .map { case (name, es, marks) => Pointer(name, es.length,
+        (reused ++ written.map(c => (c._1, c._2)))
+          .map { case (name, es) => Pointer(name, es.length,
             es.headOption.map(_.rel).getOrElse(""),
             es.lastOption.map(_.rel).getOrElse(""), ranged = true,
-            stats = chunkStatsFor(es, statCols), epochs = marks,
-            minBv = minBvFor(es)) }
+            stats = chunkStatsFor(es, statCols), minBv = minBvFor(es)) }
           .sortBy(_.minRel)
           .foreach(writePointerLine(out, _))
       } else {
@@ -1226,7 +1122,8 @@ object FlsManifest {
   }
 
   private def writeMetaLines(out: java.io.Writer, meta: Option[VersionMeta],
-      cdc: Seq[CdcLine], eqDeletes: Seq[String]): Unit = {
+      cdc: Seq[CdcLine], eqDeletes: Seq[String],
+      streams: Map[String, Long]): Unit = {
     meta.foreach { m =>
       require(!m.op.contains('\n') && !m.op.contains('\t'),
         s"fls: manifest op tag must be a plain word, got '${m.op}'")
@@ -1256,6 +1153,12 @@ object FlsManifest {
         s"fls: eqdel JSON must be compact (no tabs/newlines): '$j'")
       out.write("#eqdel\t"); out.write(j); out.write('\n')
     }
+    streams.toSeq.sortBy(_._1).foreach { case (q, e) =>
+      require(!q.contains('\n') && !q.contains('\t'),
+        s"fls: streaming query id must be one word, got '$q'")
+      out.write("#stream\t"); out.write(q)
+      out.write('\t'); out.write(e.toString); out.write('\n')
+    }
   }
 
   private def writePointerLine(out: java.io.Writer, pt: Pointer): Unit = {
@@ -1268,12 +1171,6 @@ object FlsManifest {
         require(!pt.stats.contains('\n') && !pt.stats.contains('\t'),
           s"fls: chunk stats JSON must be compact: '${pt.stats}'")
         out.write('\t'); out.write(pt.stats)
-      }
-      if (pt.epochs.nonEmpty) {
-        pt.epochs.foreach(w => require(!w.contains('\n') && !w.contains('\t')
-            && !w.contains(','),
-          s"fls: epoch marker must be a plain writeId, got '$w'"))
-        out.write("\tw:"); out.write(pt.epochs.mkString(","))
       }
       if (pt.minBv >= 0L) {
         out.write("\tb:"); out.write(pt.minBv.toString)
@@ -1288,138 +1185,6 @@ object FlsManifest {
   private def minBvFor(es: Seq[Entry]): Long =
     es.foldLeft(Long.MaxValue)((m, e) =>
       math.min(m, FlsFileStats.birthOf(e.stats)))
-
-  /** `(queryId, epoch)` of a streaming-epoch writeId
-    * (`<queryId>-e<digits>`), or None for any other shape. The epoch
-    * suffix is appended LAST by the sink, so `lastIndexOf` is exact
-    * even when the queryId itself contains `-e`. */
-  private[fls] def epochQid(writeId0: String): Option[(String, Long)] = {
-    val writeId = epochBase(writeId0) // markers may carry an @stamp
-    val i = writeId.lastIndexOf("-e")
-    if (i <= 0) None
-    else {
-      val s = writeId.substring(i + 2)
-      if (s.nonEmpty && s.length <= 18 && s.forall(_.isDigit))
-        Some((writeId.substring(0, i), s.toLong))
-      else None
-    }
-  }
-
-  /** A persisted marker is `<writeId>[@<version>[:<epochMillis>]]` —
-    * the stamp records the manifest version (and commit wall time)
-    * that last (re)stamped the marker's query, the two age inputs of
-    * [[retireEpochMarkers]]. Base = the plain writeId a retried epoch
-    * compares against. Markers with a missing component (written
-    * before the stamp existed) pick it up at the next commit that
-    * re-serializes their pointer line — their age clocks start then,
-    * the conservative direction.
-    *
-    * COMPATIBILITY (r19, ADVICE): the `@stamp` suffix is a one-way
-    * writer feature. A pre-stamp binary reads a stamped marker as
-    * unparseable, which SAFELY degrades its epoch retries to the full
-    * merge — but after a binary DOWNGRADE, that binary's own retry
-    * filter (`epochs.contains(writeId)`) no longer matches the stamped
-    * markers it wrote before the downgrade, silently losing the
-    * O(delta) reconciliation (correctness is preserved by the full
-    * merge's writeId-infix drop; only the delta-path speed is lost
-    * until the query re-bootstraps). Do not downgrade the writer below
-    * r18 while epoch markers are live, or accept the one-time full
-    * merges after the markers retire. */
-  private def stampParts(m: String): Option[(String, Long, Long)] = {
-    val i = m.lastIndexOf('@')
-    if (i < 0) return None
-    val s = m.substring(i + 1)
-    val j = s.indexOf(':')
-    val (vs, ts) = if (j < 0) (s, null) else (s.substring(0, j), s.substring(j + 1))
-    def dig(x: String) = x != null && x.nonEmpty && x.length <= 18 &&
-      x.forall(_.isDigit)
-    if (dig(vs) && (ts == null || dig(ts)))
-      Some((m.substring(0, i), vs.toLong, if (ts == null) -1L else ts.toLong))
-    else None
-  }
-
-  private[fls] def epochBase(m: String): String =
-    stampParts(m).map(_._1).getOrElse(m)
-
-  /** The marker's stamp version, or -1 for a stampless one. */
-  private[fls] def epochStampOf(m: String): Long =
-    stampParts(m).map(_._2).getOrElse(-1L)
-
-  /** The marker's stamp wall time (epoch millis), or -1. */
-  private[fls] def epochStampMsOf(m: String): Long =
-    stampParts(m).map(_._3).getOrElse(-1L)
-
-  /** The retirement grouping key: the marker's query id, or its whole
-    * base for unparseable (foreign) markers. */
-  private def retireKeyOf(m: String): String =
-    epochQid(m).map(_._1).getOrElse(epochBase(m))
-
-  private def markerDead(m: String, next: Long, retireAfter: Long,
-      retireMs: Long, nowMs: Long): Boolean =
-    epochStampOf(m) >= 0 && next - epochStampOf(m) > retireAfter &&
-      epochStampMsOf(m) >= 0 && nowMs - epochStampMsOf(m) > retireMs
-
-  /** The query ids whose EVERY marker in `all` is dead on both age
-    * clocks — retirement is QID-ATOMIC (r18 review): wall-clock stamps
-    * are not monotone per query (an NTP step-back can leave an older
-    * epoch's marker wall-fresher than a newer one's), and retiring the
-    * newest marker while an older survives would leave headHasQid
-    * TRUE with the retry's own marker gone — the delta path would then
-    * miss the crashed attempt's chunks and duplicate rows. Either all
-    * of a query's markers retire in one commit's view, or none do, so
-    * "any marker of qid survives ⇒ its newest survives" holds under
-    * any clock behavior. Stampless markers are never dead (their
-    * clocks start at this commit). */
-  private[fls] def deadEpochQids(all: Seq[String], next: Long,
-      retireAfter: Long, retireMs: Long, nowMs: Long): Set[String] =
-    if (next <= 0) Set.empty
-    else all.groupBy(retireKeyOf).collect {
-      case (q, xs) if xs.forall(markerDead(_, next, retireAfter,
-        retireMs, nowMs)) => q
-    }.toSet
-
-  /** Age-based marker retirement for pointer lines this commit writes
-    * (kept AND new): markers missing a stamp component gain it at
-    * (`next`, `nowMs`) — their age clocks start now — and markers of
-    * the commit-wide `deadQids` set drop. Pure speed trade — see
-    * [[EpochRetireKey]] and [[deadEpochQids]]. */
-  private[fls] def retireEpochMarkers(ms: Seq[String], next: Long,
-      nowMs: Long, deadQids: Set[String]): Seq[String] =
-    if (next <= 0) ms // no version context: carry verbatim
-    else ms.flatMap { m =>
-      if (deadQids.contains(retireKeyOf(m))) None
-      else Some(
-        if (epochStampOf(m) < 0) s"${epochBase(m)}@$next:$nowMs"
-        else if (epochStampMsOf(m) < 0)
-          s"${epochBase(m)}@${epochStampOf(m)}:$nowMs"
-        else m)
-    }
-
-  /** Union + dedup epoch markers, dropping SUPERSEDED ones: epochs of
-    * one query commit in order, so the presence of `q-e7` anywhere in
-    * the merged set proves `q-e5` completed (Spark logs epoch N before
-    * starting N+1) and can never be retried. Unparseable markers are
-    * kept verbatim, though they do age toward qid-atomic retirement
-    * like everything else. (r18) markers carry an
-    * `@<version>:<millis>` age stamp: the committing epoch stamps
-    * `@next:now`, carried markers keep theirs (newest version stamp
-    * wins when one base appears under several), and markers whose
-    * whole QUERY is dead on BOTH age clocks retire
-    * ([[deadEpochQids]] / [[retireEpochMarkers]]). */
-  private[fls] def pruneEpochMarkers(ms: Seq[String],
-      adding: Option[String], next: Long, nowMs: Long,
-      deadQids: Set[String]): Seq[String] = {
-    val all = (retireEpochMarkers(ms, next, nowMs, deadQids) ++
-        adding.map(a => s"$a@$next:$nowMs"))
-      .groupBy(epochBase).map(_._2.maxBy(epochStampOf)).toSeq
-      .sortBy(epochBase) // deterministic serialization order
-    val maxByQid = all.flatMap(epochQid).groupBy(_._1)
-      .map { case (q, xs) => q -> xs.map(_._2).max }
-    all.filter(w => epochQid(w) match {
-      case Some((q, e)) => e == maxByQid(q)
-      case None => true
-    })
-  }
 
   /** Table property naming the columns whose merged VALUE bounds ride
     * each `#chunk` pointer line — normally the table's cluster key.

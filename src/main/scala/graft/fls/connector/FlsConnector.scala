@@ -1522,37 +1522,40 @@ object FlsWriteLayout {
 /** `writeStream.format("fls")` — the continuous-ingestion sink. Each
   * micro-batch epoch runs as one append job through the SAME commit
   * protocol as batch writes (staged rename or manifest publish), with
-  * one addition: the epoch's writeId is DETERMINISTIC
-  * (`<queryId>-e<epoch>`), so a retried epoch (driver crash between the
-  * sink commit and Spark's commit log) converges instead of
-  * duplicating — job commit publishes over the prior attempt's final
-  * names and retires any other file of the same writeId, and a manifest
-  * republish drops the crashed attempt's entries. The prior attempt's
-  * files the commit replaces or retires wait in the job's staging tree
-  * until the commit ends, so an epoch abort puts them back and the
-  * prior attempt stays visible. Idle triggers on a populated table
-  * commit nothing (no schema-only file per empty epoch). Composes with
-  * `partition_by`, `commit_mode=manifest`, and the fls STREAMING READ —
-  * an fls-to-fls pipeline is readStream → transform → writeStream. */
+  * a DETERMINISTIC writeId (`<queryId>-e<epoch>`), so a replayed epoch
+  * (driver crash between the sink commit and Spark's commit log)
+  * converges instead of duplicating. On a manifest table each version
+  * records every query's last committed epoch, and a replay of a
+  * recorded epoch publishes nothing: the first committed attempt stays,
+  * as in Spark's own file sink. A listing-mode replay publishes over
+  * the prior attempt's final names and retires any other file of the
+  * same writeId; those files wait in the job's staging tree until the
+  * commit ends, so an epoch abort puts them back. Idle triggers on a
+  * populated table commit nothing (no schema-only file per empty
+  * epoch). Composes with `partition_by`, `commit_mode=manifest`, and
+  * the fls STREAMING READ — an fls-to-fls pipeline is readStream →
+  * transform → writeStream. */
 class FlsStreamingWrite(info: LogicalWriteInfo,
     session: org.apache.spark.sql.SparkSession =
       org.apache.spark.sql.SparkSession.active)
   extends org.apache.spark.sql.connector.write.streaming.StreamingWrite {
 
-  private def epochWriteId(epochId: Long): String = s"${info.queryId()}-e$epochId"
-
   private def forEpoch(epochId: Long): FlsBatchWrite =
     new FlsBatchWrite(info, doTruncate = false,
-      writeIdOverride = Some(epochWriteId(epochId)), skipEmptyCommit = true,
-      session = session)
+      epoch = Some((info.queryId(), epochId)), session = session)
 
   override def createStreamingWriterFactory(
       pInfo: PhysicalWriteInfo): org.apache.spark.sql.connector.write.streaming.StreamingDataWriterFactory = {
-    // epoch 0's factory carries all resolved options and runs the
-    // layout guard + mkdirs once at stream start; per-epoch writers
-    // just swap in the epoch's writeId
+    // Spark asks for a factory once per micro-batch, so each batch
+    // resolves the options, runs the layout guard and decides direct
+    // writes from the table as it is then; writers swap in the epoch's
+    // writeId. Task ids restart at 0 in a restarted driver, so direct
+    // names also carry a tag of this attempt: a replay never writes over
+    // the files of the attempt its manifest recorded.
     val base = forEpoch(0L).createBatchWriterFactory(pInfo).asInstanceOf[FlsWriterFactory]
-    FlsStreamingWriterFactory(base, info.queryId())
+    FlsStreamingWriterFactory(
+      base.copy(attemptTag = "-" + UUID.randomUUID().toString.take(8)),
+      info.queryId())
   }
 
   override def commit(epochId: Long, messages: Array[WriterCommitMessage]): Unit =
@@ -1583,16 +1586,14 @@ case class FlsStreamingWriterFactory(base: FlsWriterFactory, queryId: String)
   * the message-named files this job already moved, puts back what the
   * commit set aside, then drops the staging dir. */
 class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
-    /** Streaming epochs pass a DETERMINISTIC id (queryId + epoch) so an
-      * epoch retry converges: job commit publishes over prior-attempt
-      * final names (setting the old files aside) and reconciles the
-      * exact set, and the manifest
-      * drops prior-attempt entries of the same writeId. Batch writes
-      * keep the random default. */
-    writeIdOverride: Option[String] = None,
-    /** Streaming epochs with zero rows must not add a schema-only file
-      * per trigger to an already-populated table. */
-    skipEmptyCommit: Boolean = false,
+    /** A streaming epoch `(queryId, epoch)`. Its writeId is
+      * deterministic, `<queryId>-e<epoch>`, so a replay finds what a
+      * prior attempt left: a manifest commit publishes nothing for an
+      * epoch the head records, and a listing-mode commit publishes over
+      * the prior attempt's final names and retires its other files. An
+      * epoch with zero rows adds no schema-only file to a populated
+      * table. Batch writes take a random writeId. */
+    epoch: Option[(String, Long)] = None,
     /** `INSERT OVERWRITE` by filter: existing files the filter decides
       * TRUE are replaced at commit; a file it cannot decide aborts. */
     overwriteFilters: Option[Array[Filter]] = None,
@@ -1665,7 +1666,8 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     * first manifest commit still lands in the manifest. */
   private def viaManifest(fs: org.apache.hadoop.fs.FileSystem, dir: Path): Boolean =
     commitMode.contains("manifest") || graft.fls.FlsManifest.exists(fs, dir)
-  private val writeId = writeIdOverride.getOrElse(UUID.randomUUID().toString)
+  private val writeId = epoch.map { case (q, e) => s"$q-e$e" }
+    .getOrElse(UUID.randomUUID().toString)
 
   partitionBy.foreach { c =>
     require(info.schema().fieldNames.contains(c),
@@ -1769,8 +1771,13 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     val dir = new Path(path)
     val fs = dir.getFileSystem(conf)
     val manifestMode = viaManifest(fs, dir)
-    require(manifestMode ||
-        FlsDataSource.branchRef(options) == graft.fls.FlsManifest.MainRef,
+    // write-audit-publish: `branch=<name>` commits this write to the
+    // named branch lineage — data files land in the table directory
+    // as always (attempt-unique), but only the branch's manifest
+    // vouches for them; main readers never see them until
+    // system.fast_forward republishes the branch head
+    val branch = FlsDataSource.branchRef(options)
+    require(manifestMode || branch == graft.fls.FlsManifest.MainRef,
       "fls: branch writes need commit_mode=manifest — the branch IS a " +
         "manifest lineage")
     var committedLen = messages.flatMap {
@@ -1784,7 +1791,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         files.zip(stats).filter(_._2 != null)
       case _ => Array.empty[(String, String)]
     }.toMap
-    if (committedLen.isEmpty && skipEmptyCommit &&
+    if (committedLen.isEmpty && epoch.isDefined &&
         graft.fls.FlsFile.listDataStatuses(dir, conf).nonEmpty) {
       // an idle trigger on a populated table: nothing to publish; drop
       // whatever a prior attempt of this epoch staged
@@ -1794,6 +1801,16 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     if (committedLen.isEmpty && dynamicOverwrite) {
       // dynamic overwrite with zero rows touches zero partitions —
       // classic Hive semantics: a no-op, never a truncate
+      FlsCommit.removeStaging(fs, dir, writeId)
+      return
+    }
+    if (manifestMode && epoch.exists(e => graft.fls.FlsManifest
+        .readLayoutVersioned(fs, dir, branch, resolveChunks = false)
+        .exists(h => graft.fls.FlsManifest.recordsEpoch(h._2, e)))) {
+      // a replay of an epoch the manifest records publishes nothing
+      // (the commit below would skip it too, but a staged replay must
+      // not first move its files onto the names the recorded entries
+      // point at)
       FlsCommit.removeStaging(fs, dir, writeId)
       return
     }
@@ -1815,7 +1832,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
     // aside, where an abort finds them again
     val aside = FlsCommit.asideDir(dir, writeId)
     committedLen ++= FlsCommit.publish(fs, dir, staged ++ emptyFile,
-      writeIdOverride.map(_ => aside))
+      epoch.map(_ => aside))
     val committed = committedLen.keySet
 
     /** Row-level replace set as dir-relative paths. */
@@ -1862,13 +1879,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       }
     }
 
-    // Set when a streaming epoch committed via the O(delta) marker
-    // path: the prior attempt's entries it dropped (the caller deletes
-    // exactly those files below instead of walking the table).
-    var epochDeltaRemoved: Option[Seq[graft.fls.FlsManifest.Entry]] = None
     if (manifestMode) {
-      // publish the manifest FIRST: from this point readers see exactly
-      // the new table; physical cleanup below is invisible to them.
       // The publish is a CAS retry loop (FlsManifest.commit): this job
       // merges onto whatever version is newest AT PUBLISH TIME, so two
       // concurrent appenders both land — the loser re-merges and
@@ -1877,12 +1888,6 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         case (rel, len) if rel.endsWith(".fls") =>
           graft.fls.FlsManifest.Entry(rel, len, 0L, committedStats.getOrElse(rel, null))
       }.toSeq
-      // write-audit-publish: `branch=<name>` commits this write to the
-      // named branch lineage — data files land in the table directory
-      // as always (attempt-unique), but only the branch's manifest
-      // vouches for them; main readers never see them until
-      // system.fast_forward republishes the branch head
-      val branch = FlsDataSource.branchRef(options)
       require(branch == graft.fls.FlsManifest.MainRef ||
           replaceFilesThunk.isEmpty,
         "fls: row-level operations on a branch are not supported — " +
@@ -1896,12 +1901,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
           if (doTruncate) Nil
           else {
             val base = current match {
-              // drop prior-attempt entries of THIS writeId too: a retried
-              // streaming epoch re-publishes its own files (attempt-unique
-              // names differ), and keeping the crashed attempt's entries
-              // would double the epoch's rows
-              case Some(old) => old.filterNot(e =>
-                committed.contains(e.rel) || e.rel.contains(s"-$writeId-"))
+              case Some(old) => old.filterNot(e => committed.contains(e.rel))
               case None =>
                 // appending onto a pre-manifest (listing-mode) table: seed
                 // the manifest from one last recursive listing — without
@@ -1960,106 +1960,49 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       // A pure append touches no existing entry: commit it as a delta
       // so the publish is O(new files) in metadata reads and driver
       // heap — on a chunked manifest the existing #chunk pointers are
-      // carried verbatim, never opened (FlsManifest.commitDelta).
-      // STREAMING EPOCHS (r17) ride the same path via epoch markers:
-      // each epoch commit stamps its writeId on the chunk(s) it
-      // writes, so a RETRIED epoch (driver crash between sink commit
-      // and Spark's commit log) locates its crashed attempt's entries
-      // by opening only marker-stamped chunks — no rel range can find
-      // a writeId INFIX, which previously forced every per-minute
-      // epoch through the full O(table) merge. The delta path engages
-      // only once a marker of this QUERY exists in the head (proof
-      // prior epochs stamped markers); the query's very first epoch —
-      // and the first after an upgrade from a marker-less binary —
-      // pays one full merge that bootstraps the markers. Every other
-      // shape (truncate, filter/dynamic overwrite, row-level replace)
-      // edits existing entries and reclassifies the current set, so it
-      // needs the full merge anyway.
+      // carried verbatim, never opened (FlsManifest.commitDelta). A
+      // streaming epoch is such an append, skipped if a concurrent
+      // attempt recorded it first. Every other shape (truncate,
+      // filter/dynamic overwrite, row-level replace) edits existing
+      // entries and reclassifies the current set, so it needs the full
+      // merge.
       val appendShape = !doTruncate && replaceFilesThunk.isEmpty &&
         replacedDvThunk.isEmpty && replacedEqThunk.isEmpty &&
         overwriteFilters.isEmpty && !dynamicOverwrite
-      if (appendShape && writeIdOverride.isEmpty)
+      if (appendShape)
         graft.fls.FlsManifest.commitDelta(fs, dir, writeId, conf,
-            op = manifestOp, ref = branch)(
+            op = manifestOp, ref = branch, stream = epoch)(
           _ => graft.fls.FlsManifest.Delta(add = newEntries))(fullMerge)
-      else if (appendShape) {
-        val qid = graft.fls.FlsManifest.epochQid(writeId).map(_._1)
-        val headHasQid = qid.exists { q =>
-          graft.fls.FlsManifest.readLayoutVersioned(fs, dir, branch,
-              resolveChunks = false)
-            .exists(_._2.pointers.exists(_.epochs.exists(m =>
-              graft.fls.FlsManifest.epochQid(m).exists(_._1 == q))))
-        }
-        if (headHasQid) {
-          val removed =
-            scala.collection.mutable.ArrayBuffer[graft.fls.FlsManifest.Entry]()
-          graft.fls.FlsManifest.commitDelta(fs, dir, writeId, conf,
-              op = manifestOp, ref = branch,
-              epochWriteId = Some(writeId), epochRemovedOut = removed)(
-            _ => graft.fls.FlsManifest.Delta(add = newEntries))(fullMerge)
-          epochDeltaRemoved = Some(removed.toSeq)
-        } else
-          graft.fls.FlsManifest.commit(fs, dir, writeId, conf,
-            op = manifestOp, ref = branch, epochAdd = Some(writeId))(fullMerge)
-      } else
+      else
         graft.fls.FlsManifest.commit(fs, dir, writeId, conf,
           op = manifestOp, ref = branch)(fullMerge)
-    }
-    def cleanup(): Unit = if (epochDeltaRemoved.isDefined) {
-      // O(delta) epoch cleanup: delete exactly the crashed prior
-      // attempt's published files + their sidecars (the entries the
-      // marker-path commit dropped) — a recursive table walk per
-      // per-minute epoch would reintroduce the O(table) listing the
-      // delta path exists to avoid. Task-failure junk of this epoch
-      // (final-named, never committed) stays invisible in manifest
-      // mode and is reclaimed by CALL system.vacuum.
-      epochDeltaRemoved.get.foreach { e =>
-        val sidecars = e.rel +: ((e.rel + ".footer") +:
-          (graft.fls.FlsFileStats.dvOf(e.stats).toSeq ++
-            graft.fls.FlsFileStats.bfOf(e.stats).toSeq)
-            .map(b => graft.fls.FlsDeleteVectors.relFor(e.rel, b)))
-        sidecars.foreach(r =>
-          try fs.delete(new Path(dir, r), false) catch { case _: Throwable => () })
-      }
-    } else {
+    } else if (doTruncate || overwriteFilters.isDefined || dynamicOverwrite ||
+        replaceFilesThunk.isDefined || epoch.isDefined) {
+      // Listing mode, and the job can remove something: the directory
+      // IS the table, so what the write replaces leaves it now — moved
+      // into the job's staging tree, where an abort finds it again. (A
+      // final name of this writeId not committed here is a replayed
+      // epoch's prior attempt.) Manifest mode removes nothing: the new
+      // version no longer names replaced files, pinned VERSION AS OF
+      // readers still resolve them, and vacuum reclaims them with
+      // every uncommitted attempt file.
       val listed = scala.collection.mutable.ArrayBuffer[(org.apache.hadoop.fs.FileStatus, String)]()
       walkManaged(fs, dir) { (s, rel) => listed += ((s, rel)) }
-      val doomedNow: Set[String] =
-        if (manifestMode) Set.empty
-        else doomedAmong(listed.collect { case (_, rel) if rel.endsWith(".fls") => rel }.toSeq)
+      val doomedNow =
+        doomedAmong(listed.collect { case (_, rel) if rel.endsWith(".fls") => rel }.toSeq)
       listed.foreach { case (s, rel) =>
-        if (!committed.contains(rel)) {
-          val thisJobs = s.getPath.getName.contains(s"-$writeId-")
-          val doomed = doomedNow.contains(rel) ||
-            (rel.endsWith(".footer") && doomedNow.contains(rel.stripSuffix(".footer")))
-          // manifest-mode truncate keeps the replaced files on disk like
-          // every other manifest-mode replacement: the new manifest no
-          // longer names them (invisible to current readers), pinned
-          // VERSION AS OF readers still resolve them, vacuum reclaims
-          // them past the retention horizon. Listing mode must remove
-          // eagerly — the directory IS the table there — and does so by
-          // moving files into the job's staging tree, so an abort puts
-          // back whatever a failed commit removed. (A final name of this
-          // writeId not committed here is a replayed epoch's prior
-          // attempt.)
-          if (manifestMode) { if (thisJobs) fs.delete(s.getPath, false) }
-          else if (thisJobs || doTruncate || doomed) FlsCommit.setAside(fs, dir, rel, aside)
-        }
+        val doomed = doomedNow.contains(rel) ||
+          (rel.endsWith(".footer") && doomedNow.contains(rel.stripSuffix(".footer")))
+        if (!committed.contains(rel) &&
+            (s.getPath.getName.contains(s"-$writeId-") || doTruncate || doomed))
+          FlsCommit.setAside(fs, dir, rel, aside)
       }
-      if (!manifestMode && doomedNow.nonEmpty &&
-          graft.fls.FlsFile.listDataStatuses(dir, conf).isEmpty)
+      if (doomedNow.nonEmpty && graft.fls.FlsFile.listDataStatuses(dir, conf).isEmpty)
         // a filter overwrite with zero new rows can empty the table —
         // leave it readable, like every other emptying path
         FlsCommit.publish(fs, dir,
           stageSchemaOnly(conf, dir, f"part-${0}%05d-$writeId-${9999}%04d.fls"))
     }
-    // In manifest mode the publish above IS the commit: a throw from here
-    // on would make Spark abort a write readers already see, so cleanup
-    // is best effort (what it leaves, the manifest hides). In listing
-    // mode the removals are part of the commit and must succeed; abort
-    // undoes them.
-    if (manifestMode) FlsCommit.bestEffort(s"cleanup after publishing $dir")(cleanup())
-    else cleanup()
     FlsCommit.removeStaging(fs, dir, writeId)
     FlsCommit.sweepOrphans(fs, dir, writeId, stagingTtlMs)
   }
@@ -2119,7 +2062,9 @@ case class FlsWriterFactory(
     directWrite: Boolean = false,
     ndvColumns: Seq[String] = Nil,
     bloomColumns: Seq[String] = Nil,
-    bloomFpp: Double = 0.01) extends DataWriterFactory {
+    bloomFpp: Double = 0.01,
+    /** Appended to direct-write names (streaming epochs). */
+    attemptTag: String = "") extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
     // taskId is unique per task ATTEMPT, so speculative twins stage to
@@ -2132,7 +2077,7 @@ case class FlsWriterFactory(
     // attempt's names enter the manifest.
     new FlsDataWriter(dir, schema, rowGroupSize, rowGroupsPerFile,
       conf.value,
-      if (directWrite) f"part-$partitionId%05d-$writeId-$taskId"
+      if (directWrite) f"part-$partitionId%05d-$writeId-$taskId$attemptTag"
       else f"part-$partitionId%05d-$writeId",
       s"$writeId/attempt-$partitionId-$taskId", inlineFooter, transpose,
       partitionBy, maxOpenPartitions, directWrite, ndvColumns,

@@ -293,8 +293,8 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       "FROM range(0, 2000)")
     val root = new Path(dir)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    // drive the sink directly (the epoch harness): epoch 0 bootstraps
-    // markers via the full merge, epochs 1..2 must be pure O(delta)
+    // drive the sink directly (the epoch harness): every epoch is a
+    // pure O(delta) append
     val streamSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("id",
         org.apache.spark.sql.types.LongType, nullable = false),
@@ -321,16 +321,15 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       val (_, n) = chunkReads(sw.commit(e, Array(w.commit())))
       n
     }
-    epoch(0L, 2000L, 2099L) // bootstrap (full merge, stamps markers)
+    val n0 = epoch(0L, 2000L, 2099L)
     val n1 = epoch(1L, 2100L, 2199L)
-    assert(n1 == 0L, s"steady-state epoch opened $n1 chunks")
+    assert(n0 == 0L && n1 == 0L, s"epochs opened $n0 and $n1 chunks")
     // the epoch's new chunk carries the id VALUE range in its pointer
     // stats — computed from the delta alone, no chunk was opened
     val pointers = FlsManifest
       .readLayoutVersioned(fs, root, resolveChunks = false).get._2.pointers
-    val epochChunks = pointers.filter(
-      _.epochs.exists(m => FlsManifest.epochBase(m) == "q-stats-e1"))
-    assert(epochChunks.nonEmpty, "epoch 1's chunk must be marker-stamped")
+    val epochChunks = pointers.filter(_.minRel.contains("-q-stats-e1-"))
+    assert(epochChunks.nonEmpty, "epoch 1's file must lead its own chunk")
     val (lo, hi) = boundsOf(epochChunks.head, "id")
     assert(lo >= 2100L && hi <= 2199L,
       s"epoch chunk stats must bound the epoch's ids, got [$lo,$hi]")

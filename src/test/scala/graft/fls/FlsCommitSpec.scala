@@ -2,6 +2,8 @@ package graft.fls
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
@@ -138,6 +140,25 @@ class FlsCommitSpec extends AnyFunSuite with BeforeAndAfterAll {
     batch.commit(Array(msg))
     assert(oldFiles.forall(f => !flsFiles(dir).contains(f)))
     assert(readLongs(dir) == (21L to 30L))
+  }
+
+  test("a listing-mode plain append lists no table directory at job commit") {
+    val dir = Files.createTempDirectory("fls-spec-append-walk").toString
+    spark.range(1, 6).selectExpr("id AS v").write.format("fls").mode("append").save(dir)
+    def commitListings(doTruncate: Boolean, lo: Long): Seq[Path] = {
+      val batch = new FlsBatchWrite(writeInfo(dir), doTruncate)
+      val w = batch.createBatchWriterFactory(null).createWriter(0, 1L)
+      (lo until lo + 5).foreach(i => w.write(row(i)))
+      val msg = w.commit()
+      FaultyFs.during(spark, (_, _) => false)(batch.commit(Array(msg)))
+      // hidden directories (`_temporary`, `_fls_manifest_log`) aside
+      FaultyFs.listed.asScala.toSeq.filterNot(_.getName.startsWith("_"))
+    }
+    assert(commitListings(doTruncate = false, 10L).isEmpty)
+    assert(readLongs(dir) == (1L to 5L) ++ (10L to 14L))
+    // a truncate removes what it replaces, so it walks the table
+    assert(commitListings(doTruncate = true, 20L).nonEmpty)
+    assert(readLongs(dir) == (20L to 24L))
   }
 
   test("job abort rolls back committed tasks' renamed files") {
@@ -310,8 +331,13 @@ private class FlsDataWriterProbe(
 
 /** Local file system that refuses every delete and rename
   * `FaultyFs.refuses(src, dst)` accepts (`dst` is null for a delete) — a
-  * store that fails in the middle of a commit. */
+  * store that fails in the middle of a commit — and records every
+  * directory it lists in `FaultyFs.listed`. */
 class FaultyFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(p: Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    FaultyFs.listed.add(p)
+    super.listStatus(p)
+  }
   override def delete(p: Path, recursive: Boolean): Boolean =
     if (FaultyFs.refuses(p, null)) throw new java.io.IOException(s"injected delete failure: $p")
     else super.delete(p, recursive)
@@ -321,13 +347,15 @@ class FaultyFs extends org.apache.hadoop.fs.LocalFileSystem {
 
 object FaultyFs {
   @volatile var refuses: (Path, Path) => Boolean = (_, _) => false
+  val listed = new java.util.concurrent.ConcurrentLinkedQueue[Path]()
 
   /** Runs `body` with `refuses` installed as the session's local file
-    * system. */
+    * system, `listed` cleared first. */
   def during[T](spark: SparkSession, refuses: (Path, Path) => Boolean)(body: => T): T = {
     spark.conf.set("fs.file.impl", classOf[FaultyFs].getName)
     spark.conf.set("fs.file.impl.disable.cache", "true")
     FaultyFs.refuses = refuses
+    FaultyFs.listed.clear()
     try body
     finally {
       FaultyFs.refuses = (_, _) => false

@@ -1,5 +1,6 @@
 package graft.fls
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.hadoop.fs.Path
@@ -7,20 +8,15 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Streaming epochs on the O(delta) commit path (r17 — the r16
-  * verdict's #1 item): every epoch commit used to route through the
-  * full O(table) metadata merge because a RETRIED epoch must find its
-  * crashed attempt's entries by their deterministic writeId — an INFIX
-  * of the file name that no rel range can locate. Epoch markers fix
-  * that: each epoch commit stamps its writeId on the pointer line of
-  * the chunk(s) it writes (`w:` field), so a retry opens only
-  * marker-stamped chunks. Locks: a steady-state epoch append to a
-  * many-chunk table opens ZERO chunks; a retried epoch opens O(its own
-  * marker chunks), converges to exactly-once (replace semantics, same
-  * as the full path), and physically deletes the crashed attempt's
-  * files; markers survive folds/rewrites conservatively and superseded
-  * ones (an older epoch of a query whose newer epoch is stamped) are
-  * pruned; the query's FIRST epoch bootstraps through one full merge. */
+/** Streaming epochs on a manifest table. Each version carries one
+  * `#stream\t<queryId>\t<epoch>` line per query that has committed to
+  * its ref; an epoch commit whose head already records its query at
+  * that epoch or later publishes nothing. Locks: epoch commits open no
+  * chunk (first epoch, steady state, replay); the lines survive a fold,
+  * a compaction and a rollback; the skip is decided inside the CAS
+  * attempt; a replay after compaction keeps the rows single; and a
+  * table whose epochs an earlier writer recorded as `w:` chunk markers
+  * still recognizes them. */
 class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -64,11 +60,12 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.read.format("fls").load(dir).select("v").collect()
       .map(_.getLong(0)).toSeq.sorted
 
-  private def headLayout(dir: String): FlsManifest.Layout = {
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    FlsManifest.readLayoutVersioned(fs, p, resolveChunks = false).get._2
-  }
+  private def fsOf(dir: String) =
+    new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
+
+  private def head(dir: String): (Long, FlsManifest.Layout) =
+    FlsManifest.readLayoutVersioned(fsOf(dir), new Path(dir),
+      resolveChunks = false).get
 
   private def seed(dir: String, n: Long): Unit = {
     val sp = spark
@@ -87,160 +84,49 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     (r, FlsManifest.chunkReadCount.get() - before)
   }
 
-  test("steady-state epoch appends open ZERO chunks; the query's first " +
-      "epoch bootstraps markers through one full merge") {
-    val dir = s"$tmp/steady"
-    seed(dir, 100L)
-    assert(headLayout(dir).pointers.nonEmpty, "spec setup: must be chunked")
+  /** Runs epoch `e` of query `qid` writing `vs` through a fresh sink, as
+    * Spark does per micro-batch; returns the chunks the commit opened. */
+  private def epoch(dir: String, qid: String, e: Long, vs: Seq[Long]): Long = {
     import graft.fls.connector._
-    val sw = new FlsStreamingWrite(writeInfo(dir, "q-steady"), spark)
-    val factory = sw.createStreamingWriterFactory(null)
-    def commitEpoch(e: Long, lo: Long, hi: Long): Long = {
-      val w = factory.createWriter(0, 10L + e, e)
-      (lo to hi).foreach(i => w.write(row(i)))
-      val (_, n) = opened(sw.commit(e, Array(w.commit())))
-      n
-    }
-    // epoch 0: no marker of this query anywhere → the bootstrap full
-    // merge (resolves every chunk) — and stamps the first marker
-    val n0 = commitEpoch(0L, 1000L, 1019L)
-    assert(n0 > 0, "bootstrap must take the full (chunk-resolving) path")
-    val marks0 = headLayout(dir).pointers.flatMap(_.epochs)
-      .map(FlsManifest.epochBase)
-    assert(marks0.contains("q-steady-e0"),
-      s"bootstrap must stamp its marker, got $marks0")
-    // epochs 1..3: marker present → delta path, ZERO chunks opened
-    (1L to 3L).foreach { e =>
-      val n = commitEpoch(e, 1000L + e * 100, 1019L + e * 100)
-      assert(n == 0L, s"steady-state epoch $e opened $n chunks — not O(delta)")
-    }
-    assert(readLongs(dir).size == 100 + 4 * 20)
-    // each epoch's marker rides its own chunk; superseded markers are
-    // pruned only when their chunk is rewritten (folds), so the set
-    // stays small but may briefly hold one marker per recent epoch
-    val marks = headLayout(dir).pointers.flatMap(_.epochs)
-      .map(FlsManifest.epochBase)
-    assert(marks.contains("q-steady-e3"), s"newest epoch must be stamped: $marks")
+    val sw = new FlsStreamingWrite(writeInfo(dir, qid), spark)
+    val w = sw.createStreamingWriterFactory(null).createWriter(0, 10L + e, e)
+    vs.foreach(v => w.write(row(v)))
+    val msg = w.commit()
+    opened(sw.commit(e, Array(msg)))._2
   }
 
-  test("a RETRIED epoch on the delta path converges to replace " +
-      "semantics by opening only its own marker chunks, and deletes " +
-      "the crashed attempt's files") {
-    val dir = s"$tmp/retry"
+  test("epoch commits open zero chunks: the first epoch, steady state and a replay") {
+    val dir = s"$tmp/zero"
     seed(dir, 100L)
-    import graft.fls.connector._
-    val sw = new FlsStreamingWrite(writeInfo(dir, "q-retry"), spark)
-    val factory = sw.createStreamingWriterFactory(null)
-    // epoch 0 bootstraps markers
-    val w0 = factory.createWriter(0, 1L, 0L)
-    (500L to 509L).foreach(i => w0.write(row(i)))
-    sw.commit(0L, Array(w0.commit()))
-    // epoch 1, attempt 1 (delta path): publishes, then "the driver
-    // dies before Spark's commit log"
-    val a1 = factory.createWriter(0, 2L, 1L)
-    (600L to 619L).foreach(i => a1.write(row(i)))
-    sw.commit(1L, Array(a1.commit()))
-    assert(readLongs(dir).count(_ >= 600L) == 20)
-    val fs = new Path(dir).getFileSystem(spark.sessionState.newHadoopConf())
-    val attempt1Files = FlsManifest.readVersioned(fs, new Path(dir)).get._2
-      .map(_.rel).filter(_.contains("-q-retry-e1-"))
-    assert(attempt1Files.nonEmpty)
-    // epoch 1 re-executes with different data (the spec's observable
-    // for WHICH attempt won; in production the replayed offsets make
-    // the data identical)
-    val a2 = factory.createWriter(0, 3L, 1L)
-    val (_, n) = opened {
-      (700L to 719L).foreach(i => a2.write(row(i)))
-      sw.commit(1L, Array(a2.commit()))
+    assert(head(dir)._2.pointers.nonEmpty, "spec setup: must be chunked")
+    (0L to 3L).foreach { e =>
+      val n = epoch(dir, "q-zero", e, (1000L + e * 100) to (1019L + e * 100))
+      assert(n == 0L, s"epoch $e opened $n chunks")
     }
-    assert(n <= 2, s"retry opened $n chunks — must open only its marker chunk(s)")
+    assert(head(dir)._2.streams == Map("q-zero" -> 3L))
+    val before = head(dir)._1
+    // the replay reads other data here only to tell the attempts apart;
+    // it runs under the first attempt's task id, as a restarted driver
+    // may hand out, so its direct file must not take the recorded name
+    val n = epoch(dir, "q-zero", 3L, 9000L to 9019L)
+    assert(n == 0L, s"the replay opened $n chunks")
+    assert(head(dir)._1 == before, "the replay must publish no version")
     val vs = readLongs(dir)
-    assert(vs.count(_ >= 700L) == 20, "retry's rows must be visible")
-    assert(!vs.exists(v => v >= 600L && v < 700L),
-      "crashed attempt's rows must be replaced, not doubled")
-    // physical cleanup matches the full path: the crashed attempt's
-    // files are gone from disk, not just unreferenced
-    attempt1Files.foreach { rel =>
-      assert(!fs.exists(new Path(new Path(dir), rel)),
-        s"crashed attempt file $rel must be deleted")
-    }
-    // and a later epoch appends normally on the delta path
-    val b = factory.createWriter(0, 4L, 2L)
-    val (_, n2) = opened {
-      (800L to 809L).foreach(i => b.write(row(i)))
-      sw.commit(2L, Array(b.commit()))
-    }
-    assert(n2 == 0L, s"post-retry epoch opened $n2 chunks")
-    assert(readLongs(dir).count(_ >= 800L) == 10)
+    assert(vs.size == 100 + 4 * 20 && !vs.exists(_ >= 9000L),
+      "the replay must keep the first attempt's rows")
   }
 
-  test("marker supersession: an older epoch of a query is pruned once " +
-      "a newer epoch is stamped in the same rewrite; foreign markers " +
-      "survive") {
-    // (r18) markers carry an @<version>:<millis> age stamp: carried
-    // ones start their clocks at the committing version, the
-    // committing epoch stamps @next:now, the newest stamp wins per base
-    def dead(ms: Seq[String], next: Long, ra: Long, rm: Long, now: Long) =
-      FlsManifest.deadEpochQids(ms, next, ra, rm, now)
-    val pruned = FlsManifest.pruneEpochMarkers(
-      Seq("q-e1", "q-e3", "other-e5"), Some("q-e7"), 10L, 5000L,
-      dead(Seq("q-e1", "q-e3", "other-e5"), 10L, 64L, 0L, 5000L))
-    assert(pruned.toSet == Set("q-e7@10:5000", "other-e5@10:5000"), pruned)
-    // retry of the SAME epoch keeps exactly one marker, freshest stamp
-    val retry = FlsManifest.pruneEpochMarkers(Seq("q-e7@5:100"),
-      Some("q-e7"), 10L, 5000L, Set.empty)
-    assert(retry == Seq("q-e7@10:5000"))
-    // unparseable markers are never dropped (but do age)
-    val odd = FlsManifest.pruneEpochMarkers(Seq("weird"), Some("q-e1"),
-      10L, 5000L, Set.empty)
-    assert(odd.toSet == Set("weird@10:5000", "q-e1@10:5000"))
-    // retirement needs BOTH clocks expired: version-aged but wall-fresh
-    // survives (the live slow-cadence stream on a busy table), and so
-    // does wall-aged but version-fresh; only both-aged drops
-    val agedIn = Seq("dead-e4@10:100", "slow-e9@10:99000", "calm-e2@95:100")
-    val aged = FlsManifest.pruneEpochMarkers(agedIn, None, 100L, 100000L,
-      dead(agedIn, 100L, 64L, 60000L, 100000L))
-    assert(aged.toSet == Set("slow-e9@10:99000", "calm-e2@95:100"), aged)
-    // retirement is QID-ATOMIC (r18 review): a query with one dead and
-    // one wall-fresh marker (NTP step-back shape) keeps BOTH eligible
-    // markers — the newest epoch can never die before an older one
-    val ntp = Seq("q-e9@10:100", "q-e3@10:99000") // newer epoch, older ms!
-    val deadNtp = dead(ntp, 100L, 64L, 60000L, 100000L)
-    assert(deadNtp.isEmpty, s"qid with a fresh marker must not be dead: $deadNtp")
-    val kept = FlsManifest.pruneEpochMarkers(ntp, None, 100L, 100000L, deadNtp)
-    assert(kept.flatMap(FlsManifest.epochQid).map(_._2).max == 9L,
-      s"the newest epoch must survive supersession: $kept")
-    // ...and a qid whose EVERY marker is dead drops whole
-    val allDead = Seq("q-e9@10:100", "q-e3@10:200")
-    assert(dead(allDead, 100L, 64L, 60000L, 100000L) == Set("q"))
-    // version-only stamps (earlier r18 builds) gain the wall component
-    val up = FlsManifest.pruneEpochMarkers(Seq("q-e7@5"), None,
-      10L, 7777L, Set.empty)
-    assert(up == Seq("q-e7@5:7777"))
-    // epochQid parses the LAST -e<digits> suffix (queryIds are UUIDs
-    // and may themselves contain -e<hex>)
-    assert(FlsManifest.epochQid("ab-e123-e7") == Some(("ab-e123", 7L)))
-    assert(FlsManifest.epochQid("plain") == None)
-  }
-
-  test("batch commits between epochs carry markers through fold/rewrite " +
-      "so a late retry still finds its chunk") {
+  test("#stream lines survive a fold, a compaction and a rollback") {
     val dir = s"$tmp/carry"
-    seed(dir, 100L) // 5 files > inline threshold → chunked from the start
-    import graft.fls.connector._
-    val sw = new FlsStreamingWrite(writeInfo(dir, "q-carry"), spark)
-    val factory = sw.createStreamingWriterFactory(null)
-    val w0 = factory.createWriter(0, 1L, 0L)
-    (500L to 509L).foreach(i => w0.write(row(i)))
-    sw.commit(0L, Array(w0.commit()))
-    // a ONE-row epoch: its entries land in a 1-entry chunk, which the
-    // small-chunk fold will later rewrite — the marker must smear onto
-    // the folded chunk or the late retry loses its attempt
-    val a1 = factory.createWriter(0, 2L, 1L)
-    a1.write(row(600L))
-    sw.commit(1L, Array(a1.commit()))
-    // a burst of tiny BATCH appends triggers the fold (>= 8 decayed
-    // small chunks), rewriting the epoch's chunk
+    seed(dir, 100L)
+    epoch(dir, "q-carry", 1L, Seq(600L))
+    val recordedAt = head(dir)._1
+    assert(head(dir)._2.streams == Map("q-carry" -> 1L))
+    // a rollback carries the HEAD's lines: the epoch stays recorded
+    FlsMaintenance.rollback(spark, dir, recordedAt - 1)
+    assert(head(dir)._2.streams == Map("q-carry" -> 1L), "lost by rollback")
+    assert(!readLongs(dir).contains(600L), "spec setup: rolled back")
+    // a burst of tiny BATCH appends folds the small chunks (>= 8)
     val sp = spark
     import sp.implicits._
     (0 until 10).foreach { i =>
@@ -248,256 +134,94 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
         .write.format("fls").mode("append")
         .option("commit_mode", "manifest").save(dir)
     }
-    val marks = headLayout(dir).pointers.flatMap(_.epochs)
-      .map(FlsManifest.epochBase)
-    assert(marks.contains("q-carry-e1"),
-      s"fold must carry the epoch marker, got $marks")
-    // the late retry still converges
-    val a2 = factory.createWriter(0, 3L, 1L)
-    a2.write(row(700L))
-    sw.commit(1L, Array(a2.commit()))
-    val vs = readLongs(dir)
-    assert(vs.contains(700L), "retry's row must be visible")
-    assert(!vs.contains(600L),
-      "crashed attempt's row must be replaced after a fold")
+    assert(head(dir)._2.streams == Map("q-carry" -> 1L), "lost by the fold")
+    FlsMaintenance.compact(spark, dir)
+    assert(head(dir)._2.streams == Map("q-carry" -> 1L), "lost by compaction")
   }
 
-  test("seeded marker-algebra invariants: 200 random marker sets " +
-      "through pruneEpochMarkers keep every live-query marker, drop " +
-      "only superseded or whole-qid-dead ones, and are idempotent") {
-    val rnd = new scala.util.Random(42L)
-    val next = 1000L
-    val nowMs = 1000000L
-    val retireAfter = 64L
-    val retireMs = 5000L
-    (0 until 200).foreach { trial =>
-      val qids = Seq("qa", "qb", "qc-e9x") // last one: qid containing -e
-      val ms = (0 until rnd.nextInt(8)).map { _ =>
-        val qid = qids(rnd.nextInt(qids.length))
-        val e = rnd.nextInt(20)
-        val base = s"$qid-e$e"
-        rnd.nextInt(3) match {
-          case 0 => base // stampless (legacy)
-          case 1 => s"$base@${rnd.nextInt(1000)}" // version-only
-          case _ => s"$base@${rnd.nextInt(1000)}:${rnd.nextInt(1000000)}"
-        }
-      }
-      val adding = if (rnd.nextBoolean()) Some(s"qa-e${rnd.nextInt(30)}")
-        else None
-      val deadQids = FlsManifest.deadEpochQids(ms, next, retireAfter,
-        retireMs, nowMs)
-      val out = FlsManifest.pruneEpochMarkers(ms, adding, next, nowMs,
-        deadQids)
-      def qidOf(m: String) = FlsManifest.epochQid(m).map(_._1)
-        .getOrElse(FlsManifest.epochBase(m))
-      val inBases = (ms ++ adding).map(FlsManifest.epochBase).toSet
-      // 1. no invented markers
-      assert(out.map(FlsManifest.epochBase).forall(inBases.contains))
-      // 2. every output is fully stamped
-      assert(out.forall(m => FlsManifest.epochStampOf(m) >= 0 &&
-        FlsManifest.epochStampMsOf(m) >= 0), s"trial $trial: $out")
-      // 3. the committing epoch's marker always survives as the
-      //    newest of its qid
-      adding.foreach { a =>
-        val aq = FlsManifest.epochQid(a).get
-        val winners = out.flatMap(FlsManifest.epochQid)
-          .filter(_._1 == aq._1)
-        assert(winners.nonEmpty && winners.head._2 >= aq._2,
-          s"trial $trial: adding $a lost ($out)")
-      }
-      // 4. per qid only one (the max) epoch survives
-      val perQid = out.flatMap(FlsManifest.epochQid).groupBy(_._1)
-      assert(perQid.values.forall(_.length == 1),
-        s"trial $trial: superseded markers survived: $out")
-      // 5. QID-ATOMIC retirement: a qid with ANY fresh marker (either
-      //    clock) is not dead, and its max epoch must survive
-      val maxEpoch = (ms ++ adding).flatMap(FlsManifest.epochQid)
-        .groupBy(_._1).map { case (q, xs) => q -> xs.map(_._2).max }
-      ms.foreach { m =>
-        val vFresh = FlsManifest.epochStampOf(m) < 0 ||
-          next - FlsManifest.epochStampOf(m) <= retireAfter
-        val wFresh = FlsManifest.epochStampMsOf(m) < 0 ||
-          nowMs - FlsManifest.epochStampMsOf(m) <= retireMs
-        if (vFresh || wFresh) {
-          assert(!deadQids.contains(qidOf(m)),
-            s"trial $trial: qid of fresh marker $m marked dead")
-          val q = qidOf(m)
-          val survivors = out.filter(o => qidOf(o) == q)
-          assert(survivors.nonEmpty,
-            s"trial $trial: live qid $q lost all markers ($out)")
-          FlsManifest.epochQid(m).foreach { case (qq, _) =>
-            assert(survivors.flatMap(FlsManifest.epochQid)
-              .exists(_._2 == maxEpoch(qq)),
-              s"trial $trial: live qid $qq lost its max epoch ($out)")
-          }
-        }
-      }
-      // 6. a second application never grows the set and only removes
-      //    WHOLE qids: supersession in round 1 can expose a dead
-      //    max-epoch marker whose qid an older fresh sibling kept
-      //    alive — it retires atomically on the NEXT commit, which is
-      //    convergence, not a violation (the newest marker was present
-      //    the whole time the qid looked live)
-      val dead2 = FlsManifest.deadEpochQids(out, next, retireAfter,
-        retireMs, nowMs)
-      val again = FlsManifest.pruneEpochMarkers(out, None, next, nowMs,
-        dead2)
-      assert(again.toSet.subsetOf(out.toSet), s"trial $trial: grew")
-      val removed = out.toSet -- again.toSet
-      assert(removed.map(qidOf).forall(q => !again.exists(a => qidOf(a) == q)),
-        s"trial $trial: partial-qid removal on reapplication")
-    }
-  }
-
-  test("markers of a RETIRED query age out once BOTH age clocks " +
-      "expire (r18 — marker accretion is bounded); version age alone " +
-      "never demotes a wall-fresh slow stream; a returning query " +
-      "re-bootstraps through one full merge and rides the delta path " +
-      "again") {
-    import graft.fls.connector._
-    def epochCommitter(dir: String, qid: String): Long => Long = {
-      val sw = new FlsStreamingWrite(writeInfo(dir, qid), spark)
-      val factory = sw.createStreamingWriterFactory(null)
-      e => {
-        val w = factory.createWriter(0, 10L + e, e)
-        w.write(row(5000L + e))
-        val (_, n) = opened(sw.commit(e, Array(w.commit())))
-        n
-      }
-    }
-    def bases(dir: String) = headLayout(dir).pointers.flatMap(_.epochs)
-      .map(FlsManifest.epochBase)
-    val sp = spark
-    import sp.implicits._
-    def appendNoise(dir: String, n: Int): Unit =
-      (0 until n).foreach { i =>
-        Seq(8000L + i).toDF("v").coalesce(1)
-          .write.format("fls").mode("append")
-          .option("commit_mode", "manifest").save(dir)
-      }
-    // NOTE: the write path captures its Hadoop conf at the table's
-    // first use, so retire settings must be in force BEFORE any commit
-    // to a table — hence one table per scenario here.
-    // Scenario A: version age alone must NOT retire (the live
-    // slow-cadence stream on a busy table) — wall retention stays at
-    // its 7-day default
-    val dirA = s"$tmp/retire_a"
-    spark.conf.set(FlsManifest.EpochRetireKey, "3")
-    try {
-      seed(dirA, 100L)
-      val commitA = epochCommitter(dirA, "q-slow")
-      commitA(0L); commitA(1L)
-      appendNoise(dirA, 6) // far past retireAfter=3 versions
-      assert(bases(dirA).exists(_.startsWith("q-slow-e")),
-        "a wall-fresh marker must survive version aging alone")
-      // Scenario B: both clocks expire → retire; the returning query
-      // re-bootstraps and re-engages the delta path
-      val dirB = s"$tmp/retire_b"
-      spark.conf.set(FlsManifest.EpochRetireMsKey, "0")
-      seed(dirB, 100L)
-      val commitB = epochCommitter(dirB, "q-retire")
-      commitB(0L) // bootstrap stamps the first marker
-      assert(commitB(1L) == 0L, "second epoch must ride the delta path")
-      assert(bases(dirB).exists(_.startsWith("q-retire-e")),
-        "the live marker must be stamped")
-      appendNoise(dirB, 6)
-      assert(!bases(dirB).exists(_.startsWith("q-retire-e")),
-        s"markers of a finished query must retire, got ${bases(dirB)}")
-      // the data the query wrote is untouched — retirement is
-      // metadata-only
-      val vs = readLongs(dirB)
-      assert(vs.contains(5000L) && vs.contains(5001L))
-      // the query RETURNS: its next epoch re-bootstraps (full merge,
-      // headHasQid = false), stamps a fresh marker, and the one after
-      // rides the delta path again — retirement never strands a query
-      assert(commitB(2L) > 0L,
-        "a returning query must take the bootstrap full merge")
-      assert(commitB(3L) == 0L,
-        "after re-bootstrap the delta path must re-engage")
-      assert(bases(dirB).contains("q-retire-e3"))
-      // and a RETRY of an epoch whose marker retired during the
-      // query's downtime (crash, then > retention of foreign commits)
-      // still converges: the bootstrap full merge replaces the crashed
-      // attempt's rows by the deterministic-writeId substring — no
-      // marker needed for CORRECTNESS, only for the O(delta) locate
-      appendNoise(dirB, 6) // retire q-retire's markers again
-      assert(!bases(dirB).exists(_.startsWith("q-retire-e")),
-        "spec setup: markers must be retired before the late retry")
-      val sw2 = new FlsStreamingWrite(writeInfo(dirB, "q-retire"), spark)
-      val f2 = sw2.createStreamingWriterFactory(null)
-      val retry = f2.createWriter(0, 99L, 3L) // SAME epoch id 3, new data
-      retry.write(row(6003L))
-      sw2.commit(3L, Array(retry.commit()))
-      val after = readLongs(dirB)
-      assert(after.contains(6003L), "the retry's row must be visible")
-      assert(!after.contains(5003L),
-        "the crashed attempt's row must be replaced, not doubled, " +
-          "even with its marker retired")
-    } finally {
-      spark.conf.unset(FlsManifest.EpochRetireKey)
-      spark.conf.unset(FlsManifest.EpochRetireMsKey)
-    }
-  }
-
-  test("TOCTOU (r19): a delta-path retry whose qid markers retired " +
-      "BETWEEN the caller's head check and the delta commit falls back " +
-      "to the full merge inside commitDelta — the crashed attempt's " +
-      "entries are still replaced, never duplicated") {
-    import graft.fls.connector._
-    val dir = s"$tmp/toctou"
-    val p = new Path(dir)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+  test("compaction between an epoch and its replay keeps the epoch's rows single") {
+    val dir = s"$tmp/compact_replay"
     seed(dir, 100L)
-    val sw = new FlsStreamingWrite(writeInfo(dir, "q-toctou"), spark)
-    val factory = sw.createStreamingWriterFactory(null)
-    val w0 = factory.createWriter(0, 1L, 0L)
-    w0.write(row(500L))
-    sw.commit(0L, Array(w0.commit())) // bootstrap: markers exist
-    val a1 = factory.createWriter(0, 2L, 1L)
-    (600L to 604L).foreach(i => a1.write(row(i)))
-    sw.commit(1L, Array(a1.commit())) // attempt 1 publishes, driver "dies"
-    val crashed = FlsManifest.readVersioned(fs, p).get._2
-      .map(_.rel).filter(_.contains("-q-toctou-e1-"))
-    assert(crashed.nonEmpty, "spec setup: attempt-1 entries must exist")
-    // the foreign commits that retire the qid's markers land HERE — in
-    // the window after the caller (FlsConnector) would have read
-    // headHasQid=true and decided the delta path
+    epoch(dir, "q-compact", 1L, 600L to 619L)
+    FlsMaintenance.compact(spark, dir)
+    val rels = FlsManifest.readVersioned(fsOf(dir), new Path(dir)).get._2.map(_.rel)
+    assert(!rels.exists(_.contains("-q-compact-e1-")),
+      "spec setup: compaction must rewrite the epoch's file")
+    // the driver died before Spark's commit log recorded epoch 1, so
+    // the restarted query replays it with the same offsets
+    epoch(dir, "q-compact", 1L, 600L to 619L)
+    assert(readLongs(dir) == ((0L until 100L) ++ (600L to 619L)),
+      "the replay after compaction doubled the epoch's rows")
+  }
+
+  test("the replay skip is decided inside the CAS attempt") {
+    val dir = s"$tmp/cas"
+    seed(dir, 100L)
+    val fs = fsOf(dir)
+    val p = new Path(dir)
     val conf = spark.sessionState.newHadoopConf()
-    conf.setLong(FlsManifest.EpochRetireKey, 1L)
-    conf.setLong(FlsManifest.EpochRetireMsKey, 1L)
-    def qidMarkers() = headLayout(dir).pointers.flatMap(_.epochs)
-      .map(FlsManifest.epochBase).filter(_.startsWith("q-toctou-e"))
-    var i = 0
-    while (qidMarkers().nonEmpty && i < 8) {
-      Thread.sleep(5L)
-      FlsManifest.commit(fs, p, s"foreign-toctou-$i", conf)(
-        (_, cached) => cached.getOrElse(FlsManifest.readVersioned(fs, p).get._2))
-      i += 1
+    def entry(task: Int) =
+      FlsManifest.Entry(s"part-00000-q-cas-e1-$task-0000.fls", 1L, 0L)
+    def commitEpoch(task: Int): Long =
+      FlsManifest.commitDelta(fs, p, s"q-cas-e1-$task", conf,
+          stream = Some(("q-cas", 1L)))(
+        _ => FlsManifest.Delta(add = Seq(entry(task)))) { (_, cur) =>
+        cur.getOrElse(Nil) :+ entry(task)
+      }
+    // a second attempt of epoch 1 commits inside the first attempt's
+    // window between staging its version and the publish CAS
+    FlsManifest.beforePublishForTest = () => {
+      FlsManifest.beforePublishForTest = () => ()
+      commitEpoch(2)
     }
-    assert(qidMarkers().isEmpty,
-      "spec setup: the qid's markers must be retired before the retry")
-    // the retry proceeds on the delta path it already chose (this is
-    // exactly what FlsConnector does having read the PRE-commit
-    // snapshot): commitDelta must notice the fresh head carries no
-    // marker of the qid and route to the full-merge fallback
-    val newEntry = FlsManifest.Entry("part-00000-q-toctou-e1-9999.fls", 1L, 1L)
-    var fellBack = false
-    FlsManifest.commitDelta(fs, p, "q-toctou-e1", conf,
-        epochWriteId = Some("q-toctou-e1"))(
-      _ => FlsManifest.Delta(add = Seq(newEntry))) { (_, cached) =>
-      fellBack = true
-      // the connector's fullMerge convergence: drop the crashed
-      // attempt's deterministic-writeId entries, add this attempt's
-      cached.getOrElse(FlsManifest.readVersioned(fs, p).get._2)
-        .filterNot(_.rel.contains("-q-toctou-e1-")) :+ newEntry
+    val v = try commitEpoch(1)
+      finally FlsManifest.beforePublishForTest = () => ()
+    assert(FlsManifest.lastDeltaAttempts.get() == 2,
+      "the first attempt must lose the race and read the new head")
+    assert(v == head(dir)._1, "a skipped commit returns the head's version")
+    val rels = FlsManifest.readVersioned(fs, p).get._2.map(_.rel)
+    assert(rels.contains(entry(2).rel) && !rels.contains(entry(1).rel),
+      s"exactly the attempt that won must be recorded: $rels")
+    // the full path (an inline head) skips the same way
+    val inlineDir = s"$tmp/cas_inline"
+    val ip = new Path(inlineDir)
+    def commitFull(task: Int): Long =
+      FlsManifest.commit(fs, ip, s"q-full-e0-$task", conf,
+          stream = Some(("q-full", 0L))) { (_, cur) =>
+        cur.getOrElse(Nil) :+ FlsManifest.Entry(s"part-q-full-e0-$task.fls", 1L, 0L)
+      }
+    val v1 = commitFull(1)
+    assert(commitFull(2) == v1)
+    assert(FlsManifest.readVersioned(fs, ip).get._2.map(_.rel) ==
+      Seq("part-q-full-e0-1.fls"))
+  }
+
+  test("an epoch an earlier writer recorded as a w: marker is still skipped; " +
+      "the next commit writes a #stream line instead") {
+    val dir = s"$tmp/old_format"
+    seed(dir, 100L)
+    val fs = fsOf(dir)
+    val (v, _) = head(dir)
+    val vp = FlsManifest.versionPath(new Path(dir), v)
+    def text(p: Path): String = {
+      val in = fs.open(p)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     }
-    assert(fellBack,
-      "commitDelta must take the full-merge fallback when the fresh " +
-        "head carries no marker of the qid (pre-r19 it appended with " +
-        "an empty mustOpen partition and duplicated the crashed attempt)")
-    val after = FlsManifest.readVersioned(fs, p).get._2.map(_.rel)
-    assert(after.contains(newEntry.rel), "the retry's entry must be present")
-    crashed.foreach(rel => assert(!after.contains(rel),
-      s"crashed-attempt entry $rel must be dropped, not duplicated"))
+    // the pointer-line field an earlier writer stamped for epoch 3 of q
+    val edited = text(vp).split('\n').map(l =>
+      if (l.startsWith("#chunk\t")) l + "\tw:q-e3@5:100" else l).mkString("", "\n", "\n")
+    val out = fs.create(vp, true) // rewrites the checksum sidecar too
+    try out.write(edited.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    assert(readLongs(dir) == (0L until 100L), "the edited table must read")
+    assert(head(dir)._2.streams == Map("q" -> 3L))
+    val n = epoch(dir, "q", 3L, 600L to 619L)
+    assert(n == 0L, s"the replay opened $n chunks")
+    assert(head(dir)._1 == v && readLongs(dir) == (0L until 100L),
+      "a replay of the marked epoch must publish nothing")
+    epoch(dir, "q", 4L, 700L to 719L)
+    val next = text(FlsManifest.versionPath(new Path(dir), head(dir)._1))
+    assert(!next.contains("\tw:"), s"the next commit wrote a w: field:\n$next")
+    assert(next.contains("#stream\tq\t4\n"))
+    assert(readLongs(dir) == ((0L until 100L) ++ (700L to 719L)))
   }
 }

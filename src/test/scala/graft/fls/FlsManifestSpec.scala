@@ -101,14 +101,15 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
       .filter(_.endsWith("-2-0000.fls"))
     assert(twinFiles.nonEmpty, "the twin's final-named file must be on disk")
     // twin b "crashes" WITHOUT abort — its direct-written file stays on
-    // disk into job commit, which must sweep it and keep it out of the
-    // manifest
+    // disk through job commit, outside the manifest, until vacuum
     batch.commit(Array(msg))
     assert(readLongs(dir) == 0L +: (1L to n))
-    val leftover = new java.io.File(dir).listFiles().map(_.getName)
-      .filter(_.endsWith(".fls"))
-    assert(leftover.forall(n => manifestEntries(dir).exists(_.rel == n)),
-      s"uncommitted attempt files survived outside the manifest: ${leftover.toSeq}")
+    assert(twinFiles.forall(f => !manifestEntries(dir).exists(_.rel == f)),
+      s"the loser's files entered the manifest: ${twinFiles.toSeq}")
+    FlsMaintenance.vacuum(spark, dir, olderThanHours = 0)
+    assert(twinFiles.forall(f => !new java.io.File(dir, f).exists()),
+      s"vacuum must delete the loser's files: ${twinFiles.toSeq}")
+    assert(readLongs(dir) == 0L +: (1L to n))
   }
 
   test("a job's first manifest commit leaves its own uncommitted attempt files out") {

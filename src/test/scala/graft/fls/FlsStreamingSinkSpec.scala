@@ -11,7 +11,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** `writeStream.format("fls")`: continuous ingestion through the same
   * commit protocol as batch writes, with deterministic per-epoch
-  * writeIds so retried epochs converge instead of duplicating. */
+  * writeIds so retried epochs converge instead of duplicating: a
+  * listing-mode replay replaces its prior attempt's files, a manifest
+  * table keeps the attempt its manifest recorded. */
 class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -223,18 +225,19 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     sw.commit(3L, Array(a1.commit()))
     assert(readLongs(dir) == (1L to 20L))
 
-    // epoch 3 re-executes with different data
+    // epoch 3 re-executes; its other data only tells the attempts apart
+    // (a replay reads the same offsets)
     val a2 = factory.createWriter(0, 2L, 3L)
     (201L to 220L).foreach(i => a2.write(row(i)))
     sw.commit(3L, Array(a2.commit()))
 
-    assert(readLongs(dir) == (201L to 220L),
-      "manifest must carry exactly the retried epoch's files")
+    assert(readLongs(dir) == (1L to 20L),
+      "the manifest must keep exactly the recorded attempt's files")
     // a later epoch appends normally
     val b = factory.createWriter(0, 3L, 4L)
     (301L to 310L).foreach(i => b.write(row(i)))
     sw.commit(4L, Array(b.commit()))
-    assert(readLongs(dir) == ((201L to 220L) ++ (301L to 310L)).sorted)
+    assert(readLongs(dir) == ((1L to 20L) ++ (301L to 310L)))
   }
 
   test("epoch abort never deletes a prior attempt's published files") {
@@ -275,11 +278,11 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(readLongs(dir) == (1L to 30L),
       "abort of a retried epoch destroyed the published attempt's data")
 
-    // and a subsequent SUCCESSFUL retry still converges
+    // and a subsequent SUCCESSFUL retry keeps the recorded attempt
     val a3 = factory.createWriter(0, 3L, 5L)
     (201L to 230L).foreach(i => a3.write(row(i)))
     sw.commit(5L, Array(a3.commit()))
-    assert(readLongs(dir) == (201L to 230L))
+    assert(readLongs(dir) == (1L to 30L))
   }
 
   /** The real crash-restart: the driver dies AFTER the sink committed
@@ -340,6 +343,35 @@ class FlsStreamingSinkSpec extends AnyFunSuite with BeforeAndAfterAll {
   crashRestartCase("manifest", Map("commit_mode" -> "manifest"))
   crashRestartCase("manifest_partitioned",
     Map("commit_mode" -> "manifest", "partition_by" -> "p"))
+
+  test("a manifest stream on a new table stages its first epoch and writes " +
+      "the next one directly") {
+    val sp = spark
+    import sp.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = sp.sqlContext
+    val dir = s"$tmp/direct_after_first"
+    val in = MemoryStream[Long]
+    val q = in.toDF().withColumnRenamed("value", "v")
+      .writeStream.format("fls").option("commit_mode", "manifest")
+      .option("path", dir).option("checkpointLocation", s"$tmp/direct_ckpt").start()
+    in.addData(1L to 10L: _*)
+    q.processAllAvailable()
+    in.addData(11L to 20L: _*)
+    q.processAllAvailable()
+    q.stop()
+    assert(readLongs(dir) == (1L to 20L))
+    val p = new Path(dir)
+    val rels = FlsManifest.read(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+      .get.map(_.rel)
+    // a staged name is `part-<partition>-<writeId>-<seq>.fls`; a direct
+    // one carries the task id and attempt tag after the writeId
+    val direct = "-e[01]-[0-9]+-".r
+    val (e0, e1) = (rels.filter(_.contains("-e0-")), rels.filter(_.contains("-e1-")))
+    assert(e0.nonEmpty && e0.forall(direct.findFirstIn(_).isEmpty),
+      s"epoch 0 has no manifest to hide direct files, so it stages: $e0")
+    assert(e1.nonEmpty && e1.forall(direct.findFirstIn(_).isDefined),
+      s"epoch 1 must write directly under the manifest epoch 0 made: $e1")
+  }
 
   test("streaming writes compose with hive partitioning") {
     val sp = spark
