@@ -153,11 +153,12 @@ object FlsMaintenance {
       // legacy single-file manifest: the first versioned commit RETIRES
       // that file, so pinning "version 0" could break mid-rewrite if a
       // concurrent append upgrades the table — mint an identical v1
-      // (identity merge) and freeze that instead
+      // (an empty delta) and freeze that instead
       FlsManifest.commit(fs, root, java.util.UUID.randomUUID().toString, conf,
-          op = "upgrade", dataChange = false) {
-        (_, cur) => cur.getOrElse(throw new IllegalStateException(
-          s"fls compact: manifest at $dir vanished before compaction started"))
+          op = "upgrade", dataChange = false) { head =>
+        if (!head.exists) throw new IllegalStateException(
+          s"fls compact: manifest at $dir vanished before compaction started")
+        FlsManifest.Delta()
       }
       val again = FlsManifest.readVersioned(fs, root).getOrElse(
         throw new IllegalStateException(s"fls compact: manifest at $dir vanished"))
@@ -166,12 +167,12 @@ object FlsMaintenance {
     }
     require(frozenEntries.nonEmpty, s"fls compact: no data files under $dir")
     val frozenRels = frozenEntries.map(_.rel).toSet
-    // Capture the frozen predicate set NOW, not inside the merge
-    // closure: frozenV's version file can be retention-pruned during a
+    // Capture the frozen predicate set NOW, not inside the change
+    // function: frozenV's version file can be retention-pruned during a
     // long compaction, and re-reading it per CAS attempt would surface
     // as FileNotFoundException instead of the intended
-    // ConcurrentModificationException (and cost a redundant log read
-    // per retry). absorbDeletes already freezes its `eq` the same way.
+    // ConcurrentModificationException. absorbDeletes freezes its `eq`
+    // the same way.
     val frozenEqSet = FlsManifest.versionEq(fs, root, frozenV).toSet
     val discovery = connector.FlsPartitioning.discover(
       Seq(dir), FlsManifest.statuses(fs, root, frozenEntries).map(_.getPath), conf)
@@ -204,16 +205,17 @@ object FlsMaintenance {
         case (rel, len) if rel.endsWith(".fls") => FlsManifest.Entry(rel, len, 0L)
       }.toSeq
       FlsManifest.commit(fs, root, compactId, conf,
-          op = "compact", dataChange = false) { (curV, current) =>
-        val cur = current.getOrElse(throw new IllegalStateException(
-          s"fls compact: $dir lost its manifest mid-compaction — aborting"))
+          op = "compact", dataChange = false) { head =>
+        if (!head.exists) throw new IllegalStateException(
+          s"fls compact: $dir lost its manifest mid-compaction — aborting")
+        val cur = head.entries
         // the predicate SET in force must be exactly the frozen one:
         // a predicate ADDED since the freeze would be silently undone
         // (outputs built without its residual, fresh birth versions
         // exempt them), and a predicate REMOVED since — a concurrent
         // ROLLBACK undoing the delete — would be silently RE-APPLIED
         // (outputs built WITH its residual). Either direction aborts.
-        if (FlsManifest.versionEq(fs, root, curV).toSet != frozenEqSet)
+        if (head.eq.toSet != frozenEqSet)
           throw new java.util.ConcurrentModificationException(
             s"fls compact: the active equality-delete set changed under " +
               s"$dir after the compaction froze its inputs (concurrent " +
@@ -239,7 +241,7 @@ object FlsMaintenance {
               s"${dvChanged.size} compaction input file(s) under $dir — " +
               "aborting; re-run compact on the new table state")
         // entries since V (concurrent appends) survive; V's are replaced
-        cur.filterNot(e => frozenRels(e.rel)) ++ outEntries
+        FlsManifest.Delta(add = outEntries, removeRels = frozenRels)
       }
     } catch {
       case t: Throwable =>
@@ -283,11 +285,8 @@ object FlsMaintenance {
     * live rows. The swap is the same conflict-checked CAS as
     * compaction: a concurrent equality delete, a removed input, or a
     * re-vectored input aborts with nothing published. With zero
-    * subject files (predicates already absorbed-in-effect — e.g.
-    * carried conservatively past a pre-r17 pointer without a recorded
-    * min birth version, where the delta path's pointer-proof
-    * absorption cannot fire), one metadata-only identity commit
-    * re-runs the absorption filter and drops them. */
+    * subject files (every file the predicates apply to is
+    * stats-proven exempt), one metadata-only commit drops them. */
   def absorbDeletes(spark: SparkSession, dir: String,
       targetRowsPerFile: Long = Format.DefaultRowGroupSize.toLong * 16,
       extraOptions: Map[String, String] = Map.empty): AbsorbStats = {
@@ -335,42 +334,64 @@ object FlsMaintenance {
       }
     }
     val exemptRels = exempt.map(_.rel).toSet
-    // the drop-proof guard for the tolerant full-merge path: every
-    // retained old-bv entry must be one this absorb proved (exempt) —
-    // a concurrent ROLLBACK could restore an entry the freeze never
-    // classified, and dropping the predicates over it would resurrect
-    // rows. (Concurrent appends/rewrites are safe: fresh birth
-    // versions > maxPv put them out of scope.)
-    def guardProven(cur: Seq[FlsManifest.Entry], rewrittenRels: Set[String]): Unit =
-      cur.foreach { e =>
-        if (FlsFileStats.birthOf(e.stats) <= maxPv &&
-            !exemptRels(e.rel) && !rewrittenRels(e.rel))
-          throw new java.util.ConcurrentModificationException(
-            s"fls absorb_deletes: a concurrent commit (re)introduced " +
-              s"'${e.rel}' inside the absorbed predicates' scope under " +
-              s"$dir — aborting; rerun")
-      }
+    val subjectRels = subject.map(_.rel).toSet
+    val frozenDv = subject.map(e => e.rel -> FlsFileStats.dvOf(e.stats)).toMap
     val absorbId = java.util.UUID.randomUUID().toString
-    if (subject.isEmpty) {
-      FlsManifest.commit(fs, root, absorbId, conf, op = "absorb",
-          dataChange = false, eqDropUpTo = maxPv) { (curV, cur) =>
-        // set-equality, not just no-new: a concurrent ROLLBACK that
-        // removed a frozen predicate means the proven drop no longer
-        // describes the head — aborting keeps rollback semantics
-        if (FlsManifest.versionEq(fs, root, curV).toSet != eq.toSet)
+    /** The absorb's one change: remove the rewritten subjects, add their
+      * outputs, drop the frozen predicates (`eqDropUpTo`). While the
+      * head is still the frozen version the classification and the
+      * drop proof hold verbatim; after any advance the head is checked
+      * first, and any conflict aborts with nothing published. */
+    def change(outEntries: Seq[FlsManifest.Entry])(
+        head: FlsManifest.Head): FlsManifest.Delta = {
+      if (head.version != frozenV) {
+        if (!head.exists) throw new IllegalStateException(
+          s"fls absorb_deletes: $dir lost its manifest mid-absorb — aborting")
+        // the predicate SET in force must be exactly the frozen one: a
+        // predicate ADDED since the freeze applies to our outputs'
+        // input rows (built without it, fresh bv exempts them); a
+        // predicate REMOVED since — a concurrent ROLLBACK undoing the
+        // delete — would be silently RE-APPLIED by our outputs (built
+        // WITH its residual). Either direction aborts.
+        if (head.eq.toSet != eq.toSet)
           throw new java.util.ConcurrentModificationException(
             s"fls absorb_deletes: the active predicate set changed under " +
               s"$dir after the absorb froze its inputs (concurrent " +
               "delete or rollback) — aborting; rerun")
-        val entries = cur.getOrElse(throw new IllegalStateException(
-          s"fls absorb_deletes: manifest of $dir vanished mid-absorb"))
-        guardProven(entries, Set.empty)
-        entries
+        val cur = head.entries
+        val gone = subjectRels.diff(cur.map(_.rel).toSet)
+        if (gone.nonEmpty)
+          throw new java.util.ConcurrentModificationException(
+            s"fls absorb_deletes: a concurrent commit removed ${gone.size} " +
+              s"input file(s) under $dir — aborting; rerun")
+        if (cur.exists(e => subjectRels(e.rel) &&
+            FlsFileStats.dvOf(e.stats) != frozenDv(e.rel)))
+          throw new java.util.ConcurrentModificationException(
+            s"fls absorb_deletes: a concurrent DELETE re-vectored an input " +
+              s"file under $dir — aborting; rerun")
+        // the drop proof: every retained old-bv entry must be one this
+        // absorb proved (exempt) or rewrote — a concurrent ROLLBACK
+        // could restore an entry the freeze never classified, and
+        // dropping the predicates over it would resurrect rows.
+        // (Concurrent appends/rewrites are safe: fresh birth versions >
+        // maxPv put them out of scope.)
+        cur.foreach { e =>
+          if (FlsFileStats.birthOf(e.stats) <= maxPv &&
+              !exemptRels(e.rel) && !subjectRels(e.rel))
+            throw new java.util.ConcurrentModificationException(
+              s"fls absorb_deletes: a concurrent commit (re)introduced " +
+                s"'${e.rel}' inside the absorbed predicates' scope under " +
+                s"$dir — aborting; rerun")
+        }
       }
+      FlsManifest.Delta(add = outEntries, removeRels = subjectRels)
+    }
+    if (subject.isEmpty) {
+      FlsManifest.commit(fs, root, absorbId, conf, op = "absorb",
+        dataChange = false, eqDropUpTo = maxPv)(change(Nil))
       return AbsorbStats(eq.length, 0,
         FlsManifest.read(fs, root).map(_.length).getOrElse(0), 0L)
     }
-    val subjectRels = subject.map(_.rel).toSet
     val discovery = connector.FlsPartitioning.discover(
       Seq(dir), FlsManifest.statuses(fs, root, subject).map(_.getPath), conf)
     val keys = FlsTableMeta.read(fs, root).map(_._2.partitionBy)
@@ -398,59 +419,8 @@ object FlsMaintenance {
         case (rel, len) if rel.endsWith(".fls") =>
           FlsManifest.Entry(rel, len, 0L)
       }.toSeq
-      // tolerant full-merge closure: runs when anything committed since
-      // the freeze (and as commitDelta's inline fallback)
-      val fullMerge: (Long, Option[Seq[FlsManifest.Entry]]) => Seq[FlsManifest.Entry] =
-        (curV, current) => {
-        val cur = current.getOrElse(throw new IllegalStateException(
-          s"fls absorb_deletes: $dir lost its manifest mid-absorb — aborting"))
-        // the predicate SET in force must be exactly the frozen one: a
-        // predicate ADDED since the freeze applies to our outputs'
-        // input rows (built without it, fresh bv exempts them); a
-        // predicate REMOVED since — a concurrent ROLLBACK undoing the
-        // delete — would be silently RE-APPLIED by our outputs (built
-        // WITH its residual). Either direction aborts.
-        if (FlsManifest.versionEq(fs, root, curV).toSet != eq.toSet)
-          throw new java.util.ConcurrentModificationException(
-            s"fls absorb_deletes: the active predicate set changed under " +
-              s"$dir after the absorb froze its inputs (concurrent " +
-              "delete or rollback) — aborting; rerun")
-        val curRels = cur.map(_.rel).toSet
-        val gone = subjectRels.diff(curRels)
-        if (gone.nonEmpty)
-          throw new java.util.ConcurrentModificationException(
-            s"fls absorb_deletes: a concurrent commit removed ${gone.size} " +
-              s"input file(s) under $dir — aborting; rerun")
-        val frozenDv = subject.map(e => e.rel -> FlsFileStats.dvOf(e.stats)).toMap
-        if (cur.exists(e => subjectRels(e.rel) &&
-            FlsFileStats.dvOf(e.stats) != frozenDv(e.rel)))
-          throw new java.util.ConcurrentModificationException(
-            s"fls absorb_deletes: a concurrent DELETE re-vectored an input " +
-              s"file under $dir — aborting; rerun")
-        // non-subject entries and concurrent appends survive untouched;
-        // the explicit eqDropUpTo then drops every frozen predicate —
-        // each remaining old-bv entry is one this absorb stats-proved
-        val kept = cur.filterNot(e => subjectRels(e.rel))
-        guardProven(kept, Set.empty)
-        kept ++ outEntries
-      }
-      // O(delta) fast path: with NOTHING committed since the freeze,
-      // the classification and drop-proof hold verbatim — publish as a
-      // pure delta (remove rewritten subjects, add outputs; untouched
-      // chunks carry as verbatim pointers, never opened). Any version
-      // advance falls back to the tolerant full merge.
-      class StaleAbsorb extends RuntimeException
-      try {
-        FlsManifest.commitDelta(fs, root, absorbId, conf, op = "absorb",
-            dataChange = false, eqDropUpTo = maxPv) { curV =>
-          if (curV != frozenV) throw new StaleAbsorb
-          FlsManifest.Delta(add = outEntries, removeRels = subjectRels)
-        } (fullMerge)
-      } catch {
-        case _: StaleAbsorb =>
-          FlsManifest.commit(fs, root, absorbId, conf, op = "absorb",
-            dataChange = false, eqDropUpTo = maxPv)(fullMerge)
-      }
+      FlsManifest.commit(fs, root, absorbId, conf, op = "absorb",
+        dataChange = false, eqDropUpTo = maxPv)(change(outEntries))
     } catch {
       case t: Throwable =>
         moved.foreach { case (rel, _) =>
@@ -507,12 +477,12 @@ object FlsMaintenance {
       // restore the equality-delete predicate set AS OF the target too:
       // rolling back past an eqdelete commit must resurrect its rows,
       // exactly like rolling back past a DV commit restores positions
-      eqBase = Some(toVersion)) { (curV, _) =>
-      if (curV != headV) throw new java.util.ConcurrentModificationException(
-        s"fls rollback: the table advanced to v$curV while rolling back to " +
+      eqBase = Some(toVersion)) { head =>
+      if (head.version != headV) throw new java.util.ConcurrentModificationException(
+        s"fls rollback: the table advanced to v${head.version} while rolling back to " +
           s"v$toVersion (decision was made against head v$headV) — " +
           "re-inspect the new head and retry")
-      target
+      FlsManifest.Delta.between(head.entries, target)
     }
     RollbackStats(headV, toVersion, newV, target.length)
   }

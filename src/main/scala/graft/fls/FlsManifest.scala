@@ -17,17 +17,19 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
   * disk but not in the manifest (losing speculative attempts, crashed
   * jobs, junk) are invisible.
   *
-  * CONCURRENCY: versions are published with optimistic concurrency —
-  * each committer merges onto the newest version and claims `v<N+1>`
-  * with a create-exclusive primitive (hard link on local filesystems,
-  * no-overwrite rename on HDFS-likes); the loser of a race re-reads the
-  * winner's version and retries its merge, which is metadata-only
-  * because data files are attempt-unique. Two concurrent appenders both
-  * land; compact-vs-append is resolved by [[FlsMaintenance]] verifying
-  * its frozen inputs are still present at swap time. Concurrent
-  * OVERWRITES remain last-writer-wins (an overwrite semantically deletes
-  * everything committed before it — the usual contract for catalogless
-  * table formats).
+  * CONCURRENCY: every version is published by [[commit]], one
+  * optimistic-concurrency loop — each committer turns the newest
+  * version into a [[Delta]] (what it adds, removes and restates) and
+  * claims `v<N+1>` with a create-exclusive primitive (hard link on local
+  * filesystems, no-overwrite rename on HDFS-likes); the loser of a race
+  * re-reads the winner's version and recomputes its delta, which is
+  * metadata-only because data files are attempt-unique. The commit
+  * opens only the entry chunks the delta touches. Two concurrent
+  * appenders both land; compact-vs-append is resolved by
+  * [[FlsMaintenance]] verifying its frozen inputs are still present at
+  * swap time. Concurrent OVERWRITES remain last-writer-wins (an
+  * overwrite semantically deletes everything committed before it — the
+  * usual contract for catalogless table formats).
   *
   * The reference has no cluster commit story at all (single-process
   * writer, /root/reference/src/writer/fls_writer.cpp:332-347); this and
@@ -272,12 +274,13 @@ object FlsManifest {
         * Null = no recorded stats: always open. */
       stats: String = null,
       /** Minimum birth version over this chunk's entries (`b:` field,
-        * r17; -1 = written before the field — prove nothing). The
-        * equality-delete absorption proof for the O(delta) commit
-        * path: a carried predicate of version pv is DEAD — applies to
-        * no retained entry — iff every kept pointer's minBv > pv and
-        * every entry the commit materialized has bv > pv, all
-        * computable without opening a single kept chunk. */
+        * r17; -1 = written before the field). The equality-delete
+        * absorption proof of [[commit]]: a carried predicate of
+        * version pv is DEAD — applies to no retained entry — iff every
+        * kept pointer's minBv > pv and every entry the commit
+        * materialized has bv > pv, all computable without opening a
+        * single kept chunk. A pointer without the field is opened by
+        * the next commit and rewritten with it. */
       minBv: Long = -1L) {
     /** Could any rel of `sortedRels` live in this chunk? Rangeless
       * pointers answer yes (must open). */
@@ -295,20 +298,19 @@ object FlsManifest {
   }
 
   /** Everything one version file resolves to: its op metadata, the
-    * full entry set (inline lines plus every referenced chunk's), the
-    * CDC split lines, and the chunk membership itself — the last is
-    * what lets the NEXT commit reuse untouched chunks by pointer. */
+    * entry set (inline lines plus every resolved chunk's), the CDC
+    * split lines, and the chunk pointers — the last is what lets the
+    * NEXT commit reuse untouched chunks by pointer. */
   private[fls] final case class Layout(meta: Option[VersionMeta],
       entries: Seq[Entry], cdc: Seq[CdcLine],
-      chunks: Seq[(String, Seq[Entry])],
       /** Active equality-delete predicates (`#eqdel` lines, raw JSON —
         * [[FlsEqDeletes]]): carried forward by every commit until
         * absorbed (no retained entry predates the predicate). */
       eq: Seq[String] = Nil,
       /** The raw `#chunk` pointer lines, parsed but UNRESOLVED —
         * populated for every v2 file regardless of `resolveChunks`,
-        * so [[commitDelta]] can plan which chunks to open without
-        * reading any of them. */
+        * so [[commit]] can plan which chunks to open without reading
+        * any of them. */
       pointers: Seq[Pointer] = Nil,
       /** Last committed epoch of each streaming query that has committed
         * to this ref (`#stream\t<queryId>\t<epoch>` lines): carried by
@@ -629,29 +631,19 @@ object FlsManifest {
           s"fls: corrupt #stream line '$l' in $p")
         a(1) -> a(2).toLong
       }
-    val chunks: Seq[(String, Seq[Entry])] =
+    val chunked: Seq[Entry] =
       if (!resolveChunks) Nil
-      else pointers.flatMap { pt =>
-        val skip = relBounds.exists { case (lo, hi) =>
-          pt.ranged && (pt.maxRel < lo || pt.minRel > hi)
-        }
-        if (skip) None
-        else {
-          val es = readChunk(fs, new Path(chunksDir(tableDir), pt.name))
-          require(es.length == pt.count,
-            s"fls: chunk ${pt.name} of $p holds ${es.length} entries, the " +
-              s"manifest recorded ${pt.count} — chunk pool corrupted")
-          Some((pt.name, es))
-        }
-      }
+      else pointers.filterNot(pt => relBounds.exists { case (lo, hi) =>
+        pt.ranged && (pt.maxRel < lo || pt.minRel > hi)
+      }).flatMap(readChunkEntries(fs, tableDir, _))
     // deterministic global order regardless of chunk boundaries (the
     // inline writer always sorted by rel; keep that contract)
     val entries =
-      if (chunks.isEmpty) inline
-      else (inline ++ chunks.flatMap(_._2)).sortBy(_.rel)
+      if (chunked.isEmpty) inline
+      else (inline ++ chunked).sortBy(_.rel)
     val eq = lines.drop(1).filter(_.startsWith("#eqdel\t")).toSeq
       .map(_.substring("#eqdel\t".length))
-    Layout(meta, entries, cdc, chunks, eq, pointers, streams)
+    Layout(meta, entries, cdc, eq, pointers, streams)
   }
 
   /** Whether `head` records streaming epoch `(queryId, epoch)`: its
@@ -684,15 +676,71 @@ object FlsManifest {
       if (v == 0L) manifestPath(dir) else versionPath(dir, v), dir,
       resolveChunks = false).cdc
 
+  /** The head a commit's change function is given: the newest version of
+    * the ref (0, with `exists = false`, when the table has no manifest),
+    * its active equality-delete predicates, its stream lines, and its
+    * `entries`, resolved on first use. The commit reuses every chunk
+    * `entries` resolved, so no chunk is read twice in one attempt. */
+  final class Head private[FlsManifest] (val version: Long,
+      val exists: Boolean, layout: Layout, open: Pointer => Seq[Entry]) {
+    def eq: Seq[String] = layout.eq
+    def streams: Map[String, Long] = layout.streams
+    lazy val entries: Seq[Entry] =
+      if (layout.pointers.isEmpty) layout.entries
+      else (layout.entries ++ layout.pointers.flatMap(open)).sortBy(_.rel)
+  }
+
+  /** A commit expressed as the CHANGE it makes, not the table it leaves
+    * behind. `add` rels must be new to the table (attempt-unique
+    * data-file names guarantee it for every writer here); `restate`
+    * replaces same-rel entries in place (DV re-vector, stats refresh);
+    * `removeRels` drops entries whole. A removed or restated rel that is
+    * NOT in the head aborts the commit loudly — that is the
+    * chunk-granularity conflict check: a concurrent commit rewrote the
+    * target out from under this one. */
+  final case class Delta(add: Seq[Entry] = Nil,
+      removeRels: Set[String] = Set.empty,
+      restate: Seq[Entry] = Nil)
+
+  object Delta {
+    /** The change that turns entry set `before` into `after` — for
+      * callers that compute the whole resulting set. */
+    def between(before: Seq[Entry], after: Seq[Entry]): Delta = {
+      val old = new java.util.HashMap[String, Entry](before.length * 2)
+      before.foreach(e => old.put(e.rel, e))
+      val (kept, added) = after.partition(e => old.containsKey(e.rel))
+      val keptRels = kept.iterator.map(_.rel).toSet
+      Delta(added, before.iterator.map(_.rel).filterNot(keptRels).toSet,
+        kept.filter(e => old.get(e.rel) != e))
+    }
+  }
+
+  /** Spec observable: CAS attempts the last [[commit]] used. */
+  private[fls] val lastCommitAttempts = new java.util.concurrent.atomic.AtomicInteger
+  /** Test hook: runs after an attempt stages its version file, BEFORE
+    * the publish CAS — the window in which a concurrent committer can
+    * win, so race specs can interleave deterministically. */
+  private[fls] var beforePublishForTest: () => Unit = () => ()
+
   /** Publish a new table version with optimistic concurrency: read the
-    * newest version, apply `merge(currentVersion, currentEntries)`, and
-    * claim `v<N+1>` exclusively; on a lost race, re-read and retry the
-    * merge (callers keep data files attempt-unique, so retries are
-    * metadata-only). `merge` may throw to abort (e.g. compaction
-    * detecting its inputs were removed by a concurrent commit) — the
-    * exception propagates with nothing published. Returns the published
-    * version. `op`/`dataChange` stamp the version's `#op` header line —
-    * the change-data-feed skips `dataChange=false` commits (compaction
+    * newest version's pointer lines, ask `change` for the [[Delta]] it
+    * makes to that [[Head]], and claim `v<N+1>` exclusively; on a lost
+    * race, re-read and ask again (callers keep data files
+    * attempt-unique, so retries are metadata-only). `change` may throw
+    * to abort (e.g. compaction detecting its inputs were removed by a
+    * concurrent commit) — the exception propagates with nothing
+    * published. Returns the published version.
+    *
+    * The commit opens a chunk only when it may hold a removed or
+    * restated rel, when its pointer has no range or no min birth
+    * version, or when the result fits inline; every other pointer is
+    * carried into the new version VERBATIM. So an append to a 1M-file
+    * table reads one version file (~125 pointer lines) and writes one
+    * version file plus one tiny chunk. Small chunks are folded into the
+    * commit once [[SmallChunkMergeBound]] of them have piled up.
+    *
+    * `op`/`dataChange` stamp the version's `#op` header line — the
+    * change-data-feed skips `dataChange=false` commits (compaction
     * churn is not row churn). A streaming epoch passes `stream =
     * (queryId, epoch)`: an attempt whose head already records it
     * ([[recordsEpoch]]) publishes nothing and returns the head's
@@ -713,77 +761,108 @@ object FlsManifest {
         * the no-retained-entry absorption filter. ONLY for callers who
         * PROVED the drop exact — absorb_deletes, which rewrote every
         * file a predicate may match and stats-proved the rest
-        * ([[FlsEqDeletes.mayMatchDesc]]); its merge closure must guard
-        * against concurrent commits introducing unproven old-bv
+        * ([[FlsEqDeletes.mayMatchDesc]]); its change function must
+        * guard against concurrent commits introducing unproven old-bv
         * entries. -1 = off. */
       eqDropUpTo: Long = -1L,
       stream: Option[(String, Long)] = None)(
-      merge: (Long, Option[Seq[Entry]]) => Seq[Entry]): Long = {
+      change: Head => Delta): Long = {
+    val inlineMax = math.max(0, conf.getInt(InlineThresholdKey, DefaultInlineThreshold))
+    val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
+    lastCommitAttempts.set(0)
     var attempt = 0
     while (attempt < MaxCasAttempts) {
-      val cur = readLayoutVersioned(fs, dir, ref)
+      lastCommitAttempts.incrementAndGet()
+      val cur = readLayoutVersioned(fs, dir, ref, resolveChunks = false)
       if (ref != MainRef) require(cur.isDefined,
         s"fls: branch '$ref' of $dir does not exist — " +
           "CALL system.create_branch first")
       val curV = cur.map(_._1).getOrElse(0L)
-      if (stream.exists(s => cur.exists(c => recordsEpoch(c._2, s)))) return curV
-      val merged0 = merge(curV, cur.map(_._2.entries))
+      val layout = cur.map(_._2).getOrElse(Layout(None, Nil, Nil))
+      if (stream.exists(recordsEpoch(layout, _))) return curV
+      val resolved = scala.collection.mutable.HashMap[String, Seq[Entry]]()
+      def open(pt: Pointer): Seq[Entry] =
+        resolved.getOrElseUpdate(pt.name, readChunkEntries(fs, dir, pt))
+      val d = change(new Head(curV, cur.isDefined, layout, open))
+      val restated = d.restate.map(e => e.rel -> e).toMap
+      require(!d.removeRels.exists(restated.contains),
+        "fls commit: a rel cannot be both removed and restated")
       val next = curV + 1
-      // stamp each NEW entry's birth version (first commit that added
-      // its rel) — the applicability cursor for equality deletes: a
-      // predicate committed at V applies to entries with bv <= V only,
-      // which is what lets rewrites/compaction ABSORB predicates and
-      // appends stay out of their scope, all without per-file delete
-      // metadata. Per-attempt (a lost race restamps with the new next).
-      // An entry NOT in the previous version that already CARRIES a bv
-      // keeps it: that is a RESTORED entry (rollback republishing a
-      // file a later rewrite had dropped) — restamping would lift its
-      // rows out of the restored predicates' scope and resurrect
-      // eq-deleted rows. Only fastForward deliberately strips bv
-      // (branch-lineage version numbers don't map onto main's).
-      val prevRels: java.util.HashSet[String] = {
-        val s = new java.util.HashSet[String]()
-        cur.foreach(_._2.entries.foreach(e => s.add(e.rel)))
-        s
+      val newCount = layout.entries.length + layout.pointers.map(_.count).sum -
+        d.removeRels.size + d.add.size
+      val (opened, kept) =
+        if (newCount <= inlineMax) (layout.pointers, Nil)
+        else {
+          val touched = (d.removeRels ++ restated.keys).toArray.sorted
+          val (open0, keep0) = layout.pointers.partition(pt =>
+            pt.minBv < 0L || pt.mayContainAny(touched))
+          val small = keep0.filter(_.count < target / 2)
+          if (small.length < SmallChunkMergeBound) (open0, keep0)
+          else (open0 ++ small, keep0.filterNot(small.contains))
+        }
+      val base = layout.entries ++ opened.flatMap(open)
+      // every targeted rel must still be present (ranges are exact, so
+      // absence from the opened chunks is absence from the table)
+      val present = new java.util.HashSet[String](base.length * 2)
+      base.foreach(e => present.add(e.rel))
+      (d.removeRels.iterator ++ restated.keysIterator).foreach { r =>
+        if (!present.contains(r))
+          throw new java.util.ConcurrentModificationException(
+            s"fls commit: '$r' is not in version $curV of $dir — a " +
+              "concurrent commit removed or rewrote it; rerun the operation")
       }
-      val merged = merged0.map { e =>
-        if (prevRels.contains(e.rel) || FlsFileStats.birthOf(e.stats) > 0L) e
-        else e.copy(stats = FlsFileStats.withBirth(e.stats, next))
+      // Birth versions (first commit that added a rel) are the
+      // applicability cursor for equality deletes: a predicate committed
+      // at V applies to entries with bv <= V only. A restated entry
+      // inherits the old one's unless the caller stamped one; a new entry
+      // that already carries one keeps it (rollback restoring a file a
+      // later rewrite dropped — restamping would resurrect eq-deleted
+      // rows); every other new entry is stamped with this version.
+      val survivors = base.filterNot(e => d.removeRels.contains(e.rel)).map { e =>
+        restated.get(e.rel) match {
+          case Some(n) =>
+            val oldBv = FlsFileStats.birthOf(e.stats)
+            if (FlsFileStats.birthOf(n.stats) > 0L || oldBv == 0L) n
+            else n.copy(stats = FlsFileStats.withBirth(n.stats, oldBv))
+          case None => e
+        }
       }
-      // active equality deletes: carry (from head, or eqBase's version
-      // for rollback) + this commit's additions, then drop ABSORBED
-      // predicates — ones no retained entry predates anymore
+      val added = d.add.map(e =>
+        if (FlsFileStats.birthOf(e.stats) > 0L) e
+        else e.copy(stats = FlsFileStats.withBirth(e.stats, next)))
+      val leftover = survivors ++ added
+      // a predicate of version pv is ABSORBED — dropped — once no
+      // retained entry predates it: min birth version over the kept
+      // pointers (each records its chunk's) and the entries written here
+      // (lazy: parsing every entry's stats is wasted without predicates)
+      lazy val minBv = math.min(
+        kept.foldLeft(Long.MaxValue)((m, pt) => math.min(m, pt.minBv)),
+        minBvFor(leftover))
       val carried = eqBase match {
-        case None => cur.map(_._2.eq).getOrElse(Nil)
+        case None => layout.eq
         // v0 = the legacy / implicit-empty manifest, which predates
         // equality deletes by construction
-        case Some(bv) => if (bv == 0L) Nil
-          else readLayoutVersion(fs, dir, bv, ref).eq
+        case Some(bv) => if (bv == 0L) Nil else versionEq(fs, dir, bv, ref)
       }
-      val eqAll = (carried ++ eqAdd.map(FlsEqDeletes.stamp(_, next)))
-        .filter { j =>
-          val pv = FlsEqDeletes.versionOf(j)
-          pv > eqDropUpTo &&
-            merged.exists(e => FlsFileStats.birthOf(e.stats) <= pv)
-        }
+      val eqAll = (carried ++ eqAdd.map(FlsEqDeletes.stamp(_, next))).filter { j =>
+        val pv = FlsEqDeletes.versionOf(j)
+        pv > eqDropUpTo && pv >= minBv
+      }
       fs.mkdirs(refLog(dir, ref))
       // stamp the table-meta version in force at THIS commit (if the
       // table keeps a metadata log) — snapshot reads bind to it; its
-      // properties also carry the retention override (validated HERE,
-      // before anything publishes)
+      // properties also carry the retention override
       val tableMeta = FlsTableMeta.read(fs, dir)
-      val schemaV = tableMeta.map(_._1)
-      val keep = keepOf(tableMeta.map(_._2))
-      val tmp = new Path(new Path(new Path(dir, "_temporary"), writeId), f"manifest_v$next%020d")
-      val newChunks = writeContent(fs, dir, tmp, merged,
-        Some(VersionMeta(op, dataChange, schemaV)), cdc,
-        cur.map(_._2.chunks).getOrElse(Nil), conf, eqAll,
-        cur.map(_._2.streams).getOrElse(Map.empty[String, Long]) ++ stream,
-        chunkStatCols(tableMeta.map(_._2)))
+      val tmp = new Path(new Path(new Path(dir, "_temporary"), writeId),
+        f"manifest_v$next%020d")
+      val newChunks = writeVersion(fs, dir, tmp, kept, leftover, inlineMax,
+        target, VersionMeta(op, dataChange, tableMeta.map(_._1)), cdc, eqAll,
+        layout.streams ++ stream, chunkStatCols(tableMeta.map(_._2)))
       def dropNewChunks(): Unit = newChunks.foreach(p =>
         try fs.delete(p, false) catch { case _: Throwable => () })
+      beforePublishForTest()
       val won =
-        try publishExclusive(fs, tmp, versionPath(dir, next, ref), conf)
+        try FlsCas.publishExclusive(fs, tmp, versionPath(dir, next, ref), conf)
         catch { case t: Throwable => dropNewChunks(); throw t }
         finally { try fs.delete(tmp, false) catch { case _: Throwable => () } }
       if (won) {
@@ -795,11 +874,11 @@ object FlsManifest {
         // lives (one tags-dir listing per commit, O(tags))
         val protect = if (ref == MainRef) tags(fs, dir).values.toSet
           else Set.empty[Long]
-        gcVersionsAndChunks(fs, dir, ref, next, keep, protect)
+        gcVersionsAndChunks(fs, dir, ref, next, keepOf(tableMeta.map(_._2)), protect)
         return next
       }
       // lost the race: the pointers to this attempt's chunks were never
-      // published anywhere — reclaim them before the retry re-merges
+      // published anywhere — reclaim them before the retry
       dropNewChunks()
       attempt += 1
     }
@@ -807,201 +886,23 @@ object FlsManifest {
       s"fls manifest commit: lost the publish race $MaxCasAttempts times at $dir — giving up")
   }
 
-  /** A commit expressed as the CHANGE it makes, not the table it
-    * leaves behind — what lets [[commitDelta]] publish against a
-    * million-file table in O(delta) metadata reads and driver heap.
-    * `add` rels must be new to the table (attempt-unique data-file
-    * names guarantee it for every writer here); `restate` replaces
-    * same-rel entries in place (DV re-vector, stats refresh);
-    * `removeRels` drops entries whole. A removed or restated rel that
-    * is NOT in the current version aborts the commit loudly — that is
-    * the chunk-granularity conflict check: a concurrent commit
-    * rewrote the target out from under this one. */
-  final case class Delta(add: Seq[Entry] = Nil,
-      removeRels: Set[String] = Set.empty,
-      restate: Seq[Entry] = Nil) {
-    def isEmpty: Boolean = add.isEmpty && removeRels.isEmpty && restate.isEmpty
-  }
-
-  /** Spec observable: CAS attempts the last [[commitDelta]] used. */
-  private[fls] val lastDeltaAttempts = new java.util.concurrent.atomic.AtomicInteger
-  /** Test hook: runs after an attempt stages its version file, BEFORE
-    * the publish CAS — the window in which a concurrent committer can
-    * win, so race specs can interleave deterministically. */
-  private[fls] var beforePublishForTest: () => Unit = () => ()
-
-  /** O(delta) commit: like [[commit]], but the change arrives as a
-    * [[Delta]] instead of a full-entry merge, so the commit never
-    * materializes the table. Chunks whose recorded [minRel, maxRel]
-    * cannot contain a removed/restated rel are carried into the new
-    * version as VERBATIM pointer lines — never opened, never parsed,
-    * never on the driver heap. An append to a 1M-file table therefore
-    * reads one version file (~125 pointer lines) and writes one
-    * pointer file + one tiny chunk; the old full path re-parsed ~1M
-    * entry lines per commit (the r15 verdict's headline gap). Falls
-    * back to [[commit]]`(fallback)` when the head is inline, legacy,
-    * or missing, or the result fits inline — all O(inline threshold)
-    * by definition. Retries re-read only the new head's pointers, so
-    * two concurrent appends to disjoint rels both publish without
-    * either reopening the other's chunks.
-    *
-    * ABSORPTION (r17): the delta path drops a carried equality-delete
-    * predicate when the pointer lines PROVE it dead — every kept
-    * pointer records its chunk's min birth version (`b:` field), so
-    * "no retained entry predates the predicate" is decidable without
-    * opening a chunk. Pointers written before the field (minBv = -1)
-    * make the proof unavailable; the predicate is then carried
-    * conservatively (read-harmless — it applies to no file) until a
-    * full-path commit (compaction, `absorb_deletes`) drops it. */
-  def commitDelta(fs: FileSystem, dir: Path, writeId: String,
-      conf: org.apache.hadoop.conf.Configuration, op: String = "append",
-      dataChange: Boolean = true, cdc: Seq[CdcLine] = Nil,
-      ref: String = MainRef, eqAdd: Seq[String] = Nil,
-      /** See [[commit]]: proven-exact predicate drop (absorb). */
-      eqDropUpTo: Long = -1L,
-      /** See [[commit]]: a streaming epoch already recorded is skipped. */
-      stream: Option[(String, Long)] = None)(
-      delta: Long => Delta)(
-      fallback: (Long, Option[Seq[Entry]]) => Seq[Entry]): Long = {
-    lastDeltaAttempts.set(0)
-    var attempt = 0
-    while (attempt < MaxCasAttempts) {
-      lastDeltaAttempts.incrementAndGet()
-      val cur = readLayoutVersioned(fs, dir, ref, resolveChunks = false)
-      if (ref != MainRef) require(cur.isDefined,
-        s"fls: branch '$ref' of $dir does not exist — " +
-          "CALL system.create_branch first")
-      val curV = cur.map(_._1).getOrElse(0L)
-      val layout = cur.map(_._2)
-      if (stream.exists(s => layout.exists(recordsEpoch(_, s)))) return curV
-      val pointers = layout.map(_.pointers).getOrElse(Nil)
-      val inlineMax = math.max(0, conf.getInt(InlineThresholdKey, DefaultInlineThreshold))
-      val d = delta(curV)
-      require(d.removeRels.intersect(d.restate.map(_.rel).toSet).isEmpty,
-        "fls commitDelta: a rel cannot be both removed and restated")
-      val curCount = pointers.map(_.count).sum +
-        layout.map(_.entries.length.toLong).getOrElse(0L)
-      val newCount = curCount - d.removeRels.size + d.add.size
-      if (pointers.isEmpty || newCount <= inlineMax)
-        // inline/legacy/missing head, or the result fits inline: the
-        // full path is O(inline threshold) here by definition
-        return commit(fs, dir, writeId, conf, op, dataChange, cdc, ref,
-          eqAdd, eqDropUpTo = eqDropUpTo, stream = stream)(fallback)
-      val next = curV + 1
-      val touched = (d.removeRels ++ d.restate.map(_.rel)).toArray.sorted
-      val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
-      val (mustOpen0, keep0) = pointers.partition(_.mayContainAny(touched))
-      // fold decayed small chunks into this commit's delta once enough
-      // have piled up — the same amortization as the full path, decided
-      // here from pointer COUNTS alone
-      val small = keep0.filter(_.count < target / 2)
-      val (mustOpen, kept) =
-        if (small.length >= SmallChunkMergeBound) {
-          val sm = small.map(_.name).toSet
-          (mustOpen0 ++ small, keep0.filterNot(pt => sm.contains(pt.name)))
-        } else (mustOpen0, keep0)
-      val openedEntries: Seq[Entry] = layout.map(_.entries).getOrElse(Nil) ++
-        mustOpen.flatMap { pt =>
-          val es = readChunk(fs, new Path(chunksDir(dir), pt.name))
-          require(es.length == pt.count,
-            s"fls: chunk ${pt.name} of v$curV holds ${es.length} entries, " +
-              s"the manifest recorded ${pt.count} — chunk pool corrupted")
-          es
-        }
-      // chunk-granularity conflict check: every targeted rel must still
-      // be present (ranges are exact, so absence in the opened set is
-      // absence from the table)
-      val openedRels = new java.util.HashSet[String](openedEntries.length * 2)
-      openedEntries.foreach(e => openedRels.add(e.rel))
-      touched.foreach { r =>
-        if (!openedRels.contains(r))
-          throw new java.util.ConcurrentModificationException(
-            s"fls commitDelta: '$r' is not in version $curV of $dir — a " +
-              "concurrent commit removed or rewrote it; rerun the operation")
-      }
-      val restateByRel = d.restate.map(e => (e.rel, validEntry(e))).toMap
-      val survivors = openedEntries.flatMap { e =>
-        if (d.removeRels.contains(e.rel)) None
-        else restateByRel.get(e.rel) match {
-          case Some(n) =>
-            // a restated entry inherits the old birth version unless
-            // the caller stamped one — restating must never widen an
-            // equality predicate's scope onto post-predicate rows
-            val oldBv = FlsFileStats.birthOf(e.stats)
-            Some(if (FlsFileStats.birthOf(n.stats) > 0L || oldBv == 0L) n
-              else n.copy(stats = FlsFileStats.withBirth(n.stats, oldBv)))
-          case None => Some(e)
-        }
-      }
-      val added = d.add.map { e0 =>
-        val e = validEntry(e0)
-        if (FlsFileStats.birthOf(e.stats) > 0L) e
-        else e.copy(stats = FlsFileStats.withBirth(e.stats, next))
-      }
-      val leftover = survivors ++ added
-      // ABSORPTION on the delta path (r17): the full path drops a
-      // carried predicate once no retained entry predates it; here the
-      // same proof comes from the pointer lines alone — a predicate of
-      // version pv is dead iff min(birth version) over the whole table
-      // exceeds pv, and that min is min(kept pointers' recorded minBv,
-      // materialized entries' bv). Any pointer WITHOUT a recorded
-      // minBv (pre-r17) makes the table min unknowable: prove nothing,
-      // carry everything (the documented conservative carry).
-      val tableMinBv: Long =
-        if (kept.exists(_.minBv < 0L)) -1L
-        else math.min(
-          kept.foldLeft(Long.MaxValue)((m, pt) => math.min(m, pt.minBv)),
-          leftover.foldLeft(Long.MaxValue)((m, e) =>
-            math.min(m, FlsFileStats.birthOf(e.stats))))
-      val eqAll = (layout.map(_.eq).getOrElse(Nil) ++
-        eqAdd.map(FlsEqDeletes.stamp(_, next)))
-        .filter(FlsEqDeletes.versionOf(_) > eqDropUpTo)
-        .filter(j => tableMinBv < 0L ||
-          FlsEqDeletes.versionOf(j) >= tableMinBv)
-      fs.mkdirs(refLog(dir, ref))
-      val tableMeta = FlsTableMeta.read(fs, dir)
-      val schemaV = tableMeta.map(_._1)
-      val keep = keepOf(tableMeta.map(_._2))
-      val tmp = new Path(new Path(new Path(dir, "_temporary"), writeId),
-        f"manifest_v$next%020d")
-      val newChunks = writeContentDelta(fs, dir, tmp, kept, leftover,
-        Some(VersionMeta(op, dataChange, schemaV)), cdc, conf, eqAll,
-        layout.map(_.streams).getOrElse(Map.empty[String, Long]) ++ stream,
-        chunkStatCols(tableMeta.map(_._2)))
-      def dropNewChunks(): Unit = newChunks.foreach(p =>
-        try fs.delete(p, false) catch { case _: Throwable => () })
-      beforePublishForTest()
-      val won =
-        try publishExclusive(fs, tmp, versionPath(dir, next, ref), conf)
-        catch { case t: Throwable => dropNewChunks(); throw t }
-        finally { try fs.delete(tmp, false) catch { case _: Throwable => () } }
-      if (won) {
-        val protect = if (ref == MainRef) tags(fs, dir).values.toSet
-          else Set.empty[Long]
-        gcVersionsAndChunks(fs, dir, ref, next, keep, protect)
-        return next
-      }
-      dropNewChunks()
-      attempt += 1
-    }
-    throw new java.io.IOException(
-      s"fls manifest commit: lost the publish race $MaxCasAttempts times at $dir — giving up")
-  }
-
-  /** [[writeContent]] for the delta path: `kept` pointers are written
-    * back VERBATIM (their chunks were never opened); only `leftover`
-    * entries — the delta plus the contents of the few chunks the
-    * commit had to open — are grouped into new chunk files. Returns
-    * the chunk files created. */
-  private def writeContentDelta(fs: FileSystem, dir: Path, p: Path,
-      kept: Seq[Pointer], leftover: Seq[Entry], meta: Option[VersionMeta],
-      cdc: Seq[CdcLine], conf: org.apache.hadoop.conf.Configuration,
-      eqDeletes: Seq[String], streams: Map[String, Long],
-      statCols: Seq[String]): Seq[Path] = {
-    val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
-    fs.mkdirs(chunksDir(dir))
+  /** Write one version file. It is INLINE (one line per entry, zero
+    * extra reads) exactly when nothing is `kept` and `leftover` fits
+    * `inlineMax`; otherwise the `kept` pointers are written back
+    * verbatim and `leftover` is grouped into new chunk files. Returns
+    * the chunk files created — the caller reclaims them if the version
+    * never publishes. Streams through a buffered writer: no full-table
+    * StringBuilder at any size. */
+  private def writeVersion(fs: FileSystem, dir: Path, p: Path,
+      kept: Seq[Pointer], leftover: Seq[Entry], inlineMax: Int, target: Int,
+      meta: VersionMeta, cdc: Seq[CdcLine], eqDeletes: Seq[String],
+      streams: Map[String, Long], statCols: Seq[String]): Seq[Path] = {
+    val inline = kept.isEmpty && leftover.length <= inlineMax
+    val sorted = leftover.sortBy(_.rel)
+    if (!inline) fs.mkdirs(chunksDir(dir))
     val written: Seq[(Pointer, Path)] =
-      leftover.sortBy(_.rel).grouped(target).map { group =>
+      if (inline) Nil
+      else sorted.grouped(target).map { group =>
         val name = "c" + java.util.UUID.randomUUID().toString.replace("-", "")
         val cp = new Path(chunksDir(dir), name)
         val w = writerFor(fs, cp)
@@ -1015,9 +916,17 @@ object FlsManifest {
       }.toSeq
     val out = writerFor(fs, p)
     try {
-      out.write(HeaderV2); out.write('\n')
+      // eqdel-carrying files take the v2 header even inline: a reader
+      // that skipped `#eqdel` as unknown metadata would silently
+      // resurrect deleted rows — same loud-failure argument as chunks
+      out.write(if (inline && eqDeletes.isEmpty) Header else HeaderV2)
+      out.write('\n')
       writeMetaLines(out, meta, cdc, eqDeletes, streams)
-      (kept ++ written.map(_._1)).sortBy(_.minRel)
+      // pointer lines are ordered by each chunk's first rel so the file
+      // is deterministic for a given layout; each carries the chunk's
+      // [minRel, maxRel] so point-lookup reads skip the rest unopened
+      if (inline) sorted.foreach(writeEntryLine(out, _))
+      else (kept ++ written.map(_._1)).sortBy(_.minRel)
         .foreach(writePointerLine(out, _))
     } finally out.close()
     written.map(_._2)
@@ -1045,93 +954,15 @@ object FlsManifest {
     new java.io.BufferedWriter(new java.io.OutputStreamWriter(
       fs.create(p, true), StandardCharsets.UTF_8), 1 << 16)
 
-  /** Write one version file (and, past the inline threshold, the entry
-    * chunks the commit touched). Returns the chunk files CREATED here —
-    * the caller reclaims them if the version never publishes. Streams
-    * through a buffered writer: no full-table StringBuilder at any
-    * size. */
-  private def writeContent(fs: FileSystem, dir: Path, p: Path,
-      entries: Seq[Entry], meta: Option[VersionMeta], cdc: Seq[CdcLine],
-      prevChunks: Seq[(String, Seq[Entry])],
-      conf: org.apache.hadoop.conf.Configuration,
-      eqDeletes: Seq[String], streams: Map[String, Long],
-      statCols: Seq[String]): Seq[Path] = {
-    val inlineMax = math.max(0, conf.getInt(InlineThresholdKey, DefaultInlineThreshold))
-    val chunked = entries.length > inlineMax
-    // ---- plan the chunk layout (no-op for inline tables) ----
-    var reused: Seq[(String, Seq[Entry])] = Nil
-    var written: Seq[(String, Seq[Entry], Path)] = Nil
-    if (chunked) {
-      val target = math.max(1, conf.getInt(ChunkTargetKey, DefaultChunkTarget))
-      val byRel = new java.util.HashMap[String, Entry](entries.length * 2)
-      entries.foreach(e => byRel.put(e.rel, e))
-      // a chunk survives by pointer iff every entry in it is still in
-      // the table, byte-identical (same rel, length, mtime, stats) —
-      // any deletion, DV re-vector, or stats change rewrites that one
-      // chunk and no other
-      val (intact, touched) = prevChunks.partition { case (_, es) =>
-        es.forall(e => e == byRel.get(e.rel))
-      }
-      // single-file appends each add a tiny chunk; once enough have
-      // piled up, fold them into this commit's delta so chunk count
-      // stays O(entries/target) — amortized O(target) extra bytes
-      val (small, big) = intact.partition(_._2.length < target / 2)
-      reused = if (small.length >= SmallChunkMergeBound) big else intact
-      val covered = new java.util.HashSet[String]()
-      reused.foreach(_._2.foreach(e => covered.add(e.rel)))
-      val leftover = entries.filterNot(e => covered.contains(e.rel))
-      val _ = touched // rewritten below via leftover; chunk files GC later
-      fs.mkdirs(chunksDir(dir))
-      written = leftover.sortBy(_.rel).grouped(target).map { group =>
-        val name = "c" + java.util.UUID.randomUUID().toString.replace("-", "")
-        val cp = new Path(chunksDir(dir), name)
-        val w = writerFor(fs, cp)
-        try {
-          w.write(ChunkHeader); w.write('\n')
-          group.foreach(writeEntryLine(w, _))
-        } finally w.close()
-        (name, group, cp)
-      }.toSeq
-    }
-    // ---- the version file itself ----
-    // eqdel-carrying files take the v2 header even inline: a reader
-    // that skipped `#eqdel` as unknown metadata would silently
-    // resurrect deleted rows — same loud-failure argument as chunks
-    val v2 = chunked || eqDeletes.nonEmpty
-    val out = writerFor(fs, p)
-    try {
-      out.write(if (v2) HeaderV2 else Header); out.write('\n')
-      writeMetaLines(out, meta, cdc, eqDeletes, streams)
-      if (chunked) {
-        // pointer lines, ordered by each chunk's first rel so the file
-        // is deterministic for a given layout; each carries the chunk's
-        // [minRel, maxRel] (entries are rel-sorted within a chunk) so
-        // point-lookup reads skip non-intersecting chunks unopened
-        (reused ++ written.map(c => (c._1, c._2)))
-          .map { case (name, es) => Pointer(name, es.length,
-            es.headOption.map(_.rel).getOrElse(""),
-            es.lastOption.map(_.rel).getOrElse(""), ranged = true,
-            stats = chunkStatsFor(es, statCols), minBv = minBvFor(es)) }
-          .sortBy(_.minRel)
-          .foreach(writePointerLine(out, _))
-      } else {
-        entries.sortBy(_.rel).foreach(writeEntryLine(out, _))
-      }
-    } finally out.close()
-    written.map(_._3)
-  }
-
-  private def writeMetaLines(out: java.io.Writer, meta: Option[VersionMeta],
+  private def writeMetaLines(out: java.io.Writer, m: VersionMeta,
       cdc: Seq[CdcLine], eqDeletes: Seq[String],
       streams: Map[String, Long]): Unit = {
-    meta.foreach { m =>
-      require(!m.op.contains('\n') && !m.op.contains('\t'),
-        s"fls: manifest op tag must be a plain word, got '${m.op}'")
-      out.write("#op\t"); out.write(m.op)
-      out.write('\t'); out.write(if (m.dataChange) "1" else "0"); out.write('\n')
-      m.schemaVersion.foreach { v =>
-        out.write("#schema\t"); out.write(v.toString); out.write('\n') }
-    }
+    require(!m.op.contains('\n') && !m.op.contains('\t'),
+      s"fls: manifest op tag must be a plain word, got '${m.op}'")
+    out.write("#op\t"); out.write(m.op)
+    out.write('\t'); out.write(if (m.dataChange) "1" else "0"); out.write('\n')
+    m.schemaVersion.foreach { v =>
+      out.write("#schema\t"); out.write(v.toString); out.write('\n') }
     cdc.foreach { line =>
       def chk(s: String): String = {
         require(!s.contains('\n') && !s.contains('\t') && s != "-",
@@ -1277,11 +1108,6 @@ object FlsManifest {
         (try fs.delete(s.getPath, false) catch { case _: Throwable => false })
     }
   }
-
-  /** Atomic create-exclusive version publish — see [[FlsCas]]. */
-  private def publishExclusive(fs: FileSystem, tmp: Path, dst: Path,
-      conf: org.apache.hadoop.conf.Configuration): Boolean =
-    FlsCas.publishExclusive(fs, tmp, dst, conf)
 
   /** The FileStatus view of the manifest — what listing would have
     * produced, without any listStatus RPC. */
@@ -1446,23 +1272,23 @@ object FlsManifest {
     val forkV = forkVersion(fs, dir, name)
     var prev = 0L
     val newV = commit(fs, dir, java.util.UUID.randomUUID().toString, conf,
-        op = "fast_forward") { (curV, curEntries) =>
-      if (curV != forkV) throw new java.util.ConcurrentModificationException(
-        s"fls fast_forward: main of $dir advanced to v$curV past the " +
+        op = "fast_forward") { head =>
+      if (head.version != forkV) throw new java.util.ConcurrentModificationException(
+        s"fls fast_forward: main of $dir advanced to v${head.version} past the " +
           s"fork point v$forkV while branch '$name' was being written — " +
           "the branch no longer descends from the head; re-create the " +
           "branch from the new head and replay (or merge manually)")
-      prev = curV
+      prev = head.version
       // strip branch-only entries' birth versions: branch commits
       // numbered them on the BRANCH lineage (forkV+1, forkV+2, …),
       // which can exceed the main version this publish mints — an
       // equality delete on main would then wrongly exempt those rows.
       // commit() restamps them with the published main version, the
       // moment they became visible to main readers.
-      val mainRels = curEntries.map(_.map(_.rel).toSet).getOrElse(Set.empty)
-      branchEntries.map(e =>
+      val mainRels = head.entries.map(_.rel).toSet
+      Delta.between(head.entries, branchEntries.map(e =>
         if (mainRels.contains(e.rel)) e
-        else e.copy(stats = FlsFileStats.stripBirth(e.stats)))
+        else e.copy(stats = FlsFileStats.stripBirth(e.stats))))
     }
     (prev, newV)
   }

@@ -1791,8 +1791,13 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
         files.zip(stats).filter(_._2 != null)
       case _ => Array.empty[(String, String)]
     }.toMap
-    if (committedLen.isEmpty && epoch.isDefined &&
-        graft.fls.FlsFile.listDataStatuses(dir, conf).nonEmpty) {
+    // the head's pointer lines, no chunk opened
+    lazy val headLayout = if (!manifestMode) None else graft.fls.FlsManifest
+      .readLayoutVersioned(fs, dir, branch, resolveChunks = false).map(_._2)
+    if (committedLen.isEmpty && epoch.isDefined && (headLayout match {
+        case Some(h) => h.entries.nonEmpty || h.pointers.exists(_.count > 0)
+        case None => graft.fls.FlsFile.listDataStatuses(dir, conf).nonEmpty
+      })) {
       // an idle trigger on a populated table: nothing to publish; drop
       // whatever a prior attempt of this epoch staged
       FlsCommit.removeStaging(fs, dir, writeId)
@@ -1804,9 +1809,7 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       FlsCommit.removeStaging(fs, dir, writeId)
       return
     }
-    if (manifestMode && epoch.exists(e => graft.fls.FlsManifest
-        .readLayoutVersioned(fs, dir, branch, resolveChunks = false)
-        .exists(h => graft.fls.FlsManifest.recordsEpoch(h._2, e)))) {
+    if (epoch.exists(e => headLayout.exists(graft.fls.FlsManifest.recordsEpoch(_, e)))) {
       // a replay of an epoch the manifest records publishes nothing
       // (the commit below would skip it too, but a staged replay must
       // not first move its files onto the names the recorded entries
@@ -1879,11 +1882,17 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
       }
     }
 
+    // whether the job can remove existing files beyond a truncate
+    val removes = overwriteFilters.isDefined || dynamicOverwrite ||
+      replaceFilesThunk.isDefined
     if (manifestMode) {
       // The publish is a CAS retry loop (FlsManifest.commit): this job
-      // merges onto whatever version is newest AT PUBLISH TIME, so two
-      // concurrent appenders both land — the loser re-merges and
-      // retries, metadata-only (data files are attempt-unique).
+      // applies its change to whatever version is newest AT PUBLISH
+      // TIME, so two concurrent appenders both land — the loser
+      // recomputes and retries, metadata-only (data files are
+      // attempt-unique). A plain append names no existing entry, so it
+      // opens no chunk; a streaming epoch is such an append, skipped if
+      // a concurrent attempt recorded it first.
       val newEntries = committedLen.collect {
         case (rel, len) if rel.endsWith(".fls") =>
           graft.fls.FlsManifest.Entry(rel, len, 0L, committedStats.getOrElse(rel, null))
@@ -1895,25 +1904,22 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
           "write-audit-publish; run DML after fast_forward")
       val manifestOp = opOverride.getOrElse(
         if (doTruncate) "overwrite" else "append")
-      val fullMerge: (Long, Option[Seq[graft.fls.FlsManifest.Entry]]) =>
-          Seq[graft.fls.FlsManifest.Entry] = { (curV, current) =>
-        val keptOld =
-          if (doTruncate) Nil
+      graft.fls.FlsManifest.commit(fs, dir, writeId, conf, op = manifestOp,
+          ref = branch, stream = epoch) { head =>
+        // appending onto a pre-manifest (listing-mode) table: seed the
+        // manifest from one last recursive listing — without this job's
+        // own uncommitted attempt files
+        val seeded = scala.collection.mutable.ArrayBuffer[graft.fls.FlsManifest.Entry]()
+        if (!head.exists && !doTruncate) walkManaged(fs, dir) { (s, rel) =>
+          if (rel.endsWith(".fls") && !committed.contains(rel) &&
+              !rel.contains(s"-$writeId-"))
+            seeded += graft.fls.FlsManifest.Entry(rel, s.getLen, s.getModificationTime)
+        }
+        val gone: Set[String] =
+          if (doTruncate) head.entries.map(_.rel).toSet
+          else if (!removes) Set.empty
           else {
-            val base = current match {
-              case Some(old) => old.filterNot(e => committed.contains(e.rel))
-              case None =>
-                // appending onto a pre-manifest (listing-mode) table: seed
-                // the manifest from one last recursive listing — without
-                // this job's own uncommitted attempt files
-                val seeded = scala.collection.mutable.ArrayBuffer[graft.fls.FlsManifest.Entry]()
-                walkManaged(fs, dir) { (s, rel) =>
-                  if (rel.endsWith(".fls") && !committed.contains(rel) &&
-                      !rel.contains(s"-$writeId-"))
-                    seeded += graft.fls.FlsManifest.Entry(rel, s.getLen, s.getModificationTime)
-                }
-                seeded.toSeq
-            }
+            val base = head.entries ++ seeded
             // Row-level replace: the replacement rows were built from
             // the group scan's view — if a concurrent merge-on-read
             // DELETE re-vectored one of the replaced files since, the
@@ -1936,13 +1942,11 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
             // files, but the replacement rows were built without it
             replacedEqThunk.foreach { t =>
               val scanEq = t()
-              val fresh = graft.fls.FlsManifest.versionEq(fs, dir, curV)
-                .filterNot(scanEq.contains)
-                .filter { j =>
-                  val pv = graft.fls.FlsEqDeletes.versionOf(j)
-                  base.exists(e => replacedRels.contains(e.rel) &&
-                    graft.fls.FlsFileStats.birthOf(e.stats) <= pv)
-                }
+              val fresh = head.eq.filterNot(scanEq.contains).filter { j =>
+                val pv = graft.fls.FlsEqDeletes.versionOf(j)
+                base.exists(e => replacedRels.contains(e.rel) &&
+                  graft.fls.FlsFileStats.birthOf(e.stats) <= pv)
+              }
               if (fresh.nonEmpty)
                 throw new java.util.ConcurrentModificationException(
                   "fls replace: an equality delete committed after the " +
@@ -1950,34 +1954,15 @@ class FlsBatchWrite(info: LogicalWriteInfo, doTruncate: Boolean,
                     "the operation")
             }
             // INSERT OVERWRITE: re-classified per CAS attempt, so the
-            // replacement set tracks the entry set actually merged onto;
-            // replaced files stay on disk for vacuum (pinned readers)
-            val doomed = doomedAmong(base.map(_.rel))
-            base.filterNot(e => doomed.contains(e.rel))
+            // replacement set tracks the entry set actually committed
+            // onto; replaced files stay on disk for vacuum (pinned readers)
+            doomedAmong(base.map(_.rel))
           }
-        keptOld ++ newEntries
+        graft.fls.FlsManifest.Delta(
+          add = seeded.filterNot(e => gone.contains(e.rel)).toSeq ++ newEntries,
+          removeRels = gone -- seeded.map(_.rel))
       }
-      // A pure append touches no existing entry: commit it as a delta
-      // so the publish is O(new files) in metadata reads and driver
-      // heap — on a chunked manifest the existing #chunk pointers are
-      // carried verbatim, never opened (FlsManifest.commitDelta). A
-      // streaming epoch is such an append, skipped if a concurrent
-      // attempt recorded it first. Every other shape (truncate,
-      // filter/dynamic overwrite, row-level replace) edits existing
-      // entries and reclassifies the current set, so it needs the full
-      // merge.
-      val appendShape = !doTruncate && replaceFilesThunk.isEmpty &&
-        replacedDvThunk.isEmpty && replacedEqThunk.isEmpty &&
-        overwriteFilters.isEmpty && !dynamicOverwrite
-      if (appendShape)
-        graft.fls.FlsManifest.commitDelta(fs, dir, writeId, conf,
-            op = manifestOp, ref = branch, stream = epoch)(
-          _ => graft.fls.FlsManifest.Delta(add = newEntries))(fullMerge)
-      else
-        graft.fls.FlsManifest.commit(fs, dir, writeId, conf,
-          op = manifestOp, ref = branch)(fullMerge)
-    } else if (doTruncate || overwriteFilters.isDefined || dynamicOverwrite ||
-        replaceFilesThunk.isDefined || epoch.isDefined) {
+    } else if (doTruncate || removes || epoch.isDefined) {
       // Listing mode, and the job can remove something: the directory
       // IS the table, so what the write replaces leaves it now — moved
       // into the job's staging tree, where an abort finds it again. (A

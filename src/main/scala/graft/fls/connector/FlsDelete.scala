@@ -355,18 +355,13 @@ object FlsDelete {
     if (planned.isEmpty) return false
     val (frozenV, dropRels) = planned.get
     if (dropRels.isEmpty) return true // decided whole: nothing matches
-    def freshCheck(curV: Long): Unit =
-      if (curV != frozenV)
+    FlsManifest.commit(fs, root, UUID.randomUUID().toString, conf,
+        op = "delete") { head =>
+      if (head.version != frozenV)
         throw new java.util.ConcurrentModificationException(
           "fls delete: the table advanced during a chunk-pruned delete " +
-            s"(planned against v$frozenV, head is v$curV) — rerun the delete")
-    FlsManifest.commitDelta(fs, root, UUID.randomUUID().toString, conf,
-        op = "delete") { curV =>
-      freshCheck(curV)
+            s"(planned against v$frozenV, head is v${head.version}) — rerun the delete")
       FlsManifest.Delta(removeRels = dropRels)
-    } { (curV, curEntries) =>
-      freshCheck(curV)
-      curEntries.getOrElse(Nil).filterNot(e => dropRels.contains(e.rel))
     }
     true
   }
@@ -467,8 +462,8 @@ object FlsDelete {
     // manifest whose pointer lines carry cluster-key value ranges
     // (TBLPROPERTIES manifest_chunk_stats), a key-range DELETE plans
     // from the intersecting chunks ONLY — non-intersecting chunks stay
-    // unopened through planning AND the commit (commitDelta carries
-    // their pointers verbatim), so `DELETE WHERE ts < cutoff` on a
+    // unopened through planning AND the commit (which carries their
+    // pointers verbatim), so `DELETE WHERE ts < cutoff` on a
     // million-file clustered table reads O(matching chunks) of
     // metadata, not the whole manifest. Applies when every candidate
     // decides whole from its manifest stats / partition values; a
@@ -507,11 +502,11 @@ object FlsDelete {
           // metadata-only commit: an EMPTY delta — on a chunked table
           // this opens ZERO chunks (pointer lines carried verbatim),
           // so the GDPR-shape delete is O(1) in both data AND metadata
-          FlsManifest.commitDelta(fs, root, UUID.randomUUID().toString,
-              conf, op = "eqdelete", eqAdd = Seq(pred.json))(
-            _ => FlsManifest.Delta()) { (_, cur) =>
-            cur.getOrElse(throw new IllegalStateException(
-              s"fls delete: manifest of $root vanished mid-delete")).toSeq
+          FlsManifest.commit(fs, root, UUID.randomUUID().toString,
+              conf, op = "eqdelete", eqAdd = Seq(pred.json)) { head =>
+            if (!head.exists) throw new IllegalStateException(
+              s"fls delete: manifest of $root vanished mid-delete")
+            FlsManifest.Delta()
           }
           return
         }
@@ -607,8 +602,8 @@ object FlsDelete {
             rel -> base
           }.toMap
           try {
-            FlsManifest.commit(fs, root, writeId, conf, op = "delete") { (curV, cur) =>
-              val entries = cur.getOrElse(Seq.empty)
+            FlsManifest.commit(fs, root, writeId, conf, op = "delete") { head =>
+              val entries = head.entries
               val files = entries.map(e => new Path(root, e.rel))
               // positions were computed from a raw read (no residual;
               // plan() already required zero ACTIVE predicates at the
@@ -620,8 +615,7 @@ object FlsDelete {
               // positions for rows this DELETE matched — the restored
               // predicate applies independently and the union is the
               // correct combined state.)
-              if (FlsManifest.versionEq(fs, root, curV)
-                  .exists(graft.fls.FlsEqDeletes.versionOf(_) > frozenV))
+              if (head.eq.exists(graft.fls.FlsEqDeletes.versionOf(_) > frozenV))
                 throw new java.util.ConcurrentModificationException(
                   "fls delete: an equality delete committed concurrently — " +
                     "rerun the delete")
@@ -659,7 +653,8 @@ object FlsDelete {
                   })
                 }
               }
-              if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files))
+              FlsManifest.Delta.between(entries,
+                if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files)))
             }
           } catch {
             case e: Throwable =>
@@ -681,8 +676,8 @@ object FlsDelete {
           }
         try {
           FlsManifest.commit(fs, root, UUID.randomUUID().toString, conf,
-              op = "delete") { (curV, cur) =>
-            val entries = cur.getOrElse(Seq.empty)
+              op = "delete") { head =>
+            val entries = head.entries
             val files = entries.map(e => new Path(root, e.rel))
             // replacements were built from a raw read (no residual;
             // this leg only rewrites when no predicate was active at
@@ -693,8 +688,7 @@ object FlsDelete {
             // outputs). Refuse and rerun. Decided-only deletes (no
             // staged rewrites) stay safe under any predicate:
             // drop/keep whole are superset-conservative.
-            if (rewriteTargets.nonEmpty &&
-                FlsManifest.versionEq(fs, root, curV).nonEmpty)
+            if (rewriteTargets.nonEmpty && head.eq.nonEmpty)
               throw new java.util.ConcurrentModificationException(
                 "fls delete: an equality delete committed concurrently — " +
                   "rerun the delete")
@@ -730,8 +724,9 @@ object FlsDelete {
             val merged = kept ++ staged.collect { case (rel, len) if rel.endsWith(".fls") =>
               FlsManifest.Entry(rel, len, 0L)
             }
-            if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files))
             // dropped/rewritten inputs stay on disk for vacuum
+            FlsManifest.Delta.between(entries,
+              if (merged.nonEmpty) merged else Seq(writeSchemaOnly(files)))
           }
         } catch {
           case e: Throwable =>

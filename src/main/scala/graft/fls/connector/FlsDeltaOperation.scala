@@ -296,8 +296,8 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
 
     try {
       FlsManifest.commit(fs, root, writeId, conf, op = op,
-          cdc = cdcLines) { (curV, cur) =>
-        val entries = cur.getOrElse(Seq.empty)
+          cdc = cdcLines) { head =>
+        val entries = head.entries
         val byRel = entries.map(e => e.rel -> e).toMap
         // a NEW equality delete that applies to our targets means the
         // deltas were computed from rows it has since deleted — the
@@ -306,8 +306,7 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
         // conflict class as the DV pointer check below.
         locally {
           val atScan = scanEq()
-          val fresh = FlsManifest.versionEq(fs, root, curV)
-            .filterNot(atScan.contains)
+          val fresh = head.eq.filterNot(atScan.contains)
             .filter { j =>
               val pv = graft.fls.FlsEqDeletes.versionOf(j)
               dvBaseByRel.keysIterator.exists(rel => byRel.get(rel)
@@ -336,12 +335,11 @@ class FlsDeltaBatchWrite(info: LogicalWriteInfo,
               s"fls delta write: a concurrent DELETE re-vectored $rel " +
                 "after the operation's scan — rerun the operation")
         }
-        entries.map { e =>
-          dvBaseByRel.get(e.rel) match {
-            case Some(b) => e.copy(stats = FlsFileStats.withDv(e.stats, b))
-            case None => e
-          }
-        } ++ insertEntries
+        FlsManifest.Delta(add = insertEntries.toSeq,
+          restate = dvBaseByRel.toSeq.map { case (rel, b) =>
+            val e = byRel(rel)
+            e.copy(stats = FlsFileStats.withDv(e.stats, b))
+          })
       }
     } catch {
       case e: Throwable =>

@@ -369,7 +369,7 @@ class FlsCdfSpec extends AnyFunSuite with BeforeAndAfterAll {
     // table) publishes v1 = the legacy entries and RETIRES the legacy
     // file — after which entriesAt(0) is empty
     FlsManifest.commit(fs, root, "spec-upgrade", hconf,
-      op = "upgrade", dataChange = false) { (_, cur) => cur.get }
+      op = "upgrade", dataChange = false)(_ => FlsManifest.Delta())
     assert(!fs.exists(legacy))
     // a consumer bootstrapping from the beginning must see the
     // pre-upgrade rows, not an empty feed
@@ -411,7 +411,7 @@ class FlsCdfSpec extends AnyFunSuite with BeforeAndAfterAll {
         schemaVersion = Some(1L))))
     // hand-write a pre-tag manifest (no #op line): meta is None and
     // entries still parse — the format extension is backward-compatible
-    val v2 = FlsManifest.commit(fs, root, "spec", hconf) { (_, cur) => cur.get }
+    val v2 = FlsManifest.commit(fs, root, "spec", hconf)(_ => FlsManifest.Delta())
     val p = FlsManifest.versionPath(root, v2)
     val raw = new String(readAll(fs, p), java.nio.charset.StandardCharsets.UTF_8)
     val noTag = raw.linesIterator.filterNot(_.startsWith("#op")).mkString("\n") + "\n"

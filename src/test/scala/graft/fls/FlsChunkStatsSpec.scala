@@ -85,7 +85,7 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       spark.sql(s"DELETE FROM $tbl WHERE id >= $m")
     }
     // the intersecting chunk opens at most three times — canDeleteWhere
-    // plan, deleteWhere plan, and the commitDelta rebuild; every other
+    // plan, deleteWhere plan, and the commit's rebuild; every other
     // chunk is pruned by VALUE and never opened
     assert(opened <= 3,
       s"key-range delete opened $opened chunks of ${pointers.length}")
@@ -193,9 +193,9 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     spark.sql(s"DELETE FROM $tbl WHERE id >= ${m + 3}") // straddles → #eqdel
     // interleave: an append commits in the window between the absorb's
     // staged delta and its publish CAS — the absorb must lose the race,
-    // detect staleness in the retried delta closure, and fall back to
-    // the tolerant full merge (self-disarming hook: the append's own
-    // delta commit must not recurse)
+    // see the advanced head in its retried change function, and pass
+    // the tolerant conflict checks (self-disarming hook: the append's
+    // own commit must not recurse)
     @volatile var fired = false
     FlsManifest.beforePublishForTest = () => {
       if (!fired) {
@@ -212,7 +212,7 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(fired, "the race hook must have fired")
     val (headV, _) = FlsManifest.readVersioned(fs, root).get
     assert(FlsManifest.versionEq(fs, root, headV).isEmpty,
-      "the fallback full merge must still drop the predicate")
+      "the retried commit must still drop the predicate")
     // deleted rows stay dead, the concurrently appended row survives
     assert(spark.table(tbl).count() == m + 3 + 1)
     assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE id = 999999")

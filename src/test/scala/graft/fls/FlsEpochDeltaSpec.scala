@@ -16,7 +16,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * a compaction and a rollback; the skip is decided inside the CAS
   * attempt; a replay after compaction keeps the rows single; and a
   * table whose epochs an earlier writer recorded as `w:` chunk markers
-  * still recognizes them. */
+  * still recognizes them; an idle epoch opens no chunk either. */
 class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -116,6 +116,18 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
       "the replay must keep the first attempt's rows")
   }
 
+  test("an idle epoch on a chunked table opens no chunk") {
+    val dir = s"$tmp/idle"
+    seed(dir, 240L) // 12 single-file commits
+    val (v, layout) = head(dir)
+    assert(layout.pointers.nonEmpty && layout.pointers.map(_.count).sum == 12L,
+      "spec setup: a 12-file chunked table")
+    val n = epoch(dir, "q-idle", 0L, Nil)
+    assert(n == 0L, s"the idle epoch opened $n chunks")
+    assert(head(dir)._1 == v, "an idle epoch publishes no version")
+    assert(readLongs(dir) == (0L until 240L))
+  }
+
   test("#stream lines survive a fold, a compaction and a rollback") {
     val dir = s"$tmp/carry"
     seed(dir, 100L)
@@ -163,11 +175,8 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     def entry(task: Int) =
       FlsManifest.Entry(s"part-00000-q-cas-e1-$task-0000.fls", 1L, 0L)
     def commitEpoch(task: Int): Long =
-      FlsManifest.commitDelta(fs, p, s"q-cas-e1-$task", conf,
-          stream = Some(("q-cas", 1L)))(
-        _ => FlsManifest.Delta(add = Seq(entry(task)))) { (_, cur) =>
-        cur.getOrElse(Nil) :+ entry(task)
-      }
+      FlsManifest.commit(fs, p, s"q-cas-e1-$task", conf,
+        stream = Some(("q-cas", 1L)))(_ => FlsManifest.Delta(add = Seq(entry(task))))
     // a second attempt of epoch 1 commits inside the first attempt's
     // window between staging its version and the publish CAS
     FlsManifest.beforePublishForTest = () => {
@@ -176,19 +185,19 @@ class FlsEpochDeltaSpec extends AnyFunSuite with BeforeAndAfterAll {
     }
     val v = try commitEpoch(1)
       finally FlsManifest.beforePublishForTest = () => ()
-    assert(FlsManifest.lastDeltaAttempts.get() == 2,
+    assert(FlsManifest.lastCommitAttempts.get() == 2,
       "the first attempt must lose the race and read the new head")
     assert(v == head(dir)._1, "a skipped commit returns the head's version")
     val rels = FlsManifest.readVersioned(fs, p).get._2.map(_.rel)
     assert(rels.contains(entry(2).rel) && !rels.contains(entry(1).rel),
       s"exactly the attempt that won must be recorded: $rels")
-    // the full path (an inline head) skips the same way
+    // an inline head skips the same way
     val inlineDir = s"$tmp/cas_inline"
     val ip = new Path(inlineDir)
     def commitFull(task: Int): Long =
       FlsManifest.commit(fs, ip, s"q-full-e0-$task", conf,
-          stream = Some(("q-full", 0L))) { (_, cur) =>
-        cur.getOrElse(Nil) :+ FlsManifest.Entry(s"part-q-full-e0-$task.fls", 1L, 0L)
+          stream = Some(("q-full", 0L))) { _ =>
+        FlsManifest.Delta(add = Seq(FlsManifest.Entry(s"part-q-full-e0-$task.fls", 1L, 0L)))
       }
     val v1 = commitFull(1)
     assert(commitFull(2) == v1)

@@ -17,8 +17,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * the bytes-written bound, chunk reuse by pointer, the small-chunk
   * amortized fold, deletion touching one chunk, chunk GC past
   * retention (shared-pool safety across branches/tags), orphan sweep,
-  * and end-to-end correctness (reads, time travel, CDF, DML) on a
-  * chunked table via SQL. */
+  * one read per chunk per commit attempt, and end-to-end correctness
+  * (reads, time travel, CDF, DML) on a chunked table via SQL. */
 class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private var spark: SparkSession = _
@@ -76,9 +76,8 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   private def append(fs: FileSystem, dir: Path, c: Configuration,
       adds: Seq[FlsManifest.Entry]): Long =
-    FlsManifest.commit(fs, dir, java.util.UUID.randomUUID().toString, c) {
-      (_, cur) => cur.getOrElse(Nil) ++ adds
-    }
+    FlsManifest.commit(fs, dir, java.util.UUID.randomUUID().toString, c)(
+      _ => FlsManifest.Delta(add = adds))
 
   test("a single-file append to a chunked table writes O(delta) bytes, " +
       "not O(table), and reuses every untouched chunk by pointer") {
@@ -154,8 +153,8 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     append(fs, dir, c, (0 until 40).map(entry(_)))
     val before = chunkNames(fs, dir)
     val victim = entry(17).rel
-    FlsManifest.commit(fs, dir, "del-1", c, op = "delete") { (_, cur) =>
-      cur.get.filterNot(_.rel == victim)
+    FlsManifest.commit(fs, dir, "del-1", c, op = "delete") { h =>
+      FlsManifest.Delta.between(h.entries, h.entries.filterNot(_.rel == victim))
     }
     val after = chunkNames(fs, dir)
     // exactly one chunk (the victim's) was replaced by one rewritten chunk
@@ -178,9 +177,9 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     // head version's pointer count stays bounded: ideal = 70/4 ≈ 18,
     // plus at most the fold bound of small chunks awaiting merge
     val layout = FlsManifest.readLayoutVersioned(fs, dir).get._2
-    assert(layout.chunks.nonEmpty)
-    assert(layout.chunks.length <= 70 / Target + 10,
-      s"${layout.chunks.length} chunks — small-chunk fold not engaging")
+    assert(layout.pointers.nonEmpty)
+    assert(layout.pointers.length <= 70 / Target + 10,
+      s"${layout.pointers.length} chunks — small-chunk fold not engaging")
   }
 
   test("chunk GC: chunks referenced only by GC'd versions fall; " +
@@ -193,8 +192,9 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     // churn WELL past DefaultKeepVersions=8 with full rewrites so old
     // chunks become uniquely owned by old versions
     (1 to 12).foreach { k =>
-      FlsManifest.commit(fs, dir, s"rw-$k", c, op = "overwrite") { (_, _) =>
-        (0 until 40).map(i => entry(i, s"""{"gen":$k}"""))
+      FlsManifest.commit(fs, dir, s"rw-$k", c, op = "overwrite") { h =>
+        FlsManifest.Delta.between(h.entries,
+          (0 until 40).map(i => entry(i, s"""{"gen":$k}""")))
       }
     }
     // every retained version still resolves fully (chunks present)
@@ -210,6 +210,45 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     // and the pool is bounded ~ retained * chunksPerVersion, nowhere
     // near 13 generations * 10 chunks
     assert(onDisk.size <= (FlsManifest.DefaultKeepVersions + 2) * 10 + 10)
+  }
+
+  /** Chunk reads of the second attempt of the one manifest commit `run`
+    * makes: its first attempt loses the publish race to an empty commit
+    * made in the window before its CAS. */
+  private def secondAttemptReads(fs: FileSystem, dir: Path)(run: => Unit): Long = {
+    var marks = Vector.empty[Long]
+    lazy val hook: () => Unit = () => {
+      if (marks.isEmpty) {
+        FlsManifest.beforePublishForTest = () => ()
+        FlsManifest.commit(fs, dir, "race", conf())(_ => FlsManifest.Delta())
+        FlsManifest.beforePublishForTest = hook
+      }
+      marks :+= FlsManifest.chunkReadCount.get()
+    }
+    FlsManifest.beforePublishForTest = hook
+    try run finally FlsManifest.beforePublishForTest = () => ()
+    assert(marks.length == 2 && FlsManifest.lastCommitAttempts.get() == 2,
+      s"the commit must lose one race and win the retry: $marks")
+    marks(1) - marks(0)
+  }
+
+  test("overwrite and compact read each chunk once per attempt") {
+    val dir = s"$tmp/seg_once"
+    val p = new Path(dir)
+    val fs = fsOf(p, conf())
+    def write(mode: String): Unit = spark.range(0, 40, 1, 40).toDF("v")
+      .write.format("fls").mode(mode).option("commit_mode", "manifest")
+      .option("write_distribution", "none").save(dir)
+    def pointers = FlsManifest.readLayoutVersioned(fs, p,
+      resolveChunks = false).get._2.pointers
+    write("append")
+    assert(pointers.length == 10, s"spec setup: a 10-chunk table, got $pointers")
+    val overwrite = secondAttemptReads(fs, p)(write("overwrite"))
+    assert(overwrite <= 10L, s"the overwrite's retry read $overwrite chunks of 10")
+    assert(pointers.length == 10)
+    val compact = secondAttemptReads(fs, p)(FlsMaintenance.compact(spark, dir))
+    assert(compact <= 10L, s"the compaction's retry read $compact chunks of 10")
+    assert(spark.read.format("fls").load(dir).count() == 40L)
   }
 
   test("sweepOrphanChunks reaps crashed-commit leftovers but never a " +
@@ -255,7 +294,7 @@ class FlsManifestSegmentSpec extends AnyFunSuite with BeforeAndAfterAll {
     val dir = new Path(s"$tmp/warehouse/db/segmented")
     val fs = fsOf(dir, spark.sessionState.newHadoopConf())
     val layout = FlsManifest.readLayoutVersioned(fs, dir).get._2
-    assert(layout.chunks.nonEmpty, "table did not go chunked")
+    assert(layout.pointers.nonEmpty, "table did not go chunked")
     assert(spark.table(tbl).count() == 30)
     // merge-on-read DELETE re-vectors entries inside chunks
     spark.sql(s"DELETE FROM $tbl WHERE id % 10 = 3")

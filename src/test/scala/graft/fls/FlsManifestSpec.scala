@@ -315,16 +315,17 @@ class FlsManifestSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = new Path(dir)
     val fs = p.getFileSystem(conf)
     fs.mkdirs(p)
-    FlsManifest.commit(fs, p, "seed", conf)((_, _) => Seq(FlsManifest.Entry("a.fls", 1, 0)))
+    def add(rel: String, len: Long) =
+      FlsManifest.Delta(add = Seq(FlsManifest.Entry(rel, len, 0)))
+    FlsManifest.commit(fs, p, "seed", conf)(_ => add("a.fls", 1))
     var merges = 0
-    val v = FlsManifest.commit(fs, p, "loser", conf) { (_, cur) =>
+    val v = FlsManifest.commit(fs, p, "loser", conf) { _ =>
       merges += 1
       if (merges == 1)
         // a competing committer lands BETWEEN our read and our publish —
         // the exact window the old read-modify-write silently lost
-        FlsManifest.commit(fs, p, "winner", conf)((_, c) =>
-          c.get :+ FlsManifest.Entry("b.fls", 2, 0))
-      cur.get :+ FlsManifest.Entry("c.fls", 3, 0)
+        FlsManifest.commit(fs, p, "winner", conf)(_ => add("b.fls", 2))
+      add("c.fls", 3)
     }
     assert(merges == 2, "the loser must re-run its merge on the winner's version")
     assert(v == 3L)

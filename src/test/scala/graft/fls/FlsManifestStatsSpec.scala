@@ -85,8 +85,9 @@ class FlsManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(conf)
     // strip the stats column, republish (what a pre-stats writer wrote)
-    FlsManifest.commit(fs, p, "striptest", conf) { (_, cur) =>
-      cur.getOrElse(fail("no manifest")).map(_.copy(stats = null))
+    FlsManifest.commit(fs, p, "striptest", conf) { h =>
+      if (!h.exists) fail("no manifest")
+      FlsManifest.Delta.between(h.entries, h.entries.map(_.copy(stats = null)))
     }
     FlsFooters.clear()
     val before = FlsFooters.footerReadCount
