@@ -280,7 +280,7 @@ object FlsManifest {
         * kept pointer's minBv > pv and every entry the commit
         * materialized has bv > pv, all computable without opening a
         * single kept chunk. A pointer without the field is opened by
-        * the next commit and rewritten with it. */
+        * the next commit that carries a predicate and rewritten with it. */
       minBv: Long = -1L) {
     /** Could any rel of `sortedRels` live in this chunk? Rangeless
       * pointers answer yes (must open). */
@@ -731,12 +731,14 @@ object FlsManifest {
     * concurrent commit) — the exception propagates with nothing
     * published. Returns the published version.
     *
-    * The commit opens a chunk only when it may hold a removed or
-    * restated rel, when its pointer has no range or no min birth
-    * version, or when the result fits inline; every other pointer is
-    * carried into the new version VERBATIM. So an append to a 1M-file
-    * table reads one version file (~125 pointer lines) and writes one
-    * version file plus one tiny chunk. Small chunks are folded into the
+    * The commit opens a chunk only when it holds a removed or restated
+    * rel (by membership if `Head.entries` read it, else by its pointer's
+    * rel range — a rangeless pointer always may), when its pointer has
+    * no min birth version while a predicate is carried, or when the
+    * result fits inline; every other pointer is carried into the new
+    * version VERBATIM. So an append to a 1M-file table reads one
+    * version file (~125 pointer lines) and writes one version file plus
+    * one tiny chunk. Small chunks are folded into the
     * commit once [[SmallChunkMergeBound]] of them have piled up.
     *
     * `op`/`dataChange` stamp the version's `#op` header line — the
@@ -788,14 +790,29 @@ object FlsManifest {
       require(!d.removeRels.exists(restated.contains),
         "fls commit: a rel cannot be both removed and restated")
       val next = curV + 1
+      val carried = eqBase match {
+        case None => layout.eq
+        // v0 = the legacy / implicit-empty manifest, which predates
+        // equality deletes by construction
+        case Some(bv) => if (bv == 0L) Nil else versionEq(fs, dir, bv, ref)
+      }
       val newCount = layout.entries.length + layout.pointers.map(_.count).sum -
         d.removeRels.size + d.add.size
       val (opened, kept) =
         if (newCount <= inlineMax) (layout.pointers, Nil)
         else {
-          val touched = (d.removeRels ++ restated.keys).toArray.sorted
+          val touched = d.removeRels ++ restated.keys
+          val sortedTouched = touched.toArray.sorted
+          // a chunk `entries` already read is tested by membership (rel
+          // ranges of different writes overlap); any other by its range.
+          // A pointer without `b:` is opened only when a carried
+          // predicate needs the absorption proof.
+          def holds(pt: Pointer): Boolean = resolved.get(pt.name) match {
+            case Some(es) if pt.ranged => es.exists(e => touched.contains(e.rel))
+            case _ => pt.mayContainAny(sortedTouched)
+          }
           val (open0, keep0) = layout.pointers.partition(pt =>
-            pt.minBv < 0L || pt.mayContainAny(touched))
+            (pt.minBv < 0L && carried.nonEmpty) || holds(pt))
           val small = keep0.filter(_.count < target / 2)
           if (small.length < SmallChunkMergeBound) (open0, keep0)
           else (open0 ++ small, keep0.filterNot(small.contains))
@@ -838,12 +855,6 @@ object FlsManifest {
       lazy val minBv = math.min(
         kept.foldLeft(Long.MaxValue)((m, pt) => math.min(m, pt.minBv)),
         minBvFor(leftover))
-      val carried = eqBase match {
-        case None => layout.eq
-        // v0 = the legacy / implicit-empty manifest, which predates
-        // equality deletes by construction
-        case Some(bv) => if (bv == 0L) Nil else versionEq(fs, dir, bv, ref)
-      }
       val eqAll = (carried ++ eqAdd.map(FlsEqDeletes.stamp(_, next))).filter { j =>
         val pv = FlsEqDeletes.versionOf(j)
         pv > eqDropUpTo && pv >= minBv

@@ -280,6 +280,41 @@ class FlsChunkStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
       .collect()(0).getLong(0) == 0)
   }
 
+  test("a one-file DELETE rewrites only the chunk holding the file, " +
+      "though chunks of two appends overlap in rel range") {
+    val tbl = s"$cat.db.two_appends"
+    val dir = s"$tmp/warehouse/db/two_appends"
+    spark.sql(s"CREATE TABLE $tbl (id BIGINT, v DOUBLE) TBLPROPERTIES " +
+      "('commit_mode'='manifest', 'delete_mode'='merge-on-read')")
+    // 12 tasks per append, each a contiguous 100-id file: writer names
+    // part-<task>-<writeId>-..., so both appends' chunks span
+    // part-00000..part-00003 and so on
+    Seq(0L, 1200L).foreach { lo =>
+      spark.sql(s"INSERT INTO $tbl SELECT id, CAST(id AS DOUBLE) " +
+        s"FROM range($lo, ${lo + 1200}, 1, 12)")
+    }
+    val root = new Path(dir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    def pointers = FlsManifest
+      .readLayoutVersioned(fs, root, resolveChunks = false).get._2.pointers
+    val before = pointers
+    assert(before.length == 6, s"expected 2 appends x 3 chunks, got $before")
+    val task1 = FlsManifest.read(fs, root).get.map(_.rel)
+      .filter(_.startsWith("part-00001-"))
+    assert(task1.length == 2 && before.count(pt =>
+      task1.forall(r => pt.minRel <= r && r <= pt.maxRel)) == 2,
+      s"spec setup: each append's first chunk spans both task-1 files: $before")
+    // id 150 lives in the first append's task-1 file only: its delete
+    // vector restates that one entry
+    spark.sql(s"DELETE FROM $tbl WHERE id = 150")
+    val written = pointers.map(_.name).toSet -- before.map(_.name)
+    assert(written.size == 1,
+      s"only the victim's chunk is rewritten; wrote ${written.size} chunks")
+    assert(spark.table(tbl).count() == 2399L)
+    assert(spark.sql(s"SELECT count(*) FROM $tbl WHERE id = 150")
+      .collect()(0).getLong(0) == 0L)
+  }
+
   test("streaming epochs fold chunk VALUE stats into their delta " +
       "pointer lines without opening other chunks; a key-range DELETE " +
       "then opens only the epoch's chunk (r17 — the streaming shape " +

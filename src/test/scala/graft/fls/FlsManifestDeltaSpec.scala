@@ -16,7 +16,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * chunk; the metadata-only equality-delete commit opens zero; the
   * small-chunk fold still amortizes; `Delta.between` equals the
   * hand-written delta; the chunk-granularity conflict check; pointers
-  * without a min birth version are opened once and rewritten with it;
+  * without a min birth version are opened once a carried predicate
+  * needs them, and rewritten with it;
   * and two concurrent appends both publish with one retry and no chunk
   * rewrite amplification. */
 class FlsManifestDeltaSpec extends AnyFunSuite {
@@ -256,18 +257,12 @@ class FlsManifestDeltaSpec extends AnyFunSuite {
     }
   }
 
-  test("pre-r17 pointers are opened once so a dead predicate drops") {
-    val c = conf(); val dir = newDir(); val fs = dir.getFileSystem(c)
-    // v1: 12 old entries; v2: the predicate (pv=2); v3: 12 new entries
-    fullAppend(fs, dir, c, (0 until 12).map(entry(_)))
-    val json = FlsEqDeletes.EqDelete(0L, Seq(FlsEqDeletes.InLeg("k",
-      FlsEqDeletes.KindLong, Array(7L), Array.empty, Array.empty))).json
-    deltaCommit(fs, dir, c, FlsManifest.Delta(), op = "eqdelete",
-      eqAdd = Seq(json))
-    val v3 = deltaCommit(fs, dir, c,
-      FlsManifest.Delta(add = (100 until 112).map(entry(_))))
-    // hand-edit the head as a writer before the `b:` field wrote it
-    val vp = FlsManifest.versionPath(dir, v3)
+  private def headPointers(fs: FileSystem, dir: Path): Seq[FlsManifest.Pointer] =
+    FlsManifest.readLayoutVersioned(fs, dir, resolveChunks = false).get._2.pointers
+
+  /** Hand-edit version `v` as a writer before the `b:` field wrote it. */
+  private def stripBirthFields(fs: FileSystem, dir: Path, v: Long): Unit = {
+    val vp = FlsManifest.versionPath(dir, v)
     val text = {
       val in = fs.open(vp)
       try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
@@ -278,8 +273,34 @@ class FlsManifestDeltaSpec extends AnyFunSuite {
     assert(stripped != text, "spec setup: the head must carry b: fields")
     val out = fs.create(vp, true)
     try out.write(stripped.getBytes(StandardCharsets.UTF_8)) finally out.close()
-    def pointers = FlsManifest.readLayoutVersioned(fs, dir,
-      resolveChunks = false).get._2.pointers
+  }
+
+  test("pre-r17 pointers stay unopened while no predicate is carried") {
+    val c = conf(); val dir = newDir(); val fs = dir.getFileSystem(c)
+    val v1 = fullAppend(fs, dir, c, (0 until 12).map(entry(_)))
+    stripBirthFields(fs, dir, v1)
+    val (_, opened) = chunkReads {
+      deltaCommit(fs, dir, c, FlsManifest.Delta(add = Seq(entry(100))))
+    }
+    assert(opened == 0L, s"an append without predicates opens no chunk; opened $opened")
+    val pts = headPointers(fs, dir)
+    assert(pts.count(_.minBv < 0L) == 3 && pts.exists(_.minBv == 2L),
+      s"old pointers carry verbatim, the new chunk records b: $pts")
+    assert(rels(fs, dir).size == 13)
+  }
+
+  test("pre-r17 pointers are opened once so a dead predicate drops") {
+    val c = conf(); val dir = newDir(); val fs = dir.getFileSystem(c)
+    // v1: 12 old entries; v2: the predicate (pv=2); v3: 12 new entries
+    fullAppend(fs, dir, c, (0 until 12).map(entry(_)))
+    val json = FlsEqDeletes.EqDelete(0L, Seq(FlsEqDeletes.InLeg("k",
+      FlsEqDeletes.KindLong, Array(7L), Array.empty, Array.empty))).json
+    deltaCommit(fs, dir, c, FlsManifest.Delta(), op = "eqdelete",
+      eqAdd = Seq(json))
+    val v3 = deltaCommit(fs, dir, c,
+      FlsManifest.Delta(add = (100 until 112).map(entry(_))))
+    stripBirthFields(fs, dir, v3)
+    def pointers = headPointers(fs, dir)
     assert(pointers.length == 6 && pointers.forall(_.minBv < 0L))
     // removing every entry that predates the predicate proves it dead:
     // the commit must open the unproven pointers rather than carry it

@@ -1,5 +1,6 @@
 package graft.fls
 
+import java.nio.charset.StandardCharsets
 import java.nio.file.Files
 
 import org.apache.spark.sql.SparkSession
@@ -84,11 +85,23 @@ class FlsManifestStatsSpec extends AnyFunSuite with BeforeAndAfterAll {
     val conf = spark.sessionState.newHadoopConf()
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(conf)
-    // strip the stats column, republish (what a pre-stats writer wrote)
-    FlsManifest.commit(fs, p, "striptest", conf) { h =>
-      if (!h.exists) fail("no manifest")
-      FlsManifest.Delta.between(h.entries, h.entries.map(_.copy(stats = null)))
+    // hand-edit the head as a pre-stats writer wrote it: every entry
+    // line loses its stats column (length, mtime, rel are kept)
+    val (headV, _) = FlsManifest.readVersioned(fs, p).getOrElse(fail("no manifest"))
+    val vp = FlsManifest.versionPath(p, headV)
+    val text = {
+      val in = fs.open(vp)
+      try new String(in.readAllBytes(), StandardCharsets.UTF_8) finally in.close()
     }
+    val stripped = text.split('\n').map(l =>
+      if (l.startsWith("#")) l else l.split('\t').take(3).mkString("\t"))
+      .mkString("", "\n", "\n")
+    assert(stripped != text, "spec setup: the head must carry stats")
+    val out = fs.create(vp, true)
+    try out.write(stripped.getBytes(StandardCharsets.UTF_8)) finally out.close()
+    val entries = FlsManifest.read(fs, p).getOrElse(fail("no manifest"))
+    assert(entries.length == 8 && entries.forall(_.stats == null),
+      "spec setup: every entry must read back stats-less")
     FlsFooters.clear()
     val before = FlsFooters.footerReadCount
     val rows = spark.read.format("fls").load(dir)
