@@ -5,7 +5,8 @@ object Bench {
     val spark = GraftSession()
     // Harness.benchAll: warm pass = pre-flight gate (a query that cannot
     // run on the current runtime is an ERROR in the artifact, never a
-    // fail-fast "time"), then two timed passes, min per query.
+    // fail-fast "time"), then three timed passes, min per query, each
+    // materializing every result and then counting it.
     val run = Harness.benchAll(spark, SparkEntry.queries, sfDir)
     // stop Spark BEFORE printing: shutdown stacks (ElementTrackingStore
     // etc.) otherwise interleave with the JSON and break the driver's

@@ -14,16 +14,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * impossible to hide. */
 object Harness {
 
-  /** One [[benchAll]] result: min time per query, errors, the per-query
-    * spread of the timed passes ((max-min)/min — the measurement-noise
-    * channel of the artifact), and the core count and master the
-    * session actually ran with. The runtime pair is read from the LIVE
-    * SparkContext, not from `$SPARK_GRAFT_CPUS` (r21: a scaling check
-    * must see what the bench really ran with), and before Bench stops
-    * the session to print. */
+  /** One [[benchAll]] result: min time per query to materialize the
+    * whole result, errors, the per-query spread of the timed passes
+    * ((max-min)/min — the measurement-noise channel of the artifact),
+    * the core count and master the session actually ran with, and the
+    * min `count()` time per query. The runtime pair is read from the
+    * LIVE SparkContext, not from `$SPARK_GRAFT_CPUS` (r21: a scaling
+    * check must see what the bench really ran with), and before Bench
+    * stops the session to print. `countTimes` is the old measure, kept
+    * beside the new one for one round so the two can be compared. */
   final case class BenchRun(times: Map[String, Double],
       errors: Map[String, String], spreads: Map[String, Double],
-      cpus: Int, master: String)
+      cpus: Int, master: String,
+      countTimes: Map[String, Double] = Map.empty)
+
+  /** Computes every row and column of `df` and discards them (the
+    * `noop` sink): what a user pays for the whole result. `count()` lets
+    * ColumnPruning drop most of a query's work, so it is not timed. */
+  def materialize(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
 
   /** Runs every query and dumps its result as parquet under
     * `outDir/<name>`. Returns name -> error message for every query
@@ -53,24 +62,29 @@ object Harness {
     * throw likewise records an error and drops the query's time.
     * Survivors get three timed passes, min per query (GC/compilation noise
     * on a busy 32-thread JVM is one-sided, so min is the honest
-    * steady-state). */
+    * steady-state). Each pass times [[materialize]], then `count()`. */
   def benchAll(spark: SparkSession,
       queries: Map[String, (SparkSession, String) => DataFrame],
       sfDir: String): BenchRun = {
     val errors = scala.collection.mutable.Map[String, String]()
     val ok = queries.flatMap { case (name, fn) =>
-      try { fn(spark, sfDir).count(); Some(name -> fn) }
+      try { materialize(fn(spark, sfDir)); Some(name -> fn) }
       catch { case e: Throwable =>
         System.err.println(s"[bench] PRE-FLIGHT FAILED $name: ${e.toString.take(400)}")
         errors(name) = e.toString.take(2000)
         None
       }
     }
-    def timedPass(): Map[String, Double] =
+    def secs(f: => Unit): Double = {
+      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
+    }
+    // name -> (materialize s, count s)
+    def timedPass(): Map[String, (Double, Double)] =
       ok.flatMap { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count(); Some(name -> (System.nanoTime() - t0) / 1e9) }
-        catch { case e: Throwable =>
+        try {
+          Some(name -> (secs(materialize(fn(spark, sfDir))),
+            secs(fn(spark, sfDir).count())))
+        } catch { case e: Throwable =>
           System.err.println(s"[bench] FAILED $name: ${e.toString.take(400)}")
           errors(name) = e.toString.take(2000)
           None
@@ -83,18 +97,17 @@ object Harness {
     // the artifact so a "regression" that is really measurement noise
     // is visible as such without a re-run.
     val passes = Seq(timedPass(), timedPass(), timedPass())
-    val times = passes.head.keys.flatMap { k =>
-      val vs = passes.flatMap(_.get(k))
-      if (vs.size == passes.size) Some(k -> vs.min) else None
-    }.toMap
-    val spreads = passes.head.keys.flatMap { k =>
-      val vs = passes.flatMap(_.get(k))
-      if (vs.size == passes.size && vs.min > 0)
-        Some(k -> (vs.max - vs.min) / vs.min)
-      else None
+    val complete = passes.head.keys.filter(k => passes.forall(_.contains(k)))
+    def minOf(f: ((Double, Double)) => Double): Map[String, Double] =
+      complete.map(k => k -> passes.map(p => f(p(k))).min).toMap
+    val times = minOf(_._1)
+    val spreads = complete.flatMap { k =>
+      val vs = passes.map(_(k)._1)
+      if (vs.min > 0) Some(k -> (vs.max - vs.min) / vs.min) else None
     }.toMap
     BenchRun(times, errors.toMap -- times.keys, spreads,
-      spark.sparkContext.defaultParallelism, spark.sparkContext.master)
+      spark.sparkContext.defaultParallelism, spark.sparkContext.master,
+      minOf(_._2))
   }
 
   /** JSON string escape: backslash, quote, and ALL control chars
@@ -119,19 +132,27 @@ object Harness {
   private def runtimeFields(run: BenchRun): String =
     s""""cpus":${run.cpus},"master":${jq(run.master)}"""
 
+  /** `{"q":seconds,...}`, sorted by query name. */
+  private def timesJson(times: Map[String, Double]): String =
+    times.toSeq.sortBy(_._1)
+      .map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
+
   /** The one JSON line Bench prints. Failed queries appear ONLY under
     * "errors" — never as a time — so the artifact itself shows the
-    * breakage (ADVICE r9: annotate in the artifact, not just VERDICT). */
+    * breakage (ADVICE r9: annotate in the artifact, not just VERDICT).
+    * `value`/`queries` time the whole result ([[materialize]]);
+    * `total_count`/`queries_count` keep the `count()` times. */
   def benchJson(run: BenchRun, sfDir: String): String = {
-    val qs = run.times.toSeq.sortBy(_._1)
-      .map { case (k, v) => s"${jq(k)}:$v" }.mkString("{", ",", "}")
-    val total = if (run.times.nonEmpty) run.times.values.sum else 0.0
+    val qs = timesJson(run.times)
+    val total = run.times.values.sum
     val errPart =
       if (run.errors.isEmpty) "" else s""","errors":${jObj(run.errors)}"""
     val spreads = run.spreads.toSeq.sortBy(_._1)
       .map { case (k, v) => f"${jq(k)}:$v%.4f" }.mkString("{", ",", "}")
     s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir"""" +
       s""","queries_spread":$spreads,${runtimeFields(run)}""" +
+      s""","total_count":${run.countTimes.values.sum}""" +
+      s""","queries_count":${timesJson(run.countTimes)}""" +
       s""","spark_version":"${org.apache.spark.SPARK_VERSION}"$errPart}"""
   }
 
@@ -158,6 +179,7 @@ object Harness {
       s""""n_queries":${run.times.size},"queries":$top,""" +
       f""""median_spread":$medSpread%.4f,""" +
       s"""${runtimeFields(run)},""" +
+      f""""total_count":${run.countTimes.values.sum}%.3f,""" +
       s""""queries_full":"$fullPath"""" +
       s""","spark_version":"${org.apache.spark.SPARK_VERSION}"$errPart}"""
   }

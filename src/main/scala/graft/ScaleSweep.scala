@@ -12,6 +12,8 @@ import org.apache.spark.sql.functions._
   * Usage: runMain graft.ScaleSweep [mult] [perQueryCapSeconds] [q1,q2,…]
   * (the optional third arg restricts to a comma-separated query subset —
   * re-measuring outliers without repaying the full pass).
+  * Each query is timed to materialize its whole result
+  * ([[Harness.materialize]]), not to `count()` it.
   * Writes /tmp/graft_scale_sweep_<mult>.json and prints one line per
   * query as it lands (the run is long; partial output is the point). */
 object ScaleSweep {
@@ -75,7 +77,7 @@ object ScaleSweep {
     // 4.0→4.1 Spark bump; the archive itself must carry the version so
     // the gate can refuse cross-version comparison (VERDICT r9 #5)
     val json =
-      s"""{"spark_version":"${org.apache.spark.SPARK_VERSION}","java_version":"${sys.props("java.version")}","mult":$mult,"rows":""" +
+      s"""{"spark_version":"${org.apache.spark.SPARK_VERSION}","java_version":"${sys.props("java.version")}","mult":$mult,"timed":"noop","rows":""" +
         rows.mkString("[", ",\n", "]") + "}"
     val suffix = if (only.isEmpty) "" else "_subset"
     val outPath = s"/tmp/graft_scale_sweep_$mult$suffix.json"
@@ -132,11 +134,17 @@ object ScaleSweep {
         // an informational print only, never a REGRESSED flag.
         val priorVersion = raw""""spark_version"\s*:\s*"([^"]+)"""".r
           .findFirstMatchIn(txt).map(_.group(1))
-        val sameVersion = priorVersion.contains(org.apache.spark.SPARK_VERSION)
-        if (!sameVersion) {
-          println(s"[sweep-diff] REFUSING cross-version gate: prior archive " +
-            s"r$round is ${priorVersion.getOrElse("UNSTAMPED (pre-4.1 era)")}, " +
-            s"this run is Spark ${org.apache.spark.SPARK_VERSION} — " +
+        // Same for the timing mode: archives without a "timed" stamp
+        // timed count(), which ColumnPruning makes far cheaper than
+        // materializing the result
+        val priorNoop = txt.contains(""""timed":"noop"""")
+        val comparable =
+          priorVersion.contains(org.apache.spark.SPARK_VERSION) && priorNoop
+        if (!comparable) {
+          println(s"[sweep-diff] REFUSING cross-run gate: prior archive " +
+            s"r$round is ${priorVersion.getOrElse("UNSTAMPED (pre-4.1 era)")}" +
+            s"${if (priorNoop) "" else ", count()-timed"}, " +
+            s"this run is Spark ${org.apache.spark.SPARK_VERSION}, noop-timed — " +
             "numbers below are informational only, no REGRESSED flags")
         }
         // tolerate both compact and pretty-printed archives (the r9
@@ -153,7 +161,7 @@ object ScaleSweep {
             case (Some(p), Some(n)) if p > 0 && n > 0 =>
               val x = n / p
               val flag =
-                if (x > 1.5 && !sameVersion) "grew (CROSS-VERSION, informational)"
+                if (x > 1.5 && !comparable) "grew (NOT COMPARABLE, informational)"
                 else if (x > 1.5 && scaledSec.getOrElse(q, 0.0) >= 5.0) {
                   regressed += 1; "REGRESSED"
                 } else if (x > 1.5) "grew (sub-5s, noise-class)"
@@ -378,7 +386,7 @@ object ScaleSweep {
   private def timeAll(spark: SparkSession, dir: String, reps: Int,
       warm: Boolean, capSec: Int, label: String): Map[String, Double] = {
     if (warm) names.foreach { q =>
-      try SparkEntry.queries(q)(spark, dir).count()
+      try Harness.materialize(SparkEntry.queries(q)(spark, dir))
       catch { case _: Throwable => () }
     }
     val isScaledPass = label != "base"
@@ -398,7 +406,7 @@ object ScaleSweep {
         val th = new Thread(() =>
           try {
             spark.sparkContext.setJobGroup(s"sweep-$q", q, interruptOnCancel = true)
-            SparkEntry.queries(q)(spark, dir).count()
+            Harness.materialize(SparkEntry.queries(q)(spark, dir))
           } catch { case e: Throwable => err = e }
           finally spark.sparkContext.clearJobGroup())
         th.start()
@@ -453,7 +461,7 @@ object ScaleSweep {
         val th = new Thread(() =>
           try {
             spark.sparkContext.setJobGroup(s"sweep-retry-$q", q, interruptOnCancel = true)
-            SparkEntry.queries(q)(spark, dir).count()
+            Harness.materialize(SparkEntry.queries(q)(spark, dir))
           } catch { case e: Throwable => err = e }
           finally spark.sparkContext.clearJobGroup())
         th.start()

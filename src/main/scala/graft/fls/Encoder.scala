@@ -240,8 +240,10 @@ object Encoder {
     * handed out in first-seen order and each id keeps how often its key
     * was added, so one pass yields the dictionary, the codes and the FREQ
     * tally without boxing a key or a count. Linear probing over a
-    * power-of-two slot array kept at most half full. */
-  private[fls] final class LongIdTable {
+    * power-of-two slot array kept at most half full. Also the
+    * first-seen distinct set of the winnowing kernel
+    * (`graftexprs.TextKernels.winnow`). */
+  final class LongIdTable {
     private var slotKeys = new Array[Long](16)
     private var slotIds = new Array[Int](16) // id + 1; 0 = empty slot
     private var shift = 60 // 64 - log2(slots)

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import org.apache.spark.sql.graftexprs.GraftFunctions
@@ -22,14 +22,12 @@ import graft.util.Tables._
   */
 object Dedup {
 
-  /** Word 3-gram shingle set, Spark SQL dialect. */
-  val ShinglesSpark: String =
-    """CASE WHEN size(split(text, ' ')) >= 3 THEN
-         array_distinct(transform(sequence(1, size(split(text, ' ')) - 2),
-           i -> concat(element_at(split(text, ' '), i), ' ',
-                       element_at(split(text, ' '), i + 1), ' ',
-                       element_at(split(text, ' '), i + 2))))
-       ELSE CAST(array() AS ARRAY<STRING>) END"""
+  /** Word 3-gram shingle set of `text`, tokenized like
+    * `split(text, ' ')`; a NULL text has the empty set, like the
+    * oracle's [[ShinglesDuck]]. */
+  def shingleSet(text: Column): Column =
+    coalesce(array_distinct(GraftFunctions.wordShingles(text, 3)),
+      typedLit(Array.empty[String]))
 
   /** Same shingle set, DuckDB dialect (for oracles). */
   val ShinglesDuck: String =
@@ -64,10 +62,9 @@ object Dedup {
       FROM documents GROUP BY md5(text) ORDER BY doc_id"""
 
   /** Shingle the corpus, spread over all cores first: the parquet input
-    * is one small file → one partition, but the per-row HOF work is the
-    * cost center (same at 100 TB: compute-heavy narrow transforms want
-    * max parallelism, and a pre-shuffle of raw text is cheap relative
-    * to shingling). */
+    * is one small file → one partition. Shingling is one native pass per
+    * document ([[GraftFunctions.wordShingles]]); whether the pre-shuffle
+    * still pays for itself against it has not been measured. */
   private val shCache = new graft.util.SessionCache
 
   /** Storage level for the shingled-corpus cache. Default spills to
@@ -109,7 +106,7 @@ object Dedup {
     shCache.getOrBuild(spark, cacheKey)(
         docs
           .repartition(spark.sparkContext.defaultParallelism, col("doc_id"))
-          .select(col("doc_id"), expr(ShinglesSpark).as("gr"))
+          .select(col("doc_id"), shingleSet(col("text")).as("gr"))
           .withColumn("nsh", size(col("gr")))
           // canonical set fingerprint: identical shingle SETS collapse
           // into one similarity-join row (crawl corpora are dominated

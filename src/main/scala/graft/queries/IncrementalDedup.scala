@@ -27,7 +27,7 @@ object IncrementalDedup {
     * (they can never appear in a candidate bucket — q22 semantics). */
   private def signatures(docs: DataFrame): DataFrame = {
     val sh = docs
-      .select(col("doc_id"), expr(Dedup.ShinglesSpark).as("gr"))
+      .select(col("doc_id"), Dedup.shingleSet(col("text")).as("gr"))
       .withColumn("nsh", size(col("gr")))
       .withColumn("ghash",
         expr("md5(CAST(array_join(array_sort(gr), '') AS BINARY))"))

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftexprs.GraftFunctions
 
 import graft.util.Tables._
 
@@ -119,34 +120,19 @@ object TextAnalysis {
       FROM documents ORDER BY doc_id"""
 
   /** q30: document fingerprinting (winnowing): positional word-3-gram
-    * rolling hashes, sliding-window (w=4) minima, fingerprint = the
-    * distinct minima set, reported as (count, min, sum). */
-  private val PosShinglesSpark: String =
-    """CASE WHEN size(split(text, ' ')) >= 3 THEN
-         transform(sequence(1, size(split(text, ' ')) - 2),
-           i -> concat(element_at(split(text, ' '), i), ' ',
-                       element_at(split(text, ' '), i + 1), ' ',
-                       element_at(split(text, ' '), i + 2)))
-       ELSE CAST(array() AS ARRAY<STRING>) END"""
-
-  /** Rolling hash of a shingle string s (same h*31+code chain as
-    * Dedup.wordHashSpark, 2^32 modulus). */
-  private val ShingleHashSpark: String =
-    "aggregate(split(s, ''), CAST(7 AS BIGINT), (a, c) -> pmod(a * 31 + ascii(c), 4294967296))"
-
+    * rolling hashes (seed 7, h*31 + code point, 2^32 modulus), distinct
+    * sliding-window (w=4) minima, reported as (count, min, sum). Native
+    * kernels ([[GraftFunctions]]) split each document once; a NULL text
+    * fingerprints as the empty set, like the oracle's. */
   def q30Fingerprint(spark: SparkSession, dir: String): DataFrame =
     t(spark, dir, "documents")
-      .withColumn("hs", expr(s"transform($PosShinglesSpark, s -> $ShingleHashSpark)"))
-      .withColumn("mins",
-        expr("""CASE WHEN size(hs) >= 4 THEN
-                  array_distinct(transform(sequence(1, size(hs) - 3),
-                    t -> array_min(slice(hs, t, 4))))
-                WHEN size(hs) > 0 THEN array(array_min(hs))
-                ELSE CAST(array() AS ARRAY<BIGINT>) END"""))
+      .withColumn("mins", GraftFunctions.winnow(
+        coalesce(GraftFunctions.shingleHashes(col("text"), 3),
+          typedLit(Array.empty[Long])), 4))
       .select(col("doc_id"),
         size(col("mins")).cast("long").as("fp_count"),
-        expr("coalesce(array_min(mins), CAST(0 AS BIGINT))").as("fp_min"),
-        expr("coalesce(aggregate(mins, CAST(0 AS BIGINT), (a, x) -> a + x), CAST(0 AS BIGINT))").as("fp_sum"))
+        coalesce(array_min(col("mins")), lit(0L)).as("fp_min"),
+        GraftFunctions.arraySum(col("mins")).as("fp_sum"))
       .orderBy("doc_id")
 
   val q30Sql: String =

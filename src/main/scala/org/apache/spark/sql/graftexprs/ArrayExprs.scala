@@ -393,6 +393,25 @@ object GraftFunctions {
       ExpressionUtils.expression(uq), ExpressionUtils.expression(codes),
       ExpressionUtils.expression(anchor), cb, anchored = true))
 
+  /** Positional word `n`-grams of `text`, tokenized like
+    * `split(text, ' ')` and joined with one space — see [[TextKernels]]. */
+  def wordShingles(text: Column, n: Int): Column =
+    ExpressionUtils.column(WordShingles(ExpressionUtils.expression(text), n))
+
+  /** 32-bit rolling hash (seed 7, h*31 + code point) of every word
+    * `n`-gram of `text`, from one pass over its code points. */
+  def shingleHashes(text: Column, n: Int): Column =
+    ExpressionUtils.column(ShingleHashes(ExpressionUtils.expression(text), n))
+
+  /** Distinct minima of the `w`-wide windows of a BIGINT array, in
+    * first-seen order (winnowing). */
+  def winnow(hashes: Column, w: Int): Column =
+    ExpressionUtils.column(Winnow(ExpressionUtils.expression(hashes), w))
+
+  /** Exact sum of a BIGINT array (0 when empty). */
+  def arraySum(xs: Column): Column =
+    ExpressionUtils.column(ArraySum(ExpressionUtils.expression(xs)))
+
   /** Exact floor division of a LONG column by a positive constant.
     * `x DIV w` truncates toward zero (mis-buckets negatives) and a
     * double `floor(x/w)` loses exactness near 2^53; subtracting `pmod`

@@ -50,7 +50,7 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("benchAll excludes the broken query from times and reports it as an error") {
-    val Harness.BenchRun(times, errors, _, _, _) = Harness.benchAll(spark, qs, dir)
+    val Harness.BenchRun(times, errors, _, _, _, _) = Harness.benchAll(spark, qs, dir)
     assert(times.keySet == Set("good_q"), times)
     assert(times("good_q") > 0.0)
     assert(errors.keySet == Set("broken_q"), errors)
@@ -84,5 +84,31 @@ class HarnessSpec extends AnyFunSuite with BeforeAndAfterAll {
     assert(Harness.benchJson(run, dir).contains(expected))
     assert(Harness.benchJsonCompact(run, dir, "/tmp/x.json")
       .contains(expected))
+  }
+
+  test("benchAll materializes every column: a column that fails only when " +
+      "computed is an error, although count() prunes it") {
+    val lazyBroken: (SparkSession, String) => DataFrame = (s, d) =>
+      s.read.parquet(s"$d/nation.parquet")
+        .select(col("n_name"), expr("raise_error('computed')").as("x"))
+    assert(lazyBroken(spark, dir).count() == 25)
+    val run = Harness.benchAll(spark, Map("good_q" -> good, "lazy_q" -> lazyBroken), dir)
+    assert(run.times.keySet == Set("good_q"), run.times)
+    assert(run.errors.keySet == Set("lazy_q"), run.errors)
+    assert(run.errors("lazy_q").contains("computed"), run.errors)
+  }
+
+  test("benchAll keeps the count() times beside the materialized ones, " +
+      "and both JSON shapes carry them") {
+    val run = Harness.benchAll(spark, Map("good_q" -> good), dir)
+    assert(run.countTimes.keySet == Set("good_q"), run.countTimes)
+    assert(run.countTimes("good_q") > 0.0)
+    val json = Harness.benchJson(run.copy(times = Map("good_q" -> 0.5),
+      countTimes = Map("good_q" -> 0.25)), dir)
+    assert(json.contains(""""value":0.5,"""), json)
+    assert(json.contains(""""total_count":0.25,"""), json)
+    assert(json.contains(""""queries_count":{"good_q":0.25}"""), json)
+    assert(Harness.benchJsonCompact(run, dir, "/tmp/x.json")
+      .contains(""""total_count":"""))
   }
 }

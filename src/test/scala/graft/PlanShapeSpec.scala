@@ -29,6 +29,21 @@ class PlanShapeSpec extends AnyFunSuite with BeforeAndAfterAll {
   private def plan(name: String): String =
     SparkEntry.queries(name)(spark, dir).queryExecution.executedPlan.toString
 
+  test("q30 runs native shingle kernels: no split, lambda or slice per document") {
+    import org.apache.spark.sql.catalyst.expressions._
+    import org.apache.spark.sql.graftexprs.{ShingleHashes, Winnow}
+    val plan = SparkEntry.queries("q30_text_fingerprint")(spark, dir)
+      .queryExecution.optimizedPlan
+    val exprs = plan.flatMap(_.expressions.flatMap(_.collect { case e => e }))
+    val banned = exprs.collect {
+      case e @ (_: StringSplit | _: ArrayTransform | _: ArrayAggregate | _: Slice) =>
+        e.prettyName
+    }
+    assert(banned.isEmpty, s"per-document HOF work is back in q30:\n$plan")
+    assert(exprs.exists(_.isInstanceOf[ShingleHashes]) &&
+      exprs.exists(_.isInstanceOf[Winnow]), s"q30 kernels missing:\n$plan")
+  }
+
   test("fls scans push filters and prune columns (q16)") {
     val p = plan("q16_fls_filter_prune")
     assert(p.contains("fls scan"), p)
